@@ -365,6 +365,8 @@ object AbBench {
     * `mh_found_nothresh` = single intersect evaluation, no threshold
     * filter at all (the floor); `mh_found_genonly` = the generator
     * boundary WITHOUT the filter (isolates GenerateExec's own cost).
+    * Both emit the unrounded jaccard, so a caller can apply the gate's
+    * threshold to the same value the gate filters on.
     */
   def mhFoundNoThresh(s: SparkSession, dir: String): DataFrame =
     mhVerifyAgg(s, dir)
@@ -372,7 +374,7 @@ object AbBench {
         size(array_intersect(col("__ga"), col("__gb"))).cast("double").as("__i"),
         (size(col("__ga")) + size(col("__gb"))).cast("double").as("__n"))
       .select(col("id_a"), col("id_b"),
-        round(col("__i") / (col("__n") - col("__i")), 4).as("jaccard"))
+        (col("__i") / (col("__n") - col("__i"))).as("jaccard"))
 
   def mhFoundGenOnly(s: SparkSession, dir: String): DataFrame =
     mhVerifyAgg(s, dir)
@@ -380,7 +382,7 @@ object AbBench {
         size(array_intersect(col("__ga"), col("__gb"))).cast("double").as("__i"),
         (size(col("__ga")) + size(col("__gb"))).cast("double").as("__n")))).as("__s"))
       .select(col("id_a"), col("id_b"),
-        round(col("__s.__i") / (col("__s.__n") - col("__s.__i")), 4).as("jaccard"))
+        (col("__s.__i") / (col("__s.__n") - col("__s.__i"))).as("jaccard"))
 
   private def mhVerifyAgg(s: SparkSession, dir: String): DataFrame = {
     val corpus = mhCorpus(s, dir)

@@ -554,10 +554,10 @@ object Bench {
     val (pinnedMain, pinnedAux): (Set[String], Set[String]) = try {
       import scala.jdk.CollectionConverters._
       val re = raw"BENCH_r(\d+)(_c\d+)?\.json".r
-      val files = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-        .iterator().asScala
-        .flatMap(p => re.findFirstMatchIn(p.getFileName.toString)
-          .map(m => (m.group(1).toInt, Option(m.group(2)).isEmpty, p))).toSeq
+      val listing = java.nio.file.Files.list(java.nio.file.Paths.get("."))
+      val files = try listing.iterator().asScala.toSeq.flatMap(p => p.getFileName.toString match {
+        case re(r, cores) => Some((r.toInt, cores == null, p)); case _ => None
+      }) finally listing.close()
       if (files.isEmpty) (Set.empty[String], Set.empty[String])
       else {
         val latestRound = files.map(_._1).max
@@ -572,7 +572,10 @@ object Bench {
         val main = qs(true)
         (main, qs(false) -- main)
       }
-    } catch { case _: Throwable => (Set.empty[String], Set.empty[String]) }
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"WARN: query-set pin disabled, BENCH_r*.json unreadable: $e")
+      (Set.empty[String], Set.empty[String])
+    }
     val pinned = pinnedMain ++ pinnedAux
     val mins = timings.map { case (k, _, _, _, _) => k -> minsMap(k) }
     def line(qpairs: Seq[(String, Double)], omitted: Int): String = {

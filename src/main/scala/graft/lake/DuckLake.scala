@@ -242,19 +242,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       column, dv, dt)
   }
 
-  /** Column name → nulls_allowed at `snap` (empty when the table is
-    * absent) — the catalog truth the connector overlays on scan schemas.
-    */
-  def columnNullabilityOf(name: String, snapshot: Option[Long] = None): Map[String, Boolean] = {
-    val snap = snapshot.getOrElse(store.currentSnapshot)
-    val (schemaName, tableName) = parse(name)
-    (for {
-      sch <- store.getSchemaByName(schemaName, snap)
-      tbl <- store.getTableByName(sch.schemaId, tableName, snap)
-    } yield store.getTableColumns(tbl.tableId, snap)
-      .map(c => c.name -> c.nullsAllowed).toMap).getOrElse(Map.empty)
-  }
-
   /** The table's partition keys at `snap` as (source column, transform)
     * fields in key order (empty = unpartitioned or table absent).
     */
@@ -1399,15 +1386,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   def table(name: String, snapshot: Option[Long] = None,
       pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
       virtualCols: Seq[String] = Nil): DataFrame = {
-    val snap = snapshot.getOrElse(store.currentSnapshot)
-    // an explicitly requested snapshot must still exist (not expired)
-    snapshot.foreach { s =>
-      if (!store.snapshotExists(s))
-        throw new InvalidSnapshotException(s"snapshot $s does not exist (expired?)")
-    }
-    val tr = resolveTable(name, snap)
-    val cols = store.getTableColumns(tr.tableId, snap)
-    if (cols.isEmpty) throw new TableNotFoundException(s"$name (no columns at snapshot $snap)")
+    val (snap, tr, cols) = pinnedColumns(name, snapshot)
     val vset = virtualCols.toSet
     val outSchema = vset.foldLeft(sparkSchemaOf(cols)) { (s, v) =>
       s.add(v, DuckLake.virtualType(v), nullable = true)
@@ -1522,6 +1501,27 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       (scans ++ inlined).reduce(_ unionByName _)
     }
   }
+
+  /** The snapshot, table and columns a scan of `name` at `snapshot` pins. */
+  private def pinnedColumns(name: String, snapshot: Option[Long])
+      : (Long, TableRec, Seq[ColumnDef]) = {
+    val snap = snapshot.getOrElse(store.currentSnapshot)
+    // an explicitly requested snapshot must still exist (not expired)
+    snapshot.foreach { s =>
+      if (!store.snapshotExists(s))
+        throw new InvalidSnapshotException(s"snapshot $s does not exist (expired?)")
+    }
+    val tr = resolveTable(name, snap)
+    val cols = store.getTableColumns(tr.tableId, snap)
+    if (cols.isEmpty) throw new TableNotFoundException(s"$name (no columns at snapshot $snap)")
+    (snap, tr, cols)
+  }
+
+  /** [[table]]'s schema from the pinned catalog columns alone (catalog
+    * nullability), for callers that need no scan.
+    */
+  def tableSchema(name: String, snapshot: Option[Long] = None): StructType =
+    sparkSchemaOf(pinnedColumns(name, snapshot)._3)
 
   /** Files kept by the last `table()` call (after stats pruning) — test/
     * introspection hook for the file-skipping path.

@@ -785,15 +785,6 @@ final class MetadataStore(backend: MetadataBackend,
     id
   }
 
-  private def nextId(table: String, idCol: String, floor: Long = 0L): Long = {
-    val live = query(s"SELECT COALESCE(MAX($idCol), -1) + 1 FROM $table")(_.getLong(1)).head
-    val hwKey = s"seq:$table"
-    val hw = getMetadata(hwKey).map(_.toLong).getOrElse(0L)
-    val id = Seq(live, hw, floor).max
-    setMetadata(hwKey, (id + 1).toString)
-    id
-  }
-
   /** Catalog ENTRY ids (schemas, tables, views) draw from one shared
     * monotone sequence, like the reference's catalog (corpus:
     * compaction/merge_adjacent_options.test id expectations).
@@ -922,17 +913,6 @@ final class MetadataStore(backend: MetadataBackend,
       Seq(tableId, snap, snap))(rs =>
       ColumnDef(rs.getLong(1), rs.getLong(2), rs.getString(3), rs.getString(4), rs.getBoolean(5),
         Option(rs.getString(6)), Option(rs.getString(7)), rs.getString(8)))
-
-  /** The column row (name/type) visible at `snap` for a given column_id —
-    * rename/promotion history used to map a file's physical schema to the
-    * pinned catalog schema (reference resolves this via Parquet field_ids,
-    * src/types.rs:440-498; our column_id plays the field_id role).
-    */
-  def getColumnDefAt(tableId: Long, columnId: Long, snap: Long): Option[ColumnDef] =
-    query(s"SELECT column_id, column_order, column_name, column_type, nulls_allowed, initial_default FROM ducklake_column WHERE table_id = ? AND column_id = ? AND parent_column IS NULL AND $Vis",
-      Seq(tableId, columnId, snap, snap))(rs =>
-      ColumnDef(rs.getLong(1), rs.getLong(2), rs.getString(3), rs.getString(4), rs.getBoolean(5),
-        Option(rs.getString(6)))).headOption
 
   /** Full column history for a table: every column row with its validity
     * interval. One query instead of files×columns point lookups — scan
@@ -2657,22 +2637,13 @@ final class MetadataStore(backend: MetadataBackend,
     snap
   }
 
-  /** Commit one adjacent-file merge (DuckLake `merge_adjacent_files`):
-    * the merged file REPLACES its sources across ALL history — it is
+  /** Commit adjacent-file merges (DuckLake `merge_adjacent_files`): each
+    * merged file REPLACES its sources across ALL history — it is
     * registered with the FIRST source's begin_snapshot and a segment map,
     * the source rows are deleted outright (not ended), and their physical
-    * paths go to the deletion schedule. Time travel keeps resolving
-    * through the merged file's segment prefixes.
-    */
-  def commitMergeAdjacent(schemaName: String, tableName: String,
-      removed: Seq[DataFileRec], file: FileToRegister, beginSnapshot: Long,
-      segments: Seq[FileSegment], writeEpoch: Long,
-      statColIds: Map[String, Long]): Long =
-    commitMergeAdjacentAll(schemaName, tableName,
-      Seq((removed, file, beginSnapshot, segments, writeEpoch, statColIds)))
-
-  /** Register every merged run of one `merge_adjacent_files` call in ONE
-    * snapshot (the reference's per-call accounting — corpus:
+    * paths go to the deletion schedule, so time travel keeps resolving
+    * through the merged file's segment prefixes. Every merged run of one
+    * call registers in ONE snapshot (the reference's per-call accounting — corpus:
     * compaction/compaction_partitioned_non_adjacent.test snapshot ids).
     */
   def commitMergeAdjacentAll(schemaName: String, tableName: String,

@@ -110,6 +110,10 @@ private[connector] object DuckLakePartitionPlanner {
     // columns are physically present in the parquet
     val partIdxByColId = partCols.collect {
       case (idx, cid, None) => cid -> idx }.toMap
+    // table-dir relative for files the lake wrote; verbatim for adopted
+    // files registered by absolute path
+    def resolve(path: String, relative: Boolean) =
+      if (relative) s"$basePath/$path" else path
     files.map { file =>
       // per-file epoch: the physical (on-disk) name of each required column
       val physNames = required.fields.map { f =>
@@ -138,10 +142,10 @@ private[connector] object DuckLakePartitionPlanner {
            graft.lake.DuckLake.evalDefault(sql, f.dataType); sql
          }).orNull
       }
-      DuckLakeFilePartition(s"$basePath/${file.path}",
+      DuckLakeFilePartition(resolve(file.path, file.pathIsRelative),
         file.encryptionKey, physNames, required.fields.map(_.dataType),
         isPartCol, partRaw,
-        file.deleteFile.map(d => s"$basePath/${d.path}").orNull,
+        file.deleteFile.map(d => resolve(d.path, d.pathIsRelative)).orNull,
         file.deleteFile.flatMap(_.encryptionKey),
         special, file.dataFileId,
         if (defaultSqls.forall(_ == null)) null else defaultSqls,
@@ -287,9 +291,10 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
 
 /** Native `Batch` scan over a snapshot-pinned lake table: one input
   * partition per data file, MOR deletes applied in the reader. Used by
-  * the row-level-operation path (SQL UPDATE / MERGE), which requires a
-  * real `toBatch`; ordinary reads keep the V1 relation so they get
-  * Spark's vectorized parquet reader.
+  * the row-level-operation path (SQL UPDATE / MERGE / row-level DELETE),
+  * which requires a real `toBatch`, and by storage-partitioned joins.
+  * Ordinary reads never get here: [[SpliceLakeScans]] plans them as the
+  * facade's parquet scans, with Spark's vectorized reader.
   */
 final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     schema: StructType,
@@ -417,8 +422,8 @@ object DuckLakeBatchScan {
 
 /** Executor-side reader: parquet-mr Group materialization (row-by-row) —
   * appropriate for the incremental tail of a stream and for row-level
-  * rewrites, where batches are bounded; the ordinary batch read path
-  * keeps Spark's vectorized reader.
+  * rewrites, where batches are bounded; ordinary reads are spliced
+  * parquet scans with Spark's vectorized reader.
   */
 final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
     extends PartitionReaderFactory {

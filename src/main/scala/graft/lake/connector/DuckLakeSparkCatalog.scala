@@ -4,17 +4,16 @@ import java.util
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, AggregateFunc, CountStar, Count => VCount, Max => VMax, Min => VMin}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.functions.col
 
@@ -34,14 +33,17 @@ import graft.lake.{ColumnDef, DuckLake, TypeBridge, WriteMode}
   * then `SELECT … FROM ducklake.main.t`, `INSERT INTO ducklake.main.t …`,
   * `CREATE TABLE ducklake.main.t AS SELECT …` work through Spark SQL.
   *
-  * Read path: a `V1Scan` whose relation assembles the snapshot-pinned
-  * DataFrame from [[DuckLake.table]] — column pruning and filter pushdown
-  * arrive through `SupportsPushDown*`; filters additionally drive min/max
-  * file skipping, and all filters are reported as residual so Spark
-  * re-applies them post-scan (Inexact semantics, parity with reference
-  * src/table.rs:584-598). Snapshot is pinned per `loadTable`, i.e. per
-  * analyzed query — the reference pins per catalog construction and
-  * refreshes after writes (tests/hybrid_asyncdb.rs:147).
+  * Read path: column pruning and filter pushdown arrive through
+  * `SupportsPushDown*` on a [[DuckLakeScan]]; after pushdown the
+  * [[SpliceLakeScans]] optimizer rule replaces that scan with the
+  * optimized plan of the facade's snapshot-pinned DataFrame
+  * ([[DuckLake.table]]), so a lake read plans as parquet file scans
+  * inside the one query plan — the reference's shape (src/table.rs:369-527).
+  * Pushed filters drive min/max file skipping and are all reported as
+  * residual, so Spark re-applies them above the scan (Inexact semantics,
+  * parity with reference src/table.rs:584-598). Snapshot is pinned per
+  * `loadTable`, i.e. per analyzed query — the reference pins per catalog
+  * construction and refreshes after writes (tests/hybrid_asyncdb.rs:147).
   */
 class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog
@@ -58,6 +60,7 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     dataPath = options.get("dataPath")
     require(metaDb != null && dataPath != null,
       s"catalog $name requires options metaDb and dataPath")
+    SpliceLakeScans.register(SparkSession.active)
   }
 
   override def name(): String = catalogName
@@ -183,21 +186,20 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
   }
 
   private def loadAt(ident: Identifier, snap: Long): Table = {
-    val df = try lake.table(fullName(ident), Some(snap))
+    // the schema comes from the pinned catalog columns (catalog
+    // nullability, so DESCRIBE shows NOT NULL and the analyzer knows the
+    // constraint); the scan's frame is built once, at optimization
+    val tableSchema = try lake.tableSchema(fullName(ident), Some(snap))
     catch {
       case _: graft.lake.DuckLakeException =>
         throw new NoSuchTableException(ident)
     }
     // expose catalog column defaults as the analyzer's metadata keys so
-    // INSERTs with a column subset (or DEFAULT keyword) resolve them;
-    // overlay catalog nullability (the scan DataFrame widens it) so
-    // DESCRIBE shows NOT NULL and the analyzer knows the constraint
+    // INSERTs with a column subset (or DEFAULT keyword) resolve them
     val defaults = lake.columnDefaultsOf(fullName(ident), Some(snap))
-    val nullability = lake.columnNullabilityOf(fullName(ident), Some(snap))
     val comments = try lake.columnComments(fullName(ident))
       catch { case _: graft.lake.DuckLakeException => Map.empty[String, String] }
-    val schema = StructType(df.schema.fields.map { f0 =>
-      val f1 = f0.copy(nullable = nullability.getOrElse(f0.name, f0.nullable))
+    val schema = StructType(tableSchema.fields.map { f1 =>
       val f = comments.get(f1.name).fold(f1) { c =>
         f1.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
           .withMetadata(f1.metadata).putString("comment", c).build())
@@ -734,15 +736,19 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
         with SupportsPushDownAggregates {
       private var required: StructType = tableSchema
       private var filters: Array[Filter] = Array.empty
-      private var metaAgg: Option[(StructType, Seq[org.apache.spark.sql.Column])] = None
+      private var metaAgg: Option[Seq[org.apache.spark.sql.catalyst.expressions.Literal]] = None
 
       override def pushFilters(f: Array[Filter]): Array[Filter] = {
         filters = f
         f // all residual: Spark re-applies after the scan (Inexact)
       }
       override def pushedFilters(): Array[Filter] = filters
+      // nested pruning hands over pruned structs, but the facade reads
+      // top-level columns whole: keep each one's full type, from which
+      // Spark derives the scan output and `info._2`'s ordinal above it
       override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
+        required = StructType(requiredSchema.map(f =>
+          tableSchema.find(_.name == f.name).getOrElse(f)))
 
       // Metadata-only aggregates: a filterless, ungrouped COUNT(*)/
       // COUNT(col)/MIN/MAX is answered from catalog file statistics —
@@ -759,16 +765,16 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
       }
 
       override def build(): Scan = metaAgg match {
-        case Some((outSchema, values)) =>
-          new DuckLakeMetaAggScan(lake.spark, outSchema, values)
+        case Some(values) => new DuckLakeMetaAggScan(values)
         case None =>
           // opt-in storage-partitioned join path: when v2 bucketing is on
           // and the table's hive partition keys survive column pruning,
           // scan through the native Batch reporting KeyGroupedPartitioning
           // — co-partitioned lake joins then run with ZERO shuffle. The
-          // trade (row-wise readers vs V1's vectorized parquet) is the
-          // right one exactly when the user asks for it: exchange cost
-          // dominates scan cost for the big-big joins SPJ targets.
+          // trade (row-wise readers vs the spliced vectorized parquet
+          // scan) is the right one exactly when the user asks for it:
+          // exchange cost dominates scan cost for the big-big joins SPJ
+          // targets.
           val spjOk = lake.spark.conf
             .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean && {
               val pfs = lake.partitionFieldsOf(fullName, Some(snapshot))
@@ -783,7 +789,7 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
           if (spjOk)
             new DuckLakeBatchScan(lake, fullName, snapshot, required,
               filters.toSeq, spj = true)
-          else new DuckLakeV1Scan(lake, fullName, snapshot, required, filters,
+          else new DuckLakeScan(lake, fullName, snapshot, required, filters,
             // streaming admission control read options
             Option(options.get("maxFilesPerTrigger")).map(_.toInt),
             Option(options.get("maxRowsPerTrigger")).map(_.toLong))
@@ -807,53 +813,28 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
     }
 }
 
-/** V1Scan bridge: the relation's RDD comes from the lake's snapshot scan
-  * DataFrame (multi-file parquet + MOR anti-joins), so Catalyst's parquet
-  * reader does the actual IO; pushed filters drive min/max file skipping
-  * before the scan is assembled.
-  *
-  * Statistics (reference: A10 `TableProvider::statistics`,
-  * src/table.rs:544-582): `sizeInBytes = Σ data-file bytes` prorated by
-  * live-row fraction, `rowCount = Σ records − Σ deleted`, from catalog
-  * metadata — O(files), no data IO. Caveat: Spark's pushdown wraps a
-  * V1Scan in `V1ScanWrapper`, which hides `SupportsReportStatistics` from
-  * the STATIC planner — so the initial plan of a lake-to-lake join is
-  * sort-merge, and AQE converts it to broadcast-hash at runtime from the
-  * materialized stage sizes (asserted in ConnectorSpec). The
-  * implementation stays: a future native-Batch scan activates it
-  * statically, and `BaseRelation.sizeInBytes` is served for any consumer
-  * of the bridged relation.
+/** The ordinary lake read: the pinned snapshot, the pruned columns and
+  * the pushed filters. It never reaches physical planning —
+  * [[SpliceLakeScans]] replaces it with the optimized plan of [[frame]]
+  * — so it serves only as that rule's input and as the streaming source.
   */
-final class DuckLakeV1Scan(lake: DuckLake, fullName: String, snapshot: Long,
+final class DuckLakeScan(lake: DuckLake, fullName: String, snapshot: Long,
     required: StructType, filters: Array[Filter],
     maxFilesPerTrigger: Option[Int] = None,
-    maxRowsPerTrigger: Option[Long] = None)
-  extends V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    maxRowsPerTrigger: Option[Long] = None) extends Scan {
 
   override def readSchema(): StructType = required
 
-  private lazy val (estBytes, estRows): (Long, Long) = {
-    val (schemaName, tableName) = fullName.split('.') match {
-      case Array(s, t) => (s, t); case _ => ("main", fullName)
-    }
-    val files = (for {
-      sch <- lake.store.getSchemaByName(schemaName, snapshot)
-      tbl <- lake.store.getTableByName(sch.schemaId, tableName, snapshot)
-    } yield lake.store.getDataFiles(tbl.tableId, snapshot)).getOrElse(Nil)
-    val dataBytes = files.map(_.fileSizeBytes).sum
-    val dataRows = files.map(_.recordCount).sum
-    val delRows = files.flatMap(_.deleteFile).map(_.recordCount).sum
-    // deleted rows scale bytes down proportionally (reference subtracts
-    // delete-file bytes; ours are position lists, so prorate by rows)
-    val liveFrac = if (dataRows == 0) 1.0 else (dataRows - delRows).toDouble / dataRows
-    (math.max((dataBytes * liveFrac).toLong, 1L), math.max(dataRows - delRows, 0L))
+  /** The facade's snapshot scan with the pushed filters driving min/max
+    * file skipping, projected to the required columns (none for a
+    * `COUNT(*)`). Virtual columns requested by name route through the
+    * lake's virtual-column scan (per-file provenance literals).
+    */
+  def frame: DataFrame = {
+    val vreq = required.fieldNames.filter(DuckLake.VirtualNames.contains).toSeq
+    lake.table(fullName, Some(snapshot), filters.toSeq, vreq)
+      .select(required.fieldNames.map(col).toSeq: _*)
   }
-
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(estBytes)
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(estRows)
-    }
 
   /** `spark.readStream.table("ducklake.<schema>.<t>")`: snapshot-
     * incremental micro-batches (appends-only CDC semantics).
@@ -862,53 +843,18 @@ final class DuckLakeV1Scan(lake: DuckLake, fullName: String, snapshot: Long,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new DuckLakeMicroBatchStream(lake, fullName, required, maxFilesPerTrigger,
       maxRowsPerTrigger)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val relation = new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-      override def sizeInBytes: Long = estBytes
-      override def needConversion: Boolean = false
-      override def buildScan(): RDD[Row] = {
-        // metadata/virtual columns requested by name route through the
-        // lake's virtual-column scan (per-file provenance literals)
-        val vreq = required.fieldNames.filter(DuckLake.VirtualNames.contains).toSeq
-        val df = lake.table(fullName, Some(snapshot), filters.toSeq, vreq)
-        val projected =
-          if (required.isEmpty) df.select() // COUNT(*) zero-column path
-          else df.select(required.fieldNames.map(col).toSeq: _*)
-        projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-      }
-    }
-    relation.asInstanceOf[T]
-  }
 }
 
-/** One-row scan serving a completely-pushed-down aggregation whose values
-  * were computed from catalog metadata (see `MetaAgg`). No data IO.
+/** A completely-pushed-down aggregation answered from catalog metadata
+  * (see `MetaAgg`): one row of literal values, which [[SpliceLakeScans]]
+  * turns into a one-row projection. No data IO.
   */
-final class DuckLakeMetaAggScan(spark: SparkSession, outSchema: StructType,
-    values: Seq[org.apache.spark.sql.Column]) extends V1Scan {
+final class DuckLakeMetaAggScan(
+    val values: Seq[org.apache.spark.sql.catalyst.expressions.Literal]) extends Scan {
 
-  override def readSchema(): StructType = outSchema
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val relation = new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = outSchema
-      override def sizeInBytes: Long = 64L * outSchema.size
-      override def needConversion: Boolean = false
-      override def buildScan(): RDD[Row] = {
-        val projected = spark.range(1).select(values.zip(outSchema.fields).map {
-          case (c, f) => c.cast(f.dataType).as(f.name)
-        }: _*)
-        projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-      }
-    }
-    relation.asInstanceOf[T]
-  }
+  override def readSchema(): StructType = StructType(values.zipWithIndex.map {
+    case (v, i) => StructField(s"agg_$i", v.dataType, nullable = true)
+  })
 }
 
 /** Decides whether an `Aggregation` is answerable from DuckLake catalog
@@ -929,12 +875,11 @@ final class DuckLakeMetaAggScan(spark: SparkSession, outSchema: StructType,
   * Pushed filters or GROUP BY refuse entirely.
   */
 private[connector] object MetaAgg {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.lit
+  import org.apache.spark.sql.catalyst.expressions.Literal
   import org.apache.spark.sql.types._
 
   def tryPush(lake: DuckLake, fullName: String, snapshot: Long,
-      agg: Aggregation, filters: Array[Filter]): Option[(StructType, Seq[Column])] = {
+      agg: Aggregation, filters: Array[Filter]): Option[Seq[Literal]] = {
     if (filters.nonEmpty || agg.groupByExpressions.nonEmpty) return None
     val (schemaName, tableName) = fullName.split('.') match {
       case Array(s, t) => (s, t); case _ => ("main", fullName)
@@ -954,15 +899,15 @@ private[connector] object MetaAgg {
     def statRow(f: graft.lake.DataFileRec, columnId: Long) =
       stats.get((f.dataFileId, columnId))
 
-    val answers: Seq[Option[(Column, DataType)]] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(lit(liveCount) -> LongType)
+    val answers: Seq[Option[Literal]] = agg.aggregateExpressions.toSeq.map {
+      case _: CountStar => Some(Literal(liveCount))
 
       case c: VCount if !c.isDistinct && !hasDeletes && inlinedCount == 0 =>
         for {
           cd <- refColumn(c.column, cols)
           nonNulls <- traverse(files)(f =>
             statRow(f, cd.columnId).flatMap(_._1).map(nc => f.recordCount - nc))
-        } yield lit(nonNulls.sum) -> LongType
+        } yield Literal(nonNulls.sum)
 
       case m: VMin => foldMinMax(m.column, cols, files, statRow,
         hasDeletes, inlinedCount, isMin = true)
@@ -970,11 +915,7 @@ private[connector] object MetaAgg {
         hasDeletes, inlinedCount, isMin = false)
       case _ => None
     }
-    if (answers.exists(_.isEmpty)) return None
-    val flat = answers.flatten
-    Some((StructType(flat.zipWithIndex.map { case ((_, dt), i) =>
-      StructField(s"agg_$i", dt, nullable = true)
-    }), flat.map(_._1)))
+    if (answers.exists(_.isEmpty)) None else Some(answers.flatten)
   }
 
   private def refColumn(e: org.apache.spark.sql.connector.expressions.Expression,
@@ -992,7 +933,7 @@ private[connector] object MetaAgg {
   private def foldMinMax(column: org.apache.spark.sql.connector.expressions.Expression,
       cols: Seq[ColumnDef], files: Seq[graft.lake.DataFileRec],
       statRow: (graft.lake.DataFileRec, Long) => Option[(Option[Long], Option[String], Option[String])],
-      hasDeletes: Boolean, inlinedCount: Int, isMin: Boolean): Option[(Column, DataType)] = {
+      hasDeletes: Boolean, inlinedCount: Int, isMin: Boolean): Option[Literal] = {
     if (hasDeletes || inlinedCount > 0) return None
     val cd = refColumn(column, cols).getOrElse(return None)
     val dt = TypeBridge.toSpark(cd.dtype)
@@ -1011,10 +952,10 @@ private[connector] object MetaAgg {
         case None => return None
       }
     }
-    if (bounds.isEmpty) return Some(lit(null).cast(dt) -> dt)
+    if (bounds.isEmpty) return Some(Literal.create(null, dt))
     val best = bounds.reduce((a, b) =>
       if (isMin == (cmp(dt)(a, b) <= 0)) a else b)
-    decode(dt, best).map(v => lit(v) -> dt)
+    decode(dt, best)
   }
 
   private def statable(dt: DataType): Boolean = dt match {
@@ -1033,27 +974,18 @@ private[connector] object MetaAgg {
     case _ => a.compareTo(b)
   }
 
-  /** Canonical stat string → external literal value (inverse of
-    * [[graft.lake.FileStats]]' encodings).
+  /** Canonical stat string → literal (inverse of [[graft.lake.FileStats]]'
+    * encodings: dates as epoch days, timestamps as µs — Catalyst's own
+    * internal values).
     */
-  private def decode(dt: DataType, s: String): Option[Any] = dt match {
-    case ByteType => Some(s.toLong.toByte)
-    case ShortType => Some(s.toLong.toShort)
-    case IntegerType => Some(s.toLong.toInt)
-    case LongType => Some(s.toLong)
-    case DateType => Some(java.time.LocalDate.ofEpochDay(s.toLong))
-    case TimestampNTZType =>
-      val us = s.toLong
-      Some(java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC))
-    case TimestampType =>
-      val us = s.toLong
-      Some(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
-    case FloatType => Some(s.toDouble.toFloat)
-    case DoubleType => Some(s.toDouble)
-    case BooleanType => Some(s == "1")
-    case _ => None
-  }
+  private def decode(dt: DataType, s: String): Option[Literal] = Some(Literal(dt match {
+    case ByteType => s.toLong.toByte
+    case ShortType => s.toLong.toShort
+    case IntegerType | DateType => s.toLong.toInt
+    case LongType | TimestampType | TimestampNTZType => s.toLong
+    case FloatType => s.toDouble.toFloat
+    case DoubleType => s.toDouble
+    case BooleanType => s == "1"
+    case _ => return None
+  }, dt))
 }

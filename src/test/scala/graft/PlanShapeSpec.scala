@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -10,11 +16,15 @@ import org.scalatest.BeforeAndAfterAll
   * reaching the scan, delete-free lake scans staying a single relation
   * (no per-file union) — so a future Catalyst/conf drift fails THIS
   * suite instead of silently regressing a bench round. The
-  * deliberately-broken-conf test proves the guard actually flips.
+  * deliberately-broken-conf test proves the guard actually flips. Lake
+  * reads through the `dlplan` catalog must plan like raw parquet reads
+  * of the same files.
   */
-class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
+  private lazy val lakeRoot = Files.createTempDirectory("plan-shape-lake").toString
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -23,6 +33,10 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.catalog.dlplan",
+      classOf[graft.lake.connector.DuckLakeSparkCatalog].getName)
+    .config("spark.sql.catalog.dlplan.metaDb", s"$lakeRoot/meta")
+    .config("spark.sql.catalog.dlplan.dataPath", s"$lakeRoot/data")
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
@@ -104,12 +118,17 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // projection only; the broken shape carried 4). Plus the consumers
     // the negative pin didn't cover: the md5 twins and the cosine
     // near-dup path.
-    def occ(p: String, needle: String): Int =
-      p.sliding(needle.length).count(_ == needle)
-    assert(occ(planOf("dedup_minhash"), "minhash_bands(") == 2,
+    // counted as expression nodes of the plan tree, subqueries included
+    def occ(q: String, fn: String): Int = {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      collectWithSubqueries(plan) { case node =>
+        node.expressions.map(_.collect { case e if e.prettyName == fn => e }.size).sum
+      }.sum
+    }
+    assert(occ("dedup_minhash", "minhash_bands") == 2,
       "dedup_minhash must evaluate minhash_bands exactly twice " +
         "(found+eligible branches), once per row each")
-    assert(occ(planOf("dedup_simhash"), "simhash64(") == 2,
+    assert(occ("dedup_simhash", "simhash64") == 2,
       "dedup_simhash must evaluate simhash64 exactly twice " +
         "(found+eligible branches), once per row each")
     // md5 twins: the band array is a post-aggregate attribute, so the
@@ -153,6 +172,54 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = planOf("lake_scan_agg")
     assert(!p.contains("Union"),
       s"delete-free lake scan degraded to a per-file union:\n$p")
+  }
+
+  private val q05Tables = Seq("region", "nation", "customer", "supplier", "orders", "lineitem")
+
+  /** The q05 tables in the lake, adopted in place from the raw files. */
+  private lazy val adopted: Unit = q05Tables.foreach { t =>
+    val path = s"$dir/$t.parquet"
+    spark.sql(s"CREATE TABLE dlplan.main.$t (${spark.read.parquet(path).schema.toDDL})")
+    spark.sql(s"CALL dlplan.system.add_files('main.$t', '$path')").collect()
+  }
+
+  /** Static physical plan (before execution) of `sqlText` over the lake. */
+  private def lakePlan(sqlText: String): SparkPlan = {
+    adopted
+    spark.sql("USE dlplan.main")
+    try spark.sql(sqlText).queryExecution.executedPlan
+    finally spark.sql("USE spark_catalog.default")
+  }
+
+  /** Static physical plan of `sqlText` over temp views of the raw files. */
+  private def rawPlan(sqlText: String): SparkPlan = {
+    q05Tables.foreach(t =>
+      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t))
+    try spark.sql(sqlText).queryExecution.executedPlan
+    finally q05Tables.foreach(spark.catalog.dropTempView)
+  }
+
+  private def joinCounts(p: SparkPlan): (Int, Int) =
+    (collectWithSubqueries(p) { case j: SortMergeJoinExec => j }.size,
+      collectWithSubqueries(p) { case j: BroadcastHashJoinExec => j }.size)
+
+  test("lake q05 plans raw parquet's join strategies before execution") {
+    val q = graft.queries.Tpch.oracle("q05_local_supplier_volume")
+    val (rawSmj, rawBhj) = joinCounts(rawPlan(q))
+    val (lakeSmj, lakeBhj) = joinCounts(lakePlan(q))
+    assert(rawBhj > 0, "the raw plan broadcasts nothing: the pin is vacuous")
+    assert(lakeSmj == rawSmj && lakeBhj >= rawBhj,
+      s"lake q05: $lakeSmj sort-merge / $lakeBhj broadcast joins; " +
+        s"raw: $rawSmj / $rawBhj")
+  }
+
+  test("a SQL lake read plans a parquet FileScan, not a row-RDD scan") {
+    val p = lakePlan("SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey < 100")
+    val scans = collectWithSubqueries(p) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty &&
+      scans.forall(_.relation.fileFormat.isInstanceOf[ParquetFileFormat]), p.toString)
+    assert(collectWithSubqueries(p) { case s: RowDataSourceScanExec => s }.isEmpty,
+      p.toString)
   }
 
   test("the guard flips when broadcast planning is disabled (not vacuous)") {

@@ -2378,7 +2378,6 @@ final class SqlLogicRunner(spark: SparkSession) {
   private def describeDF(name: String): DataFrame = {
     import spark.implicits._
     val full = if (name.contains(".")) name else s"main.$name"
-    val nullability = lake.columnNullabilityOf(full)
     val defaults = lake.columnDefaultsOf(full)
     val snap = lake.currentSnapshot
     val (schemaName, tableName) = full.split('.') match {
@@ -2390,7 +2389,7 @@ final class SqlLogicRunner(spark: SparkSession) {
     } yield lake.store.getTableColumns(tbl.tableId, snap)).getOrElse(Nil)
     cols.map { c =>
       (c.name, duckTypeName(c.dtype),
-        if (nullability.getOrElse(c.name, true)) "YES" else "NO",
+        if (c.nullsAllowed) "YES" else "NO",
         null: String, defaults.get(c.name).orNull, null: String)
     }.toDF("column_name", "column_type", "null", "key", "default", "extra")
   }

@@ -158,6 +158,22 @@ class AddFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("path").contains("/ext")).count() == 1)
   }
 
+  test("SQL row-level DELETE reads adopted files by their absolute path") {
+    lake.createTableAs(Seq((1, "a")).toDF("k", "v").coalesce(1), "main.deladopt")
+    val f = ext(Seq((2, "b"), (3, "c"), (4, "d"), (6, "f")).toDF("k", "v"))
+    lake.addFiles("main.deladopt", Seq(f))
+    graft.lake.connector.DuckLakeSparkCatalog.adopt(lake)
+    // `k % 2 = 0` has no source-filter form, so the DELETE runs through
+    // the row-level scan, which reads every file; the second DELETE also
+    // reads the delete file the first one wrote for the adopted file
+    spark.sql("DELETE FROM dladd.main.deladopt WHERE k % 2 = 0")
+    spark.sql("DELETE FROM dladd.main.deladopt WHERE k % 3 = 0")
+    assert(lake.table("main.deladopt").select("k").as[Int].collect().toSeq == Seq(1))
+    // the adopted file itself stays in place
+    assert(lake.listFilesDF.filter(col("table_name") === "deladopt")
+      .filter(col("path").contains("/ext")).count() == 1)
+  }
+
   test("NOT NULL columns: missing or null-carrying files are rejected") {
     // Seq.toDF marks primitive columns non-nullable -> k is NOT NULL
     lake.createTableAs(Seq((1, "a")).toDF("k", "v").coalesce(1), "main.nn")

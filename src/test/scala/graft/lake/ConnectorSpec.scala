@@ -211,7 +211,7 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(l.lastScanFileCount == 0)
   }
 
-  test("lake-to-lake join broadcasts the small side at runtime (A10 + AQE)") {
+  test("lake-to-lake join broadcasts the small side in the static plan (A10)") {
     import spark.implicits._
     val l = lake
     l.createTableAs((1 to 5).map(i => (i.toLong, s"dim$i")).toDF("id", "label")
@@ -221,20 +221,83 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val joined = spark.sql("""
       SELECT f.rowid, d.label FROM dlconn.main.stat_fact f
       JOIN dlconn.main.stat_dim d ON f.dim_id = d.id""")
-    assert(joined.count() == 2000)
-    joined.collect() // materialize -> AQE finalizes the plan
-    // static stats are hidden by V1ScanWrapper; AQE must still end at a
-    // broadcast join from the runtime sizes of the 5-row dim side
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"expected AQE runtime broadcast of the dim side, got:\n$plan")
-    // the scan itself reports catalog-derived stats (for native-Batch use)
-    val scan = new graft.lake.connector.DuckLakeV1Scan(l, "main.stat_dim",
-      l.currentSnapshot, l.table("main.stat_dim").schema, Array.empty)
-    val st = scan.estimateStatistics()
-    assert(st.numRows().getAsLong == 5L)
-    assert(st.sizeInBytes().getAsLong > 0L &&
-      st.sizeInBytes().getAsLong < 1000000L)
+    // the spliced parquet scans carry their file sizes to the static
+    // planner: the initial plan, before anything runs, already
+    // broadcasts the 5-row dim side
+    val initial = joined.queryExecution.executedPlan.toString
+    assert(initial.contains("isFinalPlan=false"), initial)
+    assert(initial.contains("BroadcastHashJoin") && !initial.contains("SortMergeJoin"),
+      s"expected a static broadcast of the dim side, got:\n$initial")
+    assert(joined.collect().length == 2000)
+  }
+
+  test("struct and array<struct> subfields read through the catalog (nested pruning)") {
+    import spark.implicits._
+    val l = lake
+    l.createTableAs((1 to 6).map(i => (i.toLong, (i, s"s$i"), Seq((i * 10, s"a$i"))))
+      .toDF("id", "info", "items").coalesce(1), "main.nested")
+    assert(spark.conf.get("spark.sql.optimizer.nestedSchemaPruning.enabled") == "true")
+    // each query reads ONE field of a struct, so Spark prunes the struct
+    // type it hands the scan; non-leading fields must keep their ordinal
+    def strings(q: String) = spark.sql(q).collect().map(_.get(0)).toSeq
+    assert(strings("SELECT info._2 FROM dlconn.main.nested WHERE id <= 3 ORDER BY id") ==
+      Seq("s1", "s2", "s3"))
+    assert(strings("SELECT info._1 FROM dlconn.main.nested WHERE id <= 2 ORDER BY id") ==
+      Seq(1, 2))
+    assert(strings("SELECT id FROM dlconn.main.nested WHERE info._2 = 's5'") == Seq(5L))
+    assert(strings("SELECT items._2 FROM dlconn.main.nested WHERE id <= 2 ORDER BY id") ==
+      Seq(Seq("a1"), Seq("a2")))
+    assert(strings("SELECT items[0]._1 FROM dlconn.main.nested WHERE id = 4") == Seq(40))
+  }
+
+  test("loadTable's catalog-derived schema equals the facade scan's") {
+    import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val sroot = Files.createTempDirectory("dlconn-schema").toString
+    val l = new DuckLake(spark, s"$sroot/meta", s"$sroot/data", inlineRowLimit = 10)
+    graft.lake.connector.DuckLakeSparkCatalog.adopt(l)
+    val cat = new graft.lake.connector.DuckLakeSparkCatalog()
+    cat.initialize("dlschema", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("metaDb", s"$sroot/meta", "dataPath", s"$sroot/data")))
+    try {
+      // list, struct, decimal and timestamp columns over two files of
+      // different epochs: a rename and a column added with a default
+      val rows = (1 to 20).map(i => (i.toLong, Seq(s"t$i"), (i, s"s$i"),
+        BigDecimal(i) / 4, java.sql.Timestamp.valueOf(s"2024-01-01 00:00:$i")))
+      l.createTableAs(rows.toDF("id", "tags", "info", "amt", "ts")
+        .withColumn("amt", col("amt").cast(DecimalType(10, 2))).coalesce(1), "main.typed")
+      l.renameColumn("main.typed", "amt", "amount")
+      l.addColumn("main.typed", "status", TypeBridge.fromSpark(StringType), Some("'new'"))
+      l.insertInto(spark.range(12).select((col("id") + 100).as("id"),
+        array(lit("z")).as("tags"), struct(lit(2).as("_1"), lit("w").as("_2")).as("info"),
+        lit(BigDecimal("2.50")).cast(DecimalType(10, 2)).as("amount"),
+        lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00")).as("ts"),
+        lit("x").as("status")), "main.typed")
+      // an inlined-only table and a zero-file table
+      l.createTableAs(Seq((1L, Seq(1.5))).toDF("k", "vals").limit(0), "main.inl_only")
+      l.insertInto(Seq((2L, Seq(2.5))).toDF("k", "vals"), "main.inl_only")
+      l.createTableAs(Seq((1L, "a")).toDF("k", "v").limit(0), "main.no_files")
+      assert(l.listFilesDF.filter(col("table_name").isin("inl_only", "no_files")).count() == 0)
+      assert(l.table("main.inl_only").count() == 1)
+      def strip(s: StructType) = StructType(s.fields.map(_.copy(metadata = Metadata.empty)))
+      // the facade widens top-level nullability; the catalog's is the
+      // truth (`id` from a Long fixture is NOT NULL)
+      Seq("typed", "inl_only", "no_files").foreach { t =>
+        val loaded = cat.loadTable(Identifier.of(Array("main"), t)).schema()
+        val facade = StructType(l.table(s"main.$t").schema.fields.map(f =>
+          f.copy(nullable = loaded(f.name).nullable)))
+        assert(strip(loaded) == strip(facade), s"main.$t")
+      }
+      val typed = cat.loadTable(Identifier.of(Array("main"), "typed")).schema()
+      assert(typed.fieldNames.toSeq == Seq("id", "tags", "info", "amount", "ts", "status"))
+      assert(!typed("id").nullable && typed("status").nullable)
+      // a missing table and an expired snapshot map to NoSuchTableException
+      intercept[NoSuchTableException](cat.loadTable(Identifier.of(Array("main"), "absent")))
+      intercept[NoSuchTableException](
+        cat.loadTable(Identifier.of(Array("main"), "typed"), "999999"))
+    } finally { graft.lake.connector.DuckLakeSparkCatalog.forget(l); l.close() }
   }
 
   test("SQL time travel: VERSION AS OF and TIMESTAMP AS OF") {
@@ -404,7 +467,7 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("ALTER TABLE dlconn.main.defcol ADD COLUMN status STRING DEFAULT 'pending'")
     spark.sql("ALTER TABLE dlconn.main.defcol ADD COLUMN score INT DEFAULT 7")
     spark.sql("INSERT INTO dlconn.main.defcol VALUES (3, 'c', 'live', 1)")
-    // V1 scan path: old rows materialize defaults, new row keeps values
+    // spliced scan path: old rows materialize defaults, new row keeps values
     val got = spark.sql(
       "SELECT id, status, score FROM dlconn.main.defcol ORDER BY id").collect()
     assert(got.map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq ==
@@ -770,7 +833,7 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("c_id", "k", "cv").coalesce(1), "main.spj_c", partitionBy = Seq("k"))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
-      // projection without the partition column: V1 vectorized path
+      // projection without the partition column: spliced vectorized path
       val df = spark.sql("SELECT sum(cv) FROM dlconn.main.spj_c")
       assert(df.head.getDouble(0) == (1 to 60).map(_ * 1.0).sum)
       assert(!df.queryExecution.executedPlan.toString.contains("DuckLakeBatchScan"))
