@@ -159,16 +159,26 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   private val hconf = spark.sparkContext.hadoopConfiguration
 
-  /** spark.read carrying decryption keys for exactly the files of one
-    * scan (name → base64 key); plaintext reader when nothing is encrypted.
+  /** Parquet read options carrying decryption keys for exactly the files
+    * of one scan (name → base64 key); empty when nothing is encrypted.
     */
-  private def reader(keys: Iterable[(String, Option[String])]): org.apache.spark.sql.DataFrameReader = {
+  private[lake] def decryptOptions(keys: Iterable[(String, Option[String])]): Map[String, String] = {
     val m = keys.collect { case (name, Some(k)) => s"$name:$k" }.toSeq
-    if (m.isEmpty) spark.read
-    else spark.read
-      .option(GraftCryptoFactory.FactoryClass, classOf[GraftCryptoFactory].getName)
-      .option(GraftCryptoFactory.DecryptKeys, m.mkString(";"))
+    if (m.isEmpty) Map.empty
+    else Map(GraftCryptoFactory.FactoryClass -> classOf[GraftCryptoFactory].getName,
+      GraftCryptoFactory.DecryptKeys -> m.mkString(";"))
   }
+
+  /** spark.read with [[decryptOptions]] for the files of one scan. */
+  private def reader(keys: Iterable[(String, Option[String])]): org.apache.spark.sql.DataFrameReader =
+    spark.read.options(decryptOptions(keys))
+
+  /** A fresh session Hadoop conf with `options` set — the conf Spark's
+    * file sources build for one relation.
+    */
+  private[lake] def hadoopConfWith(options: Map[String, String]): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConfWithOptions(options)
 
   /** Pin a snapshot for whole-query consistency (reference:
     * src/catalog.rs:31-64); None = latest at call time.
@@ -541,7 +551,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * parquet-mr writer options. Resolution is most-specific-first:
     * table > schema > global (store.getOption).
     */
-  private[lake] def writerTuning(name: String): Map[String, String] = {
+  private def writerTuning(name: String): Map[String, String] = {
     val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
     getOption("parquet_compression", name).foreach { c =>
       m += "compression" -> (c.toLowerCase match {
@@ -581,10 +591,39 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     m.toMap
   }
 
-  private def tuned[W](name: String,
-      w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
-      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    writerTuning(name).foldLeft(w) { case (wr, (k, v)) => wr.option(k, v) }
+  /** Every option a lake parquet file of `name` is written with: the
+    * table's [[writerTuning]] plus, for an encrypted write, the crypto
+    * factory and the file's key. Staged appends hand them to
+    * `DataFrameWriter`; executor-side writers get them through
+    * [[parquetOutput]].
+    */
+  private def writeOptions(name: String, keyOpt: Option[String]): Map[String, String] =
+    writerTuning(name) ++ keyOpt.toSeq.flatMap(k => Seq(
+      GraftCryptoFactory.FactoryClass -> classOf[GraftCryptoFactory].getName,
+      GraftCryptoFactory.EncryptKey -> k))
+
+  /** Spark's parquet writer for executor-side files of table `name`
+    * (delta and streaming writes), prepared like a staged append: the
+    * [[writeOptions]], the catalog column ids as top-level field ids and
+    * the lake's session confs. Returns the factory and the job conf its
+    * writers open files with — one conf per schema, because the write
+    * support reads its schema from the conf.
+    */
+  private[lake] def parquetOutput(name: String, schema: StructType, keyOpt: Option[String])
+      : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+         org.apache.spark.util.SerializableConfiguration) = {
+    val ids = fieldIdsOf(name)
+    // parquet field ids are 32-bit — never stamp a wrapped value
+    val stamped = StructType(schema.map(f =>
+      ids.get(f.name).filter(_ <= Int.MaxValue).fold(f)(id => f.copy(metadata =
+        new MetadataBuilder().withMetadata(f.metadata).putLong("parquet.field.id", id).build()))))
+    val opts = writeOptions(name, keyOpt)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(hadoopConfWith(opts))
+    val factory = withWriterSessionConf(
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(spark, job, opts, stamped))
+    (factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+  }
 
   /** Catalog (tableId, current columns) of `name`, None when absent. */
   private def tableShape(name: String): Option[(Long, Seq[ColumnDef])] = {
@@ -596,7 +635,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   /** Catalog column ids of the CURRENT shape (empty when absent). */
-  private[lake] def fieldIdsOf(name: String): Map[String, Long] =
+  private def fieldIdsOf(name: String): Map[String, Long] =
     tableShape(name)
       .map(_._2.map(c => c.name -> c.columnId).toMap).getOrElse(Map.empty)
 
@@ -674,10 +713,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       case Some("false") => toStage.coalesce(1)
       case _             => toStage
     }
-    val writer0 = tuned(name, keyOpt.foldLeft(shaped.write.mode("overwrite")) { (w, k) =>
-      w.option(GraftCryptoFactory.FactoryClass, classOf[GraftCryptoFactory].getName)
-        .option(GraftCryptoFactory.EncryptKey, k)
-    })
+    val writer0 = shaped.write.mode("overwrite").options(writeOptions(name, keyOpt))
     // with a target_file_size set, large writes split at parquet
     // row-group granularity (DuckLake insert splitting — corpus:
     // insert/insert_file_size.test); tiny writes stay one file
@@ -2117,10 +2153,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     try {
       val ordered = df.repartition(1).sortWithinPartitions(col("__row_id"))
         .select(cols.map(c => col(c.name)): _*)
-      val w = tuned(name, keyOpt.foldLeft(ordered.write.mode("overwrite")) { (wr, k) =>
-        wr.option(GraftCryptoFactory.FactoryClass, classOf[GraftCryptoFactory].getName)
-          .option(GraftCryptoFactory.EncryptKey, k)
-      })
+      val w = ordered.write.mode("overwrite").options(writeOptions(name, keyOpt))
       withWriterSessionConf(w.parquet(staging))
       val part = fs.listStatus(new Path(staging))
         .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
@@ -2391,10 +2424,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         val ordered = union.repartition(1)
           .sortWithinPartitions(col("__mf"), col("__ducklake_pos"))
           .select(physCols.map(c => col(c.name)): _*)
-        val w = tuned(name, keyOpt.foldLeft(ordered.write.mode("overwrite")) { (wr, k) =>
-          wr.option(GraftCryptoFactory.FactoryClass, classOf[GraftCryptoFactory].getName)
-            .option(GraftCryptoFactory.EncryptKey, k)
-        })
+        val w = ordered.write.mode("overwrite").options(writeOptions(name, keyOpt))
         withWriterSessionConf(w.parquet(s"$staging/g$gi"))
         val part = fs.listStatus(new Path(s"$staging/g$gi"))
           .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
@@ -2667,10 +2697,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       val staged = groups.zipWithIndex.map { case ((pv, gfs), i) =>
         val df = gfs.map(morReadFile(name, ctx, _)).reduce(_ unionByName _)
           .select(dataColNames.map(col): _*)
-        val w = tuned(name, keyOpt.foldLeft(df.coalesce(1).write.mode("overwrite")) { (wr, k) =>
-          wr.option(GraftCryptoFactory.FactoryClass, classOf[GraftCryptoFactory].getName)
-            .option(GraftCryptoFactory.EncryptKey, k)
-        })
+        val w = df.coalesce(1).write.mode("overwrite").options(writeOptions(name, keyOpt))
         withWriterSessionConf(w.parquet(s"$staging/g$i"))
         val part = fs.listStatus(new Path(s"$staging/g$i"))
           .filter(_.getPath.getName.endsWith(".parquet")).head.getPath

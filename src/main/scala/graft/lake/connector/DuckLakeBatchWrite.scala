@@ -5,16 +5,12 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -27,8 +23,8 @@ import graft.lake.crypto.GraftCryptoFactory
 final case class StagedFiles(files: Seq[(String, Seq[Option[String]])])
   extends WriterCommitMessage
 
-/** One executor's delta output: staged insert files plus the name of the
-  * PARTIAL delete-positions parquet it streamed (None = no deletes).
+/** One executor's delta output: staged insert files plus the names of
+  * the PARTIAL delete-positions parquets it streamed (empty = no deletes).
   * Positions live in staging files, never in commit messages — the driver
   * never materializes a delete set.
   */
@@ -36,13 +32,14 @@ final case class DeltaStaged(files: Seq[(String, Seq[Option[String]])],
     deleteFiles: Seq[String],
     rowIdFiles: Seq[(String, Seq[Option[String]])] = Nil) extends WriterCommitMessage
 
-/** Native distributed DELTA write — the merge-on-read half of SQL
-  * UPDATE / MERGE (Spark's `SupportsDelta` row-level path): executors
-  * stream inserted rows into parquet-mr writers and record deleted row
-  * addresses (`_file_id`, `_pos`); the driver merges the positions into
-  * cumulative positional delete files and commits them with the new data
-  * files in ONE snapshot. Cost scales with changed rows, never with
-  * table size — the 100 TB property the copy-on-write rewrite lacks.
+/** Distributed DELTA write — the merge-on-read half of SQL UPDATE /
+  * MERGE (Spark's `SupportsDelta` row-level path): executors write
+  * inserted rows through Spark's parquet writer and stream deleted row
+  * addresses (`_file_id`, `_pos`) into partial parquets; the driver
+  * merges the positions into cumulative positional delete files and
+  * commits them with the new data files in ONE snapshot. Cost scales
+  * with changed rows, never with table size — the 100 TB property the
+  * copy-on-write rewrite lacks.
   */
 final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
     rawSchema: StructType) extends DeltaWrite with DeltaBatchWrite {
@@ -54,11 +51,8 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
   // when a SET expression references a metadata column, Spark appends
   // ALL metadata columns after the data columns in the write schema —
   // strip them (values arrive but are not table data)
-  private val metaNames: Set[String] =
-    Set(DuckLakePartitionPlanner.FileIdCol, DuckLakePartitionPlanner.PosCol) ++
-      DuckLake.VirtualNames
   private val rowSchema =
-    StructType(rawSchema.fields.filterNot(f => metaNames.contains(f.name)))
+    StructType(rawSchema.fields.filterNot(f => DuckLake.VirtualNames.contains(f.name)))
   private val partFields = lake.partitionFieldsOf(fullName)
   private val partKeys = partFields.map(pf =>
     (rowSchema.fieldIndex(pf.source), pf.transform.orNull)).toArray
@@ -72,20 +66,17 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
   override def toBatch: DeltaBatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val conf = new SerializableConfiguration(lake.spark.sparkContext.hadoopConfiguration)
+    def files(schema: StructType, keys: Array[(Int, String)]) = {
+      val (output, conf) = lake.parquetOutput(fullName, schema, keyOpt)
+      new DuckLakeFileWriterFactory(staging, output, conf, schema, keys)
+    }
     // updated rows keep their stable id: a second writer family appends
     // the explicit _ducklake_row_id column (read back by the rowid
     // virtual; catalog rows register with NULL row_id_start)
-    val rowIdSchema = StructType(rowSchema.fields :+
-      StructField(DuckLakePartitionPlanner.RowIdPhysCol, LongType, nullable = true))
-    val tuning = lake.writerTuning(fullName)
-    val ids = lake.fieldIdsOf(fullName)
-    new DeltaGroupWriterFactory(
-      new GroupDataWriterFactory(staging, conf, rowSchema, partKeys, keyOpt,
-        tuning, ids),
-      new GroupDataWriterFactory(staging, conf, rowIdSchema, partKeys, keyOpt,
-        tuning, ids),
-      rowSchema.length, staging, conf, keyOpt)
+    new DuckLakeDeltaWriterFactory(files(rowSchema, partKeys),
+      files(rowSchema.add(DuckLake.RowIdPhysCol, LongType, nullable = true), partKeys),
+      files(DuckLakeDeltaWriterFactory.DeletePartialSchema, Array.empty),
+      rowSchema.map(_.dataType).toArray)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -113,103 +104,67 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
   }
 }
 
-/** Executor-side delta writer: inserts delegate to the Group parquet
-  * writer (hive-partition splitting included); deletes STREAM into a
+/** Executor-side delta writer: inserts and updates go to the data file
+  * writers (hive-partition splitting included); deletes STREAM into a
   * partial `(_fid, pos)` parquet in the staging dir — constant task
   * memory, no position list in the commit message. The row id layout is
-  * fixed by `SupportsDelta.rowId`: (_file_id BIGINT, _pos BIGINT).
+  * fixed by `SupportsDelta.rowId`: (_file_id, _pos, rowid).
   */
-final class DeltaGroupWriterFactory(inner: GroupDataWriterFactory,
-    rowIdInner: GroupDataWriterFactory, nDataCols: Int,
-    staging: String, hconf: SerializableConfiguration, key: Option[String])
-    extends DeltaWriterFactory {
+final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
+    rowIdData: DuckLakeFileWriterFactory, deletes: DuckLakeFileWriterFactory,
+    dataTypes: Array[DataType]) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
-      private val insertWriter = inner.createWriter(partitionId, taskId)
-      private var rowIdWriter: org.apache.spark.sql.connector.write.DataWriter[InternalRow] = null
-      private var delWriter: ParquetWriter[Group] = null
-      private var delName: String = null
-      private var delFactory: SimpleGroupFactory = null
+      // each writer opens its file on its first row
+      private val insertWriter = data.createWriter(partitionId, taskId)
+      private val rowIdWriter = rowIdData.createWriter(partitionId, taskId)
+      private val delWriter = deletes.createWriter(partitionId, taskId)
+      private val writers = Seq(insertWriter, rowIdWriter, delWriter)
 
-      /** Rows may carry TRAILING metadata columns (a SET referenced one);
-        * slice to the data prefix.
+      /** The data columns of `row` — rows may carry TRAILING metadata
+        * columns (a SET referenced one) — followed by `extra`.
         */
-      private def dataOnly(row: InternalRow): InternalRow =
-        if (row.numFields <= nDataCols) row
+      private def dataRow(row: InternalRow, extra: Any*): InternalRow =
+        if (row.numFields == dataTypes.length && extra.isEmpty) row
         else {
-          val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nDataCols)
+          val out = new GenericInternalRow(dataTypes.length + extra.length)
           var i = 0
-          while (i < nDataCols) {
-            out.update(i, if (row.isNullAt(i)) null else row.get(i, inner.fieldType(i)))
+          while (i < dataTypes.length) {
+            out.update(i, if (row.isNullAt(i)) null else row.get(i, dataTypes(i)))
             i += 1
           }
+          extra.foreach { v => out.update(i, v); i += 1 }
           out
         }
 
-      override def insert(row: InternalRow): Unit = insertWriter.write(dataOnly(row))
+      override def insert(row: InternalRow): Unit = insertWriter.write(dataRow(row))
 
-      override def delete(meta: InternalRow, id: InternalRow): Unit = {
-        if (delWriter == null) {
-          val msgType = Types.buildMessage()
-            .addField(Types.optional(PrimitiveTypeName.INT64).named("_fid"))
-            .addField(Types.optional(PrimitiveTypeName.INT64).named("pos"))
-            .named("spark_schema")
-          delName = s"deletes-$partitionId-$taskId-${UUID.randomUUID().toString.take(8)}.parquet"
-          // delete-position files follow the same scoped tuning as the
-          // delta data files
-          val b = inner.applyTuning(ExampleParquetWriter
-            .builder(new Path(s"$staging/$delName"))
-            .withConf(hconf.value).withType(msgType))
-          key.foreach(k => b.withEncryption(GraftCryptoFactory.encryptionProps(k)))
-          delWriter = b.build()
-          delFactory = new SimpleGroupFactory(msgType)
-        }
-        val g = delFactory.newGroup()
-        g.add("_fid", id.getLong(0))
-        g.add("pos", id.getLong(1))
-        delWriter.write(g)
-      }
+      override def delete(meta: InternalRow, id: InternalRow): Unit =
+        delWriter.write(new GenericInternalRow(Array[Any](id.getLong(0), id.getLong(1))))
 
       override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
         delete(meta, id)
-        // rowId layout is (_file_id, _pos, rowid): the scan already
-        // resolved the row's stable id — write it INTO the new file
-        if (id.numFields >= 3 && !id.isNullAt(2)) {
-          if (rowIdWriter == null)
-            rowIdWriter = rowIdInner.createWriter(partitionId, taskId + 1000000L)
-          val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nDataCols + 1)
-          var i = 0
-          while (i < nDataCols) {
-            out.update(i, if (row.isNullAt(i)) null
-              else row.get(i, rowIdInner.fieldType(i)))
-            i += 1
-          }
-          out.update(nDataCols, id.getLong(2))
-          rowIdWriter.write(out)
-        } else insert(row)
+        // the scan already resolved the row's stable id — write it INTO
+        // the new file
+        if (id.numFields >= 3 && !id.isNullAt(2)) rowIdWriter.write(dataRow(row, id.getLong(2)))
+        else insert(row)
       }
 
       override def commit(): WriterCommitMessage = {
-        if (delWriter != null) delWriter.close()
-        val StagedFiles(files) = insertWriter.commit(): @unchecked
-        val rowIdFiles = if (rowIdWriter == null) Nil else {
-          val StagedFiles(fs) = rowIdWriter.commit(): @unchecked
-          fs
-        }
-        DeltaStaged(files, Option(delName).toSeq, rowIdFiles)
+        def staged(w: DataWriter[InternalRow]) = w.commit() match { case StagedFiles(fs) => fs }
+        DeltaStaged(staged(insertWriter), staged(delWriter).map(_._1), staged(rowIdWriter))
       }
 
-      override def abort(): Unit = {
-        if (delWriter != null) { try delWriter.close() catch { case _: Throwable => () } }
-        if (rowIdWriter != null) rowIdWriter.abort()
-        insertWriter.abort()
-      }
-      override def close(): Unit = {
-        if (rowIdWriter != null) rowIdWriter.close()
-        insertWriter.close()
-      }
+      override def abort(): Unit = writers.foreach(_.abort())
+      override def close(): Unit = writers.foreach(_.close())
     }
+}
+
+object DuckLakeDeltaWriterFactory {
+  /** One partial delete-positions file: (data file id, position). */
+  val DeletePartialSchema: StructType = StructType(Seq(
+    StructField("_fid", LongType), StructField("pos", LongType)))
 }
 
 /** Streaming sink into a lake table: `df.writeStream.toTable("ducklake.…")`.
@@ -239,10 +194,8 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val keyOpt = if (lake.encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
-    val batch = new GroupDataWriterFactory(staging,
-      new SerializableConfiguration(lake.spark.sparkContext.hadoopConfiguration),
-      rowSchema, partKeys, keyOpt,
-      lake.writerTuning(fullName), lake.fieldIdsOf(fullName))
+    val (output, conf) = lake.parquetOutput(fullName, rowSchema, keyOpt)
+    val batch = new DuckLakeFileWriterFactory(staging, output, conf, rowSchema, partKeys)
     lastKey = keyOpt
     (partitionId: Int, taskId: Long, _: Long) => batch.createWriter(partitionId, taskId)
   }
@@ -276,105 +229,35 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
   }
 }
 
-/** Executor-side parquet-mr Group writer. Rows are split by the table's
-  * hive partition values on the fly (one open writer per value combo per
-  * task); partition columns stay out of the file, as on the read side.
+/** Executor-side lake file writer: Spark's parquet writer, prepared on
+  * the driver by [[DuckLake.parquetOutput]]. Rows are split by the
+  * table's hive partition values on the fly (one open writer per value
+  * combo per task); every column stays in the file, partition keys
+  * included.
   */
-final class GroupDataWriterFactory(staging: String, hconf: SerializableConfiguration,
-    schema: StructType, partKeys: Array[(Int, String)], key: Option[String],
-    tuning: Map[String, String] = Map.empty,
-    fieldIds: Map[String, Long] = Map.empty)
+final class DuckLakeFileWriterFactory(staging: String, output: OutputWriterFactory,
+    conf: SerializableConfiguration, schema: StructType, partKeys: Array[(Int, String)])
     extends DataWriterFactory {
-
-  /** One place for the scoped writer options on a parquet-mr builder —
-    * identical semantics to the staged-append path.
-    */
-  private[connector] def applyTuning[B <: org.apache.parquet.hadoop.ParquetWriter.Builder[Group, B]](
-      builder: B): B = {
-    tuning.get("compression").foreach(c =>
-      builder.withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.valueOf(c.toUpperCase)))
-    tuning.get("parquet.writer.version").foreach(v =>
-      builder.withWriterVersion(
-        org.apache.parquet.column.ParquetProperties.WriterVersion.fromString(v)))
-    tuning.get("parquet.block.size").foreach(b2 => builder.withRowGroupSize(b2.toLong))
-    tuning.get("parquet.page.size").foreach(p2 => builder.withPageSize(p2.toInt))
-    tuning.get("parquet.block.row.count.limit").foreach(n =>
-      builder.withRowGroupRowCountLimit(n.toInt))
-    tuning.foreach {
-      case (k, _) if k.startsWith("parquet.bloom.filter.enabled#") =>
-        builder.withBloomFilterEnabled(
-          k.stripPrefix("parquet.bloom.filter.enabled#"), true)
-      case (k, v) if k.startsWith("parquet.bloom.filter.fpp#") =>
-        builder.withBloomFilterFPP(
-          k.stripPrefix("parquet.bloom.filter.fpp#"), v.toDouble)
-      case _ => ()
-    }
-    builder
-  }
-
-  /** Logical type of field `i` (update()'s typed InternalRow copy). */
-  def fieldType(i: Int): DataType = schema.fields(i).dataType
-
-  // legacy identity-only signature (kept for binary/test compatibility)
-  def this(staging: String, hconf: SerializableConfiguration, schema: StructType,
-      partIdx: Array[Int], key: Option[String]) =
-    this(staging, hconf, schema, partIdx.map(i => (i, null: String)), key)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      // ALL columns stay in the data fields — partition keys (identity
-      // and transform sources alike) are physically in every file
-      private val dataFields: Array[(StructField, Int)] =
-        schema.fields.zipWithIndex
-      private val msgType: MessageType = {
-        val b = Types.buildMessage()
-        dataFields.foreach { case (f, _) =>
-          val pf = GroupDataWriterFactory.parquetField(f)
-          // DuckLake spec: field_id = catalog column_id (interop);
-          // parquet field ids are 32-bit — never stamp a wrapped value
-          b.addField(fieldIds.get(f.name)
-            .filter(_ <= Int.MaxValue).fold(pf)(id => pf.withId(id.toInt)))
-        }
-        b.named("spark_schema")
-      }
-      private val groupFactory = new SimpleGroupFactory(msgType)
       private val writers =
-        mutable.LinkedHashMap.empty[Seq[Option[String]], (ParquetWriter[Group], String)]
+        mutable.LinkedHashMap.empty[Seq[Option[String]], (OutputWriter, String)]
 
       override def write(row: InternalRow): Unit = {
-        // group-based row-level rewrites may hand rows UNPROJECTED, with
-        // the planner's __row_operation marker leading (observed in the
-        // ReplaceData plan: `Project [6 AS __row_operation, cols…]`);
-        // shift ordinals past it when present
-        val off = row.numFields - schema.fields.length
-        if (off != 0 && off != 1)
-          throw new UnsupportedTypeException(
-            s"row has ${row.numFields} fields, write schema has ${schema.fields.length}: ${schema.simpleString}")
         val pv: Seq[Option[String]] = partKeys.toSeq.map { case (i, t) =>
-          if (row.isNullAt(i + off)) None
+          if (row.isNullAt(i)) None
           else if (t == null)
-            Some(GroupDataWriterFactory.partitionString(row, i + off, schema.fields(i).dataType))
+            Some(DuckLakeFileWriterFactory.partitionString(row, i, schema.fields(i).dataType))
           else Some(graft.lake.PartTransform.transformValue(t,
-            schema.fields(i).dataType, row.get(i + off, schema.fields(i).dataType)))
+            schema.fields(i).dataType, row.get(i, schema.fields(i).dataType)))
         }
         val (w, _) = writers.getOrElseUpdate(pv, {
-          val name = s"part-$partitionId-$taskId-${writers.size}-${UUID.randomUUID().toString.take(8)}.parquet"
-          tuning.get("parquet.compression.codec.zstd.level")
-            .foreach(l => hconf.value.set("parquet.compression.codec.zstd.level", l))
-          // scoped writer tuning applies to DELTA files too
-          // (same option surface as staged appends)
-          val builder = applyTuning(ExampleParquetWriter
-            .builder(new Path(s"$staging/$name"))
-            .withConf(hconf.value).withType(msgType))
-          key.foreach(k => builder.withEncryption(GraftCryptoFactory.encryptionProps(k)))
-          (builder.build(), name)
+          val name = s"part-$partitionId-$taskId-${writers.size}-${UUID.randomUUID()}.parquet"
+          (output.newInstance(s"$staging/$name", schema,
+            new TaskAttemptContextImpl(conf.value, new TaskAttemptID())), name)
         })
-        val g = groupFactory.newGroup()
-        dataFields.foreach { case (f, i) =>
-          if (!row.isNullAt(i + off)) GroupDataWriterFactory.append(g, f, row, i + off)
-        }
-        w.write(g)
+        w.write(row)
       }
 
       override def commit(): WriterCommitMessage = {
@@ -389,72 +272,7 @@ final class GroupDataWriterFactory(staging: String, hconf: SerializableConfigura
     }
 }
 
-object GroupDataWriterFactory {
-  import LogicalTypeAnnotation._
-
-  private def decimalBytes(p: Int): Int =
-    math.ceil((math.log(math.pow(10, p)) / math.log(2) + 1) / 8).toInt
-
-  /** Spark field → parquet type with the same annotations Spark's own
-    * writer emits (so both our Group reader and Spark's vectorized reader
-    * round-trip the files).
-    */
-  def parquetField(f: StructField): org.apache.parquet.schema.Type = {
-    val b = f.dataType match {
-      case ByteType        => Types.optional(PrimitiveTypeName.INT32).as(intType(8, true))
-      case ShortType       => Types.optional(PrimitiveTypeName.INT32).as(intType(16, true))
-      case IntegerType     => Types.optional(PrimitiveTypeName.INT32)
-      case DateType        => Types.optional(PrimitiveTypeName.INT32).as(dateType())
-      case LongType        => Types.optional(PrimitiveTypeName.INT64)
-      case TimestampType   =>
-        Types.optional(PrimitiveTypeName.INT64).as(timestampType(true, TimeUnit.MICROS))
-      case TimestampNTZType =>
-        Types.optional(PrimitiveTypeName.INT64).as(timestampType(false, TimeUnit.MICROS))
-      case FloatType       => Types.optional(PrimitiveTypeName.FLOAT)
-      case DoubleType      => Types.optional(PrimitiveTypeName.DOUBLE)
-      case BooleanType     => Types.optional(PrimitiveTypeName.BOOLEAN)
-      case StringType      => Types.optional(PrimitiveTypeName.BINARY).as(stringType())
-      case BinaryType      => Types.optional(PrimitiveTypeName.BINARY)
-      case d: DecimalType if d.precision <= 9 =>
-        Types.optional(PrimitiveTypeName.INT32).as(decimalType(d.scale, d.precision))
-      case d: DecimalType if d.precision <= 18 =>
-        Types.optional(PrimitiveTypeName.INT64).as(decimalType(d.scale, d.precision))
-      case d: DecimalType =>
-        Types.optional(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY)
-          .length(decimalBytes(d.precision)).as(decimalType(d.scale, d.precision))
-      case other => throw new UnsupportedTypeException(s"native write: $other")
-    }
-    b.named(f.name)
-  }
-
-  /** Append one non-null field value to the output group. */
-  def append(g: Group, f: StructField, row: InternalRow, i: Int): Unit = f.dataType match {
-    case ByteType        => g.add(f.name, row.getByte(i).toInt)
-    case ShortType       => g.add(f.name, row.getShort(i).toInt)
-    case IntegerType | DateType => g.add(f.name, row.getInt(i))
-    case LongType | TimestampType | TimestampNTZType => g.add(f.name, row.getLong(i))
-    case FloatType       => g.add(f.name, row.getFloat(i))
-    case DoubleType      => g.add(f.name, row.getDouble(i))
-    case BooleanType     => g.add(f.name, row.getBoolean(i))
-    case StringType      => g.add(f.name, Binary.fromString(row.getUTF8String(i).toString))
-    case BinaryType      => g.add(f.name, Binary.fromConstantByteArray(row.getBinary(i)))
-    case d: DecimalType =>
-      val dec = row.getDecimal(i, d.precision, d.scale)
-      if (d.precision <= 9) g.add(f.name, dec.toUnscaledLong.toInt)
-      else if (d.precision <= 18) g.add(f.name, dec.toUnscaledLong)
-      else {
-        val unscaled = dec.toJavaBigDecimal.unscaledValue().toByteArray
-        val n = decimalBytes(d.precision)
-        val padded = new Array[Byte](n)
-        // sign-extend into the fixed width
-        val sign: Byte = if (unscaled.head < 0) -1 else 0
-        java.util.Arrays.fill(padded, sign)
-        System.arraycopy(unscaled, 0, padded, n - unscaled.length, unscaled.length)
-        g.add(f.name, Binary.fromConstantByteArray(padded))
-      }
-    case other => throw new UnsupportedTypeException(s"native write: $other")
-  }
-
+object DuckLakeFileWriterFactory {
   /** Partition value → its catalog/hive string form (matches what Spark's
     * partitionBy staging writes into directory names).
     */

@@ -1,20 +1,20 @@
 package graft.lake.connector
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, SupportsReportPartitioning}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.lake.crypto.GraftCryptoFactory
 import graft.lake.{DuckLake, UnsupportedTypeException}
 
 /** Snapshot offset for the DuckLake incremental stream: micro-batch (a, b]
@@ -28,24 +28,32 @@ final case class SnapshotOffset(snapshot: Long) extends Offset {
   override def json(): String = snapshot.toString
 }
 
-/** One data file of one micro-batch. `physNames(i)` is the column's name
-  * as written in THIS file's epoch (rename history resolved on the
-  * driver; column_id ≙ field_id role, reference src/types.rs:440-498);
-  * null marks a column added after the file was written. `isPartCol(i)`
-  * marks hive partition columns, whose value comes from the catalog
-  * (`partRaw(i)`, null = null partition) rather than the parquet.
+/** One data file of a row-level scan, SPJ scan or micro-batch. `read`
+  * is Spark's parquet reader for the file's physical schema: the columns
+  * under the names they had in THIS file's epoch (rename history
+  * resolved on the driver; column_id ≙ field_id role, reference
+  * src/types.rs:440-498). `slots(i)` says where required field `i` comes
+  * from: an ordinal of `read`'s rows, or one of the codes in the
+  * companion — a driver-evaluated constant (`constants(i)`: a hive
+  * partition value, the default of a column added after the file was
+  * written, or null), the file id, the position or the stable row id.
   */
-final case class DuckLakeFilePartition(path: String, encryptionKey: Option[String],
-    physNames: Array[String], fieldTypes: Array[DataType],
-    isPartCol: Array[Boolean], partRaw: Array[String],
-    deletePath: String = null, deleteKey: Option[String] = None,
-    special: Array[Int] = null, dataFileId: Long = -1L,
-    defaultSqls: Array[String] = null,
-    rowIdStart: Long = -1L,
+final case class DuckLakeFilePartition(path: String,
+    read: PartitionedFile => Iterator[InternalRow],
+    slots: Array[Int], constants: Array[Any], fieldTypes: Array[DataType],
+    deletePath: String, readDeletes: PartitionedFile => Iterator[InternalRow],
+    dataFileId: Long, rowIdStart: Long,
     // merged-file segment map: (startPos, rowCount, rowIdStart|-1)
-    rowIdSegments: Array[Array[Long]] = null,
-    // file carries an explicit per-row id column (UPDATE-written)
-    rowIdInFile: Boolean = false) extends InputPartition
+    rowIdSegments: Array[Array[Long]],
+    // ordinal of the explicit per-row id column of UPDATE-written files
+    rowIdOrdinal: Int) extends InputPartition
+
+object DuckLakeFilePartition {
+  final val Constant = -1
+  final val FileId = -2
+  final val Pos = -3
+  final val RowId = -4
+}
 
 /** A file partition tagged with its hive-partition key — the handle
   * Spark's storage-partitioned join (SPJ) machinery groups by: two lake
@@ -60,46 +68,19 @@ final class DuckLakeKeyedPartition(val inner: DuckLakeFilePartition,
   def keyVector: Vector[Any] = keyVals.toVector
 }
 
-/** Shared driver-side planning for the native (parquet-mr Group) readers:
-  * resolves each file's rename epoch, partition values and MOR delete
-  * file into a serializable [[DuckLakeFilePartition]].
+/** Shared driver-side planning for the row-level, SPJ and streaming
+  * readers: resolves each file's rename epoch, partition values, defaults
+  * and MOR delete file into a serializable [[DuckLakeFilePartition]],
+  * with one Spark parquet reader per physical schema.
   */
 private[connector] object DuckLakePartitionPlanner {
   import graft.lake.{ColumnDef, DataFileRec, TableRec}
 
-  def supportedType(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-         BooleanType | StringType | BinaryType | DateType | TimestampType |
-         TimestampNTZType => true
-    case _: DecimalType => true
-    case _ => false
-  }
-
-  /** Row-address metadata columns a scan may request by name: the data
-    * file's catalog id and the row's file-local position — together the
-    * stable row id driving delta-based (merge-on-read) row-level ops.
-    */
-  final val FileIdCol = "_file_id"
-  final val PosCol = "_pos"
-  /** Physical column name of explicit per-row stable ids in
-    * UPDATE-written files (row_id_start NULL in the catalog).
-    */
-  final val RowIdPhysCol = "_ducklake_row_id"
+  private val DeleteSchema = StructType(Seq(StructField("pos", LongType)))
 
   def plan(lake: DuckLake, tr: TableRec, cols: Seq[ColumnDef],
       files: Seq[DataFileRec], required: StructType,
       basePath: String): Array[InputPartition] = {
-    val special = required.fields.map(_.name match {
-      case FileIdCol                   => 1
-      case PosCol                      => 2
-      case graft.lake.DuckLake.VirtualRowId => 3
-      case _                           => 0
-    })
-    required.fields.zipWithIndex.foreach { case (f, i) =>
-      if (special(i) == 0 && !supportedType(f.dataType))
-        throw new UnsupportedTypeException(
-          s"native read of ${f.dataType.simpleString} column ${f.name} not supported")
-    }
     val byName = cols.map(c => c.name -> c).toMap
     val history = lake.store.getColumnHistory(tr.tableId)
     val partCols = lake.store.getPartitionColumns(tr.tableId, lake.store.currentSnapshot)
@@ -114,47 +95,68 @@ private[connector] object DuckLakePartitionPlanner {
     // files registered by absolute path
     def resolve(path: String, relative: Boolean) =
       if (relative) s"$basePath/$path" else path
+    // a column added (with default) after a file's epoch reads its
+    // initial default there; evaluated driver-side, so a bad default
+    // fails at planning
+    val defaults = mutable.Map.empty[Int, Any]
+    def default(i: Int): Any = defaults.getOrElseUpdate(i,
+      byName.get(required(i).name).flatMap(_.initialDefault)
+        .map(DuckLake.evalDefault(_, required(i).dataType)).orNull)
+    val keys = lake.decryptOptions(files.flatMap(f =>
+      (f.path -> f.encryptionKey) +: f.deleteFile.map(d => d.path -> d.encryptionKey).toSeq)
+      .map { case (p, k) => new Path(p).getName -> k })
+    // one reader per physical schema, each with its OWN conf: the reader
+    // writes its requested schema into the conf it broadcasts
+    val readers = mutable.Map.empty[StructType, PartitionedFile => Iterator[InternalRow]]
+    def reader(schema: StructType) = readers.getOrElseUpdate(schema,
+      new ParquetFileFormat().buildReaderWithPartitionValues(lake.spark, schema,
+        new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        lake.hadoopConfWith(keys)))
+    val types = required.fields.map(_.dataType)
     files.map { file =>
-      // per-file epoch: the physical (on-disk) name of each required column
-      val physNames = required.fields.map { f =>
-        byName.get(f.name).flatMap { cur =>
-          history.find { case (h, begin, endS) =>
-            h.columnId == cur.columnId && begin <= file.epoch &&
-              endS.forall(_ > file.epoch)
-          }.map(_._1.name)
-        }.orNull
+      val pvs = partValsByFile.getOrElse(file.dataFileId, Map.empty)
+      val phys = mutable.ArrayBuffer.empty[StructField]
+      def physical(name: String, dt: DataType): Int = {
+        phys += StructField(name, dt, nullable = true) // absent in file → null
+        phys.size - 1
       }
-      val isPartCol = required.fields.map(f =>
-        byName.get(f.name).exists(c => partIdxByColId.contains(c.columnId)))
-      val partRaw = required.fields.map { f =>
-        (for {
-          cur <- byName.get(f.name)
-          idx <- partIdxByColId.get(cur.columnId)
-          v <- partValsByFile.getOrElse(file.dataFileId, Map.empty).getOrElse(idx, None)
-        } yield v).orNull
+      val constants = new Array[Any](required.length)
+      val slots = required.fields.zipWithIndex.map { case (f, i) =>
+        val cur = byName.get(f.name)
+        f.name match {
+          case DuckLake.VirtualFileId => DuckLakeFilePartition.FileId
+          case DuckLake.VirtualPos    => DuckLakeFilePartition.Pos
+          case DuckLake.VirtualRowId  => DuckLakeFilePartition.RowId
+          case _ if cur.exists(c => partIdxByColId.contains(c.columnId)) =>
+            constants(i) = DuckLakeBatchScan.catalystPartValue(f.dataType,
+              pvs.getOrElse(partIdxByColId(cur.get.columnId), None).orNull)
+            DuckLakeFilePartition.Constant
+          case _ =>
+            // the column's physical (on-disk) name in this file's epoch
+            cur.flatMap(c => history.find { case (h, begin, endS) =>
+              h.columnId == c.columnId && begin <= file.epoch && endS.forall(_ > file.epoch)
+            }) match {
+              case Some((h, _, _)) => physical(h.name, f.dataType)
+              case None =>
+                constants(i) = default(i)
+                DuckLakeFilePartition.Constant
+            }
+        }
       }
-      // a column added (with default) after this file's epoch: ship the
-      // default SQL so the executor materializes it for pre-ALTER rows;
-      // evaluate driver-side first so a bad default fails at planning
-      val defaultSqls = required.fields.zipWithIndex.map { case (f, i) =>
-        (if (physNames(i) != null) None
-         else byName.get(f.name).flatMap(_.initialDefault).map { sql =>
-           graft.lake.DuckLake.evalDefault(sql, f.dataType); sql
-         }).orNull
-      }
+      val rowIdOrdinal =
+        if (required.fieldNames.contains(DuckLake.VirtualRowId) &&
+            file.rowIdStart.isEmpty && file.segments.isEmpty)
+          physical(DuckLake.RowIdPhysCol, LongType)
+        else -1
       DuckLakeFilePartition(resolve(file.path, file.pathIsRelative),
-        file.encryptionKey, physNames, required.fields.map(_.dataType),
-        isPartCol, partRaw,
+        reader(StructType(phys.toSeq)), slots, constants, types,
         file.deleteFile.map(d => resolve(d.path, d.pathIsRelative)).orNull,
-        file.deleteFile.flatMap(_.encryptionKey),
-        special, file.dataFileId,
-        if (defaultSqls.forall(_ == null)) null else defaultSqls,
-        file.rowIdStart.getOrElse(-1L),
+        if (file.deleteFile.isEmpty) null else reader(DeleteSchema),
+        file.dataFileId, file.rowIdStart.getOrElse(-1L),
         if (file.segments.isEmpty) null
         else file.segments.map(sg =>
           Array(sg.startPos, sg.rowCount, sg.rowIdStart.getOrElse(-1L))).toArray,
-        file.rowIdStart.isEmpty && file.segments.isEmpty)
-        : InputPartition
+        rowIdOrdinal): InputPartition
     }.toArray
   }
 }
@@ -179,8 +181,10 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
 
   private def tableRec = {
     val snap = lake.store.currentSnapshot
-    val sch = lake.store.getSchemaByName(schemaName, snap).get
-    lake.store.getTableByName(sch.schemaId, tableName, snap).get
+    val sch = lake.store.getSchemaByName(schemaName, snap)
+      .getOrElse(throw new graft.lake.SchemaNotFoundException(schemaName))
+    lake.store.getTableByName(sch.schemaId, tableName, snap)
+      .getOrElse(throw new graft.lake.TableNotFoundException(fullName))
   }
 
   override def initialOffset(): Offset = SnapshotOffset(0L)
@@ -289,12 +293,13 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
   override def stop(): Unit = ()
 }
 
-/** Native `Batch` scan over a snapshot-pinned lake table: one input
-  * partition per data file, MOR deletes applied in the reader. Used by
-  * the row-level-operation path (SQL UPDATE / MERGE / row-level DELETE),
-  * which requires a real `toBatch`, and by storage-partitioned joins.
-  * Ordinary reads never get here: [[SpliceLakeScans]] plans them as the
-  * facade's parquet scans, with Spark's vectorized reader.
+/** `Batch` scan over a snapshot-pinned lake table: one input partition
+  * per data file, read by Spark's parquet reader, MOR deletes applied in
+  * the connector's reader. Used by the row-level-operation path (SQL
+  * UPDATE / MERGE / row-level DELETE), which requires a real `toBatch`
+  * and row addresses, and by storage-partitioned joins. Ordinary reads
+  * never get here: [[SpliceLakeScans]] plans them as the facade's
+  * parquet scans.
   */
 final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     schema: StructType,
@@ -416,14 +421,14 @@ object DuckLakeBatchScan {
       case d: DecimalType =>
         org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(raw), d.precision, d.scale)
       case other => throw new UnsupportedTypeException(
-        s"partition key type ${other.simpleString} not supported for SPJ")
+        s"identity partition key type ${other.simpleString} not supported by the connector's Batch scan")
     }
 }
 
-/** Executor-side reader: parquet-mr Group materialization (row-by-row) —
-  * appropriate for the incremental tail of a stream and for row-level
-  * rewrites, where batches are bounded; ordinary reads are spliced
-  * parquet scans with Spark's vectorized reader.
+/** Executor-side reader: each file through the Spark parquet reader its
+  * partition carries, read whole and unfiltered so the row count gives
+  * every row's file position (MOR deletes, `_pos`, row ids). Ordinary
+  * reads never get here: they are spliced parquet scans.
   */
 final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
     extends PartitionReaderFactory {
@@ -433,42 +438,32 @@ final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
       case k: DuckLakeKeyedPartition => k.inner
       case f: DuckLakeFilePartition  => f
     }
+    def open(path: String, read: PartitionedFile => Iterator[InternalRow]) = {
+      val hp = new Path(path)
+      val st = hp.getFileSystem(hconf.value).getFileStatus(hp)
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L,
+        st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+    }
     new PartitionReader[InternalRow] {
-      private def open(path: String, key: Option[String]): ParquetReader[Group] = {
-        val b = ParquetReader.builder(new GroupReadSupport(), new Path(path))
-          .withConf(hconf.value)
-        key.foreach(k => b.withDecryption(GraftCryptoFactory.decryptionProps(k)))
-        b.build()
-      }
-
       // MOR delete file: positions of rows hidden in THIS data file
       private val deleted: java.util.HashSet[java.lang.Long] = {
         val s = new java.util.HashSet[java.lang.Long]()
-        if (p.deletePath != null) {
-          val r = open(p.deletePath, p.deleteKey)
-          try {
-            var g = r.read()
-            while (g != null) {
-              s.add(g.getLong(g.getType.getFieldIndex("pos"), 0))
-              g = r.read()
-            }
-          } finally r.close()
-        }
+        if (p.deletePath != null)
+          open(p.deletePath, p.readDeletes).foreach(r => if (!r.isNullAt(0)) s.add(r.getLong(0)))
         s
       }
 
-      private val reader: ParquetReader[Group] = open(p.path, p.encryptionKey)
-      private var current: Group = _
+      private val rows = open(p.path, p.read)
+      private var current: InternalRow = _
       private var pos: Long = -1L
 
-      /** Stable row id of the row at file position `pos`: contiguous
-        * range, merged-segment map, or the explicit in-file column.
+      /** Stable row id of the row at file position `pos`: the explicit
+        * in-file column, merged-segment map, or contiguous range.
         */
       private def rowIdAt(pos: Long): Any =
-        if (p.rowIdInFile) {
-          if (current.getType.containsField(DuckLakePartitionPlanner.RowIdPhysCol))
-            readField(current, DuckLakePartitionPlanner.RowIdPhysCol, LongType)
-          else null // legacy file without ids
+        if (p.rowIdOrdinal >= 0) {
+          if (current.isNullAt(p.rowIdOrdinal)) null // legacy file without ids
+          else current.getLong(p.rowIdOrdinal)
         }
         else if (p.rowIdSegments != null) {
           p.rowIdSegments.collectFirst {
@@ -478,110 +473,35 @@ final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
         } else if (p.rowIdStart >= 0) Long.box(p.rowIdStart + pos)
         else null
 
-      // initial defaults for columns added after this file's epoch,
-      // evaluated once per reader to Catalyst internal values
-      private val defaultVal: Array[Any] =
-        if (p.defaultSqls == null) null
-        else p.defaultSqls.indices.map(i =>
-          if (p.defaultSqls(i) == null) null
-          else graft.lake.DuckLake.evalDefault(p.defaultSqls(i), p.fieldTypes(i))).toArray
-
       override def next(): Boolean = {
-        current = reader.read()
-        pos += 1
-        while (current != null && deleted.contains(pos)) {
-          current = reader.read()
+        do {
+          current = if (rows.hasNext) rows.next() else null
           pos += 1
-        }
+        } while (current != null && deleted.contains(pos))
         current != null
       }
 
       override def get(): InternalRow = {
-        val row = new GenericInternalRow(p.physNames.length)
+        val row = new GenericInternalRow(p.slots.length)
         var i = 0
-        while (i < p.physNames.length) {
-          val v =
-            if (p.special != null && p.special(i) == 1) p.dataFileId
-            else if (p.special != null && p.special(i) == 2) pos
-            else if (p.special != null && p.special(i) == 3) rowIdAt(pos)
-            else if (p.isPartCol(i)) parsePartValue(p.partRaw(i), p.fieldTypes(i))
-            else if (p.physNames(i) == null && defaultVal != null) defaultVal(i)
-            else readField(current, p.physNames(i), p.fieldTypes(i))
+        while (i < p.slots.length) {
+          val v = p.slots(i) match {
+            case DuckLakeFilePartition.Constant => p.constants(i)
+            case DuckLakeFilePartition.FileId   => p.dataFileId
+            case DuckLakeFilePartition.Pos      => pos
+            case DuckLakeFilePartition.RowId    => rowIdAt(pos)
+            case j => if (current.isNullAt(j)) null else current.get(j, p.fieldTypes(i))
+          }
           row.update(i, v)
           i += 1
         }
         row
       }
 
-      override def close(): Unit = reader.close()
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => () // closed by the task's completion listener
+      }
     }
-  }
-
-  private def readField(g: Group, physName: String, dt: DataType): Any = {
-    if (physName == null) return null // column added after this file epoch
-    val idx = g.getType.getFieldIndex(physName)
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    dt match {
-      case ByteType       => g.getInteger(idx, 0).toByte
-      case ShortType      => g.getInteger(idx, 0).toShort
-      case IntegerType    => g.getInteger(idx, 0)
-      case DateType       => g.getInteger(idx, 0)
-      case LongType       => g.getLong(idx, 0)
-      case TimestampType | TimestampNTZType =>
-        // Spark's default parquet writer emits TimestampType as INT96
-        // (spark.sql.parquet.outputTimestampType=INT96); NTZ and
-        // MICROS-configured writers emit INT64 µs. Handle both.
-        g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT96 => int96ToMicros(g.getInt96(idx, 0).getBytes)
-          case _                       => g.getLong(idx, 0) // µs since epoch
-        }
-      case FloatType      => g.getFloat(idx, 0)
-      case DoubleType     => g.getDouble(idx, 0)
-      case BooleanType    => g.getBoolean(idx, 0)
-      case StringType     => UTF8String.fromString(g.getString(idx, 0))
-      case BinaryType     => g.getBinary(idx, 0).getBytes
-      case d: DecimalType =>
-        g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 =>
-            org.apache.spark.sql.types.Decimal(
-              BigDecimal(BigInt(g.getInteger(idx, 0)), d.scale), d.precision, d.scale)
-          case PrimitiveTypeName.INT64 =>
-            org.apache.spark.sql.types.Decimal(
-              BigDecimal(BigInt(g.getLong(idx, 0)), d.scale), d.precision, d.scale)
-          case _ => // FIXED_LEN_BYTE_ARRAY / BINARY: unscaled big-endian
-            org.apache.spark.sql.types.Decimal(
-              BigDecimal(BigInt(g.getBinary(idx, 0).getBytes), d.scale),
-              d.precision, d.scale)
-        }
-      case other => throw new UnsupportedTypeException(s"stream read: $other")
-    }
-  }
-
-  /** Catalog-held hive partition value string → Spark internal value. */
-  private def parsePartValue(raw: String, dt: DataType): Any = {
-    if (raw == null) return null
-    dt match {
-      case ByteType    => raw.toByte
-      case ShortType   => raw.toShort
-      case IntegerType => raw.toInt
-      case LongType    => raw.toLong
-      case FloatType   => raw.toFloat
-      case DoubleType  => raw.toDouble
-      case BooleanType => raw.toBoolean
-      case StringType  => UTF8String.fromString(raw)
-      case DateType    => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case other => throw new UnsupportedTypeException(s"stream partition col: $other")
-    }
-  }
-
-  /** Impala-layout INT96 timestamp: little-endian 8-byte nanos-of-day +
-    * 4-byte Julian day number → µs since the Unix epoch.
-    */
-  private def int96ToMicros(bytes: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    val JulianUnixEpoch = 2440588L
-    (julianDay - JulianUnixEpoch) * 86400L * 1000000L + nanosOfDay / 1000L
   }
 }

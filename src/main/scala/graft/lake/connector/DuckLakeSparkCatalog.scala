@@ -580,10 +580,10 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
     * `snapshot_id`/`filename`/`file_row_number` expose row provenance.
     */
   override def metadataColumns(): Array[MetadataColumn] = Array(
-    metaCol(DuckLakePartitionPlanner.FileIdCol,
+    metaCol(DuckLake.VirtualFileId,
       org.apache.spark.sql.types.LongType, nullable = false,
       "DuckLake data file id (catalog)"),
-    metaCol(DuckLakePartitionPlanner.PosCol,
+    metaCol(DuckLake.VirtualPos,
       org.apache.spark.sql.types.LongType, nullable = false,
       "file-local row position"),
     metaCol(DuckLake.VirtualSnapshot,
@@ -642,9 +642,9 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
 
       override def rowId(): Array[NamedReference] = Array(
         org.apache.spark.sql.connector.expressions.Expressions.column(
-          DuckLakePartitionPlanner.FileIdCol),
+          DuckLake.VirtualFileId),
         org.apache.spark.sql.connector.expressions.Expressions.column(
-          DuckLakePartitionPlanner.PosCol),
+          DuckLake.VirtualPos),
         // the row's STABLE id rides along so updates can keep it
         // (DuckLake: updated rows keep their rowid — corpus
         // rowid/ducklake_row_id.test)
@@ -658,7 +658,7 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
       // prunable scan: Spark appends the row-address columns it needs to
       // the pruned schema, and pushes the command's condition — used for
       // catalog-stats FILE skipping, with every filter kept residual
-      // (a native Batch — the rewrite requires toBatch)
+      // ([[DuckLakeBatchScan]] — the rewrite requires toBatch)
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
         new ScanBuilder with SupportsPushDownRequiredColumns
             with SupportsPushDownFilters {
@@ -769,12 +769,13 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
         case None =>
           // opt-in storage-partitioned join path: when v2 bucketing is on
           // and the table's hive partition keys survive column pruning,
-          // scan through the native Batch reporting KeyGroupedPartitioning
-          // — co-partitioned lake joins then run with ZERO shuffle. The
-          // trade (row-wise readers vs the spliced vectorized parquet
-          // scan) is the right one exactly when the user asks for it:
-          // exchange cost dominates scan cost for the big-big joins SPJ
-          // targets.
+          // scan through the connector's Batch reporting
+          // KeyGroupedPartitioning — co-partitioned lake joins then run
+          // with ZERO shuffle. The trade (one whole-file partition per
+          // data file, without parquet filter pushdown or split
+          // coalescing, vs the spliced parquet scan) is the right one
+          // exactly when the user asks for it: exchange cost dominates
+          // scan cost for the big-big joins SPJ targets.
           val spjOk = lake.spark.conf
             .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean && {
               val pfs = lake.partitionFieldsOf(fullName, Some(snapshot))
@@ -782,8 +783,6 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
                 pfs.forall(f => (f.transform.isEmpty ||
                   f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) &&
                   required.fieldNames.contains(f.source)) &&
-                required.fields.forall(f =>
-                  DuckLakePartitionPlanner.supportedType(f.dataType)) &&
                 !required.fieldNames.exists(DuckLake.VirtualNames.contains)
             }
           if (spjOk)

@@ -76,8 +76,9 @@ object GraftCryptoFactory {
       .withPlaintextFilesAllowed()
       .build()
 
-  /** Encryption properties for direct parquet-mr writers (the native
-    * BatchWrite path, which bypasses Spark's conf-driven factory).
+  /** Encryption properties for direct parquet-mr writers
+    * ([[graft.lake.DeleteFileWriter]], which bypasses Spark's
+    * conf-driven factory).
     */
   def encryptionProps(b64: String): FileEncryptionProperties =
     FileEncryptionProperties.builder(Base64.getDecoder.decode(b64)).build()

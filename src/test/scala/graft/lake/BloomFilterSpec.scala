@@ -21,7 +21,7 @@ import org.scalatest.BeforeAndAfterAll
   * predicate on a high-cardinality UNSORTED key (the case min/max stats
   * can't prune) skips row groups at the reader. Asserted on BOTH write
   * paths: the V1 staged-append writer (DataFrameWriter options) and the
-  * executor-side parquet-mr Group writer (DSv2 / delta path).
+  * executor-side writers of the delta path (SQL UPDATE).
   */
 class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -136,51 +136,71 @@ class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bloomOffsets(s"$root/data/main/nobloom", "id").forall(_ < 0))
   }
 
-  test("executor-side Group writer honors bloom tuning (DSv2/delta path)") {
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      "message t { required int64 id; required binary v; }")
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    GroupWriteSupport.setSchema(schema, conf)
-    val out = new Path(s"$root/group/bloomed.parquet")
-    val factory = new graft.lake.connector.GroupDataWriterFactory(
-      s"$root/group", new org.apache.spark.util.SerializableConfiguration(conf),
-      org.apache.spark.sql.types.StructType(Nil), Array.empty[(Int, String)], None,
-      Map("parquet.bloom.filter.enabled#id" -> "true",
-        "parquet.bloom.filter.fpp#id" -> "0.05"))
+  test("SQL UPDATE delta files honor writer tuning and field ids") {
+    import spark.implicits._
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val ts = java.sql.Timestamp.valueOf("2024-06-01 12:30:00")
+    lake.createTableAs((1L to 2000L).map(i => (i, s"v$i", ts)).toDF("id", "v", "ts")
+      .coalesce(1), "main.dbloom")
+    lake.setOption("parquet_bloom_filter_columns", "id", table = Some("dbloom"))
+    lake.setOption("parquet_bloom_filter_fpp", "0.05", table = Some("dbloom"))
+    lake.setOption("parquet_compression", "gzip", table = Some("dbloom"))
+    spark.conf.set("spark.sql.catalog.bloomcat", classOf[DuckLakeSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.bloomcat.metaDb", s"$root/meta")
+    spark.conf.set("spark.sql.catalog.bloomcat.dataPath", s"$root/data")
+    val dir = s"$root/data/main/dbloom"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(conf)
+    def parquets = fs.listStatus(new Path(dir)).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.endsWith("-delete.parquet")).toSet
+    val before = parquets
     // dictionary disabled for the asserted column: parquet-mr correctly
     // SKIPS the bloom when a chunk stays fully dictionary-encoded (the
     // dictionary is already an exact membership structure the reader
     // prunes with). High-cardinality keys — the bloom's actual target —
     // overflow the dictionary page and get the bloom; this pins the
     // plumbing deterministically at test scale.
-    val w = factory.applyTuning(
-      ExampleParquetWriter.builder(out).withConf(conf)
-        .withDictionaryEncoding("id", false)).build()
-    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    spark.conf.set("parquet.enable.dictionary#id", "false")
     // EVEN ids only (2× the residues 0..999 — 7919 is coprime to 1000,
     // so all occur): every odd value in [1, 1997] is ABSENT but inside
     // the min/max range, so statistics pruning can never eliminate it —
     // only the bloom can
-    (1L to 2000L).foreach { i =>
-      val g: Group = gf.newGroup()
-      g.add("id", (i * 7919L % 1000L) * 2L); g.add("v", s"v$i")
-      w.write(g)
-    }
-    w.close()
-    assert(bloomOffsets(s"$root/group", "id").exists(_ >= 0))
-    assert(bloomOffsets(s"$root/group", "v").forall(_ < 0))
-    // the bloom is FUNCTIONAL, not just present: every written id answers
-    // "might contain"; most absent ids answer "definitely not" (fpp 0.05
-    // → expect ~95/100 definite negatives; >50 is a safe floor)
+    try spark.sql("UPDATE bloomcat.main.dbloom SET id = (id * 7919 % 1000) * 2")
+    finally spark.conf.unset("parquet.enable.dictionary#id")
+    val fresh = (parquets -- before).toSeq
+    assert(fresh.size == 1, s"expected one delta data file: $fresh")
+    val out = fresh.head
     val rd = ParquetFileReader.open(HadoopInputFile.fromPath(out, conf))
     val absentNegative =
       try {
-        val block = rd.getFooter.getBlocks.get(0)
-        val idCol = block.getColumns.asScala
-          .find(_.getPath.toDotString == "id").get
+        val footer = rd.getFooter
+        val block = footer.getBlocks.get(0)
+        val columns = block.getColumns.asScala
+        assert(columns.forall(_.getCodec == CompressionCodecName.GZIP),
+          s"codec must follow parquet_compression: ${columns.map(_.getCodec)}")
+        assert(columns.find(_.getPath.toDotString == "v").get.getBloomFilterOffset < 0,
+          "unconfigured column must not carry a bloom filter")
+        // top-level field ids are the catalog column ids
+        val snap = lake.store.currentSnapshot
+        val tbl = lake.store.getTableByName(
+          lake.store.getSchemaByName("main", snap).get.schemaId, "dbloom", snap).get
+        val catalogIds = lake.store.getTableColumns(tbl.tableId, snap)
+          .map(c => c.name -> c.columnId).toMap
+        val fields = footer.getFileMetaData.getSchema.getFields.asScala
+        assert(fields.filter(f => catalogIds.contains(f.getName))
+          .map(f => f.getName -> f.getId.intValue.toLong).toMap == catalogIds)
+        val tsType = fields.find(_.getName == "ts").get.asPrimitiveType()
+        assert(tsType.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+        assert(tsType.getLogicalTypeAnnotation
+          .asInstanceOf[TimestampLogicalTypeAnnotation].getUnit == TimeUnit.MICROS)
+        // the bloom is FUNCTIONAL, not just present: every written id
+        // answers "might contain"; most absent ids answer "definitely
+        // not" (fpp 0.05 → expect ~95/100 definite negatives; >50 is a
+        // safe floor)
+        val idCol = columns.find(_.getPath.toDotString == "id").get
+        assert(idCol.getBloomFilterOffset >= 0, "configured column must carry a bloom filter")
         val bloom = rd.getBloomFilterDataReader(block).readBloomFilter(idCol)
         assert((0L to 999L).forall(x => bloom.findHash(bloom.hash(x * 2L))),
           "a written value must never be a definite negative")

@@ -843,4 +843,107 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(withKey.queryExecution.executedPlan.toString.contains("DuckLakeBatchScan"))
     } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
   }
+
+  /** One column of every nested and wide type, as SQL over `id`; `salt`
+    * shifts every value so updated rows differ in every column.
+    */
+  private def everyTypeCols(salt: Int): Seq[(String, String)] = Seq(
+    "emb"  -> s"array(CAST(id + $salt AS FLOAT), CAST(id / 2 AS FLOAT))",
+    "info" -> s"named_struct('a', CAST(id AS INT), 'b', concat('s', id, '_', $salt))",
+    "m"    -> s"map(concat('k', id), CAST(id + $salt AS INT))",
+    "d"    -> s"CAST(id * 1.5 + $salt AS DECIMAL(38,10))",
+    "ts"   -> s"timestamp_seconds(1700000000 + id * 3600 + $salt)",
+    "bin"  -> s"CAST(concat('b', id, '_', $salt) AS BINARY)")
+
+  private def everyType(ids: Seq[Int], salt: Int = 0) = spark.sql(
+    s"SELECT CAST(id AS BIGINT) AS id, " +
+      everyTypeCols(salt).map { case (c, e) => s"$e AS $c" }.mkString(", ") +
+      s" FROM VALUES ${ids.map(i => s"($i)").mkString(", ")} AS v(id)")
+
+  private def assertRows(table: String, expected: org.apache.spark.sql.DataFrame): Unit = {
+    val got = spark.sql(s"SELECT * FROM dlconn.main.$table ORDER BY id").collect().toSeq
+    val want = expected.orderBy("id").collect().toSeq
+    assert(got == want, s"\n got: ${got.mkString("\n      ")}\nwant: ${want.mkString("\n      ")}")
+  }
+
+  test("SQL UPDATE, MERGE and row-level DELETE keep every column type intact") {
+    lake.createTableAs(everyType(1 to 6).coalesce(1), "main.every_upd")
+    spark.sql("UPDATE dlconn.main.every_upd SET " +
+      everyTypeCols(1).map { case (c, e) => s"$c = $e" }.mkString(", ") +
+      " WHERE id IN (2, 4)")
+    assertRows("every_upd", everyType(Seq(1, 3, 5, 6)).union(everyType(Seq(2, 4), 1)))
+
+    lake.createTableAs(everyType(1 to 6).coalesce(1), "main.every_merge")
+    everyType(Seq(3, 7), 1).createOrReplaceTempView("every_src")
+    spark.sql("""MERGE INTO dlconn.main.every_merge t USING every_src s ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    assertRows("every_merge", everyType(Seq(1, 2, 4, 5, 6)).union(everyType(Seq(3, 7), 1)))
+
+    // a predicate on an array element cannot be pushed: row-level DELETE
+    lake.createTableAs(everyType(1 to 6).coalesce(1), "main.every_del")
+    spark.sql("DELETE FROM dlconn.main.every_del WHERE element_at(emb, 1) > 4")
+    assertRows("every_del", everyType(1 to 4))
+  }
+
+  test("SQL UPDATE after INT→BIGINT and FLOAT→DOUBLE promotion") {
+    import spark.implicits._
+    lake.createTableAs(Seq((1, 1.5f, "a"), (2, 2.5f, "b"), (3, 3.5f, "c"))
+      .toDF("id", "f", "tag").coalesce(1), "main.promoted")
+    spark.sql("ALTER TABLE dlconn.main.promoted ALTER COLUMN id TYPE BIGINT")
+    spark.sql("ALTER TABLE dlconn.main.promoted ALTER COLUMN f TYPE DOUBLE")
+    spark.sql("UPDATE dlconn.main.promoted SET tag = 'u', f = f * 2 WHERE id = 2")
+    val got = spark.sql("SELECT id, f, tag FROM dlconn.main.promoted ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+    assert(got == Seq((1L, 1.5, "a"), (2L, 5.0, "u"), (3L, 3.5, "c")))
+  }
+
+  test("readStream delivers array columns") {
+    lake.createTableAs(everyType(1 to 3).select("id", "emb").coalesce(1), "main.arr_stream")
+    val q = spark.readStream.table("dlconn.main.arr_stream")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("arr_stream_rows").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("arr_stream_rows").orderBy("id").collect().toSeq ==
+      everyType(1 to 3).select("id", "emb").orderBy("id").collect().toSeq)
+  }
+
+  test("a stream whose table is dropped fails with TableNotFoundException") {
+    import spark.implicits._
+    lake.createTableAs(Seq((1L, "a")).toDF("k", "v").coalesce(1), "main.gone_stream")
+    val q = spark.readStream.table("dlconn.main.gone_stream")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("gone_stream_rows").start()
+    try {
+      q.processAllAvailable()
+      spark.sql("DROP TABLE dlconn.main.gone_stream")
+      val e = intercept[Exception](q.processAllAvailable())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[TableNotFoundException]),
+        s"expected TableNotFoundException in: ${chain.mkString(" <- ")}")
+    } finally q.stop()
+  }
+
+  test("storage-partitioned join projecting an array column plans zero shuffle") {
+    import spark.implicits._
+    lake
+    lake.createTableAs((1 to 40).map(i => (i.toLong, i % 4, Seq(i * 1.0f, i * 2.0f)))
+      .toDF("a_id", "k", "emb").repartition(2), "main.spj_arr_a", partitionBy = Seq("k"))
+    lake.createTableAs((1 to 20).map(i => (i.toLong, i % 4, i * 2.0))
+      .toDF("b_id", "k", "bv").repartition(2), "main.spj_arr_b", partitionBy = Seq("k"))
+    val sql = """SELECT a.a_id, b.b_id, a.emb FROM dlconn.main.spj_arr_a a
+      JOIN dlconn.main.spj_arr_b b ON a.k = b.k ORDER BY a.a_id, b.b_id"""
+    val expected = spark.sql(sql).collect().toSeq
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    try {
+      val df = spark.sql(sql)
+      assert(df.collect().toSeq == expected)
+      val plan = df.queryExecution.executedPlan.toString
+      val joinSection = plan.split("SortMergeJoin|ShuffledHashJoin").drop(1)
+      assert(joinSection.nonEmpty, s"expected a shuffled-family join node:\n$plan")
+      assert(!joinSection.exists(_.contains("Exchange hashpartitioning")),
+        s"join inputs still shuffle:\n$plan")
+      assert(plan.contains("DuckLakeBatchScan"), s"expected the SPJ scan:\n$plan")
+    } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+  }
 }
