@@ -2,7 +2,8 @@ package graft.lake
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,8 +18,9 @@ import org.apache.spark.sql.types._
   * metadata (file lists, column defs) — O(files), never O(rows). Scans are
   * ordinary multi-file parquet reads, so Catalyst's predicate pushdown,
   * column pruning and partition coalescing all apply; merge-on-read
-  * deletes become per-file `row_index` anti-joins whose delete side is
-  * bounded by delete counts and broadcast by Catalyst.
+  * deletes are dropped inside those scans by row index
+  * ([[DuckLakeParquetFormat]]), each task loading only its own file's
+  * delete positions.
   */
 final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPath: String,
     encrypted: Boolean = false, val inlineRowLimit: Int = 0,
@@ -799,7 +801,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       else geoFileStatsMulti(placed.map(_._1), geoCols, keyOpt)
     val files = placed.map { case (dest, relName, partValues) =>
       val st = fs.getFileStatus(dest)
-      val footerStats = FileStats.fromFooter(dest, hconf, dataSchema, keyOpt)
+      val (footer, records, footerLen) = stagedFooter(st, keyOpt)
+      val footerStats = FileStats.fromFooter(footer, dataSchema)
       val stats =
         if (geoCols.isEmpty) footerStats
         else {
@@ -812,8 +815,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
             else s
           }
         }
-      FileToRegister(relName, rowCount(dest, keyOpt), st.getLen,
-        footerSize(fs, dest, st.getLen), stats, keyOpt, partValues)
+      FileToRegister(relName, records, st.getLen, footerLen, stats, keyOpt, partValues)
     }
     (files, renamed.toSeq)
   }
@@ -1037,22 +1039,42 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * length at [len-8, len-4) before the "PAR1" magic (port of reference
     * src/table_writer.rs:319-338).
     */
-  private def footerSize(fs: FileSystem, p: Path, len: Long): Long = {
-    val in = fs.open(p)
-    try {
-      in.seek(len - 8)
-      val b = new Array[Byte](8)
-      in.readFully(b)
-      // "PAR1" plaintext footer; "PARE" PME encrypted footer
-      if (!(b(4) == 'P' && b(5) == 'A' && b(6) == 'R' && (b(7) == '1' || b(7) == 'E')))
-        throw new InternalException(s"not a parquet file: $p")
-      val footerLen = (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) | ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
-      footerLen + 8 // include length+magic, as the reference hint does
-    } finally in.close()
+  private def footerSize(in: org.apache.parquet.io.SeekableInputStream, p: Path,
+      len: Long): Long = {
+    in.seek(len - 8)
+    val b = new Array[Byte](8)
+    in.readFully(b)
+    // "PAR1" plaintext footer; "PARE" PME encrypted footer
+    if (!(b(4) == 'P' && b(5) == 'A' && b(6) == 'R' && (b(7) == '1' || b(7) == 'E')))
+      throw new InternalException(s"not a parquet file: $p")
+    val footerLen = (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) | ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
+    footerLen + 8 // include length+magic, as the reference hint does
+  }
+
+  private def footerSize(st: FileStatus): Long = {
+    val in = HadoopInputFile.fromStatus(st, hconf).newStream()
+    try footerSize(in, st.getPath, st.getLen) finally in.close()
+  }
+
+  /** A staged file's footer, record count and [[footerSize]] from ONE
+    * open of the file (decrypting with `key` when set).
+    */
+  private def stagedFooter(st: FileStatus, key: Option[String])
+      : (org.apache.parquet.hadoop.metadata.ParquetMetadata, Long, Long) = {
+    val file = HadoopInputFile.fromStatus(st, hconf)
+    val in = file.newStream()
+    val opts = org.apache.parquet.HadoopReadOptions.builder(hconf, st.getPath)
+    key.foreach(k => opts.withDecryption(GraftCryptoFactory.decryptionProps(k)))
+    val (reader, size) =
+      try {
+        val size = footerSize(in, st.getPath, st.getLen)
+        (org.apache.parquet.hadoop.ParquetFileReader.open(file, opts.build(), in), size)
+      } catch { case e: Throwable => in.close(); throw e }
+    try (reader.getFooter, reader.getRecordCount, size) finally reader.close()
   }
 
   private def rowCount(p: Path, key: Option[String]): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
+    val in = HadoopInputFile.fromPath(p, hconf)
     val opts = org.apache.parquet.HadoopReadOptions.builder(hconf, p)
     key.foreach(k => opts.withDecryption(GraftCryptoFactory.decryptionProps(k)))
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts.build())
@@ -1102,6 +1124,19 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   private def dataFilePath(name: String, f: DataFileRec): String =
     if (f.pathIsRelative) filePath(name, f.path) else f.path
+
+  private def deleteFilePath(name: String, d: DeleteFileRec): String =
+    if (d.pathIsRelative) filePath(name, d.path) else d.path
+
+  /** The positions of a MOR delete file as `(__fid = fid, pos)`, read
+    * with its schema (no inference job).
+    */
+  private def positionsOf(name: String, d: DeleteFileRec, fid: Long): DataFrame =
+    deleteRows(name, d).select(lit(fid).as("__fid"), col("pos"))
+
+  private def deleteRows(name: String, d: DeleteFileRec): DataFrame =
+    reader(Seq(d.path -> d.encryptionKey)).schema(DeletePositions.Schema)
+      .parquet(deleteFilePath(name, d))
 
   private def sparkSchemaOf(cols: Seq[ColumnDef]): StructType =
     StructType(cols.map(c => StructField(c.name, TypeBridge.toSpark(c.dtype), c.nullsAllowed)))
@@ -1178,12 +1213,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v)
     }.flatten
 
-  /** Read a group of same-epoch, same-partition data files with the
-    * physical→current projection (rename-safe, promotion-cast); partition
-    * columns are injected as literals from the catalog (they live in the
-    * directory layout, not the parquet); optionally carries the
-    * file-local row position as `__ducklake_pos`.
-    */
   /** Plan-time column for rows that predate a column's ADD: its declared
     * constant initial default, or typed null when none was declared.
     */
@@ -1192,13 +1221,25 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     case None      => lit(null).cast(TypeBridge.toSpark(c.dtype))
   }
 
+  /** Read a group of same-epoch, same-partition data files with the
+    * physical→current projection (rename-safe, promotion-cast); partition
+    * columns are injected as literals from the catalog (they live in the
+    * directory layout, not the parquet); optionally carries the
+    * file-local row position as `__ducklake_pos`. The one relation
+    * constructor of every facade read: a `HadoopFsRelation` over a
+    * [[LakeFileIndex]] of the catalog's files, read by
+    * [[DuckLakeParquetFormat]]. `liveAt = Some(snap)` reads the rows live
+    * at `snap` — MOR deletes and the merged-file visible-row limit are
+    * applied inside the scan; None reads every physical row (CDC,
+    * delete matching).
+    */
   private def readGroup(name: String, fsGroup: Seq[DataFileRec],
       epoch: Seq[(ColumnDef, Option[ColumnDef])],
       partVals: Map[Long, Option[String]], withPos: Boolean,
       withRowIdCol: Boolean = false,
       history: Seq[(ColumnDef, Long, Option[Long])] = Nil,
       nestedDefaults: Map[Long, Map[String, String]] = Map.empty,
-      withFilePath: Boolean = false): DataFrame = {
+      liveAt: Option[Long] = None): DataFrame = {
     val physSchema0 = StructType(epoch.collect {
       case (cur, Some(phys)) if !partVals.contains(cur.columnId) =>
         StructField(phys.name, DuckLake.physReadType(phys.dtype), nullable = true)
@@ -1209,9 +1250,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val physSchema = if (withRowIdCol)
       physSchema0.add(DuckLake.RowIdPhysCol, LongType, nullable = true)
     else physSchema0
-    val paths = fsGroup.map(f => dataFilePath(name, f))
-    val base = reader(fsGroup.map(f => f.path -> f.encryptionKey))
-      .schema(physSchema).parquet(paths: _*)
+    val index = LakeFileIndex(fsGroup.map(lakeFile(name, _, liveAt)))
+    val base = spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, new StructType(),
+        physSchema, None, new DuckLakeParquetFormat(index.files.exists(_.hidesRows)),
+        decryptOptions(fsGroup.map(f => f.path -> f.encryptionKey)))(spark))
     val projection = epoch.map {
       case (cur, _) if partVals.contains(cur.columnId) =>
         (partVals(cur.columnId) match {
@@ -1272,85 +1315,30 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         defaultColumn(cur).as(cur.name)
     } ++ (if (withRowIdCol) Seq(col(DuckLake.RowIdPhysCol)) else Nil)
     val metaCols =
-      (if (withPos) Seq(col("_metadata.row_index").as("__ducklake_pos")) else Nil) ++
-        (if (withFilePath) Seq(col("_metadata.file_path").as("__ducklake_file")) else Nil)
+      if (withPos) Seq(col("_metadata.row_index").as("__ducklake_pos")) else Nil
     base.select(projection ++ metaCols: _*)
   }
 
-  /** LIVE rows of a same-epoch GROUP of delete-carrying files: ONE
-    * multi-file scan plus ONE combined delete-position read, anti-joined
-    * on (file, pos). Keeps the plan O(epoch groups) — not O(files) — when
-    * churn leaves many files carrying MOR deletes; the reference pays a
-    * DeleteFilterExec per file here (src/delete_filter.rs), and our
-    * previous shape unioned one sub-plan per file.
+  /** `f` as a [[LakeFileIndex]] entry: qualified path and catalog size;
+    * with `liveAt`, its delete file and its visible-row limit there.
     */
-  private def morReadGroup(name: String, ctx: ScanCtx, fs: Seq[DataFileRec],
-      phys: Seq[(ColumnDef, Option[ColumnDef])],
-      partVals: Map[Long, Option[String]]): DataFrame = {
-    if (fs.size == 1) return morReadFile(name, ctx, fs.head)
-    // (delete-file qualified path) -> (data-file qualified path), exactly
-    // as `_metadata.file_path` renders them — the join key that pairs each
-    // position with its own data file even when adopted files share
-    // basenames across directories
-    val fsys = FileSystem.get(new java.net.URI(dataPath), hconf)
-    // `_metadata.file_path` renders as `new Path(<decoded qualified
-    // string>).toUri.toString` — URI-ENCODED (space -> %20, '%' -> %25)
-    // with a null authority ("file:/" not "file:///"). Reproduce that
-    // recipe exactly: a direct makeQualified(...).toUri renders the
-    // empty authority as "//" and never matches, while an unencoded
-    // string mismatches any path with escapable characters, silently
-    // resurfacing its deleted rows.
-    def qual(p: String) =
-      new Path(fsys.makeQualified(new Path(p)).toString).toUri.toString
-    val delToData = fs.map { f =>
-      val d = f.deleteFile.get
-      qual(filePath(name, d.path)) -> qual(dataFilePath(name, f))
-    }.toMap
-    val dels = reader(fs.map { f =>
-      val d = f.deleteFile.get; d.path -> d.encryptionKey
-    })
-      .schema(StructType(Seq(StructField("pos", LongType))))
-      .parquet(fs.map(f => filePath(name, f.deleteFile.get.path)): _*)
-      .select(
-        element_at(typedLit(delToData), col("_metadata.file_path")).as("__del_file"),
-        col("pos").as("__del_pos"))
-    readGroup(name, fs, phys, partVals, withPos = true,
-        history = ctx.history, nestedDefaults = ctx.nestedDefaults,
-        withFilePath = true)
-      .join(broadcast(dels),
-        col("__ducklake_file") === col("__del_file") &&
-          col("__ducklake_pos") === col("__del_pos"), "left_anti")
-      .drop("__ducklake_file", "__ducklake_pos")
+  private def lakeFile(name: String, f: DataFileRec, liveAt: Option[Long]): LakeFile = {
+    val p = new Path(dataFilePath(name, f))
+    val del = liveAt.flatMap(_ => f.deleteFile)
+    LakeFile(p.getFileSystem(hconf).makeQualified(p).toString, f.fileSizeBytes,
+      del.map(deleteFilePath(name, _)), del.flatMap(_.encryptionKey),
+      liveAt.map(f.visibleRowsAt).filter(_ < f.recordCount))
   }
 
   /** One file with its epoch projection (the per-file read every
-    * rename-safe path — scan, deleteWhere, CDC — goes through).
+    * rename-safe path — scan, deleteWhere, CDC, compaction — goes
+    * through); `liveAt` as in [[readGroup]].
     */
   private def readFile(name: String, ctx: ScanCtx, f: DataFileRec,
-      withPos: Boolean, withRowIdCol: Boolean = false): DataFrame =
+      withPos: Boolean, withRowIdCol: Boolean = false,
+      liveAt: Option[Long] = None): DataFrame =
     readGroup(name, Seq(f), physOf(ctx, f), injectedValues(ctx, f), withPos,
-      withRowIdCol, ctx.history, ctx.nestedDefaults)
-
-  /** One file's LIVE rows: epoch-projected, MOR delete positions
-    * anti-joined away (broadcast — delete sets are small relative to
-    * data).
-    */
-  private def morReadFile(name: String, ctx: ScanCtx, f: DataFileRec,
-      keepPos: Boolean = false, withRowIdCol: Boolean = false): DataFrame =
-    f.deleteFile match {
-      case None =>
-        readFile(name, ctx, f, withPos = keepPos, withRowIdCol = withRowIdCol)
-      case Some(del) =>
-        val positions = reader(Seq(del.path -> del.encryptionKey))
-          .schema(StructType(Seq(
-            StructField("file_path", StringType), StructField("pos", LongType))))
-          .parquet(filePath(name, del.path))
-          .select(col("pos"))
-        val live = readFile(name, ctx, f, withPos = true, withRowIdCol = withRowIdCol)
-          .join(broadcast(positions), col("__ducklake_pos") === col("pos"), "left_anti")
-          .drop("pos")
-        if (keepPos) live else live.drop("__ducklake_pos")
-    }
+      withRowIdCol, ctx.history, ctx.nestedDefaults, liveAt)
 
   /** Inlined catalog rows visible at `snap`, parsed with the column names
     * of each row's write epoch and projected (by column_id) to the pinned
@@ -1413,11 +1401,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     Some(dfs.reduce(_ unionByName _))
   }
 
-  /** Snapshot-pinned scan. Files without deletes and with identical
-    * physical-schema epochs batch into one multi-file parquet read (plan
-    * shape parity with reference src/table.rs:611-649); files with delete
-    * files get a per-file `_metadata.row_index` anti-join (replaces the
-    * reference's custom DeleteFilterExec, src/delete_filter.rs).
+  /** Snapshot-pinned scan. Files with identical physical-schema epochs
+    * and partition values batch into one multi-file parquet read (plan
+    * shape parity with reference src/table.rs:611-649), whether or not
+    * they carry deletes: MOR delete files and merged-file visible-row
+    * limits apply inside that scan ([[DuckLakeParquetFormat]], the
+    * counterpart of the reference's DeleteFilterExec,
+    * src/delete_filter.rs), so the plan holds no join.
     */
   def table(name: String, snapshot: Option[Long] = None,
       pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
@@ -1452,25 +1442,12 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         spark.createDataFrame(new java.util.ArrayList[Row](), outSchema))
 
     if (vset.isEmpty) {
-      // merged files read at a pre-merge snapshot expose only the row
-      // prefix committed by then (segment map; whole file at current)
-      val (partial, whole) = files.partition(f => f.visibleRowsAt(snap) < f.recordCount)
-      val (withDel, clean) = whole.partition(_.deleteFile.isDefined)
-      val cleanScans = clean.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f)))
+      val scans = files.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f)))
         .map { case ((phys, pv), fs) =>
-          readGroup(name, fs, phys, pv, withPos = false,
-            withRowIdCol = false, history = ctx.history,
-            nestedDefaults = ctx.nestedDefaults)
+          readGroup(name, fs, phys, pv, withPos = false, history = ctx.history,
+            nestedDefaults = ctx.nestedDefaults, liveAt = Some(snap))
         }.toSeq
-      val delScans = withDel.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f)))
-        .map { case ((phys, pv), fs) => morReadGroup(name, ctx, fs, phys, pv) }
-        .toSeq
-      val partialScans = partial.map { f =>
-        morReadFile(name, ctx, f, keepPos = true)
-          .filter(col("__ducklake_pos") < f.visibleRowsAt(snap))
-          .drop("__ducklake_pos")
-      }
-      (cleanScans ++ delScans ++ partialScans ++ inlined).reduce(_ unionByName _)
+      (scans ++ inlined).reduce(_ unionByName _)
     } else {
       // virtual columns (reference: tests/sqllogictests/sql/virtualcolumns/)
       // carry PER-FILE values, so the scan reads file-at-a-time — the
@@ -1479,19 +1456,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         vset(DuckLake.VirtualRowId) ||
         (vset(DuckLake.VirtualSnapshot) && files.exists(_.segments.nonEmpty))
       val scans = files.map { f =>
-        val partialPrefix = f.visibleRowsAt(snap) // < recordCount ⇒ merged-file time travel
-        val withPos = needPos || partialPrefix < f.recordCount
         val explicitIds = vset(DuckLake.VirtualRowId) &&
           f.rowIdStart.isEmpty && f.segments.isEmpty
-        val base0 = f.deleteFile match {
-          case Some(_) => morReadFile(name, ctx, f, keepPos = withPos,
-            withRowIdCol = explicitIds)
-          case None => readGroup(name, Seq(f), physOf(ctx, f),
-            injectedValues(ctx, f), withPos = withPos, withRowIdCol = explicitIds,
-            history = ctx.history, nestedDefaults = ctx.nestedDefaults)
-        }
-        val base = if (partialPrefix < f.recordCount)
-          base0.filter(col("__ducklake_pos") < partialPrefix) else base0
+        val base = readFile(name, ctx, f, withPos = needPos,
+          withRowIdCol = explicitIds, liveAt = Some(snap))
         // piecewise per-segment value for merged files (the segment map
         // preserves each row's original commit + stable id)
         def bySegment(value: FileSegment => Column): Column =
@@ -1524,7 +1492,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
             if (txnLocal) lit(null).cast(LongType)
             else if (f.segments.nonEmpty) bySegment(s => lit(s.beginSnapshot))
             else lit(f.beginSnapshot))
-        if (withPos) d = d.drop("__ducklake_pos")
+        if (needPos) d = d.drop("__ducklake_pos")
         if (explicitIds) d = d.drop(DuckLake.RowIdPhysCol)
         if (vset(DuckLake.VirtualFileId))
           d = d.withColumn(DuckLake.VirtualFileId, lit(f.dataFileId))
@@ -1700,9 +1668,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       df.filter(cond)
         .select(lit(f.dataFileId).as("__fid"), col("__ducklake_pos").as("pos"))
     }.reduceOption(_ union _)
-    val previous = files.flatMap(f => f.deleteFile.map(d =>
-      reader(Seq(d.path -> d.encryptionKey)).parquet(filePath(name, d.path))
-        .select(lit(f.dataFileId).as("__fid"), col("pos").cast("long").as("pos"))))
+    val previous = files.flatMap(f => f.deleteFile.map(positionsOf(name, _, f.dataFileId)))
       .reduceOption(_ union _)
     // files that gained at least one NEW deleted position — O(files) rows
     val freshFids: Set[Long] = matched match {
@@ -1770,7 +1736,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** Commit a row-level DELTA staged by the native delta writers (SQL
     * UPDATE / MERGE, merge-on-read): appended-row files plus the tasks'
     * PARTIAL delete-position parquets (`(_fid, pos)`, written executor-
-    * side — commit messages carry file names only, never positions) —
+    * side — commit messages carry file names and the ids of the data
+    * files they touch, never positions) —
     * merged with existing delete files into per-data-file cumulative
     * delete parquets, registered with the new data files in ONE snapshot.
     * Cost is O(changed rows) of cluster work and O(files) of driver state;
@@ -1779,7 +1746,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   private[lake] def commitDeltaStaged(schemaName: String, tableName: String,
       cols: Seq[ColumnDef], stagedNew: Seq[(Path, Seq[Option[String]])],
       dataSchema: StructType, keyOpt: Option[String],
-      deletePartials: Seq[Path],
+      deletePartials: Seq[Path], touchedFids: Set[Long],
       stagedRowId: Seq[(Path, Seq[Option[String]])] = Nil): Long = {
     val name = s"$schemaName.$tableName"
     val snap = store.currentSnapshot
@@ -1787,14 +1754,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val filesById = store.getDataFiles(tr.tableId, snap).map(f => f.dataFileId -> f).toMap
     val delRegs = if (deletePartials.isEmpty) Nil else {
       val partial = reader(deletePartials.map(p => p.getName -> keyOpt))
+        .schema(connector.DuckLakeDeltaWriterFactory.DeletePartialSchema)
         .parquet(deletePartials.map(_.toString): _*)
-        .select(col("_fid").as("__fid"), col("pos").cast("long").as("pos"))
-      val fids = partial.select("__fid").distinct()
-        .collect().map(_.getLong(0)).toSet // O(touched files)
-      val touched = fids.toSeq.sorted.flatMap(filesById.get)
-      val previous = touched.flatMap(f => f.deleteFile.map(d =>
-        reader(Seq(d.path -> d.encryptionKey)).parquet(filePath(name, d.path))
-          .select(lit(f.dataFileId).as("__fid"), col("pos").cast("long").as("pos"))))
+        .select(col("_fid").as("__fid"), col("pos"))
+      val touched = touchedFids.toSeq.sorted.flatMap(filesById.get)
+      val previous = touched.flatMap(f => f.deleteFile.map(positionsOf(name, _, f.dataFileId)))
         .reduceOption(_ union _)
       import spark.implicits._
       val fidFilter = broadcast(touched.map(_.dataFileId).toDF("__fid"))
@@ -1910,7 +1874,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       // resolve the stored string)
       val pathStr =
         if (p.toUri.getScheme == "file") p.toUri.getPath else p.toString
-      val fSize = footerSize(fs, p, st.getLen) // also validates the magic
+      val fSize = footerSize(st) // also validates the magic
       // Spark's schema read REFUSES some foreign annotations before the
       // type gate can speak (TIME: UNSUPPORTED_TIME_TYPE; TIMESTAMP with
       // NANOS — the pandas/arrow-era default): fall back to a direct
@@ -2695,7 +2659,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       // merges across partition boundaries)
       val groups = candidates.groupBy(ctx.partTuple).toSeq
       val staged = groups.zipWithIndex.map { case ((pv, gfs), i) =>
-        val df = gfs.map(morReadFile(name, ctx, _)).reduce(_ unionByName _)
+        val df = gfs.map(readFile(name, ctx, _, withPos = false, liveAt = Some(snap)))
+          .reduce(_ unionByName _)
           .select(dataColNames.map(col): _*)
         val w = df.coalesce(1).write.mode("overwrite").options(writeOptions(name, keyOpt))
         withWriterSessionConf(w.parquet(s"$staging/g$i"))
@@ -3057,15 +3022,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val ctx = scanCtx(tr, cols, to)
     entries.map { case (delOpt, prevOpt, dataFile) =>
       val current: DataFrame = delOpt match {
-        case Some(d) => reader(Seq(d.path -> d.encryptionKey))
-          .parquet(filePath(name, d.path)).select("pos")
+        case Some(d) => deleteRows(name, d).select("pos")
         case None => // full-file delete (Replace): every position
           spark.range(dataFile.recordCount).select(col("id").as("pos"))
       }
       val delta = prevOpt match {
         case Some(p) =>
-          current.except(reader(Seq(p.path -> p.encryptionKey))
-            .parquet(filePath(name, p.path)).select("pos"))
+          current.except(deleteRows(name, p).select("pos"))
         case None => current
       }
       val snapId = delOpt.map(_.beginSnapshot).getOrElse {
@@ -3156,13 +3119,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val delFileDfs = store.getDeleteFilesAddedBetween(tr.tableId, from - 1, to)
       .map { case (delOpt, prevOpt, dataFile) =>
         val current: DataFrame = delOpt match {
-          case Some(d) => reader(Seq(d.path -> d.encryptionKey))
-            .parquet(filePath(name, d.path)).select("pos")
+          case Some(d) => deleteRows(name, d).select("pos")
           case None => spark.range(dataFile.recordCount).select(col("id").as("pos"))
         }
         val delta = prevOpt match {
-          case Some(p) => current.except(reader(Seq(p.path -> p.encryptionKey))
-            .parquet(filePath(name, p.path)).select("pos"))
+          case Some(p) => current.except(deleteRows(name, p).select("pos"))
           case None => current
         }
         // full-file deletes happen at the file's END snapshot, not `to`

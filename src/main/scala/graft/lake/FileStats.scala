@@ -30,16 +30,20 @@ object FileStats {
     decryptKey.foreach(k =>
       opts.withDecryption(graft.lake.crypto.GraftCryptoFactory.decryptionProps(k)))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf), opts.build())
-    try {
-      import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala
-      schema.fields.toSeq.flatMap { field =>
-        val chunks = blocks.flatMap(_.getColumns.asScala
-          .filter(_.getPath.toDotString == field.name))
-        if (chunks.isEmpty) None
-        else Some(statsOfChunks(field.name, field.dataType, chunks.toSeq))
-      }
-    } finally reader.close()
+    try fromFooter(reader.getFooter, schema) finally reader.close()
+  }
+
+  /** [[fromFooter]] over an already-read footer. */
+  def fromFooter(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      schema: StructType): Seq[ColumnStatRec] = {
+    import scala.jdk.CollectionConverters._
+    val blocks = footer.getBlocks.asScala
+    schema.fields.toSeq.flatMap { field =>
+      val chunks = blocks.flatMap(_.getColumns.asScala
+        .filter(_.getPath.toDotString == field.name))
+      if (chunks.isEmpty) None
+      else Some(statsOfChunks(field.name, field.dataType, chunks.toSeq))
+    }
   }
 
   /** Fold one column's chunk footers into a stats row. Null count is

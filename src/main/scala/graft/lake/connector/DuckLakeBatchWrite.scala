@@ -24,12 +24,13 @@ final case class StagedFiles(files: Seq[(String, Seq[Option[String]])])
   extends WriterCommitMessage
 
 /** One executor's delta output: staged insert files plus the names of
-  * the PARTIAL delete-positions parquets it streamed (empty = no deletes).
-  * Positions live in staging files, never in commit messages — the driver
-  * never materializes a delete set.
+  * the PARTIAL delete-positions parquets it streamed (empty = no deletes)
+  * and the ids of the data files it wrote positions for. Positions live
+  * in staging files, never in commit messages — the driver never
+  * materializes a delete set.
   */
 final case class DeltaStaged(files: Seq[(String, Seq[Option[String]])],
-    deleteFiles: Seq[String],
+    deleteFiles: Seq[String], deleteFids: Set[Long],
     rowIdFiles: Seq[(String, Seq[Option[String]])] = Nil) extends WriterCommitMessage
 
 /** Distributed DELTA write — the merge-on-read half of SQL UPDATE /
@@ -93,7 +94,7 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
       }.toSeq
       lake.commitDeltaStaged(schemaName, tableName, cols, staged, dataSchema,
         keyOpt, deltas.flatMap(_.deleteFiles).map(n => new Path(s"$staging/$n")),
-        stagedRowId)
+        deltas.flatMap(_.deleteFids).toSet, stagedRowId)
     } finally fs.delete(new Path(staging), true)
   }
 
@@ -121,6 +122,7 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
       private val rowIdWriter = rowIdData.createWriter(partitionId, taskId)
       private val delWriter = deletes.createWriter(partitionId, taskId)
       private val writers = Seq(insertWriter, rowIdWriter, delWriter)
+      private val touched = mutable.Set.empty[Long]
 
       /** The data columns of `row` — rows may carry TRAILING metadata
         * columns (a SET referenced one) — followed by `extra`.
@@ -140,8 +142,10 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
 
       override def insert(row: InternalRow): Unit = insertWriter.write(dataRow(row))
 
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
+      override def delete(meta: InternalRow, id: InternalRow): Unit = {
+        touched += id.getLong(0)
         delWriter.write(new GenericInternalRow(Array[Any](id.getLong(0), id.getLong(1))))
+      }
 
       override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
         delete(meta, id)
@@ -153,7 +157,8 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
 
       override def commit(): WriterCommitMessage = {
         def staged(w: DataWriter[InternalRow]) = w.commit() match { case StagedFiles(fs) => fs }
-        DeltaStaged(staged(insertWriter), staged(delWriter).map(_._1), staged(rowIdWriter))
+        DeltaStaged(staged(insertWriter), staged(delWriter).map(_._1), touched.toSet,
+          staged(rowIdWriter))
       }
 
       override def abort(): Unit = writers.foreach(_.abort())

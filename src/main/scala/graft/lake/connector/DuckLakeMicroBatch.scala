@@ -41,7 +41,8 @@ final case class SnapshotOffset(snapshot: Long) extends Offset {
 final case class DuckLakeFilePartition(path: String,
     read: PartitionedFile => Iterator[InternalRow],
     slots: Array[Int], constants: Array[Any], fieldTypes: Array[DataType],
-    deletePath: String, readDeletes: PartitionedFile => Iterator[InternalRow],
+    // MOR delete file of this data file and its encryption key (null = none)
+    deletePath: String, deleteKey: String,
     dataFileId: Long, rowIdStart: Long,
     // merged-file segment map: (startPos, rowCount, rowIdStart|-1)
     rowIdSegments: Array[Array[Long]],
@@ -76,8 +77,6 @@ final class DuckLakeKeyedPartition(val inner: DuckLakeFilePartition,
 private[connector] object DuckLakePartitionPlanner {
   import graft.lake.{ColumnDef, DataFileRec, TableRec}
 
-  private val DeleteSchema = StructType(Seq(StructField("pos", LongType)))
-
   def plan(lake: DuckLake, tr: TableRec, cols: Seq[ColumnDef],
       files: Seq[DataFileRec], required: StructType,
       basePath: String): Array[InputPartition] = {
@@ -102,9 +101,7 @@ private[connector] object DuckLakePartitionPlanner {
     def default(i: Int): Any = defaults.getOrElseUpdate(i,
       byName.get(required(i).name).flatMap(_.initialDefault)
         .map(DuckLake.evalDefault(_, required(i).dataType)).orNull)
-    val keys = lake.decryptOptions(files.flatMap(f =>
-      (f.path -> f.encryptionKey) +: f.deleteFile.map(d => d.path -> d.encryptionKey).toSeq)
-      .map { case (p, k) => new Path(p).getName -> k })
+    val keys = lake.decryptOptions(files.map(f => new Path(f.path).getName -> f.encryptionKey))
     // one reader per physical schema, each with its OWN conf: the reader
     // writes its requested schema into the conf it broadcasts
     val readers = mutable.Map.empty[StructType, PartitionedFile => Iterator[InternalRow]]
@@ -151,7 +148,7 @@ private[connector] object DuckLakePartitionPlanner {
       DuckLakeFilePartition(resolve(file.path, file.pathIsRelative),
         reader(StructType(phys.toSeq)), slots, constants, types,
         file.deleteFile.map(d => resolve(d.path, d.pathIsRelative)).orNull,
-        if (file.deleteFile.isEmpty) null else reader(DeleteSchema),
+        file.deleteFile.flatMap(_.encryptionKey).orNull,
         file.dataFileId, file.rowIdStart.getOrElse(-1L),
         if (file.segments.isEmpty) null
         else file.segments.map(sg =>
@@ -427,8 +424,11 @@ object DuckLakeBatchScan {
 
 /** Executor-side reader: each file through the Spark parquet reader its
   * partition carries, read whole and unfiltered so the row count gives
-  * every row's file position (MOR deletes, `_pos`, row ids). Ordinary
-  * reads never get here: they are spliced parquet scans.
+  * every row's file position (MOR deletes, `_pos`, row ids). The file's
+  * delete positions come from [[graft.lake.DeletePositions]], the loader
+  * the facade's scans use too. Ordinary reads never get here: they are
+  * spliced parquet scans, whose deletes [[graft.lake.DuckLakeParquetFormat]]
+  * applies.
   */
 final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
     extends PartitionReaderFactory {
@@ -438,22 +438,18 @@ final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
       case k: DuckLakeKeyedPartition => k.inner
       case f: DuckLakeFilePartition  => f
     }
-    def open(path: String, read: PartitionedFile => Iterator[InternalRow]) = {
-      val hp = new Path(path)
-      val st = hp.getFileSystem(hconf.value).getFileStatus(hp)
-      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L,
-        st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
-    }
     new PartitionReader[InternalRow] {
       // MOR delete file: positions of rows hidden in THIS data file
-      private val deleted: java.util.HashSet[java.lang.Long] = {
-        val s = new java.util.HashSet[java.lang.Long]()
-        if (p.deletePath != null)
-          open(p.deletePath, p.readDeletes).foreach(r => if (!r.isNullAt(0)) s.add(r.getLong(0)))
-        s
-      }
+      private val deleted =
+        if (p.deletePath == null) null
+        else graft.lake.DeletePositions.load(p.deletePath, Option(p.deleteKey), hconf.value)
 
-      private val rows = open(p.path, p.read)
+      private val rows = {
+        val hp = new Path(p.path)
+        val st = hp.getFileSystem(hconf.value).getFileStatus(hp)
+        p.read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L,
+          st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+      }
       private var current: InternalRow = _
       private var pos: Long = -1L
 
@@ -477,7 +473,7 @@ final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
         do {
           current = if (rows.hasNext) rows.next() else null
           pos += 1
-        } while (current != null && deleted.contains(pos))
+        } while (current != null && deleted != null && deleted.contains(pos))
         current != null
       }
 

@@ -12,7 +12,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * for the same snapshot, pushed filters and columns
   * ([[DuckLakeScan.frame]]); a metadata-answered aggregate becomes a
   * one-row projection of its literals. The query then plans the lake's
-  * parquet scans, MOR anti-joins and inlined rows itself — with file-size
+  * parquet scans (MOR deletes applied inside them) and inlined rows
+  * itself — with file-size
   * statistics for static join selection, exchange reuse and file-scan
   * metrics — as the reference plans a DuckLake scan as parquet exec nodes
   * in the one DataFusion plan (src/table.rs:369-527). The rule runs in the

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -220,6 +221,39 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll
       scans.forall(_.relation.fileFormat.isInstanceOf[ParquetFileFormat]), p.toString)
     assert(collectWithSubqueries(p) { case s: RowDataSourceScanExec => s }.isEmpty,
       p.toString)
+  }
+
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    collectWithSubqueries(p) { case s: FileSourceScanExec => s }
+
+  test("a delete-free lake scan stays columnar with raw parquet's pushed filters") {
+    val q = "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey < 100"
+    val lake = fileScans(lakePlan(q))
+    val raw = fileScans(rawPlan(q))
+    assert(lake.size == 1 && raw.size == 1, s"lake: $lake, raw: $raw")
+    assert(lake.head.supportsColumnar, s"lake scan is not Batched:\n${lake.head}")
+    assert(lake.head.metadata("PushedFilters") == raw.head.metadata("PushedFilters"),
+      s"lake ${lake.head.metadata("PushedFilters")} vs raw ${raw.head.metadata("PushedFilters")}")
+  }
+
+  test("a MOR lake read plans no join or broadcast and one scan per epoch group") {
+    spark.sql("CREATE TABLE dlplan.main.morplan (id BIGINT, v BIGINT)")
+    (0 until 3).foreach { f =>
+      spark.sql(s"INSERT INTO dlplan.main.morplan " +
+        s"SELECT id, id * 2 FROM range(${f * 1000}, ${f * 1000 + 1000})")
+    }
+    spark.sql("DELETE FROM dlplan.main.morplan WHERE id % 10 = 0")
+    val df = spark.sql("SELECT sum(v) FROM dlplan.main.morplan WHERE id < 1500")
+    val p = df.queryExecution.executedPlan
+    assert(collectWithSubqueries(p) { case j: BaseJoinExec => j }.isEmpty, s"MOR read joins:\n$p")
+    assert(collectWithSubqueries(p) { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"MOR read broadcasts:\n$p")
+    val scans = fileScans(p)
+    assert(scans.size == 1, s"expected one scan for the one epoch group:\n$p")
+    assert(scans.head.supportsColumnar, s"MOR scan is not Batched:\n$p")
+    assert(scans.head.metadata("PushedFilters").contains("LessThan(id,1500)"),
+      s"the query filter does not reach the MOR scan:\n$p")
+    assert(df.head.getLong(0) == (0L until 1500L).filter(_ % 10 != 0).map(_ * 2).sum)
   }
 
   test("the guard flips when broadcast planning is disabled (not vacuous)") {

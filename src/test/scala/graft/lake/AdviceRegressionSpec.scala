@@ -290,22 +290,24 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       (100L until 150L).sum + (200L until 250L).sum + (300L until 350L).sum -
         Seq(100L, 110L, 120L, 130L, 140L, 200L, 210L, 220L, 230L, 240L,
           300L, 310L, 320L, 330L, 340L).sum)
-    // plan shape: one multi-file data relation + one combined delete-
-    // position relation — NOT one per delete-carrying file (counted on
+    // plan shape: ONE multi-file relation that applies the deletes in its
+    // scan — not one per delete-carrying file, and no join (counted on
     // the optimized logical plan; AQE hides the physical scans)
-    val rels = scan.queryExecution.optimizedPlan.collect {
+    val plan = scan.queryExecution.optimizedPlan
+    val rels = plan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
     }
-    assert(rels.size == 2,
-      s"expected 2 parquet relations (grouped data + combined deletes), got ${rels.size}")
+    assert(rels.size == 1, s"expected 1 parquet relation, got ${rels.size}:\n$plan")
+    assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+      s"MOR read plans a join:\n$plan")
   }
 
-  test("grouped MOR read joins on URI-ENCODED paths (escapable chars in table dir)") {
+  test("grouped MOR read drops deletes under URI-ENCODED paths (escapable chars in table dir)") {
     import spark.implicits._
     // a space in the table name -> safeSegment stores the dir with a
-    // percent-escape -> the physical path contains '%', which
-    // _metadata.file_path renders URI-encoded ('%25'); the delete-map
-    // keys must use the same rendering or deleted rows resurface
+    // percent-escape -> the physical path contains '%', which a URI
+    // renders as '%25'; each file must still find its own delete file,
+    // or deleted rows resurface
     val name = "main.mor grp uri"
     (1 to 3).foreach { i =>
       val df = ((i * 100L) until (i * 100L + 20L)).map(v => (v, v * 2.0)).toDF("id", "x")
