@@ -1051,11 +1051,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     footerLen + 8 // include length+magic, as the reference hint does
   }
 
-  private def footerSize(st: FileStatus): Long = {
-    val in = HadoopInputFile.fromStatus(st, hconf).newStream()
-    try footerSize(in, st.getPath, st.getLen) finally in.close()
-  }
-
   /** A staged file's footer, record count and [[footerSize]] from ONE
     * open of the file (decrypting with `key` when set).
     */
@@ -1073,12 +1068,16 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     try (reader.getFooter, reader.getRecordCount, size) finally reader.close()
   }
 
-  private def rowCount(p: Path, key: Option[String]): Long = {
-    val in = HadoopInputFile.fromPath(p, hconf)
-    val opts = org.apache.parquet.HadoopReadOptions.builder(hconf, p)
-    key.foreach(k => opts.withDecryption(GraftCryptoFactory.decryptionProps(k)))
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts.build())
-    try r.getRecordCount finally r.close()
+  /** The Spark schema of a parquet file from its read footer, as
+    * `spark.read.parquet` infers it (the schema Spark wrote into the
+    * footer, else the session's parquet type conversion) — without the
+    * schema-inference job.
+    */
+  private def footerSchema(p: Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
   }
 
   // ------------------------------------------------------------------
@@ -1222,16 +1221,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   /** Read a group of same-epoch, same-partition data files with the
-    * physical→current projection (rename-safe, promotion-cast); partition
-    * columns are injected as literals from the catalog (they live in the
-    * directory layout, not the parquet); optionally carries the
-    * file-local row position as `__ducklake_pos`. The one relation
-    * constructor of every facade read: a `HadoopFsRelation` over a
-    * [[LakeFileIndex]] of the catalog's files, read by
-    * [[DuckLakeParquetFormat]]. `liveAt = Some(snap)` reads the rows live
-    * at `snap` — MOR deletes and the merged-file visible-row limit are
-    * applied inside the scan; None reads every physical row (CDC,
-    * delete matching).
+    * [[groupMapping]] projection, optionally carrying the file-local row
+    * position as `__ducklake_pos`. The one relation constructor of every
+    * facade read: a `HadoopFsRelation` over a [[LakeFileIndex]] of the
+    * catalog's files, read by [[DuckLakeParquetFormat]]. `liveAt =
+    * Some(snap)` reads the rows live at `snap` — MOR deletes and the
+    * merged-file visible-row limit are applied inside the scan; None
+    * reads every physical row (CDC, delete matching).
     */
   private def readGroup(name: String, fsGroup: Seq[DataFileRec],
       epoch: Seq[(ColumnDef, Option[ColumnDef])],
@@ -1240,27 +1236,42 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       history: Seq[(ColumnDef, Long, Option[Long])] = Nil,
       nestedDefaults: Map[Long, Map[String, String]] = Map.empty,
       liveAt: Option[Long] = None): DataFrame = {
-    val physSchema0 = StructType(epoch.collect {
-      case (cur, Some(phys)) if !partVals.contains(cur.columnId) =>
-        StructField(phys.name, DuckLake.physReadType(phys.dtype), nullable = true)
-    })
-    // UPDATE-written files carry an explicit per-row stable id column
-    // (row_id_start NULL in the catalog); request it when the rowid
-    // virtual needs it — absent in legacy files, read as null
-    val physSchema = if (withRowIdCol)
-      physSchema0.add(DuckLake.RowIdPhysCol, LongType, nullable = true)
-    else physSchema0
+    val (physSchema, projection) =
+      groupMapping(epoch, partVals, withRowIdCol, history, nestedDefaults)
     val index = LakeFileIndex(fsGroup.map(lakeFile(name, _, liveAt)))
     val base = spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, new StructType(),
         physSchema, None, new DuckLakeParquetFormat(index.files.exists(_.hidesRows)),
         decryptOptions(fsGroup.map(f => f.path -> f.encryptionKey)))(spark))
+    val metaCols =
+      (if (withRowIdCol) Seq(col(DuckLake.RowIdPhysCol)) else Nil) ++
+        (if (withPos) Seq(col("_metadata.row_index").as("__ducklake_pos")) else Nil)
+    base.select(projection ++ metaCols: _*)
+  }
+
+  /** The column mapping of one read group: the physical columns its
+    * files are read with, and the projection from them onto the pinned
+    * catalog columns (`projection(i)` is `epoch(i)`'s column, under its
+    * current name) — rename-safe and promotion-cast; partition columns
+    * are literals from the catalog (they live in the directory layout,
+    * not the parquet), and columns added after the files' epoch read
+    * their initial default. `withRowIdCol` also reads the explicit row-id
+    * column of UPDATE-written files (absent in legacy files: null).
+    */
+  private def groupMapping(epoch: Seq[(ColumnDef, Option[ColumnDef])],
+      partVals: Map[Long, Option[String]], withRowIdCol: Boolean,
+      history: Seq[(ColumnDef, Long, Option[Long])],
+      nestedDefaults: Map[Long, Map[String, String]]): (StructType, Seq[Column]) = {
+    val physSchema0 = StructType(epoch.collect {
+      case (cur, Some(phys)) if !partVals.contains(cur.columnId) =>
+        StructField(phys.name, DuckLake.physReadType(phys.dtype), nullable = true)
+    })
+    val physSchema = if (withRowIdCol)
+      physSchema0.add(DuckLake.RowIdPhysCol, LongType, nullable = true)
+    else physSchema0
     val projection = epoch.map {
       case (cur, _) if partVals.contains(cur.columnId) =>
-        (partVals(cur.columnId) match {
-          case Some(raw) => lit(raw)
-          case None      => lit(null)
-        }).cast(TypeBridge.toSpark(cur.dtype)).as(cur.name)
+        partitionValue(partVals(cur.columnId), TypeBridge.toSpark(cur.dtype)).as(cur.name)
       case (cur, Some(phys)) =>
         // raw-INT64 temporals (adopted TIME / NANOS files, read as
         // BIGINT — see physOf) rescale FIRST, then conform as their
@@ -1313,10 +1324,35 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       case (cur, None) => // column added after this file was written:
         // rows get the column's initial default (null when none declared)
         defaultColumn(cur).as(cur.name)
-    } ++ (if (withRowIdCol) Seq(col(DuckLake.RowIdPhysCol)) else Nil)
-    val metaCols =
-      if (withPos) Seq(col("_metadata.row_index").as("__ducklake_pos")) else Nil
-    base.select(projection ++ metaCols: _*)
+    }
+    (physSchema, projection)
+  }
+
+  /** A partition column's value in one file: the raw catalog (or hive
+    * path) string cast to the column's type, null for the null partition.
+    */
+  private[lake] def partitionValue(raw: Option[String], dt: DataType): Column =
+    raw.fold(lit(null))(lit(_)).cast(dt)
+
+  /** [[table]]'s read groups of `files` (catalog rows of table `tr` at
+    * `snap`), for the readers outside the facade — the connector's Batch
+    * (UPDATE, MERGE, row-level DELETE, SPJ) and its micro-batch stream:
+    * files of one physical epoch and partition share one
+    * [[groupMapping]], so every reader of the lake maps columns the same
+    * way. UPDATE-written files form their own groups, which also read
+    * the explicit row-id column; `liveAt` as in [[readGroup]].
+    */
+  private[lake] def readGroups(name: String, tr: TableRec, cols: Seq[ColumnDef], snap: Long,
+      files: Seq[DataFileRec], liveAt: Option[Long]): Seq[LakeReadGroup] = {
+    val ctx = scanCtx(tr, cols, snap)
+    files.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f),
+        f.rowIdStart.isEmpty && f.segments.isEmpty))
+      .toSeq.map { case ((phys, pv, explicitIds), fs) =>
+        val (physSchema, projection) =
+          groupMapping(phys, pv, explicitIds, ctx.history, ctx.nestedDefaults)
+        LakeReadGroup(physSchema, cols.map(_.name).zip(projection),
+          fs.map(f => f -> lakeFile(name, f, liveAt)))
+      }
   }
 
   /** `f` as a [[LakeFileIndex]] entry: qualified path and catalog size;
@@ -1460,38 +1496,18 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
           f.rowIdStart.isEmpty && f.segments.isEmpty
         val base = readFile(name, ctx, f, withPos = needPos,
           withRowIdCol = explicitIds, liveAt = Some(snap))
-        // piecewise per-segment value for merged files (the segment map
-        // preserves each row's original commit + stable id)
-        def bySegment(value: FileSegment => Column): Column =
-          f.segments.foldRight(lit(null).cast(LongType)) { (s, acc) =>
-            when(col("__ducklake_pos") >= s.startPos &&
-              col("__ducklake_pos") < s.startPos + s.rowCount, value(s)).otherwise(acc)
-          }
         val txnLocal = txnSnap.contains(f.beginSnapshot)
         val withNum = Seq(DuckLake.VirtualRowNumber, DuckLake.VirtualPos)
           .filter(vset).foldLeft(base)((d, v) => d.withColumn(v, col("__ducklake_pos")))
-        // stable per-table row id: the file's claimed range + local
-        // position; provisional 1e18-based while its txn is still open
-        val rowIdShift =
-          if (txnLocal) DuckLake.TxnLocalRowIdBase - txnBase else 0L
-        val withRid = if (!vset(DuckLake.VirtualRowId)) withNum
-          else if (f.segments.nonEmpty)
-            withNum.withColumn(DuckLake.VirtualRowId, bySegment(s =>
-              s.rowIdStart.map(r => lit(r + rowIdShift) + (col("__ducklake_pos") - s.startPos))
-                .getOrElse(lit(null).cast(LongType))))
-          else withNum.withColumn(DuckLake.VirtualRowId, f.rowIdStart match {
-            case Some(start) => lit(start + rowIdShift) + col("__ducklake_pos")
-            case None => // explicit in-file ids (UPDATE-written): the rows
-              // are updated VERSIONS keeping their original ids — never
-              // shifted to transaction-local, even inside the open txn
-              col(DuckLake.RowIdPhysCol).cast(LongType)
-          })
-        var d = withRid
+        // stable per-table row id: provisional 1e18-based while the
+        // file's txn is still open
+        val (rowId, born) = DuckLake.provenanceAt(f, col("__ducklake_pos"),
+          if (txnLocal) DuckLake.TxnLocalRowIdBase - txnBase else 0L)
+        var d = if (vset(DuckLake.VirtualRowId)) withNum.withColumn(DuckLake.VirtualRowId, rowId)
+          else withNum
         if (vset(DuckLake.VirtualSnapshot))
           d = d.withColumn(DuckLake.VirtualSnapshot,
-            if (txnLocal) lit(null).cast(LongType)
-            else if (f.segments.nonEmpty) bySegment(s => lit(s.beginSnapshot))
-            else lit(f.beginSnapshot))
+            if (txnLocal) lit(null).cast(LongType) else born)
         if (needPos) d = d.drop("__ducklake_pos")
         if (explicitIds) d = d.drop(DuckLake.RowIdPhysCol)
         if (vset(DuckLake.VirtualFileId))
@@ -1642,25 +1658,15 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val virtNeeded: Set[String] =
       org.apache.spark.sql.graftbridge.ColumnBridge.references(cond)
         .toSet.intersect(DuckLake.VirtualNames.toSet)
-    def rowIdExprFor(f: DataFileRec): Column = f.rowIdStart match {
-      case Some(start) => lit(start) + col("__ducklake_pos")
-      case None if f.segments.nonEmpty =>
-        f.segments.foldRight(lit(null).cast(LongType)) { (sg, acc) =>
-          when(col("__ducklake_pos") >= sg.startPos &&
-            col("__ducklake_pos") < sg.startPos + sg.rowCount,
-            sg.rowIdStart.map(r => lit(r) + (col("__ducklake_pos") - sg.startPos))
-              .getOrElse(lit(null).cast(LongType))).otherwise(acc)
-        }
-      case None => col(DuckLake.RowIdPhysCol).cast(LongType)
-    }
     val matched = files.map { f =>
       val needRowCol = virtNeeded(DuckLake.VirtualRowId) &&
         f.rowIdStart.isEmpty && f.segments.isEmpty
       var df = readFile(name, ctx, f, withPos = true, withRowIdCol = needRowCol)
+      val (rowId, born) = DuckLake.provenanceAt(f, col("__ducklake_pos"))
       if (virtNeeded(DuckLake.VirtualRowId))
-        df = df.withColumn(DuckLake.VirtualRowId, rowIdExprFor(f))
+        df = df.withColumn(DuckLake.VirtualRowId, rowId)
       if (virtNeeded(DuckLake.VirtualSnapshot))
-        df = df.withColumn(DuckLake.VirtualSnapshot, lit(f.beginSnapshot))
+        df = df.withColumn(DuckLake.VirtualSnapshot, born)
       if (virtNeeded(DuckLake.VirtualRowNumber))
         df = df.withColumn(DuckLake.VirtualRowNumber, col("__ducklake_pos"))
       if (virtNeeded(DuckLake.VirtualFilename))
@@ -1874,19 +1880,20 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       // resolve the stored string)
       val pathStr =
         if (p.toUri.getScheme == "file") p.toUri.getPath else p.toString
-      val fSize = footerSize(st) // also validates the magic
-      // Spark's schema read REFUSES some foreign annotations before the
-      // type gate can speak (TIME: UNSUPPORTED_TIME_TYPE; TIMESTAMP with
-      // NANOS — the pandas/arrow-era default): fall back to a direct
+      // the file's ONE open: footer, record count and footer size (which
+      // also validates the magic)
+      val (footer, rc, fSize) = stagedFooter(st, None)
+      // Spark's schema conversion REFUSES some foreign annotations before
+      // the type gate can speak (TIME: UNSUPPORTED_TIME_TYPE; TIMESTAMP
+      // with NANOS — the pandas/arrow-era default): fall back to a direct
       // footer conversion so those files adopt through the raw-INT64
       // read path; an unmappable footer rethrows Spark's original error
-      val fileSchema = try spark.read.parquet(pathStr).schema catch {
-        case e: Exception =>
-          FileStats.footerSparkSchema(p, hconf).getOrElse(throw e)
+      val fileSchema = try footerSchema(p, footer) catch {
+        case e: Exception => FileStats.footerSparkSchema(footer).getOrElse(throw e)
       }
       // logical annotations Spark's schema erases (unsigned, JSON, UUID)
       // refine the type-gate comparison
-      val duckRefined = FileStats.footerDuckTypes(p, hconf)
+      val duckRefined = FileStats.footerDuckTypes(footer)
       def fileField(n: String) = fileSchema.fields.find(_.name == n)
         .orElse(fileSchema.fields.find(_.name.equalsIgnoreCase(n)))
       if (!ignoreExtraColumns) {
@@ -1953,7 +1960,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
             }
         }
       }
-      val rc = rowCount(p, None)
       // footer stats under the FILE's physical names/types, re-keyed to
       // the table's column names; timestamp min/max are dropped — a
       // foreign writer's time unit is not re-verified here, and absent
@@ -1969,7 +1975,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
           case _: org.apache.spark.sql.types.TimeType => true
           case _ => false
         }).map(_.sourceName).toSet
-      val fileStats0 = FileStats.fromFooter(p, hconf, physSchema, None).map { s =>
+      val fileStats0 = FileStats.fromFooter(footer, physSchema).map { s =>
         val renamed = s.copy(columnName = srcToCol.getOrElse(s.columnName, s.columnName))
         if (isTs(s.columnName)) renamed.copy(minValue = None, maxValue = None)
         else renamed
@@ -1991,7 +1997,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         if (wanted.isEmpty) Nil
         else {
           val byFilePath = wanted.toMap
-          FileStats.fromFooterNested(p, hconf,
+          FileStats.fromFooterNested(footer,
             byFilePath.map { case (fp, (_, dt)) => fp -> dt })
             .map { s =>
               val (tablePath, dt) = byFilePath(s.columnName)
@@ -3067,24 +3073,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     }.toSet
 
     // one file's rows with their stable rowid and birth snapshot
-    def piece(f: DataFileRec)(value: FileSegment => Column): Column =
-      f.segments.foldRight(lit(null).cast(LongType)) { (s, acc) =>
-        when(col("__ducklake_pos") >= s.startPos &&
-          col("__ducklake_pos") < s.startPos + s.rowCount, value(s)).otherwise(acc)
-      }
     def rowsOf(f: DataFileRec): DataFrame = {
-      val explicit = f.rowIdStart.isEmpty && f.segments.isEmpty
-      val base = readFile(name, ctx, f, withPos = true, withRowIdCol = explicit)
-      val withRid =
-        if (explicit) base.withColumn("rowid", col(DuckLake.RowIdPhysCol).cast(LongType))
-        else if (f.segments.nonEmpty)
-          base.withColumn("rowid", piece(f)(s => s.rowIdStart
-            .map(r => lit(r) + (col("__ducklake_pos") - s.startPos))
-            .getOrElse(lit(null).cast(LongType))))
-        else base.withColumn("rowid", lit(f.rowIdStart.get) + col("__ducklake_pos"))
-      if (f.segments.nonEmpty)
-        withRid.withColumn("snapshot_id", piece(f)(s => lit(s.beginSnapshot)))
-      else withRid.withColumn("snapshot_id", lit(f.beginSnapshot))
+      val (rowId, born) = DuckLake.provenanceAt(f, col("__ducklake_pos"))
+      readFile(name, ctx, f, withPos = true,
+        withRowIdCol = f.rowIdStart.isEmpty && f.segments.isEmpty)
+        .withColumn("rowid", rowId).withColumn("snapshot_id", born)
     }
 
     // inlined rows parsed at the range-end schema
@@ -3464,6 +3457,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   def close(): Unit = store.close()
 }
 
+/** One read group of a lake scan, as [[DuckLake.readGroups]] hands it to
+  * the connector: the physical columns its files are read with, the
+  * facade's projection from them onto each pinned catalog column (by
+  * name), and every file with its [[LakeFile]] entry.
+  */
+private[lake] final case class LakeReadGroup(physSchema: StructType,
+    projection: Seq[(String, Column)], files: Seq[(DataFileRec, LakeFile)])
+
 /** Per-scan resolution context: pinned column defs, rename/promotion
   * history, and partitioning metadata — all fetched once per scan, so
   * planning does O(1) metadata queries regardless of file count.
@@ -3734,6 +3735,34 @@ object DuckLake {
     * by row-level UPDATE (catalog row_id_start NULL).
     */
   final val RowIdPhysCol = "_ducklake_row_id"
+
+  /** Provenance of the row at file position `pos` of data file `f`: its
+    * stable row id and the snapshot that committed it. A merged file maps
+    * `pos` through its segment map (each span keeps its original commit
+    * and ids); a file with a row-id range adds `pos` to the range start;
+    * an UPDATE-written file reads its explicit id column — never shifted,
+    * its rows are updated versions keeping their ids. `shift` moves range
+    * ids into the transaction-local form. `perFile` gives the range start
+    * and birth snapshot as columns (a grouped read's per-file values)
+    * instead of `f`'s literals, so one projection serves many files.
+    */
+  def provenanceAt(f: DataFileRec, pos: Column, shift: Long = 0L,
+      perFile: Option[(Column, Column)] = None): (Column, Column) = {
+    def bySegment(value: FileSegment => Column): Column =
+      f.segments.foldRight(lit(null).cast(LongType)) { (s, acc) =>
+        when(pos >= s.startPos && pos < s.startPos + s.rowCount, value(s)).otherwise(acc)
+      }
+    if (f.segments.nonEmpty)
+      (bySegment(s => s.rowIdStart.map(r => lit(r + shift) + (pos - s.startPos))
+        .getOrElse(lit(null).cast(LongType))), bySegment(s => lit(s.beginSnapshot)))
+    else {
+      val rowId = f.rowIdStart match {
+        case Some(start) => perFile.fold(lit(start + shift))(_._1 + shift) + pos
+        case None        => col(RowIdPhysCol).cast(LongType)
+      }
+      (rowId, perFile.fold(lit(f.beginSnapshot))(_._2))
+    }
+  }
 
   def virtualType(v: String): DataType = v match {
     case VirtualFilename => StringType

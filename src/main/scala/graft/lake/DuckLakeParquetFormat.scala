@@ -28,10 +28,11 @@ import graft.lake.crypto.GraftCryptoFactory
   * scan (the reference's `DeleteFilterExec`, src/delete_filter.rs; the
   * Spark-native prior art is Delta Lake's deletion-vector reader). Each
   * file's delete file and visible-row limit arrive as per-file metadata
-  * from [[LakeFileIndex]]; the reader drops every row whose parquet row
-  * index is deleted or at/past the limit. Positions come from the row
-  * index Spark generates for `_metadata.row_index`, so they stay right
-  * when a file is split or row groups are skipped.
+  * (from [[LakeFileIndex]] in the facade's scans, from the partition in
+  * the connector's Batch and stream); the reader drops every row whose
+  * parquet row index is deleted or at/past the limit. Positions come from
+  * the row index Spark generates for `_metadata.row_index`, so they stay
+  * right when a file is split or row groups are skipped.
   *
   * `hidesRows` says whether any file of the relation has rows to hide.
   * Without it the format is plain `ParquetFileFormat`. With it, every
@@ -213,8 +214,7 @@ object DuckLakeParquetFormat {
 }
 
 /** Loads the positions of one positional delete file — the one loader
-  * for every reader that applies MOR deletes ([[DuckLakeParquetFormat]]
-  * and the connector's row-level reader).
+  * for every reader that applies MOR deletes ([[DuckLakeParquetFormat]]).
   */
 object DeletePositions {
   /** Columns of a positional delete file (Iceberg-style). Spark reads of

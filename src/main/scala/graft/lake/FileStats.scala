@@ -21,19 +21,7 @@ import org.apache.spark.sql.types._
   */
 object FileStats {
 
-  /** Extract per-column stats from one written parquet file's footer
-    * (decrypting it when the file is PME-encrypted, key = base64).
-    */
-  def fromFooter(path: Path, conf: Configuration, schema: StructType,
-      decryptKey: Option[String] = None): Seq[ColumnStatRec] = {
-    val opts = org.apache.parquet.HadoopReadOptions.builder(conf, path)
-    decryptKey.foreach(k =>
-      opts.withDecryption(graft.lake.crypto.GraftCryptoFactory.decryptionProps(k)))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf), opts.build())
-    try fromFooter(reader.getFooter, schema) finally reader.close()
-  }
-
-  /** [[fromFooter]] over an already-read footer. */
+  /** Per-column stats from one parquet file's read footer. */
   def fromFooter(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       schema: StructType): Seq[ColumnStatRec] = {
     import scala.jdk.CollectionConverters._
@@ -124,68 +112,61 @@ object FileStats {
     * per-leaf stats rows the adoption path registers key by node id
     * (corpus: add_files/add_files_complex_nested_stats_mre.test).
     */
-  def fromFooterNested(path: Path, conf: Configuration,
-      wanted: Map[String, DataType],
-      decryptKey: Option[String] = None): Seq[ColumnStatRec] = {
+  def fromFooterNested(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      wanted: Map[String, DataType]): Seq[ColumnStatRec] = {
     if (wanted.isEmpty) return Nil
-    val opts = org.apache.parquet.HadoopReadOptions.builder(conf, path)
-    decryptKey.foreach(k =>
-      opts.withDecryption(graft.lake.crypto.GraftCryptoFactory.decryptionProps(k)))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf), opts.build())
-    try {
-      import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala
-      // STRUCTURAL canonicalization: walk the file schema and name each
-      // primitive's path in catalog node terms — a LIST group's repeated
-      // wrapper level disappears and its element is `element`, a MAP's
-      // key_value level disappears with `key`/`value` children. Dropping
-      // by NAME would break user columns literally called list/key_value.
-      val canonicalByChunk: Map[String, String] = {
-        import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, Type}
-        val out = Map.newBuilder[String, String]
-        def walk(t: Type, phys: String, canon: String): Unit =
-          if (t.isPrimitive) out += (phys -> canon)
-          else {
-            val g = t.asGroupType()
-            t.getLogicalTypeAnnotation match {
-              case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation
-                  if g.getFieldCount == 1 =>
-                val c0 = g.getType(0)
-                if (c0.isPrimitive) // legacy 2-level list, primitive element
+    import scala.jdk.CollectionConverters._
+    val blocks = footer.getBlocks.asScala
+    // STRUCTURAL canonicalization: walk the file schema and name each
+    // primitive's path in catalog node terms — a LIST group's repeated
+    // wrapper level disappears and its element is `element`, a MAP's
+    // key_value level disappears with `key`/`value` children. Dropping
+    // by NAME would break user columns literally called list/key_value.
+    val canonicalByChunk: Map[String, String] = {
+      import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, Type}
+      val out = Map.newBuilder[String, String]
+      def walk(t: Type, phys: String, canon: String): Unit =
+        if (t.isPrimitive) out += (phys -> canon)
+        else {
+          val g = t.asGroupType()
+          t.getLogicalTypeAnnotation match {
+            case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation
+                if g.getFieldCount == 1 =>
+              val c0 = g.getType(0)
+              if (c0.isPrimitive) // legacy 2-level list, primitive element
+                walk(c0, s"$phys.${c0.getName}", s"$canon.element")
+              else {
+                val rep = c0.asGroupType()
+                if (rep.getFieldCount == 1) // standard 3-level list
+                  walk(rep.getType(0),
+                    s"$phys.${rep.getName}.${rep.getType(0).getName}",
+                    s"$canon.element")
+                else // legacy 2-level list, group element
                   walk(c0, s"$phys.${c0.getName}", s"$canon.element")
-                else {
-                  val rep = c0.asGroupType()
-                  if (rep.getFieldCount == 1) // standard 3-level list
-                    walk(rep.getType(0),
-                      s"$phys.${rep.getName}.${rep.getType(0).getName}",
-                      s"$canon.element")
-                  else // legacy 2-level list, group element
-                    walk(c0, s"$phys.${c0.getName}", s"$canon.element")
-                }
-              case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation
-                  if g.getFieldCount == 1 && !g.getType(0).isPrimitive =>
-                val kv = g.getType(0).asGroupType()
-                kv.getFields.asScala.foreach(f =>
-                  walk(f, s"$phys.${kv.getName}.${f.getName}", s"$canon.${f.getName}"))
-              case _ =>
-                g.getFields.asScala.foreach(f =>
-                  walk(f, s"$phys.${f.getName}", s"$canon.${f.getName}"))
-            }
+              }
+            case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation
+                if g.getFieldCount == 1 && !g.getType(0).isPrimitive =>
+              val kv = g.getType(0).asGroupType()
+              kv.getFields.asScala.foreach(f =>
+                walk(f, s"$phys.${kv.getName}.${f.getName}", s"$canon.${f.getName}"))
+            case _ =>
+              g.getFields.asScala.foreach(f =>
+                walk(f, s"$phys.${f.getName}", s"$canon.${f.getName}"))
           }
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .foreach(f => walk(f, f.getName, f.getName))
-        out.result()
-      }
-      // one pass over the chunks, grouped by canonical path — never a
-      // rescan per requested leaf
-      val chunksByLeaf = blocks.flatMap(_.getColumns.asScala)
-        .groupBy(c => canonicalByChunk.getOrElse(
-          c.getPath.toArray.mkString("."), c.getPath.toArray.mkString(".")))
-      wanted.toSeq.sortBy(_._1).flatMap { case (leafPath, dt) =>
-        chunksByLeaf.get(leafPath).filter(_.nonEmpty)
-          .map(chunks => statsOfChunks(leafPath, dt, chunks.toSeq))
-      }
-    } finally reader.close()
+        }
+      footer.getFileMetaData.getSchema.getFields.asScala
+        .foreach(f => walk(f, f.getName, f.getName))
+      out.result()
+    }
+    // one pass over the chunks, grouped by canonical path — never a
+    // rescan per requested leaf
+    val chunksByLeaf = blocks.flatMap(_.getColumns.asScala)
+      .groupBy(c => canonicalByChunk.getOrElse(
+        c.getPath.toArray.mkString("."), c.getPath.toArray.mkString(".")))
+    wanted.toSeq.sortBy(_._1).flatMap { case (leafPath, dt) =>
+      chunksByLeaf.get(leafPath).filter(_.nonEmpty)
+        .map(chunks => statsOfChunks(leafPath, dt, chunks.toSeq))
+    }
   }
 
   /** DuckDB-refined logical types of TOP-LEVEL primitive columns, read
@@ -196,94 +177,98 @@ object FileStats {
     */
   def footerDuckTypes(path: Path, conf: Configuration,
       decryptKey: Option[String] = None): Map[String, String] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
     val opts = org.apache.parquet.HadoopReadOptions.builder(conf, path)
     decryptKey.foreach(k =>
       opts.withDecryption(graft.lake.crypto.GraftCryptoFactory.decryptionProps(k)))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf), opts.build())
-    try {
-      import scala.jdk.CollectionConverters._
-      val meta = reader.getFooter.getFileMetaData
-      // GeoParquet v1 files carry a "geo" file-metadata document naming
-      // their geometry columns — those columns must NOT silently adopt as
-      // native geometry (the encodings differ; the reference refuses them
-      // — corpus: geo/ducklake_geometry_add_files.test)
-      // only the keys of the "columns" OBJECT name geometry columns —
-      // other keys (covering, bbox, crs…) are metadata. Parsed with a
-      // real JSON parser (Jackson, shipped with Spark): hand-counting
-      // braces mis-scoped when a string VALUE contained '{'/'}' — e.g. a
-      // PROJJSON crs document embedded inside the columns object.
-      val geoDoc = Option(meta.getKeyValueMetaData.get("geo"))
-      val parsedGeoCols: Option[Set[String]] =
-        geoDoc.flatMap { doc =>
-          try {
-            // lenient: some GeoParquet writers emit NaN in bbox arrays
-            // and other non-strict JSON that strict Jackson rejects
-            val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-              .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_NON_NUMERIC_NUMBERS)
-              .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_SINGLE_QUOTES)
-              .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_UNQUOTED_FIELD_NAMES)
-              .build()
-            val root = mapper.readTree(doc)
-            Option(root.get("columns")).filter(_.isObject).map { cols =>
-              val it = cols.fieldNames()
-              val b = Set.newBuilder[String]
-              while (it.hasNext) b += it.next().toLowerCase
-              b.result()
-            }
-          } catch { case _: Exception => None }
-        }
-      val geoCols: Set[String] = parsedGeoCols.getOrElse(Set.empty)
-      // a PRESENT-but-unparseable "geo" document (or one without a
-      // well-formed "columns" object) is still a GeoParquet claim: we
-      // can't tell WHICH columns are geometry, so every unannotated
-      // binary column is conservatively refused ('geoparquet') rather
-      // than silently adopted — the refusal the comment above promises
-      val refuseAllBinary = geoDoc.isDefined && parsedGeoCols.isEmpty
-      meta.getSchema.getFields.asScala.flatMap { f =>
-        if (!f.isPrimitive) None
-        else if (geoCols.contains(f.getName.toLowerCase) ||
-            (refuseAllBinary &&
+    try footerDuckTypes(reader.getFooter) finally reader.close()
+  }
+
+  /** [[footerDuckTypes]] of a read footer. */
+  def footerDuckTypes(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : Map[String, String] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
+    val meta = footer.getFileMetaData
+    // GeoParquet v1 files carry a "geo" file-metadata document naming
+    // their geometry columns — those columns must NOT silently adopt as
+    // native geometry (the encodings differ; the reference refuses them
+    // — corpus: geo/ducklake_geometry_add_files.test)
+    // only the keys of the "columns" OBJECT name geometry columns —
+    // other keys (covering, bbox, crs…) are metadata. Parsed with a
+    // real JSON parser (Jackson, shipped with Spark): hand-counting
+    // braces mis-scoped when a string VALUE contained '{'/'}' — e.g. a
+    // PROJJSON crs document embedded inside the columns object.
+    val geoDoc = Option(meta.getKeyValueMetaData.get("geo"))
+    val parsedGeoCols: Option[Set[String]] =
+      geoDoc.flatMap { doc =>
+        try {
+          // lenient: some GeoParquet writers emit NaN in bbox arrays
+          // and other non-strict JSON that strict Jackson rejects
+          val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+            .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_NON_NUMERIC_NUMBERS)
+            .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_SINGLE_QUOTES)
+            .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_UNQUOTED_FIELD_NAMES)
+            .build()
+          val root = mapper.readTree(doc)
+          Option(root.get("columns")).filter(_.isObject).map { cols =>
+            val it = cols.fieldNames()
+            val b = Set.newBuilder[String]
+            while (it.hasNext) b += it.next().toLowerCase
+            b.result()
+          }
+        } catch { case _: Exception => None }
+      }
+    val geoCols: Set[String] = parsedGeoCols.getOrElse(Set.empty)
+    // a PRESENT-but-unparseable "geo" document (or one without a
+    // well-formed "columns" object) is still a GeoParquet claim: we
+    // can't tell WHICH columns are geometry, so every unannotated
+    // binary column is conservatively refused ('geoparquet') rather
+    // than silently adopted — the refusal the comment above promises
+    val refuseAllBinary = geoDoc.isDefined && parsedGeoCols.isEmpty
+    meta.getSchema.getFields.asScala.flatMap { f =>
+      if (!f.isPrimitive) None
+      else if (geoCols.contains(f.getName.toLowerCase) ||
+          (refuseAllBinary &&
+            f.asPrimitiveType().getPrimitiveTypeName ==
+              org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY &&
+            f.asPrimitiveType().getLogicalTypeAnnotation == null))
+        Some(f.getName.toLowerCase -> "geoparquet")
+      else f.asPrimitiveType().getLogicalTypeAnnotation match {
+        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation if !i.isSigned =>
+          Some(f.getName.toLowerCase -> s"uint${i.getBitWidth}")
+        case _: LogicalTypeAnnotation.JsonLogicalTypeAnnotation =>
+          Some(f.getName.toLowerCase -> "json")
+        case _: LogicalTypeAnnotation.UUIDLogicalTypeAnnotation =>
+          Some(f.getName.toLowerCase -> "uuid")
+        // temporal annotations Spark's schema read REFUSES (TIME) or
+        // erases/rejects (NANOS timestamps): the refined duck type
+        // drives adoption type-gating and the raw-INT64 read path
+        // (DuckLake TIME = µs-of-day; TIMESTAMP_NS = ns since epoch —
+        // pandas/arrow-era files commonly carry NANOS).
+        // Unit-gated (r14 advice): only INT64 TIME(MICROS) is the
+        // µs-of-day encoding the raw read path rescales — a TIME(MILLIS)
+        // file is INT32 (BIGINT read fails) and TIME(NANOS) values
+        // would read 1000× off; both stay UNREFINED so the adoption
+        // gate refuses them instead of silently corrupting (the
+        // reference likewise maps only Time64(Microsecond),
+        // src/types.rs:46)
+        case t: LogicalTypeAnnotation.TimeLogicalTypeAnnotation
+            if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
               f.asPrimitiveType().getPrimitiveTypeName ==
-                org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY &&
-              f.asPrimitiveType().getLogicalTypeAnnotation == null))
-          Some(f.getName.toLowerCase -> "geoparquet")
-        else f.asPrimitiveType().getLogicalTypeAnnotation match {
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation if !i.isSigned =>
-            Some(f.getName.toLowerCase -> s"uint${i.getBitWidth}")
-          case _: LogicalTypeAnnotation.JsonLogicalTypeAnnotation =>
-            Some(f.getName.toLowerCase -> "json")
-          case _: LogicalTypeAnnotation.UUIDLogicalTypeAnnotation =>
-            Some(f.getName.toLowerCase -> "uuid")
-          // temporal annotations Spark's schema read REFUSES (TIME) or
-          // erases/rejects (NANOS timestamps): the refined duck type
-          // drives adoption type-gating and the raw-INT64 read path
-          // (DuckLake TIME = µs-of-day; TIMESTAMP_NS = ns since epoch —
-          // pandas/arrow-era files commonly carry NANOS).
-          // Unit-gated (r14 advice): only INT64 TIME(MICROS) is the
-          // µs-of-day encoding the raw read path rescales — a TIME(MILLIS)
-          // file is INT32 (BIGINT read fails) and TIME(NANOS) values
-          // would read 1000× off; both stay UNREFINED so the adoption
-          // gate refuses them instead of silently corrupting (the
-          // reference likewise maps only Time64(Microsecond),
-          // src/types.rs:46)
-          case t: LogicalTypeAnnotation.TimeLogicalTypeAnnotation
-              if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
-                f.asPrimitiveType().getPrimitiveTypeName ==
-                  org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-            Some(f.getName.toLowerCase -> (if (t.isAdjustedToUTC) "timetz" else "time"))
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if !ts.isAdjustedToUTC &&
-                ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS =>
-            Some(f.getName.toLowerCase -> "timestamp_ns")
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if !ts.isAdjustedToUTC &&
-                ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
-            Some(f.getName.toLowerCase -> "timestamp_ms")
-          case _ => None
-        }
-      }.toMap
-    } finally reader.close()
+                org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
+          Some(f.getName.toLowerCase -> (if (t.isAdjustedToUTC) "timetz" else "time"))
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if !ts.isAdjustedToUTC &&
+              ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS =>
+          Some(f.getName.toLowerCase -> "timestamp_ns")
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if !ts.isAdjustedToUTC &&
+              ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
+          Some(f.getName.toLowerCase -> "timestamp_ms")
+        case _ => None
+      }
+    }.toMap
   }
 
   /** Spark schema of a parquet footer built WITHOUT Spark's converter —
@@ -295,13 +280,13 @@ object FileStats {
     * fallback) — None when a field cannot be mapped, and the caller
     * rethrows Spark's original error.
     */
-  def footerSparkSchema(path: Path, conf: Configuration): Option[StructType] = {
+  def footerSparkSchema(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : Option[StructType] = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation => L}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
     try {
       import scala.jdk.CollectionConverters._
-      val fields = reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+      val fields = footer.getFileMetaData.getSchema.getFields.asScala
       val out = fields.map { f =>
         if (!f.isPrimitive) return None
         val p = f.asPrimitiveType()
@@ -358,7 +343,7 @@ object FileStats {
       Some(StructType(out.toSeq))
     } catch {
       case _: Exception => None
-    } finally reader.close()
+    }
   }
 
   /** Canonical form of a *filter literal* (DSv1 `sources.Filter` value). */

@@ -291,6 +291,12 @@ object DuckLakeFileWriterFactory {
     case BooleanType => row.getBoolean(i).toString
     case StringType  => row.getUTF8String(i).toString
     case DateType    => java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString
+    case TimestampType | TimestampNTZType | _: DecimalType =>
+      // the string cast Spark's partitionBy names directories with
+      org.apache.spark.sql.catalyst.expressions.Cast(
+        org.apache.spark.sql.catalyst.expressions.BoundReference(i, dt, nullable = false),
+        StringType, Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+        .eval(row).toString
     case other => throw new UnsupportedTypeException(s"partition col: $other")
   }
 }

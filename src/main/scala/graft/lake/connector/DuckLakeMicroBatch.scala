@@ -4,18 +4,20 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, AttributeSet, BindReferences, Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.read.{HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, SupportsReportPartitioning}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.lake.{DuckLake, UnsupportedTypeException}
+import graft.lake.{DuckLake, DuckLakeParquetFormat, LakeFile}
 
 /** Snapshot offset for the DuckLake incremental stream: micro-batch (a, b]
   * = rows in data files whose `begin_snapshot` lies in that interval —
@@ -28,33 +30,18 @@ final case class SnapshotOffset(snapshot: Long) extends Offset {
   override def json(): String = snapshot.toString
 }
 
-/** One data file of a row-level scan, SPJ scan or micro-batch. `read`
-  * is Spark's parquet reader for the file's physical schema: the columns
-  * under the names they had in THIS file's epoch (rename history
-  * resolved on the driver; column_id ≙ field_id role, reference
-  * src/types.rs:440-498). `slots(i)` says where required field `i` comes
-  * from: an ordinal of `read`'s rows, or one of the codes in the
-  * companion — a driver-evaluated constant (`constants(i)`: a hive
-  * partition value, the default of a column added after the file was
-  * written, or null), the file id, the position or the stable row id.
+/** One data file of a row-level scan, SPJ scan or micro-batch: the file
+  * (path, size, and the delete file and visible-row limit its scan
+  * hides), the reader of its read group ([[graft.lake.DuckLakeParquetFormat]]
+  * in row mode), the group's projection onto the scan's columns, bound
+  * to the reader's rows, and the file's own values (data file id,
+  * row-id range start, birth snapshot) that the reader appends as
+  * partition values. Column mapping is the facade's: no column is
+  * resolved here.
   */
-final case class DuckLakeFilePartition(path: String,
+final case class DuckLakeFilePartition(file: LakeFile,
     read: PartitionedFile => Iterator[InternalRow],
-    slots: Array[Int], constants: Array[Any], fieldTypes: Array[DataType],
-    // MOR delete file of this data file and its encryption key (null = none)
-    deletePath: String, deleteKey: String,
-    dataFileId: Long, rowIdStart: Long,
-    // merged-file segment map: (startPos, rowCount, rowIdStart|-1)
-    rowIdSegments: Array[Array[Long]],
-    // ordinal of the explicit per-row id column of UPDATE-written files
-    rowIdOrdinal: Int) extends InputPartition
-
-object DuckLakeFilePartition {
-  final val Constant = -1
-  final val FileId = -2
-  final val Pos = -3
-  final val RowId = -4
-}
+    projection: Seq[Expression], values: InternalRow) extends InputPartition
 
 /** A file partition tagged with its hive-partition key — the handle
   * Spark's storage-partitioned join (SPJ) machinery groups by: two lake
@@ -70,92 +57,92 @@ final class DuckLakeKeyedPartition(val inner: DuckLakeFilePartition,
 }
 
 /** Shared driver-side planning for the row-level, SPJ and streaming
-  * readers: resolves each file's rename epoch, partition values, defaults
-  * and MOR delete file into a serializable [[DuckLakeFilePartition]],
-  * with one Spark parquet reader per physical schema.
+  * readers. The facade's [[DuckLake.readGroups]] gives each read group's
+  * physical columns, projection and files; per group the projection is
+  * analyzed, optimized and bound here ONCE, over the group's physical
+  * columns, the parquet row index and the per-file values, so the
+  * files of a group share one generated projection. Row addresses come
+  * from the row index (`_pos`) and [[DuckLake.provenanceAt]] (`rowid`,
+  * `snapshot_id`); a merged file, whose segment map is a per-file
+  * expression, gets its own projection when the scan asks for either.
   */
 private[connector] object DuckLakePartitionPlanner {
   import graft.lake.{ColumnDef, DataFileRec, TableRec}
 
-  def plan(lake: DuckLake, tr: TableRec, cols: Seq[ColumnDef],
+  private val Pos = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+  /** The per-file values, in [[DuckLakeFilePartition.values]] order. */
+  private val FileValues = StructType(Seq(
+    StructField("__ducklake_file_id", LongType, nullable = false),
+    StructField("__ducklake_row_id_start", LongType),
+    StructField("__ducklake_begin_snapshot", LongType, nullable = false)))
+
+  /** Partitions of `files` (table `tr` at `snap`, pinned columns `cols`)
+    * in catalog order, each with its file's catalog row.
+    */
+  def plan(lake: DuckLake, name: String, tr: TableRec, cols: Seq[ColumnDef], snap: Long,
       files: Seq[DataFileRec], required: StructType,
-      basePath: String): Array[InputPartition] = {
-    val byName = cols.map(c => c.name -> c).toMap
-    val history = lake.store.getColumnHistory(tr.tableId)
-    val partCols = lake.store.getPartitionColumns(tr.tableId, lake.store.currentSnapshot)
-    val partValsByFile =
-      if (partCols.isEmpty) Map.empty[Long, Map[Int, Option[String]]]
-      else lake.store.getFilePartitionValues(tr.tableId)
-    // only IDENTITY keys inject catalog values; transform keys' source
-    // columns are physically present in the parquet
-    val partIdxByColId = partCols.collect {
-      case (idx, cid, None) => cid -> idx }.toMap
-    // table-dir relative for files the lake wrote; verbatim for adopted
-    // files registered by absolute path
-    def resolve(path: String, relative: Boolean) =
-      if (relative) s"$basePath/$path" else path
-    // a column added (with default) after a file's epoch reads its
-    // initial default there; evaluated driver-side, so a bad default
-    // fails at planning
-    val defaults = mutable.Map.empty[Int, Any]
-    def default(i: Int): Any = defaults.getOrElseUpdate(i,
-      byName.get(required(i).name).flatMap(_.initialDefault)
-        .map(DuckLake.evalDefault(_, required(i).dataType)).orNull)
+      liveAt: Option[Long]): Seq[(DataFileRec, DuckLakeFilePartition)] = {
+    val asked = required.fieldNames.toSet
+    val provenance = asked(DuckLake.VirtualRowId) || asked(DuckLake.VirtualSnapshot)
     val keys = lake.decryptOptions(files.map(f => new Path(f.path).getName -> f.encryptionKey))
-    // one reader per physical schema, each with its OWN conf: the reader
+    // one reader per read schema, each with its OWN conf: the reader
     // writes its requested schema into the conf it broadcasts
-    val readers = mutable.Map.empty[StructType, PartitionedFile => Iterator[InternalRow]]
-    def reader(schema: StructType) = readers.getOrElseUpdate(schema,
-      new ParquetFileFormat().buildReaderWithPartitionValues(lake.spark, schema,
-        new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        lake.hadoopConfWith(keys)))
-    val types = required.fields.map(_.dataType)
-    files.map { file =>
-      val pvs = partValsByFile.getOrElse(file.dataFileId, Map.empty)
-      val phys = mutable.ArrayBuffer.empty[StructField]
-      def physical(name: String, dt: DataType): Int = {
-        phys += StructField(name, dt, nullable = true) // absent in file → null
-        phys.size - 1
-      }
-      val constants = new Array[Any](required.length)
-      val slots = required.fields.zipWithIndex.map { case (f, i) =>
-        val cur = byName.get(f.name)
-        f.name match {
-          case DuckLake.VirtualFileId => DuckLakeFilePartition.FileId
-          case DuckLake.VirtualPos    => DuckLakeFilePartition.Pos
-          case DuckLake.VirtualRowId  => DuckLakeFilePartition.RowId
-          case _ if cur.exists(c => partIdxByColId.contains(c.columnId)) =>
-            constants(i) = DuckLakeBatchScan.catalystPartValue(f.dataType,
-              pvs.getOrElse(partIdxByColId(cur.get.columnId), None).orNull)
-            DuckLakeFilePartition.Constant
-          case _ =>
-            // the column's physical (on-disk) name in this file's epoch
-            cur.flatMap(c => history.find { case (h, begin, endS) =>
-              h.columnId == c.columnId && begin <= file.epoch && endS.forall(_ > file.epoch)
-            }) match {
-              case Some((h, _, _)) => physical(h.name, f.dataType)
-              case None =>
-                constants(i) = default(i)
-                DuckLakeFilePartition.Constant
+    val readers = mutable.Map.empty[(StructType, Boolean), PartitionedFile => Iterator[InternalRow]]
+    val order = files.map(_.dataFileId).zipWithIndex.toMap
+    lake.readGroups(name, tr, cols, snap, files, liveAt)
+      .flatMap { g =>
+        val byName = g.projection.toMap
+        val (merged, plain) = g.files.partition(_._1.segments.nonEmpty && provenance)
+        (plain +: merged.map(Seq(_))).filter(_.nonEmpty).flatMap { fs =>
+          val (rowId, born) = DuckLake.provenanceAt(fs.head._1, col(Pos),
+            perFile = Some((col(FileValues(1).name), col(FileValues(2).name))))
+          val columns = required.fields.toSeq.map { f =>
+            f.name match {
+              case DuckLake.VirtualFileId => col(FileValues(0).name)
+              case DuckLake.VirtualPos | DuckLake.VirtualRowNumber => col(Pos)
+              case DuckLake.VirtualRowId => rowId
+              case DuckLake.VirtualSnapshot => born
+              case n => byName.getOrElse(n, lit(null).cast(f.dataType))
             }
+          }
+          val (readSchema, projection) = bind(lake,
+            g.physSchema.add(Pos, LongType, nullable = true), columns)
+          val hides = fs.exists(_._2.hidesRows)
+          val read = readers.getOrElseUpdate((readSchema, hides),
+            new DuckLakeParquetFormat(hides).buildReaderWithPartitionValues(lake.spark,
+              StructType(readSchema.filterNot(_.name == Pos)), FileValues, readSchema, Nil,
+              Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), lake.hadoopConfWith(keys)))
+          fs.map { case (f, file) =>
+            f -> DuckLakeFilePartition(file, read, projection, new GenericInternalRow(
+              Array[Any](f.dataFileId, f.rowIdStart.map(Long.box).orNull, f.beginSnapshot)))
+          }
         }
-      }
-      val rowIdOrdinal =
-        if (required.fieldNames.contains(DuckLake.VirtualRowId) &&
-            file.rowIdStart.isEmpty && file.segments.isEmpty)
-          physical(DuckLake.RowIdPhysCol, LongType)
-        else -1
-      DuckLakeFilePartition(resolve(file.path, file.pathIsRelative),
-        reader(StructType(phys.toSeq)), slots, constants, types,
-        file.deleteFile.map(d => resolve(d.path, d.pathIsRelative)).orNull,
-        file.deleteFile.flatMap(_.encryptionKey).orNull,
-        file.dataFileId, file.rowIdStart.getOrElse(-1L),
-        if (file.segments.isEmpty) null
-        else file.segments.map(sg =>
-          Array(sg.startPos, sg.rowCount, sg.rowIdStart.getOrElse(-1L))).toArray,
-        rowIdOrdinal): InputPartition
-    }.toArray
+      }.sortBy { case (f, _) => order(f.dataFileId) }
   }
+
+  /** `columns` over rows of `input` followed by the per-file values,
+    * analyzed and optimized by Spark, then bound: the columns of `input`
+    * the projection reads (the reader's schema) and the bound projection
+    * over the reader's rows (those columns, then the per-file values).
+    */
+  private def bind(lake: DuckLake, input: StructType,
+      columns: Seq[Column]): (StructType, Seq[Expression]) = {
+    val frame = ColumnBridge.internalFrame(lake.spark, StructType(input ++ FileValues),
+      lake.spark.sparkContext.emptyRDD[InternalRow])
+    val attrs = frame.queryExecution.analyzed.output
+    val exprs = frame.select(columns: _*).queryExecution.optimizedPlan match {
+      case Project(list, _) => list
+      case plan => plan.output // an identity projection optimizes away
+    }
+    val used = AttributeSet(exprs.flatMap(_.references))
+    val kept = input.indices.filter(i => used.contains(attrs(i)))
+    (StructType(kept.map(input(_))), BindReferences.bindReferences(exprs,
+      AttributeSeq(kept.map(attrs) ++ attrs.drop(input.length))))
+  }
+
+  /** `column` evaluated on the driver (a constant, such as a partition value). */
+  def evaluate(lake: DuckLake, column: Column): Any =
+    bind(lake, new StructType(), Seq(column))._2.head.eval(InternalRow.empty)
 }
 
 /** Streaming source over a DuckLake table: appends-only (CDC-insert
@@ -269,30 +256,23 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
           "the checkpoint is no longer replayable — restart the stream " +
           "with a fresh checkpoint location")
     val tr = tableRec
-    val schSeg = lake.store.getSchemaByName(schemaName, b)
-      .map(_.path).getOrElse(schemaName + "/")
-    val cols = lake.store.getTableColumns(tr.tableId, b)
     // appends-only semantics: delete files are NOT applied to streamed rows
-    val files = lake.store.getDataFilesAddedBetween(tr.tableId, a, b)
-      .map(_.copy(deleteFile = None))
-    DuckLakePartitionPlanner.plan(lake, tr, cols, files, required,
-      graft.lake.DuckLake.tableDir(lake.dataPath, schSeg, tr))
+    DuckLakePartitionPlanner.plan(lake, fullName, tr, lake.store.getTableColumns(tr.tableId, b),
+      b, lake.store.getDataFilesAddedBetween(tr.tableId, a, b), required,
+      liveAt = None).map(_._2).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    // carry the driver's Hadoop conf to executors (credentials / fs
-    // settings for non-local filesystems); `new Configuration()` on the
-    // executor would silently drop the session conf
-    new DuckLakeFileReaderFactory(new SerializableConfiguration(
-      lake.spark.sparkContext.hadoopConfiguration))
+  override def createReaderFactory(): PartitionReaderFactory = DuckLakeFileReaderFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 /** `Batch` scan over a snapshot-pinned lake table: one input partition
-  * per data file, read by Spark's parquet reader, MOR deletes applied in
-  * the connector's reader. Used by the row-level-operation path (SQL
+  * per data file, each read like the facade reads it — through
+  * [[graft.lake.DuckLakeParquetFormat]], which drops MOR-deleted rows
+  * and gives positions from the parquet row index, with the facade's
+  * per-group projection. Used by the row-level-operation path (SQL
   * UPDATE / MERGE / row-level DELETE), which requires a real `toBatch`
   * and row addresses, and by storage-partitioned joins. Ordinary reads
   * never get here: [[SpliceLakeScans]] plans them as the facade's
@@ -345,27 +325,26 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     // but non-matching files never produce input partitions
     val files = lake.pruneDataFiles(tr, cols, snapshot,
       lake.store.getDataFiles(tr.tableId, snapshot), pushedFilters)
-    val parts = DuckLakePartitionPlanner.plan(lake, tr, cols, files, schema,
-      graft.lake.DuckLake.tableDir(lake.dataPath, sch.path, tr))
-    if (!spj || !spjEligible) parts
+    val parts = DuckLakePartitionPlanner.plan(lake, fullName, tr, cols, snapshot, files,
+      schema, Some(snapshot))
+    if (!spj || !spjEligible) parts.map(_._2: InputPartition).toArray
     else {
       // key values in catalog partition-column order, typed as Catalyst
       // values — HasPartitionKey rows with equal keys must compare equal.
-      // identity keys carry the column value; bucket keys the bucket int
+      // identity keys carry the column value, bucket keys the bucket id
+      // (the directory value), each cast as the facade casts it
       val pvs = lake.store.getFilePartitionValues(tr.tableId)
-      parts.map { case p: DuckLakeFilePartition =>
-        val byIdx = pvs.getOrElse(p.dataFileId, Map.empty)
-        val key = spjFields.zipWithIndex.map { case (f, idx) =>
-          val raw = byIdx.getOrElse(idx, None).orNull
-          f.transform match {
-            case None => DuckLakeBatchScan.catalystPartValue(
-              schema(schema.fieldIndex(f.source)).dataType, raw)
-            case Some(_) => // bucket: the directory value IS the bucket id
-              if (raw == null) null else Int.box(raw.toInt)
-          }
+      val values = mutable.Map.empty[(DataType, Option[String]), Any]
+      parts.map { case (f, p) =>
+        val byIdx = pvs.getOrElse(f.dataFileId, Map.empty)
+        val key = spjFields.zipWithIndex.map { case (pf, idx) =>
+          val dt = if (pf.transform.isEmpty) schema(pf.source).dataType else IntegerType
+          val raw = byIdx.getOrElse(idx, None)
+          values.getOrElseUpdate(dt -> raw,
+            DuckLakePartitionPlanner.evaluate(lake, lake.partitionValue(raw, dt)))
         }.toArray
         new DuckLakeKeyedPartition(p, key): InputPartition
-      }
+      }.toArray
     }
   }
 
@@ -394,105 +373,33 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
       new KeyGroupedPartitioning(keys, nKeys)
     } else new UnknownPartitioning(planned.length)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DuckLakeFileReaderFactory(new SerializableConfiguration(
-      lake.spark.sparkContext.hadoopConfiguration))
+  override def createReaderFactory(): PartitionReaderFactory = DuckLakeFileReaderFactory
 }
 
-object DuckLakeBatchScan {
-  /** Hive partition-path value string → Catalyst value of the column's
-    * logical type (null partition → null). Mirrors the read-side literal
-    * injection the ordinary scan does with `lit(value).cast(dt)`.
-    */
-  private[connector] def catalystPartValue(dt: DataType, raw: String): Any =
-    if (raw == null) null else dt match {
-      case ByteType     => raw.toByte
-      case ShortType    => raw.toShort
-      case IntegerType  => raw.toInt
-      case LongType     => raw.toLong
-      case BooleanType  => raw.toBoolean
-      case FloatType    => raw.toFloat
-      case DoubleType   => raw.toDouble
-      case StringType   => UTF8String.fromString(raw)
-      case DateType     => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case d: DecimalType =>
-        org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(raw), d.precision, d.scale)
-      case other => throw new UnsupportedTypeException(
-        s"identity partition key type ${other.simpleString} not supported by the connector's Batch scan")
-    }
-}
-
-/** Executor-side reader: each file through the Spark parquet reader its
-  * partition carries, read whole and unfiltered so the row count gives
-  * every row's file position (MOR deletes, `_pos`, row ids). The file's
-  * delete positions come from [[graft.lake.DeletePositions]], the loader
-  * the facade's scans use too. Ordinary reads never get here: they are
-  * spliced parquet scans, whose deletes [[graft.lake.DuckLakeParquetFormat]]
-  * applies.
+/** Executor-side reader: each file through the reader its partition
+  * carries, with the partition's bound projection compiled once per task
+  * (`UnsafeProjection`; the files of a read group share its generated
+  * code). Deleted rows never reach it: the reader drops them.
   */
-final class DuckLakeFileReaderFactory(hconf: SerializableConfiguration)
-    extends PartitionReaderFactory {
+object DuckLakeFileReaderFactory extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition match {
       case k: DuckLakeKeyedPartition => k.inner
       case f: DuckLakeFilePartition  => f
     }
+    val project = UnsafeProjection.create(p.projection)
+    val rows = p.read(PartitionedFile(p.values, SparkPath.fromPath(new Path(p.file.path)),
+      0L, p.file.size, Array.empty[String], 0L, p.file.size, p.file.metadata))
     new PartitionReader[InternalRow] {
-      // MOR delete file: positions of rows hidden in THIS data file
-      private val deleted =
-        if (p.deletePath == null) null
-        else graft.lake.DeletePositions.load(p.deletePath, Option(p.deleteKey), hconf.value)
-
-      private val rows = {
-        val hp = new Path(p.path)
-        val st = hp.getFileSystem(hconf.value).getFileStatus(hp)
-        p.read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L,
-          st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
-      }
       private var current: InternalRow = _
-      private var pos: Long = -1L
 
-      /** Stable row id of the row at file position `pos`: the explicit
-        * in-file column, merged-segment map, or contiguous range.
-        */
-      private def rowIdAt(pos: Long): Any =
-        if (p.rowIdOrdinal >= 0) {
-          if (current.isNullAt(p.rowIdOrdinal)) null // legacy file without ids
-          else current.getLong(p.rowIdOrdinal)
-        }
-        else if (p.rowIdSegments != null) {
-          p.rowIdSegments.collectFirst {
-            case Array(start, count, rid) if pos >= start && pos < start + count =>
-              if (rid < 0) null else Long.box(rid + (pos - start))
-          }.flatMap(Option(_)).orNull
-        } else if (p.rowIdStart >= 0) Long.box(p.rowIdStart + pos)
-        else null
-
-      override def next(): Boolean = {
-        do {
-          current = if (rows.hasNext) rows.next() else null
-          pos += 1
-        } while (current != null && deleted != null && deleted.contains(pos))
-        current != null
+      override def next(): Boolean = rows.hasNext && {
+        current = project(rows.next())
+        true
       }
 
-      override def get(): InternalRow = {
-        val row = new GenericInternalRow(p.slots.length)
-        var i = 0
-        while (i < p.slots.length) {
-          val v = p.slots(i) match {
-            case DuckLakeFilePartition.Constant => p.constants(i)
-            case DuckLakeFilePartition.FileId   => p.dataFileId
-            case DuckLakeFilePartition.Pos      => pos
-            case DuckLakeFilePartition.RowId    => rowIdAt(pos)
-            case j => if (current.isNullAt(j)) null else current.get(j, p.fieldTypes(i))
-          }
-          row.update(i, v)
-          i += 1
-        }
-        row
-      }
+      override def get(): InternalRow = current
 
       override def close(): Unit = rows match {
         case c: java.io.Closeable => c.close()

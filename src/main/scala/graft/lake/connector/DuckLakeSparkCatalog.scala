@@ -664,7 +664,10 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
             with SupportsPushDownFilters {
           private var required: StructType = tableSchema
           private var filters: Array[Filter] = Array.empty
-          override def pruneColumns(s: StructType): Unit = required = s
+          // whole top-level columns, as the ordinary scan keeps them: the
+          // facade's projection maps each column whole
+          override def pruneColumns(s: StructType): Unit =
+            required = StructType(s.map(f => tableSchema.find(_.name == f.name).getOrElse(f)))
           override def pushFilters(fs: Array[Filter]): Array[Filter] = {
             filters = fs; fs // all residual: Spark re-applies post-scan
           }
