@@ -5,7 +5,12 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, UpdateTable}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** DuckLake-on-Spark session façade: a lakehouse whose metadata lives in
@@ -1121,7 +1126,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** Physical path of a data file: table-dir relative for files we wrote;
     * verbatim for adopted files registered with absolute paths.
     */
-  private def dataFilePath(name: String, f: DataFileRec): String =
+  private[lake] def dataFilePath(name: String, f: DataFileRec): String =
     if (f.pathIsRelative) filePath(name, f.path) else f.path
 
   private def deleteFilePath(name: String, d: DeleteFileRec): String =
@@ -1367,7 +1372,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   /** One file with its epoch projection (the per-file read every
-    * rename-safe path — scan, deleteWhere, CDC, compaction — goes
+    * rename-safe path — scan, CDC, compaction — goes
     * through); `liveAt` as in [[readGroup]].
     */
   private def readFile(name: String, ctx: ScanCtx, f: DataFileRec,
@@ -1435,6 +1440,28 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       else parsed.select(projection: _*)
     }
     Some(dfs.reduce(_ unionByName _))
+  }
+
+  /** Whether table `name` holds inlined rows visible at `snap`. */
+  private[lake] def hasInlinedRows(name: String, snap: Long): Boolean =
+    store.getInlinedRows(resolveTable(name, snap).tableId, snap).nonEmpty
+
+  /** `tr`'s inlined rows at `snap` in a row-level scan's `required`
+    * columns, collected on the driver (the inline limit bounds them);
+    * `_file_id` is [[DuckLake.InlinedFileId]], `_pos` the row id.
+    */
+  private[lake] def inlinedScanRows(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
+      required: StructType): Array[InternalRow] = {
+    val virtual = required.fieldNames.toSet.intersect(DuckLake.VirtualNames.toSet) --
+      Seq(DuckLake.VirtualFileId, DuckLake.VirtualPos)
+    inlinedDF(tr, cols, snap, withRowId = true, virtual = virtual)
+      .fold(Array.empty[InternalRow]) { df =>
+        df.select(required.fieldNames.toSeq.map {
+          case DuckLake.VirtualFileId => lit(DuckLake.InlinedFileId)
+          case DuckLake.VirtualPos => col("__row_id")
+          case n => df(s"`${n.replace("`", "``")}`")
+        }: _*).queryExecution.executedPlan.executeCollect()
+      }
   }
 
   /** Snapshot-pinned scan. Files with identical physical-schema epochs
@@ -1621,15 +1648,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   // ------------------------------------------------------------------
-  // Merge-on-read deletes (write helper; reference tests generate these
-  // via DuckDB — tests/common/mod.rs:86-121)
+  // Merge-on-read deletes and updates: Spark's row-level delta plan, one
+  // positional delete file per data file (reference src/delete_filter.rs)
   // ------------------------------------------------------------------
 
-  /** Delete rows matching `cond`: for each data file, compute the file-local
-    * positions of matching rows, merge with previously deleted positions,
-    * and register one cumulative positional delete file (Iceberg-style
-    * schema `(file_path, pos)`, reference src/table.rs:51-52).
-    */
   /** Unconditional `DELETE FROM t`: a metadata-only truncate — every live
     * file/inlined row ends at one snapshot, nothing is scanned and no
     * delete parquet is written. At 100 TB this is the difference between
@@ -1640,71 +1662,44 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     store.truncateTable(tr.tableId)
   }
 
-  def deleteWhere(name: String, cond: Column): Long = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val cols = store.getTableColumns(tr.tableId, snap)
-    val files = store.getDataFiles(tr.tableId, snap)
-    val ctx = scanCtx(tr, cols, snap)
-    // matched = file-local positions of rows satisfying `cond`, over ALL
-    // files in ONE distributed plan (each branch carries its file's
-    // epoch/mapping projection, so `cond` sees current column names).
-    // Positions NEVER aggregate on the driver: the only collected values
-    // are per-file ids — `DELETE WHERE <half the table>` at 100 TB costs
-    // a shuffle, not driver heap.
-    // predicates may reference VIRTUAL columns (`DELETE … WHERE rowid=7`,
-    // corpus rowid/ducklake_row_id.test) — materialize the referenced
-    // ones per file before filtering
-    val virtNeeded: Set[String] =
-      org.apache.spark.sql.graftbridge.ColumnBridge.references(cond)
-        .toSet.intersect(DuckLake.VirtualNames.toSet)
-    val matched = files.map { f =>
-      val needRowCol = virtNeeded(DuckLake.VirtualRowId) &&
-        f.rowIdStart.isEmpty && f.segments.isEmpty
-      var df = readFile(name, ctx, f, withPos = true, withRowIdCol = needRowCol)
-      val (rowId, born) = DuckLake.provenanceAt(f, col("__ducklake_pos"))
-      if (virtNeeded(DuckLake.VirtualRowId))
-        df = df.withColumn(DuckLake.VirtualRowId, rowId)
-      if (virtNeeded(DuckLake.VirtualSnapshot))
-        df = df.withColumn(DuckLake.VirtualSnapshot, born)
-      if (virtNeeded(DuckLake.VirtualRowNumber))
-        df = df.withColumn(DuckLake.VirtualRowNumber, col("__ducklake_pos"))
-      if (virtNeeded(DuckLake.VirtualFilename))
-        df = df.withColumn(DuckLake.VirtualFilename, lit(dataFilePath(name, f)))
-      df.filter(cond)
-        .select(lit(f.dataFileId).as("__fid"), col("__ducklake_pos").as("pos"))
-    }.reduceOption(_ union _)
-    val previous = files.flatMap(f => f.deleteFile.map(positionsOf(name, _, f.dataFileId)))
-      .reduceOption(_ union _)
-    // files that gained at least one NEW deleted position — O(files) rows
-    val freshFids: Set[Long] = matched match {
-      case None => Set.empty
-      case Some(m) =>
-        val fresh = previous.fold(m)(p => m.join(p, Seq("__fid", "pos"), "left_anti"))
-        fresh.groupBy("__fid").count().collect().map(_.getLong(0)).toSet
+  /** DELETE … WHERE `cond` (virtual columns allowed) in one snapshot, by
+    * SQL DELETE's row-level plan; the snapshot after the call.
+    */
+  def deleteWhere(name: String, cond: Column): Long =
+    rowLevel(name)(DeleteFromTable(_, ColumnBridge.expression(spark, cond)))
+
+  /** UPDATE … SET … WHERE `cond` in one snapshot, by SQL UPDATE's
+    * row-level plan (updated rows keep their row ids), each SET value
+    * cast to its column's type; the snapshot after the call.
+    */
+  def update(name: String, cond: Column, set: Map[String, Column]): Long =
+    rowLevel(name) { relation =>
+      val schema = relation.table.schema()
+      UpdateTable(relation, set.toSeq.map { case (k, v) =>
+        if (!schema.fieldNames.contains(k))
+          throw new InvalidConfigException(s"unknown column in SET: $k")
+        Assignment(UnresolvedAttribute.quoted(k),
+          ColumnBridge.expression(spark, v.cast(schema(k).dataType)))
+      }, Some(ColumnBridge.expression(spark, cond)))
     }
-    // inlined rows matching the predicate are ended in the same snapshot
-    // (bounded by inlineRowLimit — driver-safe by construction)
-    val inlinedIds = inlinedDF(tr, cols, snap, withRowId = true,
-        virtual = virtNeeded) match {
-      case Some(df) => df.filter(cond).select("__row_id").collect().map(_.getLong(0)).toSeq
-      case None     => Nil
-    }
-    if (freshFids.isEmpty && inlinedIds.isEmpty) return snap
-    val deletes = if (freshFids.isEmpty) Nil else {
-      val touched = files.filter(f => freshFids(f.dataFileId))
-      import spark.implicits._
-      val fidFilter = broadcast(freshFids.toSeq.toDF("__fid"))
-      val merged = previous.fold(matched.get)(matched.get.union)
-        .join(fidFilter, "__fid")
-      writeDeleteFiles(name, merged,
-        touched.map(f => f.dataFileId -> dataFilePath(name, f)).toMap)
-    }
-    try store.commitDeletes(tr.tableId, deletes, inlinedIds)
-    catch { case e: Throwable =>
-      cleanupRenamed(deletes.map(d => new Path(s"${tableDirOf(name)}/${d._2.path}")))
-      throw e
-    }
+
+  /** Run `command` over table `name`'s relation at the current snapshot
+    * (with its metadata columns if the command names a virtual column,
+    * as SQL resolution adds them); the snapshot after it.
+    */
+  private def rowLevel(name: String)(command: DataSourceV2Relation => LogicalPlan): Long = {
+    val (schemaName, tableName) = parse(name)
+    val relation = DataSourceV2Relation.create(
+      connector.DuckLakeV2Table.at(this, s"$schemaName.$tableName", store.currentSnapshot),
+      None, None)
+    val plan = command(relation)
+    val virtual = plan.expressions.exists(_.exists {
+      case a: UnresolvedAttribute => DuckLake.VirtualNames.contains(a.nameParts.last)
+      case _ => false
+    })
+    ColumnBridge.execute(spark,
+      if (virtual) plan.withNewChildren(Seq(relation.withMetadataColumns())) else plan)
+    store.currentSnapshot
   }
 
   /** Write the merged `(__fid, pos)` delete set as one cumulative
@@ -1739,21 +1734,21 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     if (filters.isEmpty) files
     else pruneByStats(tr, scanCtx(tr, cols, snap), sparkSchemaOf(cols), files, filters)
 
-  /** Commit a row-level DELTA staged by the native delta writers (SQL
-    * UPDATE / MERGE, merge-on-read): appended-row files plus the tasks'
-    * PARTIAL delete-position parquets (`(_fid, pos)`, written executor-
-    * side — commit messages carry file names and the ids of the data
-    * files they touch, never positions) —
-    * merged with existing delete files into per-data-file cumulative
-    * delete parquets, registered with the new data files in ONE snapshot.
-    * Cost is O(changed rows) of cluster work and O(files) of driver state;
-    * never a table rewrite, never a driver position list.
+  /** Commit a row-level DELTA staged by the native delta writers
+    * (DELETE / UPDATE / MERGE, merge-on-read): appended-row files plus the
+    * tasks' PARTIAL delete-position parquets (`(_fid, pos)`, written
+    * executor-side — commit messages carry file names and the ids of the
+    * data files they touch, never positions) — merged with existing
+    * delete files into per-data-file cumulative delete parquets,
+    * registered with the new data files in ONE snapshot that also ends
+    * the deleted inlined rows `endInlined`. Cost is O(changed rows) of
+    * cluster work and O(files) of driver state; never a table rewrite.
     */
   private[lake] def commitDeltaStaged(schemaName: String, tableName: String,
       cols: Seq[ColumnDef], stagedNew: Seq[(Path, Seq[Option[String]])],
       dataSchema: StructType, keyOpt: Option[String],
       deletePartials: Seq[Path], touchedFids: Set[Long],
-      stagedRowId: Seq[(Path, Seq[Option[String]])] = Nil): Long = {
+      stagedRowId: Seq[(Path, Seq[Option[String]])], endInlined: Set[Long]): Long = {
     val name = s"$schemaName.$tableName"
     val snap = store.currentSnapshot
     val tr = resolveTable(name, snap)
@@ -1779,7 +1774,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val (rowIdFiles, renamed2) = stageIntoTableDir(schemaName, tableName, stagedRowId,
       dataSchema, keyOpt, hiveNames)
     try store.commitRowDelta(schemaName, tableName, cols,
-      newFiles ++ rowIdFiles.map(_.copy(explicitRowIds = true)), delRegs)
+      newFiles ++ rowIdFiles.map(_.copy(explicitRowIds = true)), delRegs,
+      endInlined.toSeq.sorted)
     catch { case e: Throwable =>
       cleanupRenamed(renamed)
       cleanupRenamed(renamed2)
@@ -1788,11 +1784,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     }
   }
 
-  /** Move the table's inlined catalog rows into a parquet data file —
-    * registered and ended in ONE snapshot, so no reader ever sees rows
-    * twice (DuckLake `ducklake_flush_inlined_data`). No-op without
-    * inlined rows.
-    */
   /** Adopt pre-existing parquet files into a table WITHOUT rewriting a
     * byte (reference: `ducklake_add_data_files`,
     * tests/sqllogictests/sql/add_files/add_files.test) — at 100 TB,
@@ -2096,6 +2087,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       inlineStats(applied.select(cols.map(c => col(c.name)): _*), cols)))
   }
 
+  /** Move the table's inlined catalog rows into a parquet data file —
+    * registered and ended in ONE snapshot, so no reader ever sees rows
+    * twice (DuckLake `ducklake_flush_inlined_data`). No-op without
+    * inlined rows.
+    */
   def flushInlined(name: String): Long = {
     val snap = store.currentSnapshot
     val tr = resolveTable(name, snap)
@@ -2201,25 +2197,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         .filter(_ < store.currentSnapshot)
       if (dryRun) ids else store.expireSnapshotIds(ids)
     }
-  }
-
-  /** UPDATE … SET … WHERE, merge-on-read style: positional-delete the
-    * matching rows, append their updated versions. The updated rows are
-    * computed from a plan pinned BEFORE the delete (table() resolves the
-    * file list eagerly), so the read-modify-write never observes its own
-    * delete. Cost is O(matched rows) new data + delete positions — no
-    * table rewrite, unlike the SQL UPDATE path's copy-on-write.
-    */
-  def update(name: String, cond: Column, set: Map[String, Column]): Long = {
-    val snap = store.currentSnapshot
-    val pinned = table(name, Some(snap))
-    set.keys.find(k => !pinned.columns.contains(k)).foreach(k =>
-      throw new InvalidConfigException(s"unknown column in SET: $k"))
-    val updated = set.foldLeft(pinned.filter(cond)) { case (df, (k, v)) =>
-      df.withColumn(k, v.cast(pinned.schema(k).dataType))
-    }.select(pinned.columns.map(col).toSeq: _*)
-    deleteWhere(name, cond)
-    insertInto(updated, name)
   }
 
   def renameColumn(name: String, oldName: String, newName: String): Long =
@@ -3614,6 +3591,11 @@ object DuckLake {
   final val VirtualNames: Seq[String] =
     Seq(VirtualSnapshot, VirtualFilename, VirtualRowNumber, VirtualRowId,
       VirtualFileIndex, VirtualFileId, VirtualPos)
+
+  /** `_file_id` of an inlined catalog row in a row-level scan; its `_pos`
+    * is the row's catalog row id. Data file ids are never negative.
+    */
+  final val InlinedFileId = -1L
 
   /** First provisional row id of rows born in a still-open transaction
     * (DuckLake constant; corpus: rowid/ducklake_row_id.test).

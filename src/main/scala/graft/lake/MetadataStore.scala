@@ -975,7 +975,7 @@ final class MetadataStore(backend: MetadataBackend,
   private def loadDataFiles(tableId: Long, snap: Long): Seq[DataFileRec] = {
     // newest visible delete file per data file. Derby lacks LATERAL and
     // partitioned window functions → correlated MAX subquery rewrite
-    // (SURVEY.md §7.4); under our write discipline commitDeletes ends the
+    // (SURVEY.md §7.4); under our write discipline commitRowDelta ends the
     // previous delete file, so the visible set has ≤1 per data file anyway.
     def vis(a: String) =
       s"$a.begin_snapshot <= ? AND ($a.end_snapshot IS NULL OR $a.end_snapshot > ?)"
@@ -1094,7 +1094,7 @@ final class MetadataStore(backend: MetadataBackend,
     * pins the rewrite's row-identity against an independently computed
     * oracle and asserts the flag selects the LATERAL text, so a network
     * backend exercises a TESTED branch. Ties inside one snapshot cannot
-    * occur (commitDeletes ends the previous delete file of a data file
+    * occur (commitRowDelta ends the previous delete file of a data file
     * in the same transaction), so MAX(begin_snapshot) identifies one row
     * exactly like the LATERAL's ORDER BY … LIMIT 1.
     */
@@ -2471,42 +2471,20 @@ final class MetadataStore(backend: MetadataBackend,
     }
   }
 
-  /** Register positional delete files (one per data file) in a new
-    * snapshot; any previous delete file for the same data file is ended
-    * (merge-on-read delete model, reference: src/table.rs:51-92).
-    */
-  def commitDeletes(tableId: Long, deletes: Seq[(Long, FileToRegister)],
-      endInlinedRowIds: Seq[Long] = Nil): Long =
-    inSnapshotTxn { snap =>
-      deletes.foreach { case (dataFileId, f) =>
-        update("UPDATE ducklake_delete_file SET end_snapshot = ? WHERE data_file_id = ? AND end_snapshot IS NULL",
-          Seq(snap, dataFileId))
-        val id = nextFileId()
-        update("INSERT INTO ducklake_delete_file VALUES (?, ?, ?, ?, ?, ?, ?, NULL, ?, ?)",
-          Seq(id, dataFileId, tableId, f.path, true, f.recordCount, snap,
-            f.encryptionKey.orNull, f.fileSizeBytes))
-      }
-      endInlinedRowIds.foreach { rid =>
-        update("UPDATE ducklake_inlined_data SET end_snapshot = ? WHERE table_id = ? AND row_id = ? AND end_snapshot IS NULL",
-          Seq(snap, tableId, rid))
-      }
-      if (deletes.nonEmpty || endInlinedRowIds.nonEmpty)
-        recordChange("tables_deleted_from", tableId, tableId.toString)
-      snap
-    }
-
   /** One-snapshot commit of a row-level DELTA: new data files (appended
-    * rows) AND refreshed positional delete files together — the atomic
-    * unit under merge-on-read SQL UPDATE / MERGE (changed rows become
-    * visible exactly when the old versions disappear).
+    * rows), refreshed positional delete files (any previous delete file
+    * of the same data file ends) and ended inlined rows together — the
+    * atomic unit under merge-on-read DELETE / UPDATE / MERGE (changed
+    * rows become visible exactly when the old versions disappear).
     */
   def commitRowDelta(schemaName: String, tableName: String, cols: Seq[ColumnDef],
-      newFiles: Seq[FileToRegister], deletes: Seq[(Long, FileToRegister)]): Long =
+      newFiles: Seq[FileToRegister], deletes: Seq[(Long, FileToRegister)],
+      endInlinedRowIds: Seq[Long]): Long =
     inSnapshotTxn { snap =>
       if (newFiles.nonEmpty)
         registerWrite(snap, TableWriteSpec(schemaName, tableName, cols,
           WriteMode.Append, newFiles))
-      if (deletes.nonEmpty) {
+      if (deletes.nonEmpty || endInlinedRowIds.nonEmpty) {
         val schema = getOrCreateSchema(schemaName, snap)
         val table = getTableByName(schema.schemaId, tableName, snap)
           .getOrElse(throw new TableNotFoundException(s"$schemaName.$tableName"))
@@ -2517,6 +2495,10 @@ final class MetadataStore(backend: MetadataBackend,
           update("INSERT INTO ducklake_delete_file VALUES (?, ?, ?, ?, ?, ?, ?, NULL, ?, ?)",
             Seq(id, dataFileId, table.tableId, f.path, true, f.recordCount, snap,
               f.encryptionKey.orNull, f.fileSizeBytes))
+        }
+        endInlinedRowIds.foreach { rid =>
+          update("UPDATE ducklake_inlined_data SET end_snapshot = ? WHERE table_id = ? AND row_id = ? AND end_snapshot IS NULL",
+            Seq(snap, table.tableId, rid))
         }
         recordChange("tables_deleted_from", table.tableId, table.tableId.toString)
       }

@@ -23,24 +23,26 @@ import graft.lake.crypto.GraftCryptoFactory
 final case class StagedFiles(files: Seq[(String, Seq[Option[String]])])
   extends WriterCommitMessage
 
-/** One executor's delta output: staged insert files plus the names of
-  * the PARTIAL delete-positions parquets it streamed (empty = no deletes)
-  * and the ids of the data files it wrote positions for. Positions live
-  * in staging files, never in commit messages — the driver never
-  * materializes a delete set.
+/** One executor's delta output: staged insert files, the names of the
+  * PARTIAL delete-positions parquets it streamed (empty = no deletes),
+  * the ids of the data files it wrote positions for and the row ids of
+  * the inlined rows it deleted. Positions live in staging files, never
+  * in commit messages — the driver never materializes a delete set.
   */
 final case class DeltaStaged(files: Seq[(String, Seq[Option[String]])],
     deleteFiles: Seq[String], deleteFids: Set[Long],
-    rowIdFiles: Seq[(String, Seq[Option[String]])] = Nil) extends WriterCommitMessage
+    rowIdFiles: Seq[(String, Seq[Option[String]])], inlinedIds: Set[Long])
+  extends WriterCommitMessage
 
-/** Distributed DELTA write — the merge-on-read half of SQL UPDATE /
-  * MERGE (Spark's `SupportsDelta` row-level path): executors write
-  * inserted rows through Spark's parquet writer and stream deleted row
-  * addresses (`_file_id`, `_pos`) into partial parquets; the driver
-  * merges the positions into cumulative positional delete files and
-  * commits them with the new data files in ONE snapshot. Cost scales
-  * with changed rows, never with table size — the 100 TB property the
-  * copy-on-write rewrite lacks.
+/** Distributed DELTA write — the merge-on-read half of every predicate
+  * DELETE, UPDATE and MERGE (Spark's `SupportsDelta` row-level path):
+  * executors write inserted rows through Spark's parquet writer and
+  * stream deleted row addresses (`_file_id`, `_pos`) into partial
+  * parquets, or report an inlined row's id; the driver merges the
+  * positions into cumulative positional delete files and commits them,
+  * the new data files and the ended inlined rows in ONE snapshot (none
+  * if nothing changed). A DELETE's write schema is empty, so it has no
+  * partition keys. Cost scales with changed rows, never with table size.
   */
 final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
     rawSchema: StructType) extends DeltaWrite with DeltaBatchWrite {
@@ -55,8 +57,9 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
   private val rowSchema =
     StructType(rawSchema.fields.filterNot(f => DuckLake.VirtualNames.contains(f.name)))
   private val partFields = lake.partitionFieldsOf(fullName)
-  private val partKeys = partFields.map(pf =>
-    (rowSchema.fieldIndex(pf.source), pf.transform.orNull)).toArray
+  private val partKeys =
+    if (rowSchema.isEmpty) Array.empty[(Int, String)]
+    else partFields.map(pf => (rowSchema.fieldIndex(pf.source), pf.transform.orNull)).toArray
   // full rows land in the files — identity partition keys included
   // (reference behavior; the directory layout is naming only)
   private val dataSchema = rowSchema
@@ -89,12 +92,14 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
         .map { case (name, pvs) => (new Path(s"$staging/$name"), pvs) }
       val stagedRowId = deltas.flatMap(_.rowIdFiles)
         .map { case (name, pvs) => (new Path(s"$staging/$name"), pvs) }
+      val partials = deltas.flatMap(_.deleteFiles).map(n => new Path(s"$staging/$n"))
+      val inlined = deltas.flatMap(_.inlinedIds).toSet
       val cols = rowSchema.fields.zipWithIndex.map { case (f, i) =>
         ColumnDef(i.toLong, i.toLong, f.name, TypeBridge.fromSpark(f.dataType), f.nullable)
       }.toSeq
-      lake.commitDeltaStaged(schemaName, tableName, cols, staged, dataSchema,
-        keyOpt, deltas.flatMap(_.deleteFiles).map(n => new Path(s"$staging/$n")),
-        deltas.flatMap(_.deleteFids).toSet, stagedRowId)
+      if (staged.nonEmpty || stagedRowId.nonEmpty || partials.nonEmpty || inlined.nonEmpty)
+        lake.commitDeltaStaged(schemaName, tableName, cols, staged, dataSchema, keyOpt,
+          partials, deltas.flatMap(_.deleteFids).toSet, stagedRowId, inlined)
     } finally fs.delete(new Path(staging), true)
   }
 
@@ -106,10 +111,11 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
 }
 
 /** Executor-side delta writer: inserts and updates go to the data file
-  * writers (hive-partition splitting included); deletes STREAM into a
-  * partial `(_fid, pos)` parquet in the staging dir — constant task
-  * memory, no position list in the commit message. The row id layout is
-  * fixed by `SupportsDelta.rowId`: (_file_id, _pos, rowid).
+  * writers (hive-partition splitting included); file-row deletes STREAM
+  * into a partial `(_fid, pos)` parquet in the staging dir — constant
+  * task memory, no position list in the commit message; inlined-row
+  * deletes keep their row ids. The row id layout is fixed by
+  * `SupportsDelta.rowId`: (_file_id, _pos, rowid).
   */
 final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
     rowIdData: DuckLakeFileWriterFactory, deletes: DuckLakeFileWriterFactory,
@@ -123,6 +129,7 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
       private val delWriter = deletes.createWriter(partitionId, taskId)
       private val writers = Seq(insertWriter, rowIdWriter, delWriter)
       private val touched = mutable.Set.empty[Long]
+      private val inlined = mutable.Set.empty[Long]
 
       /** The data columns of `row` — rows may carry TRAILING metadata
         * columns (a SET referenced one) — followed by `extra`.
@@ -142,10 +149,12 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
 
       override def insert(row: InternalRow): Unit = insertWriter.write(dataRow(row))
 
-      override def delete(meta: InternalRow, id: InternalRow): Unit = {
-        touched += id.getLong(0)
-        delWriter.write(new GenericInternalRow(Array[Any](id.getLong(0), id.getLong(1))))
-      }
+      override def delete(meta: InternalRow, id: InternalRow): Unit =
+        if (id.getLong(0) == DuckLake.InlinedFileId) inlined += id.getLong(1)
+        else {
+          touched += id.getLong(0)
+          delWriter.write(new GenericInternalRow(Array[Any](id.getLong(0), id.getLong(1))))
+        }
 
       override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
         delete(meta, id)
@@ -158,7 +167,7 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
       override def commit(): WriterCommitMessage = {
         def staged(w: DataWriter[InternalRow]) = w.commit() match { case StagedFiles(fs) => fs }
         DeltaStaged(staged(insertWriter), staged(delWriter).map(_._1), touched.toSet,
-          staged(rowIdWriter))
+          staged(rowIdWriter), inlined.toSet)
       }
 
       override def abort(): Unit = writers.foreach(_.abort())

@@ -16,6 +16,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.lake.{DuckLake, DuckLakeParquetFormat, LakeFile}
 
@@ -35,9 +36,9 @@ final case class SnapshotOffset(snapshot: Long) extends Offset {
   * hides), the reader of its read group ([[graft.lake.DuckLakeParquetFormat]]
   * in row mode), the group's projection onto the scan's columns, bound
   * to the reader's rows, and the file's own values (data file id,
-  * row-id range start, birth snapshot) that the reader appends as
-  * partition values. Column mapping is the facade's: no column is
-  * resolved here.
+  * row-id range start, birth snapshot, filename, file index) that the
+  * reader appends as partition values. Column mapping is the facade's:
+  * no column is resolved here.
   */
 final case class DuckLakeFilePartition(file: LakeFile,
     read: PartitionedFile => Iterator[InternalRow],
@@ -55,6 +56,11 @@ final class DuckLakeKeyedPartition(val inner: DuckLakeFilePartition,
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals)
   def keyVector: Vector[Any] = keyVals.toVector
 }
+
+/** The inlined catalog rows of a row-level scan, already in the scan's
+  * columns ([[DuckLake.inlinedScanRows]]): one input partition.
+  */
+final case class DuckLakeInlinedPartition(rows: Array[InternalRow]) extends InputPartition
 
 /** Shared driver-side planning for the row-level, SPJ and streaming
   * readers. The facade's [[DuckLake.readGroups]] gives each read group's
@@ -74,7 +80,9 @@ private[connector] object DuckLakePartitionPlanner {
   private val FileValues = StructType(Seq(
     StructField("__ducklake_file_id", LongType, nullable = false),
     StructField("__ducklake_row_id_start", LongType),
-    StructField("__ducklake_begin_snapshot", LongType, nullable = false)))
+    StructField("__ducklake_begin_snapshot", LongType, nullable = false),
+    StructField("__ducklake_filename", StringType),
+    StructField("__ducklake_file_index", LongType, nullable = false)))
 
   /** Partitions of `files` (table `tr` at `snap`, pinned columns `cols`)
     * in catalog order, each with its file's catalog row.
@@ -102,6 +110,8 @@ private[connector] object DuckLakePartitionPlanner {
               case DuckLake.VirtualPos | DuckLake.VirtualRowNumber => col(Pos)
               case DuckLake.VirtualRowId => rowId
               case DuckLake.VirtualSnapshot => born
+              case DuckLake.VirtualFilename => col(FileValues(3).name)
+              case DuckLake.VirtualFileIndex => col(FileValues(4).name)
               case n => byName.getOrElse(n, lit(null).cast(f.dataType))
             }
           }
@@ -113,8 +123,11 @@ private[connector] object DuckLakePartitionPlanner {
               StructType(readSchema.filterNot(_.name == Pos)), FileValues, readSchema, Nil,
               Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), lake.hadoopConfWith(keys)))
           fs.map { case (f, file) =>
+            val filename = if (!asked(DuckLake.VirtualFilename)) null
+              else UTF8String.fromString(lake.dataFilePath(name, f))
             f -> DuckLakeFilePartition(file, read, projection, new GenericInternalRow(
-              Array[Any](f.dataFileId, f.rowIdStart.map(Long.box).orNull, f.beginSnapshot)))
+              Array[Any](f.dataFileId, f.rowIdStart.map(Long.box).orNull, f.beginSnapshot,
+                filename, order(f.dataFileId).toLong)))
           }
         }
       }.sortBy { case (f, _) => order(f.dataFileId) }
@@ -149,13 +162,14 @@ private[connector] object DuckLakePartitionPlanner {
   * semantics — Replace rewrites stream their files like inserts, exactly
   * as `getDataFilesAddedBetween` defines batch CDC). State is just the
   * last-committed snapshot id; at 100 TB the per-batch work is O(new
-  * files), planned from the catalog with no data listing.
+  * files), planned from the catalog with no data listing. Under
+  * `Trigger.AvailableNow` the head at the query's start ends the stream.
   */
 final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     required: StructType, maxFilesPerTrigger: Option[Int] = None,
     maxRowsPerTrigger: Option[Long] = None)
     extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit, ReadMaxFiles, ReadMaxRows}
 
   private val (schemaName, tableName) = fullName.split('.') match {
@@ -173,7 +187,14 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
 
   override def initialOffset(): Offset = SnapshotOffset(0L)
 
-  override def latestOffset(): Offset = SnapshotOffset(lake.store.currentSnapshot)
+  /** The head `Trigger.AvailableNow` pinned; None = follow the head. */
+  @volatile private var pinnedHead: Option[Long] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinnedHead = Some(lake.store.currentSnapshot)
+
+  private def head: Long = pinnedHead.getOrElse(lake.store.currentSnapshot)
+
+  override def latestOffset(): Offset = SnapshotOffset(head)
 
   // ---- admission control (`maxFilesPerTrigger` read option) ----
   // At 100 TB a stream bootstrapping from offset 0 must NOT plan the
@@ -189,12 +210,11 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     case _ => ReadLimit.allAvailable()
   }
 
-  override def reportLatestOffset(): Offset =
-    SnapshotOffset(lake.store.currentSnapshot)
+  override def reportLatestOffset(): Offset = SnapshotOffset(head)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val a = start.asInstanceOf[SnapshotOffset].snapshot
-    val cur = lake.store.currentSnapshot
+    val cur = head
     // `rowCap`: how many catalog rows the walk actually needs. For a
     // file-count budget, budget+1 rows decide the batch end — fetching
     // the WHOLE remaining backlog per advance makes a 100 TB backfill's
@@ -272,9 +292,10 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
   * per data file, each read like the facade reads it — through
   * [[graft.lake.DuckLakeParquetFormat]], which drops MOR-deleted rows
   * and gives positions from the parquet row index, with the facade's
-  * per-group projection. Used by the row-level-operation path (SQL
-  * UPDATE / MERGE / row-level DELETE), which requires a real `toBatch`
-  * and row addresses, and by storage-partitioned joins. Ordinary reads
+  * per-group projection — plus one partition of the table's inlined
+  * rows, if any. Used by the row-level-operation path (DELETE / UPDATE /
+  * MERGE), which requires a real `toBatch` and row addresses, and by
+  * storage-partitioned joins (never over inlined rows). Ordinary reads
   * never get here: [[SpliceLakeScans]] plans them as the facade's
   * parquet scans.
   */
@@ -306,7 +327,18 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
   private lazy val spjFields: Seq[graft.lake.PartField] =
     lake.partitionFieldsOf(fullName, Some(snapshot))
 
-  private def spjEligible: Boolean = spjFields.nonEmpty &&
+  private lazy val (tr, cols) = {
+    val sch = lake.store.getSchemaByName(schemaName, snapshot)
+      .getOrElse(throw new graft.lake.SchemaNotFoundException(schemaName))
+    val t = lake.store.getTableByName(sch.schemaId, tableName, snapshot)
+      .getOrElse(throw new graft.lake.TableNotFoundException(fullName))
+    (t, lake.store.getTableColumns(t.tableId, snapshot))
+  }
+
+  private lazy val inlined: Array[InternalRow] =
+    lake.inlinedScanRows(tr, cols, snapshot, schema)
+
+  private def spjEligible: Boolean = spjFields.nonEmpty && inlined.isEmpty &&
     spjFields.forall(f => (f.transform.isEmpty ||
       f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) &&
       schema.fieldNames.contains(f.source))
@@ -315,11 +347,6 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     * `outputPartitioning` (the latter needs the distinct-key count).
     */
   private lazy val planned: Array[InputPartition] = {
-    val sch = lake.store.getSchemaByName(schemaName, snapshot)
-      .getOrElse(throw new graft.lake.SchemaNotFoundException(schemaName))
-    val tr = lake.store.getTableByName(sch.schemaId, tableName, snapshot)
-      .getOrElse(throw new graft.lake.TableNotFoundException(fullName))
-    val cols = lake.store.getTableColumns(tr.tableId, snapshot)
     // conservative min/max + partition-value file skipping from catalog
     // stats: pushed filters stay residual (re-applied above the scan),
     // but non-matching files never produce input partitions
@@ -327,7 +354,9 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
       lake.store.getDataFiles(tr.tableId, snapshot), pushedFilters)
     val parts = DuckLakePartitionPlanner.plan(lake, fullName, tr, cols, snapshot, files,
       schema, Some(snapshot))
-    if (!spj || !spjEligible) parts.map(_._2: InputPartition).toArray
+    if (!spj || !spjEligible)
+      (parts.map(_._2: InputPartition) ++
+        Option.when(inlined.nonEmpty)(DuckLakeInlinedPartition(inlined))).toArray
     else {
       // key values in catalog partition-column order, typed as Catalyst
       // values — HasPartitionKey rows with equal keys must compare equal.
@@ -379,18 +408,17 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
 /** Executor-side reader: each file through the reader its partition
   * carries, with the partition's bound projection compiled once per task
   * (`UnsafeProjection`; the files of a read group share its generated
-  * code). Deleted rows never reach it: the reader drops them.
+  * code), and the inlined partition's rows as they are. Deleted rows
+  * never reach it: the reader drops them.
   */
 object DuckLakeFileReaderFactory extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition match {
-      case k: DuckLakeKeyedPartition => k.inner
-      case f: DuckLakeFilePartition  => f
+    val (rows, project) = partition match {
+      case DuckLakeInlinedPartition(inlined) => (inlined.iterator, identity[InternalRow] _)
+      case k: DuckLakeKeyedPartition => fileRows(k.inner)
+      case f: DuckLakeFilePartition  => fileRows(f)
     }
-    val project = UnsafeProjection.create(p.projection)
-    val rows = p.read(PartitionedFile(p.values, SparkPath.fromPath(new Path(p.file.path)),
-      0L, p.file.size, Array.empty[String], 0L, p.file.size, p.file.metadata))
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
 
@@ -407,4 +435,10 @@ object DuckLakeFileReaderFactory extends PartitionReaderFactory {
       }
     }
   }
+
+  private def fileRows(p: DuckLakeFilePartition)
+      : (Iterator[InternalRow], InternalRow => InternalRow) =
+    (p.read(PartitionedFile(p.values, SparkPath.fromPath(new Path(p.file.path)),
+      0L, p.file.size, Array.empty[String], 0L, p.file.size, p.file.metadata)),
+      UnsafeProjection.create(p.projection))
 }

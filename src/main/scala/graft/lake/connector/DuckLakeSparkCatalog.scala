@@ -185,35 +185,11 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     loadAt(ident, snap)
   }
 
-  private def loadAt(ident: Identifier, snap: Long): Table = {
-    // the schema comes from the pinned catalog columns (catalog
-    // nullability, so DESCRIBE shows NOT NULL and the analyzer knows the
-    // constraint); the scan's frame is built once, at optimization
-    val tableSchema = try lake.tableSchema(fullName(ident), Some(snap))
+  private def loadAt(ident: Identifier, snap: Long): Table =
+    try DuckLakeV2Table.at(lake, fullName(ident), snap)
     catch {
-      case _: graft.lake.DuckLakeException =>
-        throw new NoSuchTableException(ident)
+      case _: graft.lake.DuckLakeException => throw new NoSuchTableException(ident)
     }
-    // expose catalog column defaults as the analyzer's metadata keys so
-    // INSERTs with a column subset (or DEFAULT keyword) resolve them
-    val defaults = lake.columnDefaultsOf(fullName(ident), Some(snap))
-    val comments = try lake.columnComments(fullName(ident))
-      catch { case _: graft.lake.DuckLakeException => Map.empty[String, String] }
-    val schema = StructType(tableSchema.fields.map { f1 =>
-      val f = comments.get(f1.name).fold(f1) { c =>
-        f1.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f1.metadata).putString("comment", c).build())
-      }
-      defaults.get(f.name).fold(f) { sql =>
-        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putString("CURRENT_DEFAULT", sql)
-          .putString("EXISTS_DEFAULT", sql)
-          .build())
-      }
-    })
-    new DuckLakeV2Table(lake, fullName(ident), snap, schema)
-  }
 
   /** Map v2 partition Transforms to DuckLake partition SPECS: identity,
     * years/months/days (SQL `PARTITIONED BY (months(ts))`), bucket(n),
@@ -496,6 +472,36 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     lake.store.dropView(schemaIdOf(ident), ident.name())
 }
 
+object DuckLakeV2Table {
+  /** Table `fullName` at snapshot `snap`, for the catalog and the
+    * facade's row-level verbs. The schema comes from the pinned catalog
+    * columns (catalog nullability, so DESCRIBE shows NOT NULL and the
+    * analyzer knows the constraint), with column comments, and column
+    * defaults as the analyzer's metadata keys so INSERTs with a column
+    * subset (or DEFAULT keyword) resolve them.
+    */
+  def at(lake: DuckLake, fullName: String, snap: Long): DuckLakeV2Table = {
+    val tableSchema = lake.tableSchema(fullName, Some(snap))
+    val defaults = lake.columnDefaultsOf(fullName, Some(snap))
+    val comments = try lake.columnComments(fullName)
+      catch { case _: graft.lake.DuckLakeException => Map.empty[String, String] }
+    val schema = StructType(tableSchema.fields.map { f1 =>
+      val f = comments.get(f1.name).fold(f1) { c =>
+        f1.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f1.metadata).putString("comment", c).build())
+      }
+      defaults.get(f.name).fold(f) { sql =>
+        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata)
+          .putString("CURRENT_DEFAULT", sql)
+          .putString("EXISTS_DEFAULT", sql)
+          .build())
+      }
+    })
+    new DuckLakeV2Table(lake, fullName, snap, schema)
+  }
+}
+
 object DuckLakeSparkCatalog {
   /** One embedded-Derby lake handle per (metaDb, dataPath) per JVM. */
   private val lakes = TrieMap[(String, String), DuckLake]()
@@ -520,41 +526,11 @@ object DuckLakeSparkCatalog {
     lakes.remove((lake.metaDbPath, lake.dataPath), lake)
 }
 
-/** DSv1 `Filter` → `Column` translation for the SQL DELETE path (the
-  * same filter algebra the scan pushdown uses; None = untranslatable,
-  * reported via `canDeleteWhere`).
-  */
-private[connector] object FilterToColumn {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.lit
-  import org.apache.spark.sql.sources._
-
-  def convert(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v)            => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v)           => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case In(a, vs)                => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v)     => Some(col(a).endsWith(v))
-    case StringContains(a, v)     => Some(col(a).contains(v))
-    case AlwaysTrue()             => Some(lit(true))
-    case AlwaysFalse()            => Some(lit(false))
-    case And(l, r) => for { lc <- convert(l); rc <- convert(r) } yield lc && rc
-    case Or(l, r)  => for { lc <- convert(l); rc <- convert(r) } yield lc || rc
-    case Not(c)    => convert(c).map(!_)
-    case _         => None
-  }
-}
-
 /** DSv2 table: snapshot-pinned reads + V1 write fallback (the write path
   * commits through the transactional metadata store, reference A12-A15).
-  * `SupportsDelete` maps SQL `DELETE FROM … WHERE …` onto the lake's
-  * merge-on-read positional delete files.
+  * Every predicate DELETE, UPDATE and MERGE — SQL or the facade's — runs
+  * the row-level delta plan (merge-on-read positional delete files);
+  * `SupportsDelete` takes only the unconditional `DELETE FROM t`.
   */
 final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
     tableSchema: StructType) extends Table with SupportsRead with SupportsWrite
@@ -602,38 +578,28 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
       org.apache.spark.sql.types.LongType, nullable = true,
       "index of the row's source within the scan (inlined storage = 0)"))
 
+  /** Only `DELETE FROM t` (no filters, or the translated always-true):
+    * a metadata-only TRUNCATE; every other DELETE is row-level.
+    */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(FilterToColumn.convert(_).isDefined)
+    filters.forall(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
 
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    // `DELETE FROM t` (no filters, or the translated always-true) is a
-    // metadata-only TRUNCATE — no scan, no delete parquet
-    val effective = filters.filterNot(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
-    effective.flatMap(FilterToColumn.convert(_)).reduceOption(_ && _) match {
-      case Some(cond) => lake.deleteWhere(fullName, cond)
-      case None       => lake.truncateTable(fullName)
-    }
-  }
+  override def deleteWhere(filters: Array[Filter]): Unit = lake.truncateTable(fullName)
 
-  /** SQL `UPDATE` / `MERGE INTO` via Spark's DELTA row-level operation
+  /** `DELETE … WHERE`, `UPDATE` and `MERGE INTO` (SQL, and the facade's
+    * `deleteWhere` / `update`) via Spark's DELTA row-level operation
     * rewrite (`SupportsDelta`): the operation's scan adds the row-address
-    * metadata columns (`_file_id`, `_pos`), Spark hands the writer
+    * metadata columns (`_file_id`, `_pos`) and reads the table's inlined
+    * rows as one more input partition (`_file_id` =
+    * [[DuckLake.InlinedFileId]], `_pos` = row id), Spark hands the writer
     * per-row insert/delete instructions, and the commit registers new
-    * data files plus refreshed positional delete files in one snapshot —
-    * merge-on-read, cost O(changed rows). A group-based copy-on-write
-    * would rewrite the whole table per UPDATE; at 100 TB that is the
-    * difference between touching a few files and rewriting the lake.
+    * data files, refreshed positional delete files and ended inlined rows
+    * in one snapshot — merge-on-read, cost O(changed rows). A group-based
+    * copy-on-write would rewrite the whole table per UPDATE.
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    // the rewrite's batch scan reads data FILES; move any inlined catalog
-    // rows into a file first so they participate in the delta, and pin
-    // the scan AFTER the flush. LAZY: the flush must only happen if the
-    // row-level plan survives — Spark's metadata-only-delete optimization
-    // may replace it with SupportsDelete.deleteWhere, which handles
-    // inlined rows natively and must not find them flushed to a file
-    lazy val scanSnap = math.max(snapshot, lake.flushInlined(fullName))
+      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
     () => new org.apache.spark.sql.connector.write.RowLevelOperation
         with org.apache.spark.sql.connector.write.SupportsDelta {
       override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command =
@@ -673,7 +639,7 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
           }
           override def pushedFilters(): Array[Filter] = filters
           override def build(): Scan =
-            new DuckLakeBatchScan(lake, fullName, scanSnap, required, filters.toSeq)
+            new DuckLakeBatchScan(lake, fullName, snapshot, required, filters.toSeq)
         }
 
       override def newWriteBuilder(writeInfo: LogicalWriteInfo)
@@ -683,7 +649,6 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
             new DuckLakeDeltaWrite(lake, fullName, writeInfo.schema())
         }
     }
-  }
 
   override def name(): String = fullName
   override def schema(): StructType = tableSchema
@@ -778,7 +743,8 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
           // data file, without parquet filter pushdown or split
           // coalescing, vs the spliced parquet scan) is the right one
           // exactly when the user asks for it: exchange cost dominates
-          // scan cost for the big-big joins SPJ targets.
+          // scan cost for the big-big joins SPJ targets. Inlined rows
+          // carry no partition key, so a snapshot with any reads spliced.
           val spjOk = lake.spark.conf
             .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean && {
               val pfs = lake.partitionFieldsOf(fullName, Some(snapshot))
@@ -786,7 +752,8 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
                 pfs.forall(f => (f.transform.isEmpty ||
                   f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) &&
                   required.fieldNames.contains(f.source)) &&
-                !required.fieldNames.exists(DuckLake.VirtualNames.contains)
+                !required.fieldNames.exists(DuckLake.VirtualNames.contains) &&
+                !lake.hasInlinedRows(fullName, snapshot)
             }
           if (spjOk)
             new DuckLakeBatchScan(lake, fullName, snapshot, required,

@@ -14,23 +14,19 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Column names referenced by an UNRESOLVED Column (predicates built
-    * from `col(...)` trees). Spark 4's lazy ColumnNodeExpression hides
-    * the tree from Catalyst's `collect`, so walk the ColumnNode graph.
+  /** `c` converted now by `spark`'s converter — a plan built by hand
+    * (see [[execute]]) gets no lazy column-node wrapper for the analyzer.
     */
-  def references(c: Column): Seq[String] = {
-    import org.apache.spark.sql.internal._
-    def walk(n: ColumnNode): Seq[String] = n match {
-      case a: UnresolvedAttribute => Seq(a.nameParts.last)
-      case f: UnresolvedFunction  => f.arguments.flatMap(walk)
-      case c: Cast                => walk(c.child)
-      case w: CaseWhenOtherwise =>
-        w.branches.flatMap { case (a, b) => walk(a) ++ walk(b) } ++
-          w.otherwise.toSeq.flatMap(walk)
-      case _ => Nil
-    }
-    walk(c.node).distinct
-  }
+  def expression(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+
+  /** Analyze and run a command plan, as `spark.sql` runs a parsed one
+    * (the facade's DELETE / UPDATE over a lake table's relation).
+    */
+  def execute(spark: org.apache.spark.sql.SparkSession,
+      command: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], command)
 
   /** Re-lift an InternalRow RDD as a DataFrame with a FRESH logical
     * plan (no lineage, default stats, no constraints). The unboxed twin

@@ -1,0 +1,192 @@
+package graft.lake
+
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+/** One DELETE engine: every predicate DELETE and UPDATE, from SQL or from
+  * the facade, runs Spark's row-level delta plan — one snapshot per
+  * operation (none when nothing changes), stable row ids kept, inlined
+  * rows read and ended inside the same plan — and the connector's Batch
+  * serves partitioned tables, the `filename` / `file_index` virtuals and
+  * storage-partitioned joins the facade's rows. Plus `Trigger.AvailableNow`
+  * on the lake's stream.
+  */
+class RowLevelEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val root = Files.createTempDirectory("dlrl-engine").toString
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.extensions", "graft.lake.connector.GraftSparkExtensions")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.catalog.dlrl",
+      classOf[graft.lake.connector.DuckLakeSparkCatalog].getName)
+    .config("spark.sql.catalog.dlrl.metaDb", s"$root/meta")
+    .config("spark.sql.catalog.dlrl.dataPath", s"$root/data")
+    .getOrCreate()
+
+  private lazy val lake = new DuckLake(spark, s"$root/meta", s"$root/data")
+
+  override def afterAll(): Unit = { lake.close(); spark.stop() }
+
+  private def keys(table: String): Seq[Long] =
+    lake.table(s"main.$table").select("k").collect().map(_.getLong(0)).toSeq.sorted
+
+  /** Each row's `k` → its stable row id. */
+  private def rowIds(table: String): Map[Long, Long] =
+    lake.table(s"main.$table", virtualCols = Seq(DuckLake.VirtualRowId))
+      .select(col("k"), col(DuckLake.VirtualRowId)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def inlinedCount(table: String): Int = {
+    val snap = lake.currentSnapshot
+    val sch = lake.store.getSchemaByName("main", snap).get
+    lake.store.getInlinedRows(
+      lake.store.getTableByName(sch.schemaId, table, snap).get.tableId, snap).size
+  }
+
+  /** `main.<table>` with `n` file rows `(k, m = k % 3, v = k)`; with
+    * `inlined`, further rows appended as inlined catalog rows.
+    */
+  private def mkTable(table: String, n: Int, inlined: Seq[Long] = Nil): Unit = {
+    import spark.implicits._
+    def rows(ks: Seq[Long]): DataFrame = ks.map(k => (k, (k % 3).toInt, k * 1.0)).toDF("k", "m", "v")
+    lake.createTableAs(rows((1 to n).map(_.toLong)).coalesce(1), s"main.$table")
+    if (inlined.nonEmpty) {
+      lake.setOption("data_inlining_row_limit", "10", table = Some(table))
+      lake.insertInto(rows(inlined), s"main.$table")
+      assert(inlinedCount(table) == inlined.size)
+    }
+  }
+
+  test("the facade's update commits one snapshot and keeps every row id") {
+    mkTable("upd1", 30)
+    val s0 = lake.currentSnapshot
+    val ids = rowIds("upd1")
+    val s1 = lake.update("main.upd1", col("m") === 0, Map("v" -> (col("v") + 1000)))
+    assert(s1 == lake.currentSnapshot)
+    assert(s1 == s0 + 1, "one snapshot")
+    // no snapshot in between shows the updated rows missing
+    (s0 to s1).foreach(s => assert(lake.table("main.upd1", Some(s)).count() == 30))
+    assert(lake.table("main.upd1").filter(col("v") > 1000).count() == 10)
+    assert(rowIds("upd1") == ids)
+  }
+
+  test("a facade deleteWhere over file and inlined rows commits one snapshot") {
+    mkTable("del_inl", 100, inlined = Seq(101L, 102L, 103L))
+    val s0 = lake.currentSnapshot
+    assert(lake.deleteWhere("main.del_inl", col("k") === 101L || col("k") === 50L) == s0 + 1)
+    assert(lake.currentSnapshot == s0 + 1)
+    val want = (1L to 100L).filter(_ != 50L) ++ Seq(102L, 103L)
+    assert(keys("del_inl") == want)
+    assert(inlinedCount("del_inl") == 2)
+    // time travel still sees both deleted rows
+    assert(lake.table("main.del_inl", Some(s0)).count() == 103)
+    // the untouched inlined rows are still inlined: a flush finds them
+    lake.flushInlined("main.del_inl")
+    assert(inlinedCount("del_inl") == 0)
+    assert(keys("del_inl") == want)
+  }
+
+  test("SQL UPDATE and DELETE on a table with inlined rows each commit one snapshot") {
+    mkTable("sql_inl", 20, inlined = Seq(21L, 22L))
+    val ids = rowIds("sql_inl")
+    val s0 = lake.currentSnapshot
+    spark.sql("UPDATE dlrl.main.sql_inl SET v = v + 100 WHERE k IN (3, 21)")
+    assert(lake.currentSnapshot == s0 + 1)
+    val v = lake.table("main.sql_inl").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(v(3L) == 103.0 && v(21L) == 121.0 && v(22L) == 22.0)
+    // the updated inlined row keeps its row id; the other stays inlined
+    assert(rowIds("sql_inl") == ids)
+    assert(inlinedCount("sql_inl") == 1)
+    spark.sql("DELETE FROM dlrl.main.sql_inl WHERE k % 7 = 1")
+    assert(lake.currentSnapshot == s0 + 2)
+    assert(keys("sql_inl") == (1L to 21L).filterNot(Set(1L, 8L, 15L)))
+    assert(inlinedCount("sql_inl") == 0)
+  }
+
+  test("a row-level DELETE on a partitioned table (empty write schema)") {
+    import spark.implicits._
+    lake.createTableAs((1 to 40).map(i => (i.toLong, i % 4)).toDF("k", "p").repartition(2),
+      "main.part_del", partitionBy = Seq("p"))
+    spark.sql("DELETE FROM dlrl.main.part_del WHERE k % 5 = 0")
+    assert(keys("part_del") == (1L to 40L).filterNot(_ % 5 == 0))
+    lake.deleteWhere("main.part_del", col("k") % 3 === 0 && col("p") === 1)
+    assert(keys("part_del") == (1L to 40L).filterNot(k => k % 5 == 0 || (k % 3 == 0 && k % 4 == 1)))
+  }
+
+  test("the row-level scan reads the facade's filename and file_index") {
+    import spark.implicits._
+    lake.createTableAs((1 to 10).map(i => (i.toLong, "")).toDF("k", "f").coalesce(1),
+      "main.vdel")
+    val filename = lake.table("main.vdel", virtualCols = Seq(DuckLake.VirtualFilename))
+      .select(DuckLake.VirtualFilename).distinct().collect().map(_.getString(0)).toSeq
+    assert(filename.size == 1)
+    spark.sql("DELETE FROM dlrl.main.vdel WHERE length(filename) > 0 AND k % 2 = 0")
+    assert(keys("vdel") == Seq(1L, 3L, 5L, 7L, 9L))
+    spark.sql("DELETE FROM dlrl.main.vdel WHERE file_index = 0 AND k = 1")
+    assert(keys("vdel") == Seq(3L, 5L, 7L, 9L))
+    spark.sql("UPDATE dlrl.main.vdel SET f = filename WHERE k = 3")
+    assert(lake.table("main.vdel").filter(col("k") === 3L).head.getString(1) == filename.head)
+  }
+
+  test("a storage-partitioned join reads the inlined rows of its tables") {
+    import spark.implicits._
+    lake.createTableAs((1 to 200).map(i => (i.toLong, i % 4)).toDF("k", "p").repartition(2),
+      "main.spj_a", partitionBy = Seq("p"))
+    lake.createTableAs((0 until 4).map(p => (p, p * 10.0)).toDF("p", "w").repartition(2),
+      "main.spj_b", partitionBy = Seq("p"))
+    lake.setOption("data_inlining_row_limit", "10", table = Some("spj_a"))
+    lake.insertInto(Seq((201L, 2)).toDF("k", "p"), "main.spj_a")
+    assert(inlinedCount("spj_a") == 1)
+    val sql = "SELECT count(*), count_if(a.k = 201) " +
+      "FROM dlrl.main.spj_a a JOIN dlrl.main.spj_b b ON a.p = b.p"
+    val expected = spark.sql(sql).head()
+    assert(expected.getLong(0) == 201L && expected.getLong(1) == 1L)
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    try assert(spark.sql(sql).head() == expected)
+    finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+  }
+
+  test("a row-level operation that changes nothing commits no snapshot") {
+    mkTable("noop", 30, inlined = Seq(31L))
+    val s0 = lake.currentSnapshot
+    spark.sql("DELETE FROM dlrl.main.noop WHERE k % 1000 = 999")
+    spark.sql("UPDATE dlrl.main.noop SET v = 0 WHERE k < 0")
+    assert(lake.deleteWhere("main.noop", col("k") === -1L) == s0)
+    assert(lake.update("main.noop", col("k") === -1L, Map("v" -> lit(0))) == s0)
+    assert(lake.currentSnapshot == s0)
+    assert(keys("noop") == (1L to 31L))
+  }
+
+  test("readStream under Trigger.AvailableNow paces the backlog and stops at its start") {
+    import spark.implicits._
+    def rows(from: Int) = (from until from + 10).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
+      .coalesce(1)
+    lake.createTableAs(rows(100), "main.avail")
+    lake.insertInto(rows(200), "main.avail")
+    lake.insertInto(rows(300), "main.avail")
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = spark.readStream.option("maxFilesPerTrigger", "1").table("dlrl.main.avail")
+      .writeStream
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val n = b.count(); if (n > 0) sizes.add(n)
+        // committed after the query started: not part of its backlog
+        if (id == 0) lake.insertInto(rows(400), "main.avail")
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(sizes.asScala.toSeq == Seq(10L, 10L, 10L))
+    assert(lake.table("main.avail").count() == 40)
+  }
+}
