@@ -312,7 +312,12 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * + sorted on the z-value — every data file then covers a compact
     * RECTANGLE in (a,b) space, so stats pruning works on filters over
     * EITHER column (single-column clustering only helps its own column).
-    * One extra aggregation job computes the normalization bounds.
+    * One extra aggregation job computes the normalization bounds. With
+    * `numFiles`, one more computes the `numFiles - 1` cut points from the
+    * rows (quantiles whose rank error is at most 1/10000 of a file's
+    * rows), and file k is written by write partition k, so the file
+    * boundaries do not depend on the input's row order, as
+    * `repartitionByRange`'s sampled bounds do.
     */
   def createTableZOrdered(df: DataFrame, name: String, zColA: String, zColB: String,
       numFiles: Int = 0): Long = {
@@ -328,10 +333,21 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val z = graft.functions.VectorExpressions.zorder16(
       norm(zColA, minA, maxA), norm(zColB, minB, maxB))
     val zed = df.withColumn("__z", z)
-    val ranged =
-      if (numFiles > 0) zed.repartitionByRange(numFiles, col("__z"))
+    val clustered =
+      if (numFiles > 1) {
+        // null for no rows; rows with a null z-value go to file 0
+        val cuts = Option(zed.agg(percentile_approx(col("__z"),
+            lit((1 until numFiles).map(_.toDouble / numFiles).toArray),
+            lit(numFiles * 10000))).head().getSeq[Long](0)).getOrElse(Nil)
+        val keyed = zed.withColumn("__file",
+          cuts.foldLeft(lit(0))((n, c) => n + when(col("__z") > c, 1).otherwise(0)))
+        val at = keyed.schema.fieldIndex("__file")
+        spark.createDataFrame(keyed.rdd.keyBy(_.getInt(at))
+          .partitionBy(new DuckLake.IndexPartitioner(numFiles)).values, keyed.schema)
+          .drop("__file")
+      } else if (numFiles == 1) zed.repartition(1)
       else zed.repartitionByRange(col("__z"))
-    write(ranged.sortWithinPartitions("__z").drop("__z"), name, WriteMode.Replace)
+    write(clustered.sortWithinPartitions("__z").drop("__z"), name, WriteMode.Replace)
   }
 
   /** Effective data-inlining row limit for a table: the scoped
@@ -1089,7 +1105,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   // Read path (reference: A4 table scan planner, src/table.rs:369-653)
   // ------------------------------------------------------------------
 
-  private def resolveTable(name: String, snap: Long): TableRec = {
+  private[lake] def resolveTable(name: String, snap: Long): TableRec = {
     val (schemaName, tableName) = parse(name)
     val schema = store.getSchemaByName(schemaName, snap)
       .getOrElse(throw new SchemaNotFoundException(schemaName))
@@ -1232,7 +1248,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * catalog's files, read by [[DuckLakeParquetFormat]]. `liveAt =
     * Some(snap)` reads the rows live at `snap` — MOR deletes and the
     * merged-file visible-row limit are applied inside the scan; None
-    * reads every physical row (CDC, delete matching).
+    * reads every physical row (CDC, delete matching). With `skipping`,
+    * the index skips files by the data filters Spark's planner hands it.
     */
   private def readGroup(name: String, fsGroup: Seq[DataFileRec],
       epoch: Seq[(ColumnDef, Option[ColumnDef])],
@@ -1240,10 +1257,15 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       withRowIdCol: Boolean = false,
       history: Seq[(ColumnDef, Long, Option[Long])] = Nil,
       nestedDefaults: Map[Long, Map[String, String]] = Map.empty,
-      liveAt: Option[Long] = None): DataFrame = {
+      liveAt: Option[Long] = None, skipping: Option[FileSkipping] = None): DataFrame = {
     val (physSchema, projection) =
       groupMapping(epoch, partVals, withRowIdCol, history, nestedDefaults)
-    val index = LakeFileIndex(fsGroup.map(lakeFile(name, _, liveAt)))
+    val recs = fsGroup.map(f => lakeFile(name, f, liveAt) -> f)
+    val names = epoch.collect {
+      case (cur, Some(phys)) if !partVals.contains(cur.columnId) => phys.name -> cur.name
+    }.toMap
+    val index = LakeFileIndex(recs.map(_._1))(
+      skipping.fold(LakeFileIndex.KeepAll)(_.skipper(recs.toMap, names)))
     val base = spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, new StructType(),
         physSchema, None, new DuckLakeParquetFormat(index.files.exists(_.hidesRows)),
@@ -1377,9 +1399,9 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   private def readFile(name: String, ctx: ScanCtx, f: DataFileRec,
       withPos: Boolean, withRowIdCol: Boolean = false,
-      liveAt: Option[Long] = None): DataFrame =
+      liveAt: Option[Long] = None, skipping: Option[FileSkipping] = None): DataFrame =
     readGroup(name, Seq(f), physOf(ctx, f), injectedValues(ctx, f), withPos,
-      withRowIdCol, ctx.history, ctx.nestedDefaults, liveAt)
+      withRowIdCol, ctx.history, ctx.nestedDefaults, liveAt, skipping)
 
   /** Inlined catalog rows visible at `snap`, parsed with the column names
     * of each row's write epoch and projected (by column_id) to the pinned
@@ -1481,8 +1503,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       s.add(v, DuckLake.virtualType(v), nullable = true)
     }
     val ctx = scanCtx(tr, cols, snap)
-    val files = pruneByStats(tr, ctx, sparkSchemaOf(cols),
-      store.getDataFiles(tr.tableId, snap), pushedFilters)
+    val skipping = new FileSkipping(tr, ctx)
+    val files = skipping.keep(store.getDataFiles(tr.tableId, snap), pushedFilters)
     scanned = files
     // rows born inside the OPEN transaction present provisional
     // transaction-local row ids (1e18-based) and a null snapshot until
@@ -1508,7 +1530,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       val scans = files.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f)))
         .map { case ((phys, pv), fs) =>
           readGroup(name, fs, phys, pv, withPos = false, history = ctx.history,
-            nestedDefaults = ctx.nestedDefaults, liveAt = Some(snap))
+            nestedDefaults = ctx.nestedDefaults, liveAt = Some(snap),
+            skipping = Some(skipping))
         }.toSeq
       (scans ++ inlined).reduce(_ unionByName _)
     } else {
@@ -1522,7 +1545,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         val explicitIds = vset(DuckLake.VirtualRowId) &&
           f.rowIdStart.isEmpty && f.segments.isEmpty
         val base = readFile(name, ctx, f, withPos = needPos,
-          withRowIdCol = explicitIds, liveAt = Some(snap))
+          withRowIdCol = explicitIds, liveAt = Some(snap), skipping = Some(skipping))
         val txnLocal = txnSnap.contains(f.beginSnapshot)
         val withNum = Seq(DuckLake.VirtualRowNumber, DuckLake.VirtualPos)
           .filter(vset).foldLeft(base)((d, v) => d.withColumn(v, col("__ducklake_pos")))
@@ -1576,23 +1599,46 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   @volatile private var scanned: Seq[DataFileRec] = Nil
   def lastScanFileCount: Int = scanned.size
 
-  /** Min/max file skipping against pushed-down filters (SURVEY.md §4.1
-    * "natural cheap extension"; conservative — any uncertainty keeps the
-    * file). Files with delete files are never skipped on IsNull-style
-    * reasoning alone since stats describe pre-delete contents; the
-    * row-level filters are re-applied by Spark after the scan regardless
-    * (Inexact pushdown, reference src/table.rs:584-598).
+  /** Min/max file skipping of one read against source filters on its
+    * catalog columns (SURVEY.md §4.1 "natural cheap extension";
+    * conservative — any uncertainty keeps the file). Files with delete
+    * files are never skipped on IsNull-style reasoning alone since stats
+    * describe pre-delete contents; the row-level filters are re-applied
+    * by Spark after the scan regardless (Inexact pushdown, reference
+    * src/table.rs:584-598). The table's file stats load once, on the
+    * first filtered call, for every group of the read.
     */
-  private def pruneByStats(tr: TableRec, ctx: ScanCtx, schema: StructType,
-      files: Seq[DataFileRec],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] = {
-    if (filters.isEmpty || files.isEmpty) return files
-    val allStats = store.getFileStats(tr.tableId)
+  private final class FileSkipping(tr: TableRec, ctx: ScanCtx) {
+    private val schema = sparkSchemaOf(ctx.cols)
+    private lazy val allStats = store.getFileStats(tr.tableId)
     // name → column_id from the PINNED snapshot's defs (ctx.cols), not
     // currentSnapshot: renames between the pinned snapshot and now must
     // not attach another column's stats to a time-travel filter
-    val idByName = ctx.cols.map(c => c.name -> c.columnId).toMap
-    files.filter { f =>
+    private val idByName = ctx.cols.map(c => c.name -> c.columnId).toMap
+
+    def keep(files: Seq[DataFileRec],
+        filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
+      if (filters.isEmpty) files else files.filter(mightMatch(_, filters))
+
+    /** The [[LakeFileIndex]] skip of one read group: Spark's data filters
+      * over the group's physical columns, mapped back to catalog columns
+      * through `names` (physical → catalog name; a filter on any other
+      * column, or one Spark cannot translate, skips nothing).
+      */
+    def skipper(recs: Map[LakeFile, DataFileRec], names: Map[String, String])
+        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] => LakeFile => Boolean = {
+      dataFilters =>
+        import org.apache.spark.sql.catalyst.expressions.{AttributeReference, KnownNotNull}
+        val filters = dataFilters.filter(_.references.forall(a => names.contains(a.name)))
+          .flatMap(e => ColumnBridge.sourceFilter(e.transformUp {
+            case KnownNotNull(c) => c // the catalog's NOT NULL tag on a read column
+            case a: AttributeReference => a.withName(names(a.name))
+          }))
+        if (filters.isEmpty) _ => true else lf => mightMatch(recs(lf), filters)
+    }
+
+    private def mightMatch(f: DataFileRec,
+        filters: Seq[org.apache.spark.sql.sources.Filter]): Boolean = {
       val byCol: Map[String, (Option[Long], Option[String], Option[String])] =
         idByName.flatMap { case (n, cid) => allStats.get((f.dataFileId, cid)).map(n -> _) }
       // partition values enter as synthetic min=max stats rows: a value
@@ -1732,7 +1778,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       files: Seq[DataFileRec],
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
     if (filters.isEmpty) files
-    else pruneByStats(tr, scanCtx(tr, cols, snap), sparkSchemaOf(cols), files, filters)
+    else new FileSkipping(tr, scanCtx(tr, cols, snap)).keep(files, filters)
 
   /** Commit a row-level DELTA staged by the native delta writers
     * (DELETE / UPDATE / MERGE, merge-on-read): appended-row files plus the
@@ -3497,6 +3543,14 @@ final class LakeTransaction private[lake] (lake: DuckLake) {
 }
 
 object DuckLake {
+  /** Key k (an int in `0 until n`) goes to partition k — unlike a hash
+    * exchange, which may put two keys in one partition.
+    */
+  private final class IndexPartitioner(n: Int) extends org.apache.spark.Partitioner {
+    override def numPartitions: Int = n
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
   /** Serializes [[DuckLake.withWriterSessionConf]] save/set/restore
     * across every lake in the JVM (the pinned confs are session-global).
     */

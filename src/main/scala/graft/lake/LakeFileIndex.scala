@@ -38,23 +38,31 @@ object LakeFile {
   * file on an object store). Each file's status carries its
   * [[LakeFile.metadata]], which Spark hands to the reader per split.
   *
+  * `listFiles` keeps the files `skip` keeps for the data filters Spark's
+  * planner hands it (the catalog's min/max, partition-transform and
+  * bucket skipping, see `DuckLake.table`).
+  *
   * Equality covers every file and its metadata: two scans of one table
   * with different delete sets (time travel, a self-join across
   * snapshots) must never compare equal, or exchange reuse would serve
-  * one scan's rows for the other.
+  * one scan's rows for the other. `skip` stays out of it: it derives
+  * from the same catalog rows.
   */
-final case class LakeFileIndex(files: Seq[LakeFile]) extends FileIndex {
+final case class LakeFileIndex(files: Seq[LakeFile])(
+    skip: Seq[Expression] => LakeFile => Boolean) extends FileIndex {
 
   private lazy val statuses = files.map { f =>
-    FileStatusWithMetadata(
+    f -> FileStatusWithMetadata(
       new FileStatus(f.size, false, 1, f.size, 0L, new Path(f.path)), f.metadata)
   }
 
   override def rootPaths: Seq[Path] = files.map(f => new Path(f.path))
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, statuses))
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = skip(dataFilters)
+    Seq(PartitionDirectory(InternalRow.empty, statuses.collect { case (f, s) if keep(f) => s }))
+  }
 
   override def inputFiles: Array[String] = files.map(_.path).toArray
 
@@ -63,4 +71,8 @@ final case class LakeFileIndex(files: Seq[LakeFile]) extends FileIndex {
   override def sizeInBytes: Long = files.map(_.size).sum
 
   override def partitionSchema: StructType = new StructType()
+}
+
+object LakeFileIndex {
+  val KeepAll: Seq[Expression] => LakeFile => Boolean = _ => _ => true
 }

@@ -172,18 +172,7 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit, ReadMaxFiles, ReadMaxRows}
 
-  private val (schemaName, tableName) = fullName.split('.') match {
-    case Array(s, t) => (s, t)
-    case _           => ("main", fullName)
-  }
-
-  private def tableRec = {
-    val snap = lake.store.currentSnapshot
-    val sch = lake.store.getSchemaByName(schemaName, snap)
-      .getOrElse(throw new graft.lake.SchemaNotFoundException(schemaName))
-    lake.store.getTableByName(sch.schemaId, tableName, snap)
-      .getOrElse(throw new graft.lake.TableNotFoundException(fullName))
-  }
+  private def tableRec = lake.resolveTable(fullName, lake.store.currentSnapshot)
 
   override def initialOffset(): Offset = SnapshotOffset(0L)
 
@@ -295,22 +284,19 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
   * per-group projection — plus one partition of the table's inlined
   * rows, if any. Used by the row-level-operation path (DELETE / UPDATE /
   * MERGE), which requires a real `toBatch` and row addresses, and by
-  * storage-partitioned joins (never over inlined rows). Ordinary reads
-  * never get here: [[SpliceLakeScans]] plans them as the facade's
-  * parquet scans.
+  * storage-partitioned joins (never over inlined rows); `readStream`
+  * takes its micro-batch stream. Plain reads never get here:
+  * [[ResolveLakeReads]] plans them as the facade's parquet scans.
   */
 final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     schema: StructType,
     pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-    spj: Boolean = false)
+    spj: Boolean = false,
+    maxFilesPerTrigger: Option[Int] = None,
+    maxRowsPerTrigger: Option[Long] = None)
     extends org.apache.spark.sql.connector.read.Scan
     with org.apache.spark.sql.connector.read.Batch
     with SupportsReportPartitioning {
-
-  private val (schemaName, tableName) = fullName.split('.') match {
-    case Array(s, t) => (s, t)
-    case _           => ("main", fullName)
-  }
 
   override def readSchema(): StructType = schema
   override def toBatch: org.apache.spark.sql.connector.read.Batch = this
@@ -318,30 +304,18 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     s"DuckLakeBatchScan $fullName@$snapshot" +
       (if (pushedFilters.nonEmpty) s" PushedFilters: ${pushedFilters.mkString(", ")}" else "")
 
-  /** Partition fields eligible for SPJ key grouping: identity keys and
-    * hash buckets (both expressible as v2 partition transforms Spark can
-    * reason about — bucket resolves through the catalog's
-    * [[DuckLakeBucketFunction]]); time/truncate transforms are range
-    * partitionings SPJ cannot use.
+  /** The SPJ keys when `spj`: identity keys and hash buckets only (see
+    * [[DuckLakeV2Table.storagePartitioned]]; bucket resolves through the
+    * catalog's [[DuckLakeBucketFunction]]).
     */
   private lazy val spjFields: Seq[graft.lake.PartField] =
     lake.partitionFieldsOf(fullName, Some(snapshot))
 
-  private lazy val (tr, cols) = {
-    val sch = lake.store.getSchemaByName(schemaName, snapshot)
-      .getOrElse(throw new graft.lake.SchemaNotFoundException(schemaName))
-    val t = lake.store.getTableByName(sch.schemaId, tableName, snapshot)
-      .getOrElse(throw new graft.lake.TableNotFoundException(fullName))
-    (t, lake.store.getTableColumns(t.tableId, snapshot))
-  }
+  private lazy val tr = lake.resolveTable(fullName, snapshot)
+  private lazy val cols = lake.store.getTableColumns(tr.tableId, snapshot)
 
   private lazy val inlined: Array[InternalRow] =
     lake.inlinedScanRows(tr, cols, snapshot, schema)
-
-  private def spjEligible: Boolean = spjFields.nonEmpty && inlined.isEmpty &&
-    spjFields.forall(f => (f.transform.isEmpty ||
-      f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) &&
-      schema.fieldNames.contains(f.source))
 
   /** Plan once, reuse from both `planInputPartitions` and
     * `outputPartitioning` (the latter needs the distinct-key count).
@@ -354,7 +328,7 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
       lake.store.getDataFiles(tr.tableId, snapshot), pushedFilters)
     val parts = DuckLakePartitionPlanner.plan(lake, fullName, tr, cols, snapshot, files,
       schema, Some(snapshot))
-    if (!spj || !spjEligible)
+    if (!spj)
       (parts.map(_._2: InputPartition) ++
         Option.when(inlined.nonEmpty)(DuckLakeInlinedPartition(inlined))).toArray
     else {
@@ -385,7 +359,7 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     * short of full key coverage falls back to unknown partitioning.
     */
   override def outputPartitioning(): Partitioning =
-    if (spj && spjEligible && planned.nonEmpty) {
+    if (spj && planned.nonEmpty) {
       import org.apache.spark.sql.connector.expressions.Expressions
       val nKeys = planned.collect {
         case k: DuckLakeKeyedPartition => k.keyVector
@@ -403,6 +377,13 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     } else new UnknownPartitioning(planned.length)
 
   override def createReaderFactory(): PartitionReaderFactory = DuckLakeFileReaderFactory
+
+  /** `spark.readStream.table("ducklake.<schema>.<t>")`: snapshot-
+    * incremental micro-batches (appends-only CDC semantics).
+    */
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new DuckLakeMicroBatchStream(lake, fullName, schema, maxFilesPerTrigger,
+      maxRowsPerTrigger)
 }
 
 /** Executor-side reader: each file through the reader its partition

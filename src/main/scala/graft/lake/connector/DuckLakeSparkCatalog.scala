@@ -9,13 +9,11 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchT
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.NamedReference
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, AggregateFunc, CountStar, Count => VCount, Max => VMax, Min => VMin}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.functions.col
 
 import graft.lake.{ColumnDef, DuckLake, TypeBridge, WriteMode}
 
@@ -33,17 +31,19 @@ import graft.lake.{ColumnDef, DuckLake, TypeBridge, WriteMode}
   * then `SELECT … FROM ducklake.main.t`, `INSERT INTO ducklake.main.t …`,
   * `CREATE TABLE ducklake.main.t AS SELECT …` work through Spark SQL.
   *
-  * Read path: column pruning and filter pushdown arrive through
-  * `SupportsPushDown*` on a [[DuckLakeScan]]; after pushdown the
-  * [[SpliceLakeScans]] optimizer rule replaces that scan with the
-  * optimized plan of the facade's snapshot-pinned DataFrame
-  * ([[DuckLake.table]]), so a lake read plans as parquet file scans
-  * inside the one query plan — the reference's shape (src/table.rs:369-527).
-  * Pushed filters drive min/max file skipping and are all reported as
-  * residual, so Spark re-applies them above the scan (Inexact semantics,
-  * parity with reference src/table.rs:584-598). Snapshot is pinned per
-  * `loadTable`, i.e. per analyzed query — the reference pins per catalog
-  * construction and refreshes after writes (tests/hybrid_asyncdb.rs:147).
+  * Read path: lake SQL needs the session extension
+  * ([[GraftSparkExtensions]], as Delta and Iceberg need theirs), whose
+  * [[ResolveLakeReads]] rule resolves each plain read of a table to the
+  * analyzed plan of the facade's snapshot-pinned read ([[DuckLake.table]]),
+  * so a lake read plans as parquet file scans inside the one query plan —
+  * the reference's shape (src/table.rs:369-527). The query's filters
+  * reach those scans through Spark's own pushdown: parquet filters, and
+  * min/max file skipping in each scan's `LakeFileIndex`; Spark applies
+  * every filter above the scan too (Inexact semantics, parity with
+  * reference src/table.rs:584-598). `initialize` fails without the
+  * extension. Snapshot is pinned per `loadTable`, i.e. per analyzed
+  * query — the reference pins per catalog construction and refreshes
+  * after writes (tests/hybrid_asyncdb.rs:147).
   */
 class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog
@@ -60,7 +60,10 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     dataPath = options.get("dataPath")
     require(metaDb != null && dataPath != null,
       s"catalog $name requires options metaDb and dataPath")
-    SpliceLakeScans.register(SparkSession.active)
+    require(SparkSession.active.sessionState.analyzer.postHocResolutionRules
+        .contains(ResolveLakeReads),
+      s"catalog $name reads lake tables through the session extension: set " +
+        "spark.sql.extensions=graft.lake.connector.GraftSparkExtensions")
   }
 
   override def name(): String = catalogName
@@ -532,8 +535,8 @@ object DuckLakeSparkCatalog {
   * the row-level delta plan (merge-on-read positional delete files);
   * `SupportsDelete` takes only the unconditional `DELETE FROM t`.
   */
-final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
-    tableSchema: StructType) extends Table with SupportsRead with SupportsWrite
+final class DuckLakeV2Table(private[connector] val lake: DuckLake, fullName: String,
+    private[connector] val snapshot: Long, tableSchema: StructType) extends Table with SupportsRead with SupportsWrite
     with SupportsDelete with SupportsRowLevelOperations
     with SupportsMetadataColumns {
 
@@ -621,26 +624,10 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
       // rewritten row keeps its stable id (delete+insert would lose it)
       override def representUpdateAsDeleteAndInsert(): Boolean = false
 
-      // prunable scan: Spark appends the row-address columns it needs to
-      // the pruned schema, and pushes the command's condition — used for
-      // catalog-stats FILE skipping, with every filter kept residual
-      // ([[DuckLakeBatchScan]] — the rewrite requires toBatch)
+      // Spark appends the row-address columns it needs to the pruned
+      // schema, and pushes the command's condition for file skipping
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        new ScanBuilder with SupportsPushDownRequiredColumns
-            with SupportsPushDownFilters {
-          private var required: StructType = tableSchema
-          private var filters: Array[Filter] = Array.empty
-          // whole top-level columns, as the ordinary scan keeps them: the
-          // facade's projection maps each column whole
-          override def pruneColumns(s: StructType): Unit =
-            required = StructType(s.map(f => tableSchema.find(_.name == f.name).getOrElse(f)))
-          override def pushFilters(fs: Array[Filter]): Array[Filter] = {
-            filters = fs; fs // all residual: Spark re-applies post-scan
-          }
-          override def pushedFilters(): Array[Filter] = filters
-          override def build(): Scan =
-            new DuckLakeBatchScan(lake, fullName, snapshot, required, filters.toSeq)
-        }
+        scanBuilder(options, spj = false)
 
       override def newWriteBuilder(writeInfo: LogicalWriteInfo)
           : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
@@ -656,23 +643,16 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
   /** Catalog-derived stats surfaced to `DESCRIBE EXTENDED`. */
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
-    val (schemaName, tableName) = fullName.split('.') match {
-      case Array(s, t) => (s, t); case _ => ("main", fullName)
-    }
-    for {
-      sch <- lake.store.getSchemaByName(schemaName, snapshot)
-      tbl <- lake.store.getTableByName(sch.schemaId, tableName, snapshot)
-    } {
-      val files = lake.store.getDataFiles(tbl.tableId, snapshot)
-      m.put("ducklake.snapshot", snapshot.toString)
-      m.put("ducklake.file_count", files.size.toString)
-      m.put("ducklake.record_count",
-        (files.map(_.recordCount).sum -
-          files.flatMap(_.deleteFile).map(_.recordCount).sum).toString)
-      m.put("ducklake.size_bytes", files.map(_.fileSizeBytes).sum.toString)
-      lake.store.getComment("table", tbl.tableId, None, snapshot)
-        .foreach(m.put("comment", _))
-    }
+    val tbl = lake.resolveTable(fullName, snapshot)
+    val files = lake.store.getDataFiles(tbl.tableId, snapshot)
+    m.put("ducklake.snapshot", snapshot.toString)
+    m.put("ducklake.file_count", files.size.toString)
+    m.put("ducklake.record_count",
+      (files.map(_.recordCount).sum -
+        files.flatMap(_.deleteFile).map(_.recordCount).sum).toString)
+    m.put("ducklake.size_bytes", files.map(_.fileSizeBytes).sum.toString)
+    lake.store.getComment("table", tbl.tableId, None, snapshot)
+      .foreach(m.put("comment", _))
     m
   }
 
@@ -699,71 +679,53 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
 
+  /** The DSv2 read, left by [[ResolveLakeReads]] only for
+    * storage-partitioned joins (and taken by `readStream`): plain reads
+    * resolve to the facade's plan before any scan is built.
+    */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-        with SupportsPushDownAggregates {
+    scanBuilder(options, spj = true)
+
+  /** A [[DuckLakeBatchScan]] of the pruned columns, key-grouped when
+    * `spj` and the pruned columns keep it [[storagePartitioned]], with the
+    * pushed filters driving catalog-stats file skipping (all of them
+    * residual: Spark re-applies them above the scan). Nested pruning
+    * hands over pruned structs, but the scan reads top-level columns
+    * whole: each keeps its full type, from which Spark derives the scan
+    * output and `info._2`'s ordinal above it.
+    */
+  private def scanBuilder(options: CaseInsensitiveStringMap, spj: Boolean): ScanBuilder =
+    new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
       private var required: StructType = tableSchema
       private var filters: Array[Filter] = Array.empty
-      private var metaAgg: Option[Seq[org.apache.spark.sql.catalyst.expressions.Literal]] = None
-
-      override def pushFilters(f: Array[Filter]): Array[Filter] = {
-        filters = f
-        f // all residual: Spark re-applies after the scan (Inexact)
-      }
+      override def pushFilters(f: Array[Filter]): Array[Filter] = { filters = f; f }
       override def pushedFilters(): Array[Filter] = filters
-      // nested pruning hands over pruned structs, but the facade reads
-      // top-level columns whole: keep each one's full type, from which
-      // Spark derives the scan output and `info._2`'s ordinal above it
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = StructType(requiredSchema.map(f =>
           tableSchema.find(_.name == f.name).getOrElse(f)))
-
-      // Metadata-only aggregates: a filterless, ungrouped COUNT(*)/
-      // COUNT(col)/MIN/MAX is answered from catalog file statistics —
-      // O(metadata), zero data IO — the scan-avoidance that makes
-      // `SELECT count(*) FROM t` instant on a 100 TB table. Complete
-      // pushdown (one final row); ANY uncertainty (pushed filters,
-      // group-by, deletes for column aggs, missing or truncatable
-      // stats) refuses and falls back to the ordinary scan.
-      override def supportCompletePushDown(agg: Aggregation): Boolean =
-        MetaAgg.tryPush(lake, fullName, snapshot, agg, filters).isDefined
-      override def pushAggregation(agg: Aggregation): Boolean = {
-        metaAgg = MetaAgg.tryPush(lake, fullName, snapshot, agg, filters)
-        metaAgg.isDefined
-      }
-
-      override def build(): Scan = metaAgg match {
-        case Some(values) => new DuckLakeMetaAggScan(values)
-        case None =>
-          // opt-in storage-partitioned join path: when v2 bucketing is on
-          // and the table's hive partition keys survive column pruning,
-          // scan through the connector's Batch reporting
-          // KeyGroupedPartitioning — co-partitioned lake joins then run
-          // with ZERO shuffle. The trade (one whole-file partition per
-          // data file, without parquet filter pushdown or split
-          // coalescing, vs the spliced parquet scan) is the right one
-          // exactly when the user asks for it: exchange cost dominates
-          // scan cost for the big-big joins SPJ targets. Inlined rows
-          // carry no partition key, so a snapshot with any reads spliced.
-          val spjOk = lake.spark.conf
-            .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean && {
-              val pfs = lake.partitionFieldsOf(fullName, Some(snapshot))
-              pfs.nonEmpty &&
-                pfs.forall(f => (f.transform.isEmpty ||
-                  f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) &&
-                  required.fieldNames.contains(f.source)) &&
-                !required.fieldNames.exists(DuckLake.VirtualNames.contains) &&
-                !lake.hasInlinedRows(fullName, snapshot)
-            }
-          if (spjOk)
-            new DuckLakeBatchScan(lake, fullName, snapshot, required,
-              filters.toSeq, spj = true)
-          else new DuckLakeScan(lake, fullName, snapshot, required, filters,
-            // streaming admission control read options
-            Option(options.get("maxFilesPerTrigger")).map(_.toInt),
-            Option(options.get("maxRowsPerTrigger")).map(_.toLong))
-      }
+      override def build(): Scan =
+        new DuckLakeBatchScan(lake, fullName, snapshot, required, filters.toSeq,
+          spj && storagePartitioned(required.fieldNames.toSet),
+          // streaming admission control read options
+          Option(options.get("maxFilesPerTrigger")).map(_.toInt),
+          Option(options.get("maxRowsPerTrigger")).map(_.toLong))
     }
+
+  /** Whether a read using `columns` stays a storage-partitioned scan
+    * (with v2 bucketing on): every partition field is an identity or
+    * hash-bucket key whose source column the read uses, and the table
+    * holds no inlined rows (they carry no partition key). The trade —
+    * one whole-file partition per data file, without parquet filter
+    * pushdown or split coalescing — is the right one exactly when the
+    * user asks for it: exchange cost dominates scan cost for the big-big
+    * joins SPJ targets.
+    */
+  private[connector] def storagePartitioned(columns: Set[String]): Boolean = {
+    val pfs = lake.partitionFieldsOf(fullName, Some(snapshot))
+    pfs.nonEmpty && pfs.forall(f => (f.transform.isEmpty ||
+      f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) && columns(f.source)) &&
+      !lake.hasInlinedRows(fullName, snapshot)
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -782,55 +744,14 @@ final class DuckLakeV2Table(lake: DuckLake, fullName: String, snapshot: Long,
     }
 }
 
-/** The ordinary lake read: the pinned snapshot, the pruned columns and
-  * the pushed filters. It never reaches physical planning —
-  * [[SpliceLakeScans]] replaces it with the optimized plan of [[frame]]
-  * — so it serves only as that rule's input and as the streaming source.
-  */
-final class DuckLakeScan(lake: DuckLake, fullName: String, snapshot: Long,
-    required: StructType, filters: Array[Filter],
-    maxFilesPerTrigger: Option[Int] = None,
-    maxRowsPerTrigger: Option[Long] = None) extends Scan {
-
-  override def readSchema(): StructType = required
-
-  /** The facade's snapshot scan with the pushed filters driving min/max
-    * file skipping, projected to the required columns (none for a
-    * `COUNT(*)`). Virtual columns requested by name route through the
-    * lake's virtual-column scan (per-file provenance literals).
-    */
-  def frame: DataFrame = {
-    val vreq = required.fieldNames.filter(DuckLake.VirtualNames.contains).toSeq
-    lake.table(fullName, Some(snapshot), filters.toSeq, vreq)
-      .select(required.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** `spark.readStream.table("ducklake.<schema>.<t>")`: snapshot-
-    * incremental micro-batches (appends-only CDC semantics).
-    */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new DuckLakeMicroBatchStream(lake, fullName, required, maxFilesPerTrigger,
-      maxRowsPerTrigger)
-}
-
-/** A completely-pushed-down aggregation answered from catalog metadata
-  * (see `MetaAgg`): one row of literal values, which [[SpliceLakeScans]]
-  * turns into a one-row projection. No data IO.
-  */
-final class DuckLakeMetaAggScan(
-    val values: Seq[org.apache.spark.sql.catalyst.expressions.Literal]) extends Scan {
-
-  override def readSchema(): StructType = StructType(values.zipWithIndex.map {
-    case (v, i) => StructField(s"agg_$i", v.dataType, nullable = true)
-  })
-}
-
-/** Decides whether an `Aggregation` is answerable from DuckLake catalog
-  * metadata alone, and computes the answer (reference roadmap gap — the
-  * reference reports only table-level byte statistics, src/table.rs:544).
+/** Decides whether the aggregates of a filterless, ungrouped `Aggregate`
+  * directly over a lake relation are answerable from DuckLake catalog
+  * metadata alone, and computes the answer — O(metadata), zero data IO,
+  * the scan-avoidance that makes `SELECT count(*) FROM t` instant on a
+  * 100 TB table (reference roadmap gap — the reference reports only
+  * table-level byte statistics, src/table.rs:544).
   *
-  * Answerable, per aggregate expression:
+  * Answerable, per aggregate expression (non-distinct, unfiltered):
   *  - `COUNT(*)`  → Σ file record_count − Σ delete-file positions
   *                  + inlined-row count (exact under MOR deletes).
   *  - `COUNT(col)` (non-distinct) → Σ (record_count − null_count); needs a
@@ -841,69 +762,55 @@ final class DuckLakeMetaAggScan(
   *                  remove the extreme row), no inlined rows, and a
   *                  numeric/date/timestamp/boolean column — strings are
   *                  excluded because footer bounds may be truncated.
-  * Pushed filters or GROUP BY refuse entirely.
+  * Any other expression refuses the whole aggregate.
   */
 private[connector] object MetaAgg {
-  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal, NamedExpression}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Count, Max, Min}
   import org.apache.spark.sql.types._
 
-  def tryPush(lake: DuckLake, fullName: String, snapshot: Long,
-      agg: Aggregation, filters: Array[Filter]): Option[Seq[Literal]] = {
-    if (filters.nonEmpty || agg.groupByExpressions.nonEmpty) return None
-    val (schemaName, tableName) = fullName.split('.') match {
-      case Array(s, t) => (s, t); case _ => ("main", fullName)
+  def answer(lake: DuckLake, fullName: String, snapshot: Long,
+      aggs: Seq[NamedExpression]): Option[Seq[Literal]] = {
+    val fns: Seq[AggregateFunction] = aggs.map {
+      case Alias(AggregateExpression(fn @ (_: Count | _: Min | _: Max), _, false, None, _), _) => fn
+      case _ => return None // before any catalog read
     }
-    val tbl = (for {
-      sch <- lake.store.getSchemaByName(schemaName, snapshot)
-      t <- lake.store.getTableByName(sch.schemaId, tableName, snapshot)
-    } yield t).getOrElse(return None)
+    val tbl = lake.resolveTable(fullName, snapshot)
     val cols = lake.store.getTableColumns(tbl.tableId, snapshot)
     val files = lake.store.getDataFiles(tbl.tableId, snapshot)
     val inlinedCount = lake.store.getInlinedRows(tbl.tableId, snapshot).size
-    val hasDeletes = files.exists(_.deleteFile.isDefined)
     val liveCount = files.map(_.recordCount).sum -
       files.flatMap(_.deleteFile).map(_.recordCount).sum + inlinedCount
+    // column answers need every row in the footers: no deletes, no inlined rows
+    val exact = inlinedCount == 0 && files.forall(_.deleteFile.isEmpty)
     lazy val stats = lake.store.getFileStats(tbl.tableId)
 
     def statRow(f: graft.lake.DataFileRec, columnId: Long) =
       stats.get((f.dataFileId, columnId))
 
-    val answers: Seq[Option[Literal]] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(Literal(liveCount))
-
-      case c: VCount if !c.isDistinct && !hasDeletes && inlinedCount == 0 =>
-        for {
-          cd <- refColumn(c.column, cols)
-          nonNulls <- traverse(files)(f =>
-            statRow(f, cd.columnId).flatMap(_._1).map(nc => f.recordCount - nc))
-        } yield Literal(nonNulls.sum)
-
-      case m: VMin => foldMinMax(m.column, cols, files, statRow,
-        hasDeletes, inlinedCount, isMin = true)
-      case m: VMax => foldMinMax(m.column, cols, files, statRow,
-        hasDeletes, inlinedCount, isMin = false)
+    val answers: Seq[Option[Literal]] = fns.map {
+      case Count(Seq(one: Literal)) if !one.nullable => Some(Literal(liveCount))
+      case Count(Seq(column)) if exact => refColumn(column, cols).flatMap { cd =>
+        val nonNulls = files.map(f => statRow(f, cd.columnId).flatMap(_._1).map(f.recordCount - _))
+        Option.when(nonNulls.forall(_.isDefined))(Literal(nonNulls.flatten.sum))
+      }
+      case Min(column) if exact => foldMinMax(column, cols, files, statRow, isMin = true)
+      case Max(column) if exact => foldMinMax(column, cols, files, statRow, isMin = false)
       case _ => None
     }
     if (answers.exists(_.isEmpty)) None else Some(answers.flatten)
   }
 
-  private def refColumn(e: org.apache.spark.sql.connector.expressions.Expression,
+  private def refColumn(e: org.apache.spark.sql.catalyst.expressions.Expression,
       cols: Seq[ColumnDef]): Option[ColumnDef] = e match {
-    case nr: NamedReference if nr.fieldNames.length == 1 =>
-      cols.find(_.name == nr.fieldNames()(0))
+    case a: Attribute => cols.find(_.name == a.name)
     case _ => None
   }
 
-  private def traverse[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] = {
-    val out = xs.map(f)
-    if (out.exists(_.isEmpty)) None else Some(out.flatten)
-  }
-
-  private def foldMinMax(column: org.apache.spark.sql.connector.expressions.Expression,
+  private def foldMinMax(column: org.apache.spark.sql.catalyst.expressions.Expression,
       cols: Seq[ColumnDef], files: Seq[graft.lake.DataFileRec],
       statRow: (graft.lake.DataFileRec, Long) => Option[(Option[Long], Option[String], Option[String])],
-      hasDeletes: Boolean, inlinedCount: Int, isMin: Boolean): Option[Literal] = {
-    if (hasDeletes || inlinedCount > 0) return None
+      isMin: Boolean): Option[Literal] = {
     val cd = refColumn(column, cols).getOrElse(return None)
     val dt = TypeBridge.toSpark(cd.dtype)
     if (!statable(dt)) return None

@@ -14,9 +14,16 @@ import org.apache.spark.sql.connector.catalog.{Identifier, ViewInfo}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Session extensions completing the SQL view surface for the lake.
+/** Session extensions for lake SQL: the read path and the SQL view
+  * surface.
   *
-  * Vanilla Spark 4.1 ships the `ViewCatalog` connector interface but no
+  * Reads: the post-hoc resolution rule [[ResolveLakeReads]] plans each
+  * plain lake read as the facade's parquet scans inside the query's one
+  * plan. Analyzer rules can only come from an extension, so lake SQL
+  * requires this one — as Delta's and Iceberg's reads require theirs —
+  * and [[DuckLakeSparkCatalog]]'s `initialize` fails without it.
+  *
+  * Views: vanilla Spark 4.1 ships the `ViewCatalog` connector interface but no
   * analyzer/execution support for it: `ResolveSessionCatalog` hard-throws
   * `MISSING_CATALOG_ABILITY.VIEWS` the moment a `CreateView`/`DropView`
   * identifier resolves to a non-session catalog, and `SELECT ... FROM
@@ -33,12 +40,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    text and splicing the re-parsed plan in as a subquery (late-binding,
   *    matching `DuckLake.view` and the DuckLake spec).
   *
-  * Register with:
+  * Register with (every session that reads a lake catalog):
   * {{{ spark.sql.extensions = graft.lake.connector.GraftSparkExtensions }}}
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(ResolveLakeViews.apply)
+    ext.injectPostHocResolutionRule(_ => ResolveLakeReads)
     ext.injectParser((session, delegate) => new LakeViewSqlParser(session, delegate))
     // geometry scalar surface over the WKB carrier (geo corpus)
     ext.injectFunction((FunctionIdentifier("st_point"),

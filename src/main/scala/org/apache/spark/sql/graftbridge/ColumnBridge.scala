@@ -14,6 +14,14 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `e` as a data source filter, as Spark translates the filters it
+    * pushes into a source (nested fields as dotted names); None when it
+    * has no such form.
+    */
+  def sourceFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
+
   /** `c` converted now by `spark`'s converter — a plan built by hand
     * (see [[execute]]) gets no lazy column-node wrapper for the analyzer.
     */

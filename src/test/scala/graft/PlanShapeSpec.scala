@@ -5,11 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+
+import graft.lake.LakeFileIndex
 
 /** Plan-shape regression guard for the hottest bench queries: pins the
   * physical-plan properties the 100 TB story depends on — dimension
@@ -225,6 +229,30 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll
 
   private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
     collectWithSubqueries(p) { case s: FileSourceScanExec => s }
+
+  test("a SQL lake read analyzes to parquet relations over the lake file index") {
+    adopted
+    val analyzed = spark.sql(
+      "SELECT o_orderkey FROM dlplan.main.orders WHERE o_orderkey < 100").queryExecution.analyzed
+    val lakeRelations = analyzed.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
+          l.relation.asInstanceOf[HadoopFsRelation].location.isInstanceOf[LakeFileIndex] => l
+    }
+    assert(lakeRelations.nonEmpty, analyzed.toString)
+    assert(analyzed.collect { case r: DataSourceV2Relation => r }.isEmpty, analyzed.toString)
+  }
+
+  test("a lake read of one struct field reads only that field") {
+    spark.sql("CREATE TABLE dlplan.main.structplan (id BIGINT, info STRUCT<a: INT, b: STRING>)")
+    spark.sql("INSERT INTO dlplan.main.structplan " +
+      "SELECT id, named_struct('a', CAST(id AS INT), 'b', CAST(id AS STRING)) FROM range(100)")
+    val df = spark.sql("SELECT info.b FROM dlplan.main.structplan")
+    val scans = fileScans(df.queryExecution.executedPlan)
+    assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+    assert(scans.head.metadata("ReadSchema") == "struct<info:struct<b:string>>",
+      scans.head.metadata("ReadSchema"))
+    assert(df.collect().map(_.getString(0)).toSet == (0 until 100).map(_.toString).toSet)
+  }
 
   test("a delete-free lake scan stays columnar with raw parquet's pushed filters") {
     val q = "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey < 100"

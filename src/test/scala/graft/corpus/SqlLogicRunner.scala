@@ -1944,8 +1944,9 @@ final class SqlLogicRunner(spark: SparkSession) {
         // partition/stats pruning (the honest equivalent of DuckDB's
         // analyzed-plan counter)
         require(lake != null, "no lake attached")
-        spark.sql(translate(t.substring("EXPLAIN ANALYZE".length))).collect()
-        Seq(("analyzed_plan", s"Total Files Read: ${lake.lastScanFileCount}"))
+        val read = graft.ScanMetrics.filesRead(
+          spark.sql(translate(t.substring("EXPLAIN ANALYZE".length))))
+        Seq(("analyzed_plan", s"Total Files Read: $read"))
           .toDF("plan_type", "analyzed_plan")
       case _ if t.toUpperCase.startsWith("EXPLAIN") =>
         // cardinality assertions (`~1,000 Rows`): serve the catalog's

@@ -383,14 +383,14 @@ class PartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql(
       "CREATE TABLE partlake.main.plogs (id BIGINT, region STRING, v DOUBLE) PARTITIONED BY (region)")
     spark.sql("INSERT INTO partlake.main.plogs VALUES (1, 'eu', 1.0), (2, 'us', 2.0), (3, 'eu', 3.0)")
-    assert(spark.sql("SELECT sum(v) FROM partlake.main.plogs WHERE region = 'eu'")
-      .head.getDouble(0) == 4.0)
-    // pruning happened through the SQL pushdown path: only the 'eu'
-    // partition's files were scanned (file-per-task layout may split a
-    // partition across several files)
+    val euSum = spark.sql("SELECT sum(v) FROM partlake.main.plogs WHERE region = 'eu'")
+    assert(euSum.head.getDouble(0) == 4.0)
+    // pruning happened in the SQL plan: only the 'eu' partition's files
+    // were scanned (file-per-task layout may split a partition across
+    // several files)
     val catalogLake = graft.lake.connector.DuckLakeSparkCatalog
       .cachedLake(s"$root/meta", s"$root/data").get
-    val euScanned = catalogLake.lastScanFileCount
+    val euScanned = graft.ScanMetrics.filesRead(euSum).toInt
     val total = catalogLake.listFilesDF
       .filter(col("table_name") === "plogs").count().toInt
     assert(euScanned >= 1 && euScanned < total,
