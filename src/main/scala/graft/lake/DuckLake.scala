@@ -54,7 +54,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   store.onTxnDeadFiles { dead =>
     val fs = FileSystem.get(new java.net.URI(dataPath), hconf)
     dead.foreach { case (s, t, p, rel) =>
-      if (rel) fs.delete(new Path(filePath(s"$s.$t", p)), false)
+      if (rel) fs.delete(new Path(s"${tableDirOf(s"$s.$t")}/$p"), false)
     }
   }
   // the catalog remembers its FIRST data path; a later attach with a
@@ -989,7 +989,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     // dir; absolute paths are adopted pre-existing files (add_files) that
     // a rollback must merely deregister, never delete.
     val paths = store.openTxnFiles().collect {
-      case (s, t, p, true) => filePath(s"$s.$t", p)
+      case (s, t, p, true) => s"${tableDirOf(s"$s.$t")}/$p"
     }
     store.rollbackTransaction()
     val fs = FileSystem.get(new java.net.URI(dataPath), hconf)
@@ -1137,33 +1137,36 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       .getOrElse(s"$dataPath/$schSeg/${PathResolver.safeSegment(t0)}")
   }
 
-  private def filePath(name: String, f: String): String = s"${tableDirOf(name)}/$f"
-
-  /** Physical path of a data file: table-dir relative for files we wrote;
-    * verbatim for adopted files registered with absolute paths.
+  /** A catalog file path under table directory `dir`: relative paths
+    * (files we wrote) resolve there; adopted files keep their absolute
+    * path.
     */
-  private[lake] def dataFilePath(name: String, f: DataFileRec): String =
-    if (f.pathIsRelative) filePath(name, f.path) else f.path
+  private def under(dir: String, path: String, relative: Boolean): String =
+    if (relative) s"$dir/$path" else path
 
-  private def deleteFilePath(name: String, d: DeleteFileRec): String =
-    if (d.pathIsRelative) filePath(name, d.path) else d.path
-
-  /** The positions of a MOR delete file as `(__fid = fid, pos)`, read
-    * with its schema (no inference job).
+  /** The positions of a MOR delete file of the table in `dir` as
+    * `(__fid = fid, pos)`, read with its schema (no inference job).
     */
-  private def positionsOf(name: String, d: DeleteFileRec, fid: Long): DataFrame =
-    deleteRows(name, d).select(lit(fid).as("__fid"), col("pos"))
+  private def positionsOf(dir: String, d: DeleteFileRec, fid: Long): DataFrame =
+    deleteRows(dir, d).select(lit(fid).as("__fid"), col("pos"))
 
-  private def deleteRows(name: String, d: DeleteFileRec): DataFrame =
+  private def deleteRows(dir: String, d: DeleteFileRec): DataFrame =
     reader(Seq(d.path -> d.encryptionKey)).schema(DeletePositions.Schema)
-      .parquet(deleteFilePath(name, d))
+      .parquet(under(dir, d.path, d.pathIsRelative))
 
   private def sparkSchemaOf(cols: Seq[ColumnDef]): StructType =
     StructType(cols.map(c => StructField(c.name, TypeBridge.toSpark(c.dtype), c.nullsAllowed)))
 
-  private def scanCtx(tr: TableRec, cols: Seq[ColumnDef], snap: Long): ScanCtx = {
+  /** The context of one read of table `tr` (pinned columns `cols`) at
+    * `snap`; its directory resolves through the table's row and its
+    * schema's row of that snapshot, once per read.
+    */
+  private[lake] def scanCtx(tr: TableRec, cols: Seq[ColumnDef], snap: Long): ScanCtx = {
     val partCols = store.getPartitionColumns(tr.tableId, snap)
-    ScanCtx(cols, store.getColumnHistory(tr.tableId), partCols,
+    val schema = store.getSchemaById(tr.schemaId, snap)
+      .getOrElse(throw new SchemaNotFoundException(s"schema id ${tr.schemaId}"))
+    ScanCtx(DuckLake.tableDir(dataPath, schema.path, tr),
+      cols, store.getColumnHistory(tr.tableId), partCols,
       if (partCols.isEmpty) Map.empty else store.getFilePartitionValues(tr.tableId),
       store.getNameMappings(tr.tableId),
       store.getNestedDefaults(tr.tableId, snap))
@@ -1241,40 +1244,37 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     case None      => lit(null).cast(TypeBridge.toSpark(c.dtype))
   }
 
-  /** Read a group of same-epoch, same-partition data files with the
-    * [[groupMapping]] projection, optionally carrying the file-local row
-    * position as `__ducklake_pos`. The one relation constructor of every
-    * facade read: a `HadoopFsRelation` over a [[LakeFileIndex]] of the
-    * catalog's files, read by [[DuckLakeParquetFormat]]. `liveAt =
-    * Some(snap)` reads the rows live at `snap` — MOR deletes and the
-    * merged-file visible-row limit are applied inside the scan; None
-    * reads every physical row (CDC, delete matching). With `skipping`,
-    * the index skips files by the data filters Spark's planner hands it.
+  /** The one relation constructor of every facade read: read group `g`
+    * as a `HadoopFsRelation` over a [[LakeFileIndex]] of its catalog
+    * files, read by [[DuckLakeParquetFormat]] and projected onto the
+    * pinned catalog columns, then `extra` columns over the group's first
+    * file and its per-file values (`field(name)`: a [[LakeFile.Fields]]
+    * field or [[LakeFile.RowIndex]], from the scan's `_metadata`). With
+    * `skipping`, the index skips files by the data filters Spark's planner
+    * hands it.
     */
-  private def readGroup(name: String, fsGroup: Seq[DataFileRec],
-      epoch: Seq[(ColumnDef, Option[ColumnDef])],
-      partVals: Map[Long, Option[String]], withPos: Boolean,
-      withRowIdCol: Boolean = false,
-      history: Seq[(ColumnDef, Long, Option[Long])] = Nil,
-      nestedDefaults: Map[Long, Map[String, String]] = Map.empty,
-      liveAt: Option[Long] = None, skipping: Option[FileSkipping] = None): DataFrame = {
-    val (physSchema, projection) =
-      groupMapping(epoch, partVals, withRowIdCol, history, nestedDefaults)
-    val recs = fsGroup.map(f => lakeFile(name, f, liveAt) -> f)
-    val names = epoch.collect {
-      case (cur, Some(phys)) if !partVals.contains(cur.columnId) => phys.name -> cur.name
-    }.toMap
-    val index = LakeFileIndex(recs.map(_._1))(
-      skipping.fold(LakeFileIndex.KeepAll)(_.skipper(recs.toMap, names)))
+  private def readGroup(g: LakeReadGroup,
+      extra: (DataFileRec, String => Column) => Seq[Column] = (_, _) => Nil,
+      skipping: Option[FileSkipping] = None): DataFrame = {
+    val index = LakeFileIndex(g.files.map(_._2))(
+      skipping.fold(LakeFileIndex.KeepAll)(_.skipper(g.files.map(_.swap).toMap, g.names)))
     val base = spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, new StructType(),
-        physSchema, None, new DuckLakeParquetFormat(index.files.exists(_.hidesRows)),
-        decryptOptions(fsGroup.map(f => f.path -> f.encryptionKey)))(spark))
-    val metaCols =
-      (if (withRowIdCol) Seq(col(DuckLake.RowIdPhysCol)) else Nil) ++
-        (if (withPos) Seq(col("_metadata.row_index").as("__ducklake_pos")) else Nil)
-    base.select(projection ++ metaCols: _*)
+        g.physSchema, None, new DuckLakeParquetFormat(index.files.exists(_.hidesRows)),
+        decryptOptions(g.files.map { case (f, _) => f.path -> f.encryptionKey }))(spark))
+    base.select(g.projection.map(_._2) ++
+      extra(g.files.head._1, n => col(s"${DuckLake.MetadataColumn}.$n")): _*)
   }
+
+  /** [[readGroup]] over every read group of `files` ([[readGroups]]),
+    * unioned.
+    */
+  private def readAll(ctx: ScanCtx, files: Seq[DataFileRec], liveAt: Option[Long],
+      provenance: Boolean = false,
+      extra: (DataFileRec, String => Column) => Seq[Column] = (_, _) => Nil,
+      skipping: Option[FileSkipping] = None): DataFrame =
+    readGroups(ctx, files, liveAt, provenance).map(readGroup(_, extra, skipping))
+      .reduce(_ unionByName _)
 
   /** The column mapping of one read group: the physical columns its
     * files are read with, and the projection from them onto the pinned
@@ -1289,9 +1289,12 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       partVals: Map[Long, Option[String]], withRowIdCol: Boolean,
       history: Seq[(ColumnDef, Long, Option[Long])],
       nestedDefaults: Map[Long, Map[String, String]]): (StructType, Seq[Column]) = {
+    // a column NOT NULL both in the catalog and at the files' epoch reads
+    // non-nullable, so filters on it translate for the parquet reader
     val physSchema0 = StructType(epoch.collect {
       case (cur, Some(phys)) if !partVals.contains(cur.columnId) =>
-        StructField(phys.name, DuckLake.physReadType(phys.dtype), nullable = true)
+        StructField(phys.name, DuckLake.physReadType(phys.dtype),
+          nullable = cur.nullsAllowed || phys.nullsAllowed)
     })
     val physSchema = if (withRowIdCol)
       physSchema0.add(DuckLake.RowIdPhysCol, LongType, nullable = true)
@@ -1361,47 +1364,49 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   private[lake] def partitionValue(raw: Option[String], dt: DataType): Column =
     raw.fold(lit(null))(lit(_)).cast(dt)
 
-  /** [[table]]'s read groups of `files` (catalog rows of table `tr` at
-    * `snap`), for the readers outside the facade — the connector's Batch
-    * (UPDATE, MERGE, row-level DELETE, SPJ) and its micro-batch stream:
-    * files of one physical epoch and partition share one
-    * [[groupMapping]], so every reader of the lake maps columns the same
-    * way. UPDATE-written files form their own groups, which also read
-    * the explicit row-id column; `liveAt` as in [[readGroup]].
+  /** The read groups of `files` (catalog rows of the table `ctx` pins),
+    * for every lake reader — the facade's scans, CDC and rewrites, the
+    * connector's Batch (UPDATE, MERGE, row-level DELETE, SPJ) and its
+    * micro-batch stream: files of one physical epoch and partition share
+    * one [[groupMapping]], so every reader of the lake maps columns the
+    * same way, and each file's [[LakeFile]] carries its per-file values
+    * (its index is its position in `files`). A read that asks for row
+    * provenance (`rowid`, `snapshot_id`) splits off the UPDATE-written
+    * files, which also read the explicit row-id column, and gives each
+    * merged file a group of its own: its segment map is a per-file
+    * expression. `liveAt = Some(snap)` hides the rows not live at `snap`
+    * (MOR deletes, the merged-file visible-row limit) inside the scan;
+    * None keeps every physical row (CDC, merge_adjacent).
     */
-  private[lake] def readGroups(name: String, tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      files: Seq[DataFileRec], liveAt: Option[Long]): Seq[LakeReadGroup] = {
-    val ctx = scanCtx(tr, cols, snap)
+  private[lake] def readGroups(ctx: ScanCtx, files: Seq[DataFileRec], liveAt: Option[Long],
+      provenance: Boolean): Seq[LakeReadGroup] = {
+    val index = files.iterator.map(_.dataFileId).zipWithIndex.toMap
     files.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f),
-        f.rowIdStart.isEmpty && f.segments.isEmpty))
-      .toSeq.map { case ((phys, pv, explicitIds), fs) =>
+        provenance && f.rowIdStart.isEmpty && f.segments.isEmpty,
+        Option.when(provenance && f.segments.nonEmpty)(f.dataFileId)))
+      .toSeq.map { case ((phys, pv, explicitIds, _), fs) =>
         val (physSchema, projection) =
           groupMapping(phys, pv, explicitIds, ctx.history, ctx.nestedDefaults)
-        LakeReadGroup(physSchema, cols.map(_.name).zip(projection),
-          fs.map(f => f -> lakeFile(name, f, liveAt)))
+        LakeReadGroup(physSchema, ctx.cols.map(_.name).zip(projection),
+          phys.collect { case (cur, Some(p)) if !pv.contains(cur.columnId) => p.name -> cur.name }
+            .toMap,
+          fs.map(f => f -> lakeFile(ctx.dir, f, liveAt, index(f.dataFileId))))
       }
   }
 
-  /** `f` as a [[LakeFileIndex]] entry: qualified path and catalog size;
-    * with `liveAt`, its delete file and its visible-row limit there.
+  /** `f` as a [[LakeFileIndex]] entry, its paths under the table directory
+    * `dir`: qualified path, catalog size and per-file values; with
+    * `liveAt`, its delete file and its visible-row limit there.
     */
-  private def lakeFile(name: String, f: DataFileRec, liveAt: Option[Long]): LakeFile = {
-    val p = new Path(dataFilePath(name, f))
+  private def lakeFile(dir: String, f: DataFileRec, liveAt: Option[Long], index: Long): LakeFile = {
+    val path = under(dir, f.path, f.pathIsRelative)
+    val p = new Path(path)
     val del = liveAt.flatMap(_ => f.deleteFile)
-    LakeFile(p.getFileSystem(hconf).makeQualified(p).toString, f.fileSizeBytes,
-      del.map(deleteFilePath(name, _)), del.flatMap(_.encryptionKey),
+    LakeFile(p.getFileSystem(hconf).makeQualified(p).toString, f.fileSizeBytes, f.dataFileId,
+      index, path, f.rowIdStart, f.beginSnapshot,
+      del.map(d => under(dir, d.path, d.pathIsRelative)), del.flatMap(_.encryptionKey),
       liveAt.map(f.visibleRowsAt).filter(_ < f.recordCount))
   }
-
-  /** One file with its epoch projection (the per-file read every
-    * rename-safe path — scan, CDC, compaction — goes
-    * through); `liveAt` as in [[readGroup]].
-    */
-  private def readFile(name: String, ctx: ScanCtx, f: DataFileRec,
-      withPos: Boolean, withRowIdCol: Boolean = false,
-      liveAt: Option[Long] = None, skipping: Option[FileSkipping] = None): DataFrame =
-    readGroup(name, Seq(f), physOf(ctx, f), injectedValues(ctx, f), withPos,
-      withRowIdCol, ctx.history, ctx.nestedDefaults, liveAt, skipping)
 
   /** Inlined catalog rows visible at `snap`, parsed with the column names
     * of each row's write epoch and projected (by column_id) to the pinned
@@ -1486,13 +1491,16 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       }
   }
 
-  /** Snapshot-pinned scan. Files with identical physical-schema epochs
-    * and partition values batch into one multi-file parquet read (plan
-    * shape parity with reference src/table.rs:611-649), whether or not
-    * they carry deletes: MOR delete files and merged-file visible-row
-    * limits apply inside that scan ([[DuckLakeParquetFormat]], the
-    * counterpart of the reference's DeleteFilterExec,
-    * src/delete_filter.rs), so the plan holds no join.
+  /** Snapshot-pinned scan: one multi-file parquet read per read group
+    * ([[readGroups]]; plan shape parity with reference
+    * src/table.rs:611-649), whether or not its files carry deletes: MOR
+    * delete files and merged-file visible-row limits apply inside that
+    * scan ([[DuckLakeParquetFormat]], the counterpart of the reference's
+    * DeleteFilterExec, src/delete_filter.rs), so the plan holds no join.
+    * Virtual columns (reference: tests/sqllogictests/sql/virtualcolumns/)
+    * are expressions over each file's `_metadata` values and the row
+    * index ([[DuckLake.virtualColumn]]), so they read in the same scans;
+    * only a merged file asked for row provenance reads alone.
     */
   def table(name: String, snapshot: Option[Long] = None,
       pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
@@ -1526,50 +1534,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       return inlined.getOrElse(
         spark.createDataFrame(new java.util.ArrayList[Row](), outSchema))
 
-    if (vset.isEmpty) {
-      val scans = files.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f)))
-        .map { case ((phys, pv), fs) =>
-          readGroup(name, fs, phys, pv, withPos = false, history = ctx.history,
-            nestedDefaults = ctx.nestedDefaults, liveAt = Some(snap),
-            skipping = Some(skipping))
-        }.toSeq
-      (scans ++ inlined).reduce(_ unionByName _)
-    } else {
-      // virtual columns (reference: tests/sqllogictests/sql/virtualcolumns/)
-      // carry PER-FILE values, so the scan reads file-at-a-time — the
-      // diagnostic path; ordinary scans keep the batched groups above
-      val needPos = vset(DuckLake.VirtualRowNumber) || vset(DuckLake.VirtualPos) ||
-        vset(DuckLake.VirtualRowId) ||
-        (vset(DuckLake.VirtualSnapshot) && files.exists(_.segments.nonEmpty))
-      val scans = files.map { f =>
-        val explicitIds = vset(DuckLake.VirtualRowId) &&
-          f.rowIdStart.isEmpty && f.segments.isEmpty
-        val base = readFile(name, ctx, f, withPos = needPos,
-          withRowIdCol = explicitIds, liveAt = Some(snap), skipping = Some(skipping))
-        val txnLocal = txnSnap.contains(f.beginSnapshot)
-        val withNum = Seq(DuckLake.VirtualRowNumber, DuckLake.VirtualPos)
-          .filter(vset).foldLeft(base)((d, v) => d.withColumn(v, col("__ducklake_pos")))
-        // stable per-table row id: provisional 1e18-based while the
-        // file's txn is still open
-        val (rowId, born) = DuckLake.provenanceAt(f, col("__ducklake_pos"),
-          if (txnLocal) DuckLake.TxnLocalRowIdBase - txnBase else 0L)
-        var d = if (vset(DuckLake.VirtualRowId)) withNum.withColumn(DuckLake.VirtualRowId, rowId)
-          else withNum
-        if (vset(DuckLake.VirtualSnapshot))
-          d = d.withColumn(DuckLake.VirtualSnapshot,
-            if (txnLocal) lit(null).cast(LongType) else born)
-        if (needPos) d = d.drop("__ducklake_pos")
-        if (explicitIds) d = d.drop(DuckLake.RowIdPhysCol)
-        if (vset(DuckLake.VirtualFileId))
-          d = d.withColumn(DuckLake.VirtualFileId, lit(f.dataFileId))
-        if (vset(DuckLake.VirtualFileIndex))
-          d = d.withColumn(DuckLake.VirtualFileIndex, lit(files.indexOf(f).toLong))
-        if (vset(DuckLake.VirtualFilename))
-          d = d.withColumn(DuckLake.VirtualFilename, lit(dataFilePath(name, f)))
-        d
-      }
-      (scans ++ inlined).reduce(_ unionByName _)
-    }
+    val txn = txnSnap.map(_ -> (DuckLake.TxnLocalRowIdBase - txnBase))
+    val scan = readAll(ctx, files, Some(snap), DuckLake.asksProvenance(vset),
+      (head, field) => vset.toSeq.map(v => DuckLake.virtualColumn(v, head, field, txn).as(v)),
+      Some(skipping))
+    inlined.fold(scan)(scan.unionByName)
   }
 
   /** The snapshot, table and columns a scan of `name` at `snapshot` pins. */
@@ -1805,12 +1774,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         .parquet(deletePartials.map(_.toString): _*)
         .select(col("_fid").as("__fid"), col("pos"))
       val touched = touchedFids.toSeq.sorted.flatMap(filesById.get)
-      val previous = touched.flatMap(f => f.deleteFile.map(positionsOf(name, _, f.dataFileId)))
+      val dir = tableDirOf(name)
+      val previous = touched.flatMap(f => f.deleteFile.map(positionsOf(dir, _, f.dataFileId)))
         .reduceOption(_ union _)
       import spark.implicits._
       val fidFilter = broadcast(touched.map(_.dataFileId).toDF("__fid"))
       writeDeleteFiles(name, previous.fold(partial)(partial.union).join(fidFilter, "__fid"),
-        touched.map(f => f.dataFileId -> dataFilePath(name, f)).toMap)
+        touched.map(f => f.dataFileId -> under(dir, f.path, f.pathIsRelative)).toMap)
     }
     val hiveNames = hiveNamesFor(name, partitionFieldsOf(name))
     val (newFiles, renamed) = stageIntoTableDir(schemaName, tableName, stagedNew,
@@ -2343,7 +2313,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val tr = resolveTable(name, snap)
     val cols = store.getTableColumns(tr.tableId, snap)
     val ctx = scanCtx(tr, cols, snap)
-    val history = store.getColumnHistory(tr.tableId)
+    val history = ctx.history
     val maxBytes = getOption("target_file_size", name)
       .flatMap(parseByteSize).getOrElse(Long.MaxValue)
     val identityIds = ctx.partCols.collect { case (_, cid, None) => cid }.toSet
@@ -2403,19 +2373,15 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
           else colsAt(epoch)
         val physSchema = StructType(physCols.map(c =>
           StructField(c.name, TypeBridge.toSpark(c.dtype), nullable = true)))
-        val union = run.zipWithIndex.map { case (f, i) =>
-          (if (hasAdopted)
-            readFile(name, ctx, f, withPos = true)
-              .select(physCols.map(c => col(c.name)) :+ col("__ducklake_pos"): _*)
-          else
-            reader(Seq(f.path -> f.encryptionKey)).schema(physSchema)
-              .parquet(dataFilePath(name, f))
-              .select(physCols.map(c => col(c.name)) :+
-                col("_metadata.row_index").as("__ducklake_pos"): _*))
-            .withColumn("__mf", lit(i))
-        }.reduce(_ unionByName _)
-        val ordered = union.repartition(1)
-          .sortWithinPartitions(col("__mf"), col("__ducklake_pos"))
+        val order = (_: DataFileRec, field: String => Column) =>
+          Seq(field(LakeFile.FileIndex).as("__mf"), field(LakeFile.RowIndex).as("__pos"))
+        val rows =
+          if (hasAdopted) readAll(ctx, run, None, extra = order)
+          else readGroup(LakeReadGroup(physSchema, physCols.map(c => c.name -> col(c.name)),
+            Map.empty, run.zipWithIndex.map { case (f, i) => f -> lakeFile(ctx.dir, f, None, i) }),
+            order)
+        val ordered = rows.repartition(1)
+          .sortWithinPartitions(col("__mf"), col("__pos"))
           .select(physCols.map(c => col(c.name)): _*)
         val w = ordered.write.mode("overwrite").options(writeOptions(name, keyOpt))
         withWriterSessionConf(w.parquet(s"$staging/g$gi"))
@@ -2688,9 +2654,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       // merges across partition boundaries)
       val groups = candidates.groupBy(ctx.partTuple).toSeq
       val staged = groups.zipWithIndex.map { case ((pv, gfs), i) =>
-        val df = gfs.map(readFile(name, ctx, _, withPos = false, liveAt = Some(snap)))
-          .reduce(_ unionByName _)
-          .select(dataColNames.map(col): _*)
+        val df = readAll(ctx, gfs, Some(snap)).select(dataColNames.map(col): _*)
         val w = df.coalesce(1).write.mode("overwrite").options(writeOptions(name, keyOpt))
         withWriterSessionConf(w.parquet(s"$staging/g$i"))
         val part = fs.listStatus(new Path(s"$staging/g$i"))
@@ -3025,18 +2989,15 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val files = store.getDataFilesAddedBetween(tr.tableId, from, to)
     if (files.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val ctx = scanCtx(tr, cols, to)
-    files.map { f =>
-      readFile(name, ctx, f, withPos = false)
-        .withColumn("snapshot_id", lit(f.beginSnapshot))
-        .withColumn("change_type", lit("insert"))
-    }.reduce(_ unionByName _)
+    readAll(scanCtx(tr, cols, to), files, None, extra = (_, field) =>
+      Seq(field(LakeFile.BeginSnapshot).as("snapshot_id"), lit("insert").as("change_type")))
   }
 
   /** Rows deleted in snapshot range (from, to]: per delete file, position
     * delta vs the previous delete file (full-file deletes = all positions),
-    * semi-joined back onto the data file (reference:
-    * src/table_deletions.rs:59-664; delta :545-554, full-file :498-513).
+    * joined back onto the data files' rows by (file id, position)
+    * (reference: src/table_deletions.rs:59-664; delta :545-554, full-file
+    * :498-513).
     */
   def tableDeletions(name: String, from: Long, to: Long): DataFrame = {
     if (from > to) throw new InvalidSnapshotException(s"start $from > end $to")
@@ -3049,28 +3010,40 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     if (entries.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
     val ctx = scanCtx(tr, cols, to)
+    // a replaced file's end snapshot is by construction in range
+    val deleted = deletedPositions(ctx.dir, entries, _ => to)
+    addressedRows(ctx, entries.map(_._3), Nil)
+      .join(broadcast(deleted), Seq("__fid", "__pos"))
+      .select(cols.map(c => col(c.name)) :+ col("__dsnap").as("snapshot_id") :+
+        lit("delete").as("change_type"): _*)
+  }
+
+  /** The positions each of `entries` (delete files added in a range, see
+    * `getDeleteFilesAddedBetween`) newly deletes — all of them for a
+    * full-file delete, else those not in the previous delete file — as
+    * `(__fid, __pos, __dsnap)` over the table in `dir`; `__dsnap` is the
+    * delete file's snapshot, or `replacedAt` of a fully deleted file.
+    */
+  private def deletedPositions(dir: String,
+      entries: Seq[(Option[DeleteFileRec], Option[DeleteFileRec], DataFileRec)],
+      replacedAt: DataFileRec => Long): DataFrame =
     entries.map { case (delOpt, prevOpt, dataFile) =>
       val current: DataFrame = delOpt match {
-        case Some(d) => deleteRows(name, d).select("pos")
-        case None => // full-file delete (Replace): every position
-          spark.range(dataFile.recordCount).select(col("id").as("pos"))
+        case Some(d) => deleteRows(dir, d).select("pos")
+        case None => spark.range(dataFile.recordCount).select(col("id").as("pos"))
       }
-      val delta = prevOpt match {
-        case Some(p) =>
-          current.except(deleteRows(name, p).select("pos"))
-        case None => current
-      }
-      val snapId = delOpt.map(_.beginSnapshot).getOrElse {
-        // end_snapshot of the replaced file: by construction in range
-        store.getDataFileById(tr.tableId, dataFile.dataFileId); to
-      }
-      readFile(name, ctx, dataFile, withPos = true)
-        .join(broadcast(delta), col("__ducklake_pos") === col("pos"), "left_semi")
-        .drop("__ducklake_pos")
-        .withColumn("snapshot_id", lit(snapId))
-        .withColumn("change_type", lit("delete"))
-    }.reduce(_ unionByName _)
-  }
+      prevOpt.fold(current)(p => current.except(deleteRows(dir, p).select("pos")))
+        .select(lit(dataFile.dataFileId).as("__fid"), col("pos").as("__pos"),
+          lit(delOpt.fold(replacedAt(dataFile))(_.beginSnapshot)).as("__dsnap"))
+    }.reduce(_ union _)
+
+  /** Every physical row of `files` (distinct by id) in the pinned catalog
+    * columns, addressed by `(__fid, __pos)`, plus virtual columns `v`.
+    */
+  private def addressedRows(ctx: ScanCtx, files: Seq[DataFileRec], v: Seq[String]): DataFrame =
+    readAll(ctx, files.distinctBy(_.dataFileId), None, DuckLake.asksProvenance(v.toSet),
+      (head, field) => v.map(n => DuckLake.virtualColumn(n, head, field).as(n)) ++
+        Seq(field(LakeFile.FileId).as("__fid"), field(LakeFile.RowIndex).as("__pos")))
 
   /** Reference-shaped CDC (`ducklake.table_changes(t, from, to)`):
     * `(snapshot_id, rowid, change_type, cols…)` over the INCLUSIVE
@@ -3095,13 +3068,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         if changes.exists(e => e._1 == "flushed_inlined" && e._2 == tr.tableId.toString) => id
     }.toSet
 
-    // one file's rows with their stable rowid and birth snapshot
-    def rowsOf(f: DataFileRec): DataFrame = {
-      val (rowId, born) = DuckLake.provenanceAt(f, col("__ducklake_pos"))
-      readFile(name, ctx, f, withPos = true,
-        withRowIdCol = f.rowIdStart.isEmpty && f.segments.isEmpty)
-        .withColumn("rowid", rowId).withColumn("snapshot_id", born)
-    }
+    // files' rows with their stable rowid and birth snapshot
+    def rowsOf(files: Seq[DataFileRec]): Option[DataFrame] =
+      Option.when(files.nonEmpty)(addressedRows(ctx, files,
+        Seq(DuckLake.VirtualRowId, DuckLake.VirtualSnapshot)))
 
     // inlined rows parsed at the range-end schema
     def inlineRows(rows: Seq[(Long, Long, String)]): Option[DataFrame] = {
@@ -3121,35 +3091,23 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val segsMap = store.getFileSegments(tr.tableId)
     def withSegs(f: DataFileRec): DataFileRec =
       f.copy(segments = segsMap.getOrElse(f.dataFileId, Nil))
-    val insFileDfs = store.getDataFilesAddedBetween(tr.tableId, from - 1, to)
-      .filterNot(f => flushSnaps(f.beginSnapshot))
-      .map(withSegs)
-      .map(f => rowsOf(f)
-        .filter(col("snapshot_id") >= from && col("snapshot_id") <= to)
+    val insFileDfs = rowsOf(store.getDataFilesAddedBetween(tr.tableId, from - 1, to)
+        .filterNot(f => flushSnaps(f.beginSnapshot)).map(withSegs))
+      .map(_.filter(col("snapshot_id") >= from && col("snapshot_id") <= to)
         .select(Seq(col("snapshot_id"), col("rowid")) ++ colExprs: _*))
     val insInline = inlineRows(rawInlined
       .filter(r => r._2 >= from && r._2 <= to).map(r => (r._1, r._2, r._4)))
     val inserts = (insFileDfs ++ insInline).reduceOption(_ unionByName _)
 
     // --- deleted rows: delete-file deltas + ended inlined rows ---
-    val delFileDfs = store.getDeleteFilesAddedBetween(tr.tableId, from - 1, to)
-      .map { case (delOpt, prevOpt, dataFile) =>
-        val current: DataFrame = delOpt match {
-          case Some(d) => deleteRows(name, d).select("pos")
-          case None => spark.range(dataFile.recordCount).select(col("id").as("pos"))
-        }
-        val delta = prevOpt match {
-          case Some(p) => current.except(deleteRows(name, p).select("pos"))
-          case None => current
-        }
-        // full-file deletes happen at the file's END snapshot, not `to`
-        val snapId = delOpt.map(_.beginSnapshot)
-          .orElse(store.dataFileEndSnapshot(dataFile.dataFileId)).getOrElse(to)
-        rowsOf(withSegs(dataFile))
-          .join(broadcast(delta), col("__ducklake_pos") === col("pos"), "left_semi")
-          .withColumn("snapshot_id", lit(snapId))
-          .select(Seq(col("snapshot_id"), col("rowid")) ++ colExprs: _*)
-      }
+    val delEntries = store.getDeleteFilesAddedBetween(tr.tableId, from - 1, to)
+    val delFileDfs = rowsOf(delEntries.map(e => withSegs(e._3))).map { rows =>
+      // full-file deletes happen at the file's END snapshot, not `to`
+      val deleted = deletedPositions(ctx.dir, delEntries,
+        f => store.dataFileEndSnapshot(f.dataFileId).getOrElse(to))
+      rows.join(broadcast(deleted), Seq("__fid", "__pos"))
+        .select(Seq(col("__dsnap").as("snapshot_id"), col("rowid")) ++ colExprs: _*)
+    }
     val delInline = inlineRows(rawInlined
       .filter(r => r._3.exists(e => e >= from && e <= to && !flushSnaps(e)))
       .map(r => (r._1, r._3.get, r._4)))
@@ -3257,10 +3215,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       throw new SchemaNotFoundException(s"schema $schema does not exist"))
     val tbl = store.getTableByName(sch.schemaId, table, snap).getOrElse(
       throw new TableNotFoundException(s"table $schema.$table does not exist"))
-    val name = s"$schema.$table"
+    val dir = DuckLake.tableDir(dataPath, sch.path, tbl)
     store.getDataFiles(tbl.tableId, snap).map { f =>
-      (dataFilePath(name, f), f.fileSizeBytes, f.footerSize,
-        f.deleteFile.map(d => filePath(name, d.path)),
+      (under(dir, f.path, f.pathIsRelative), f.fileSizeBytes, f.footerSize,
+        f.deleteFile.map(d => s"$dir/${d.path}"),
         f.deleteFile.map(_.fileSizeBytes))
     }.toDF("data_file", "data_file_size_bytes", "data_file_footer_size",
       "delete_file", "delete_file_size_bytes")
@@ -3481,18 +3439,21 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 }
 
 /** One read group of a lake scan, as [[DuckLake.readGroups]] hands it to
-  * the connector: the physical columns its files are read with, the
+  * every reader: the physical columns its files are read with, the
   * facade's projection from them onto each pinned catalog column (by
-  * name), and every file with its [[LakeFile]] entry.
+  * name), the catalog name of each physical data column (for file
+  * skipping), and every file with its [[LakeFile]] entry.
   */
 private[lake] final case class LakeReadGroup(physSchema: StructType,
-    projection: Seq[(String, Column)], files: Seq[(DataFileRec, LakeFile)])
+    projection: Seq[(String, Column)], names: Map[String, String],
+    files: Seq[(DataFileRec, LakeFile)])
 
-/** Per-scan resolution context: pinned column defs, rename/promotion
-  * history, and partitioning metadata — all fetched once per scan, so
-  * planning does O(1) metadata queries regardless of file count.
+/** Per-scan resolution context: the table directory, pinned column
+  * defs, rename/promotion history, and partitioning metadata — all
+  * fetched once per scan, so planning does O(1) metadata queries
+  * regardless of file count.
   */
-private[lake] final case class ScanCtx(cols: Seq[ColumnDef],
+private[lake] final case class ScanCtx(dir: String, cols: Seq[ColumnDef],
     history: Seq[(ColumnDef, Long, Option[Long])],
     partCols: Seq[(Int, Long, Option[String])],
     partValsByFile: Map[Long, Map[Int, Option[String]]],
@@ -3772,32 +3733,56 @@ object DuckLake {
     */
   final val RowIdPhysCol = "_ducklake_row_id"
 
-  /** Provenance of the row at file position `pos` of data file `f`: its
-    * stable row id and the snapshot that committed it. A merged file maps
-    * `pos` through its segment map (each span keeps its original commit
-    * and ids); a file with a row-id range adds `pos` to the range start;
-    * an UPDATE-written file reads its explicit id column — never shifted,
-    * its rows are updated versions keeping their ids. `shift` moves range
-    * ids into the transaction-local form. `perFile` gives the range start
-    * and birth snapshot as columns (a grouped read's per-file values)
-    * instead of `f`'s literals, so one projection serves many files.
+  /** The `_metadata` column of a file relation. */
+  private val MetadataColumn = org.apache.spark.sql.execution.datasources.FileFormat.METADATA_NAME
+
+  /** Provenance of the rows of a read group whose first file is `f`:
+    * each row's stable row id and the snapshot that committed it, over
+    * the group's per-file values (`field(name)`: a [[LakeFile.Fields]]
+    * field or [[LakeFile.RowIndex]], the row's file position). A merged
+    * file (its own group) maps the position through its segment map
+    * (each span keeps its original commit and ids); a file with a row-id
+    * range adds the position to the range start; an UPDATE-written file
+    * reads its explicit id column — never shifted, its rows are updated
+    * versions keeping their ids. `shift` moves range ids into the
+    * transaction-local form.
     */
-  def provenanceAt(f: DataFileRec, pos: Column, shift: Long = 0L,
-      perFile: Option[(Column, Column)] = None): (Column, Column) = {
+  def provenanceAt(f: DataFileRec, field: String => Column,
+      shift: Option[Column] = None): (Column, Column) = {
+    val pos = field(LakeFile.RowIndex)
+    def shifted(start: Column): Column = shift.fold(start)(start + _)
     def bySegment(value: FileSegment => Column): Column =
       f.segments.foldRight(lit(null).cast(LongType)) { (s, acc) =>
         when(pos >= s.startPos && pos < s.startPos + s.rowCount, value(s)).otherwise(acc)
       }
     if (f.segments.nonEmpty)
-      (bySegment(s => s.rowIdStart.map(r => lit(r + shift) + (pos - s.startPos))
+      (bySegment(s => s.rowIdStart.map(r => shifted(lit(r)) + (pos - s.startPos))
         .getOrElse(lit(null).cast(LongType))), bySegment(s => lit(s.beginSnapshot)))
-    else {
-      val rowId = f.rowIdStart match {
-        case Some(start) => perFile.fold(lit(start + shift))(_._1 + shift) + pos
-        case None        => col(RowIdPhysCol).cast(LongType)
-      }
-      (rowId, perFile.fold(lit(f.beginSnapshot))(_._2))
-    }
+    else if (f.rowIdStart.isDefined)
+      (shifted(field(LakeFile.RowIdStart)) + pos, field(LakeFile.BeginSnapshot))
+    else (col(RowIdPhysCol).cast(LongType), field(LakeFile.BeginSnapshot))
+  }
+
+  /** Whether a read of virtual columns `v` asks for row provenance. */
+  def asksProvenance(v: Set[String]): Boolean = v(VirtualRowId) || v(VirtualSnapshot)
+
+  /** Virtual column `v` of the rows of a read group whose first file is
+    * `head`, over its per-file values `field` (as in [[provenanceAt]]).
+    * Rows of files born in the open transaction `txn` (its snapshot, and
+    * the shift into provisional ids) read provisional row ids and a null
+    * snapshot.
+    */
+  def virtualColumn(v: String, head: DataFileRec, field: String => Column,
+      txn: Option[(Long, Long)] = None): Column = v match {
+    case VirtualFileId => field(LakeFile.FileId)
+    case VirtualFileIndex => field(LakeFile.FileIndex)
+    case VirtualFilename => field(LakeFile.Filename)
+    case VirtualPos | VirtualRowNumber => field(LakeFile.RowIndex)
+    case VirtualRowId | VirtualSnapshot =>
+      val local = txn.map { case (s, _) => field(LakeFile.BeginSnapshot) === s }
+      val (rowId, born) = provenanceAt(head, field,
+        txn.map { case (_, shift) => when(local.get, shift).otherwise(0L) })
+      if (v == VirtualRowId) rowId else local.fold(born)(l => when(!l, born))
   }
 
   def virtualType(v: String): DataType = v match {

@@ -11,7 +11,7 @@ import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, FileSourceConstantMetadataStructField, UnsafeProjection}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
@@ -32,7 +32,10 @@ import graft.lake.crypto.GraftCryptoFactory
   * the connector's Batch and stream); the reader drops every row whose
   * parquet row index is deleted or at/past the limit. Positions come from
   * the row index Spark generates for `_metadata.row_index`, so they stay
-  * right when a file is split or row groups are skipped.
+  * right when a file is split or row groups are skipped. The file's lake
+  * values are `_metadata` fields too, so a read of virtual columns stays
+  * one relation per read group (as Delta Lake's row tracking derives
+  * `_metadata.row_id` from a per-file base and the row index).
   *
   * `hidesRows` says whether any file of the relation has rows to hide.
   * Without it the format is plain `ParquetFileFormat`. With it, every
@@ -49,6 +52,13 @@ final class DuckLakeParquetFormat(val hidesRows: Boolean) extends ParquetFileFor
   }
 
   override def hashCode(): Int = getClass.hashCode * 31 + hidesRows.hashCode
+
+  /** Spark's fields plus each file's lake values ([[LakeFile.Fields]]),
+    * constants per file filled from its [[LakeFile.metadata]].
+    */
+  override def metadataSchemaFields: Seq[StructField] =
+    super.metadataSchemaFields ++ LakeFile.Fields.map(f =>
+      FileSourceConstantMetadataStructField(f.name, f.dataType, f.nullable))
 
   override def supportBatch(sparkSession: SparkSession, schema: StructType): Boolean =
     super.supportBatch(sparkSession, if (hidesRows) withRowIndex(schema) else schema)

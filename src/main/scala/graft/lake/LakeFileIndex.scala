@@ -2,31 +2,65 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** One data file of a lake read, as the catalog records it: qualified
-  * path and size, plus what the scan must hide — the MOR delete file
-  * (resolved path and encryption key) and, for a merged file read at a
-  * snapshot before the merge, the number of leading rows visible there.
+  * path and size; the file's own values that reads expose as virtual
+  * columns — data file id, index in the read's file list, the path the
+  * catalog resolves (`filename`), row-id range start (none for an
+  * UPDATE-written file) and birth snapshot; and what the scan must hide —
+  * the MOR delete file (resolved path and encryption key) and, for a
+  * merged file read at a snapshot before the merge, the number of leading
+  * rows visible there.
   */
-final case class LakeFile(path: String, size: Long,
+final case class LakeFile(path: String, size: Long, fileId: Long, fileIndex: Long,
+    filename: String, rowIdStart: Option[Long], beginSnapshot: Long,
     deletePath: Option[String] = None, deleteKey: Option[String] = None,
     visibleRows: Option[Long] = None) {
 
   def hidesRows: Boolean = deletePath.isDefined || visibleRows.isDefined
 
-  /** Per-file values [[DuckLakeParquetFormat]] reads back from
-    * `PartitionedFile.otherConstantMetadataColumnValues`.
+  /** Per-file values Spark hands the reader as
+    * `PartitionedFile.otherConstantMetadataColumnValues`: the
+    * [[LakeFile.Fields]] that [[DuckLakeParquetFormat]] serves as
+    * `_metadata` fields (an absent one reads null), and what the reader
+    * hides.
     */
   def metadata: Map[String, Any] =
-    deletePath.map(LakeFile.DeletePath -> _).toMap ++
+    Map(LakeFile.FileId -> fileId, LakeFile.FileIndex -> fileIndex,
+      LakeFile.Filename -> filename, LakeFile.BeginSnapshot -> beginSnapshot) ++
+      rowIdStart.map(LakeFile.RowIdStart -> _) ++
+      deletePath.map(LakeFile.DeletePath -> _) ++
       deleteKey.map(LakeFile.DeleteKey -> _) ++
       visibleRows.map(LakeFile.VisibleRows -> _)
+
+  /** The [[LakeFile.Fields]] values as one row (the connector reader's
+    * partition values), converted as Spark converts `_metadata` values.
+    */
+  def fieldValues: InternalRow = {
+    val values = metadata
+    InternalRow.fromSeq(LakeFile.Fields.map(f => values.get(f.name).map(Literal(_).value).orNull))
+  }
 }
 
 object LakeFile {
+  val FileId = "ducklake_file_id"
+  val FileIndex = "ducklake_file_index"
+  val Filename = "ducklake_filename"
+  val RowIdStart = "ducklake_row_id_start"
+  val BeginSnapshot = "ducklake_begin_snapshot"
+  /** The position of a row in its file: Spark's parquet row index. */
+  val RowIndex: String = ParquetFileFormat.ROW_INDEX
+
+  /** The per-file values every lake read can ask for. */
+  val Fields: Seq[StructField] = Seq(StructField(FileId, LongType, nullable = false),
+    StructField(FileIndex, LongType, nullable = false),
+    StructField(Filename, StringType, nullable = false),
+    StructField(RowIdStart, LongType), StructField(BeginSnapshot, LongType, nullable = false))
+
   val DeletePath = "ducklake_delete_path"
   val DeleteKey = "ducklake_delete_key"
   val VisibleRows = "ducklake_visible_rows"

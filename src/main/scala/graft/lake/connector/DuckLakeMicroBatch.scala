@@ -16,7 +16,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.lake.{DuckLake, DuckLakeParquetFormat, LakeFile}
 
@@ -32,17 +31,18 @@ final case class SnapshotOffset(snapshot: Long) extends Offset {
 }
 
 /** One data file of a row-level scan, SPJ scan or micro-batch: the file
-  * (path, size, and the delete file and visible-row limit its scan
-  * hides), the reader of its read group ([[graft.lake.DuckLakeParquetFormat]]
-  * in row mode), the group's projection onto the scan's columns, bound
-  * to the reader's rows, and the file's own values (data file id,
-  * row-id range start, birth snapshot, filename, file index) that the
-  * reader appends as partition values. Column mapping is the facade's:
-  * no column is resolved here.
+  * (path, size, its per-file values, and the delete file and visible-row
+  * limit its scan hides), the reader of its read group
+  * ([[graft.lake.DuckLakeParquetFormat]] in row mode), and the group's
+  * projection onto the scan's columns, bound to the reader's rows: the
+  * group's physical columns and row index, then the file's
+  * [[graft.lake.LakeFile.Fields]] values, which the reader appends as
+  * partition values. Column mapping is the facade's: no column is
+  * resolved here.
   */
 final case class DuckLakeFilePartition(file: LakeFile,
     read: PartitionedFile => Iterator[InternalRow],
-    projection: Seq[Expression], values: InternalRow) extends InputPartition
+    projection: Seq[Expression]) extends InputPartition
 
 /** A file partition tagged with its hive-partition key — the handle
   * Spark's storage-partitioned join (SPJ) machinery groups by: two lake
@@ -67,70 +67,43 @@ final case class DuckLakeInlinedPartition(rows: Array[InternalRow]) extends Inpu
   * physical columns, projection and files; per group the projection is
   * analyzed, optimized and bound here ONCE, over the group's physical
   * columns, the parquet row index and the per-file values, so the
-  * files of a group share one generated projection. Row addresses come
-  * from the row index (`_pos`) and [[DuckLake.provenanceAt]] (`rowid`,
-  * `snapshot_id`); a merged file, whose segment map is a per-file
-  * expression, gets its own projection when the scan asks for either.
+  * files of a group share one generated projection. Virtual columns are
+  * the facade's ([[DuckLake.virtualColumn]]) over the same per-file
+  * values the facade's scans read as `_metadata` fields.
   */
 private[connector] object DuckLakePartitionPlanner {
-  import graft.lake.{ColumnDef, DataFileRec, TableRec}
+  import graft.lake.{DataFileRec, ScanCtx}
 
   private val Pos = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
-  /** The per-file values, in [[DuckLakeFilePartition.values]] order. */
-  private val FileValues = StructType(Seq(
-    StructField("__ducklake_file_id", LongType, nullable = false),
-    StructField("__ducklake_row_id_start", LongType),
-    StructField("__ducklake_begin_snapshot", LongType, nullable = false),
-    StructField("__ducklake_filename", StringType),
-    StructField("__ducklake_file_index", LongType, nullable = false)))
+  private val FileFields = StructType(LakeFile.Fields)
 
-  /** Partitions of `files` (table `tr` at `snap`, pinned columns `cols`)
-    * in catalog order, each with its file's catalog row.
+  /** Partitions of `files` (catalog rows of the table `ctx` pins) in the
+    * order of `files`.
     */
-  def plan(lake: DuckLake, name: String, tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      files: Seq[DataFileRec], required: StructType,
-      liveAt: Option[Long]): Seq[(DataFileRec, DuckLakeFilePartition)] = {
-    val asked = required.fieldNames.toSet
-    val provenance = asked(DuckLake.VirtualRowId) || asked(DuckLake.VirtualSnapshot)
+  def plan(lake: DuckLake, ctx: ScanCtx, files: Seq[DataFileRec], required: StructType,
+      liveAt: Option[Long]): Seq[DuckLakeFilePartition] = {
     val keys = lake.decryptOptions(files.map(f => new Path(f.path).getName -> f.encryptionKey))
     // one reader per read schema, each with its OWN conf: the reader
     // writes its requested schema into the conf it broadcasts
     val readers = mutable.Map.empty[(StructType, Boolean), PartitionedFile => Iterator[InternalRow]]
-    val order = files.map(_.dataFileId).zipWithIndex.toMap
-    lake.readGroups(name, tr, cols, snap, files, liveAt)
+    def field(name: String): Column = col(if (name == LakeFile.RowIndex) Pos else name)
+    lake.readGroups(ctx, files, liveAt, DuckLake.asksProvenance(required.fieldNames.toSet))
       .flatMap { g =>
         val byName = g.projection.toMap
-        val (merged, plain) = g.files.partition(_._1.segments.nonEmpty && provenance)
-        (plain +: merged.map(Seq(_))).filter(_.nonEmpty).flatMap { fs =>
-          val (rowId, born) = DuckLake.provenanceAt(fs.head._1, col(Pos),
-            perFile = Some((col(FileValues(1).name), col(FileValues(2).name))))
-          val columns = required.fields.toSeq.map { f =>
-            f.name match {
-              case DuckLake.VirtualFileId => col(FileValues(0).name)
-              case DuckLake.VirtualPos | DuckLake.VirtualRowNumber => col(Pos)
-              case DuckLake.VirtualRowId => rowId
-              case DuckLake.VirtualSnapshot => born
-              case DuckLake.VirtualFilename => col(FileValues(3).name)
-              case DuckLake.VirtualFileIndex => col(FileValues(4).name)
-              case n => byName.getOrElse(n, lit(null).cast(f.dataType))
-            }
-          }
-          val (readSchema, projection) = bind(lake,
-            g.physSchema.add(Pos, LongType, nullable = true), columns)
-          val hides = fs.exists(_._2.hidesRows)
-          val read = readers.getOrElseUpdate((readSchema, hides),
-            new DuckLakeParquetFormat(hides).buildReaderWithPartitionValues(lake.spark,
-              StructType(readSchema.filterNot(_.name == Pos)), FileValues, readSchema, Nil,
-              Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), lake.hadoopConfWith(keys)))
-          fs.map { case (f, file) =>
-            val filename = if (!asked(DuckLake.VirtualFilename)) null
-              else UTF8String.fromString(lake.dataFilePath(name, f))
-            f -> DuckLakeFilePartition(file, read, projection, new GenericInternalRow(
-              Array[Any](f.dataFileId, f.rowIdStart.map(Long.box).orNull, f.beginSnapshot,
-                filename, order(f.dataFileId).toLong)))
-          }
+        val columns = required.fields.toSeq.map { f =>
+          if (DuckLake.VirtualNames.contains(f.name))
+            DuckLake.virtualColumn(f.name, g.files.head._1, field)
+          else byName.getOrElse(f.name, lit(null).cast(f.dataType))
         }
-      }.sortBy { case (f, _) => order(f.dataFileId) }
+        val (readSchema, projection) = bind(lake,
+          g.physSchema.add(Pos, LongType, nullable = true), columns)
+        val hides = g.files.exists(_._2.hidesRows)
+        val read = readers.getOrElseUpdate((readSchema, hides),
+          new DuckLakeParquetFormat(hides).buildReaderWithPartitionValues(lake.spark,
+            StructType(readSchema.filterNot(_.name == Pos)), FileFields, readSchema, Nil,
+            Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), lake.hadoopConfWith(keys)))
+        g.files.map { case (_, file) => DuckLakeFilePartition(file, read, projection) }
+      }.sortBy(_.file.fileIndex)
   }
 
   /** `columns` over rows of `input` followed by the per-file values,
@@ -140,7 +113,7 @@ private[connector] object DuckLakePartitionPlanner {
     */
   private def bind(lake: DuckLake, input: StructType,
       columns: Seq[Column]): (StructType, Seq[Expression]) = {
-    val frame = ColumnBridge.internalFrame(lake.spark, StructType(input ++ FileValues),
+    val frame = ColumnBridge.internalFrame(lake.spark, StructType(input ++ FileFields),
       lake.spark.sparkContext.emptyRDD[InternalRow])
     val attrs = frame.queryExecution.analyzed.output
     val exprs = frame.select(columns: _*).queryExecution.optimizedPlan match {
@@ -266,9 +239,9 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
           "with a fresh checkpoint location")
     val tr = tableRec
     // appends-only semantics: delete files are NOT applied to streamed rows
-    DuckLakePartitionPlanner.plan(lake, fullName, tr, lake.store.getTableColumns(tr.tableId, b),
-      b, lake.store.getDataFilesAddedBetween(tr.tableId, a, b), required,
-      liveAt = None).map(_._2).toArray
+    DuckLakePartitionPlanner.plan(lake,
+      lake.scanCtx(tr, lake.store.getTableColumns(tr.tableId, b), b),
+      lake.store.getDataFilesAddedBetween(tr.tableId, a, b), required, liveAt = None).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = DuckLakeFileReaderFactory
@@ -312,10 +285,11 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     lake.partitionFieldsOf(fullName, Some(snapshot))
 
   private lazy val tr = lake.resolveTable(fullName, snapshot)
-  private lazy val cols = lake.store.getTableColumns(tr.tableId, snapshot)
+  private lazy val ctx = lake.scanCtx(tr, lake.store.getTableColumns(tr.tableId, snapshot),
+    snapshot)
 
   private lazy val inlined: Array[InternalRow] =
-    lake.inlinedScanRows(tr, cols, snapshot, schema)
+    lake.inlinedScanRows(tr, ctx.cols, snapshot, schema)
 
   /** Plan once, reuse from both `planInputPartitions` and
     * `outputPartitioning` (the latter needs the distinct-key count).
@@ -324,13 +298,11 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     // conservative min/max + partition-value file skipping from catalog
     // stats: pushed filters stay residual (re-applied above the scan),
     // but non-matching files never produce input partitions
-    val files = lake.pruneDataFiles(tr, cols, snapshot,
+    val files = lake.pruneDataFiles(tr, ctx.cols, snapshot,
       lake.store.getDataFiles(tr.tableId, snapshot), pushedFilters)
-    val parts = DuckLakePartitionPlanner.plan(lake, fullName, tr, cols, snapshot, files,
-      schema, Some(snapshot))
+    val parts = DuckLakePartitionPlanner.plan(lake, ctx, files, schema, Some(snapshot))
     if (!spj)
-      (parts.map(_._2: InputPartition) ++
-        Option.when(inlined.nonEmpty)(DuckLakeInlinedPartition(inlined))).toArray
+      (parts ++ Option.when(inlined.nonEmpty)(DuckLakeInlinedPartition(inlined))).toArray
     else {
       // key values in catalog partition-column order, typed as Catalyst
       // values — HasPartitionKey rows with equal keys must compare equal.
@@ -338,8 +310,8 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
       // (the directory value), each cast as the facade casts it
       val pvs = lake.store.getFilePartitionValues(tr.tableId)
       val values = mutable.Map.empty[(DataType, Option[String]), Any]
-      parts.map { case (f, p) =>
-        val byIdx = pvs.getOrElse(f.dataFileId, Map.empty)
+      parts.map { p =>
+        val byIdx = pvs.getOrElse(p.file.fileId, Map.empty)
         val key = spjFields.zipWithIndex.map { case (pf, idx) =>
           val dt = if (pf.transform.isEmpty) schema(pf.source).dataType else IntegerType
           val raw = byIdx.getOrElse(idx, None)
@@ -419,7 +391,7 @@ object DuckLakeFileReaderFactory extends PartitionReaderFactory {
 
   private def fileRows(p: DuckLakeFilePartition)
       : (Iterator[InternalRow], InternalRow => InternalRow) =
-    (p.read(PartitionedFile(p.values, SparkPath.fromPath(new Path(p.file.path)),
+    (p.read(PartitionedFile(p.file.fieldValues, SparkPath.fromPath(new Path(p.file.path)),
       0L, p.file.size, Array.empty[String], 0L, p.file.size, p.file.metadata)),
       UnsafeProjection.create(p.projection))
 }

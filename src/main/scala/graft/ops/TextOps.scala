@@ -53,15 +53,6 @@ object TextOps {
     when(total === 0L, lit(0.0))
       .otherwise((total - distinctChars).cast("double") / total)
   }
-  private val digitChars = "0123456789"
-
-  /** Count of characters from `chars` in `s`: `length - length(translate
-    * (s, chars, ''))` — one codegen'd pass, no regex engine; result is
-    * byte-identical to `length(regexp_replace(s, [^chars], ''))`.
-    */
-  private def charClassCount(s: Column, chars: String): Column =
-    length(s) - length(translate(s, chars, ""))
-
   /** Character-class ratios used by quality scoring — counts come from the
     * single-pass byte scan ([[graft.functions.TextStats]]; `translate`
     * copies the whole string per class, and the scans dominated quality

@@ -284,6 +284,31 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(df.head.getLong(0) == (0L until 1500L).filter(_ % 10 != 0).map(_ * 2).sum)
   }
 
+  test("a virtual-column read of a 16-file table analyzes to one relation and skips files") {
+    spark.sql("CREATE TABLE dlplan.main.vcplan (id BIGINT, v BIGINT)")
+    (0 until 16).foreach { f =>
+      spark.sql(s"INSERT INTO dlplan.main.vcplan " +
+        s"SELECT id, id * 2 FROM range(${f * 100}, ${f * 100 + 100}, 1, 1)")
+    }
+    val df = spark.sql("SELECT max(rowid) FROM dlplan.main.vcplan WHERE id < 100")
+    val relations = df.queryExecution.analyzed.collect { case l: LogicalRelation => l }
+    assert(relations.size == 1, df.queryExecution.analyzed.toString)
+    assert(graft.ScanMetrics.filesRead(df) == 1)
+    assert(df.head.getLong(0) == 99L)
+  }
+
+  test("a filter on a NOT NULL lake column reaches the parquet scan") {
+    spark.sql("CREATE TABLE dlplan.main.nnplan (id BIGINT NOT NULL, v BIGINT)")
+    spark.sql("INSERT INTO dlplan.main.nnplan SELECT id, id * 2 FROM range(100)")
+    val df = spark.sql("SELECT id, v FROM dlplan.main.nnplan WHERE id = 5")
+    val scans = fileScans(df.queryExecution.executedPlan)
+    assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+    assert(scans.head.metadata("PushedFilters").contains("EqualTo(id,5)"),
+      scans.head.metadata("PushedFilters"))
+    assert(!df.schema("id").nullable)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((5L, 10L)))
+  }
+
   test("the guard flips when broadcast planning is disabled (not vacuous)") {
     // Option(…) inside: adaptive.autoBroadcastJoinThreshold defaults to a
     // NULL value — it must round-trip as unset, not as set(null)

@@ -194,6 +194,58 @@ class ReadPathsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(facade("evolved") == before)
   }
 
+  test("the facade and the row-level Batch read the same row addresses and ids") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the evolved fixture's shape: a merged file with a MOR delete,
+    // adopted hive and NANOS files, then a rename and a promotion
+    val t = "main.evolved_ids"
+    val ts0 = java.time.LocalDateTime.parse("2001-02-03T04:05:06")
+    def lakeRows(ks: Seq[Int]) = ks.map(k => (Option(k), Option(s"v$k"), Option(k % 2),
+      Option(ts0.plusHours(k)))).toDF("k", "v", "pk", "ts")
+    lake.createTableAs(lakeRows(1 to 5).coalesce(1), t)
+    lake.insertInto(lakeRows(6 to 10).coalesce(1), t)
+    assert(lake.mergeAdjacentFiles(Some(t)) == 1)
+    lake.deleteWhere(t, col("k") % 4 === 0)
+    lakeRows(11 to 14).write.partitionBy("pk").parquet(s"$root/evolved-ids-hive")
+    lake.addFiles(t, Seq(s"$root/evolved-ids-hive"))
+    lake.addFiles(t, Seq(nanosFile("evolved-ids-nanos", Seq(15 -> 1580732614123456789L))),
+      allowMissing = true)
+    lake.renameColumn(t, "v", "val")
+    lake.alterColumnType(t, "k", "int64")
+    lake.insertInto(Seq((16L, "v16", 1, ts0)).toDF("k", "val", "pk", "ts").coalesce(1), t)
+    spark.sql(s"UPDATE dlrp.$t SET val = 'u' WHERE k = 16")
+
+    val ids = Seq(DuckLake.VirtualFileId, DuckLake.VirtualPos, DuckLake.VirtualRowId,
+      DuckLake.VirtualSnapshot)
+    val facadeIds = lake.table(t, None, Nil, ids).select(ids.map(col): _*).collect()
+      .map(r => ids.indices.map(r.getLong)).toSeq.sortBy(_.mkString(","))
+    val scan = new graft.lake.connector.DuckLakeBatchScan(lake, t, lake.currentSnapshot,
+      StructType(ids.map(StructField(_, LongType))))
+    val batchIds = scan.planInputPartitions().toSeq.flatMap { p =>
+      val reader = scan.createReaderFactory().createReader(p)
+      try Iterator.continually(reader.next()).takeWhile(identity)
+        .map(_ => ids.indices.map(reader.get().getLong)).toList
+      finally reader.close()
+    }.sortBy(_.mkString(","))
+    assert(facadeIds.size == 14)
+    assert(batchIds == facadeIds)
+  }
+
+  test("a renamed or dropped clone still reads its files at an earlier snapshot") {
+    import spark.implicits._
+    lake.createTableAs(Seq((1L, "a"), (2L, "b")).toDF("id", "tag").coalesce(1), "main.clone_src")
+    lake.cloneTable("main.clone_src", "main.clone_ren")
+    lake.cloneTable("main.clone_src", "main.clone_drop")
+    val before = lake.currentSnapshot
+    lake.renameTable("main.clone_ren", "main.clone_ren2")
+    lake.dropTable("main.clone_drop")
+    Seq("clone_ren", "clone_drop").foreach { c =>
+      assert(rows(lake.table(s"main.$c", Some(before))) == Seq("1|a", "2|b"), c)
+    }
+    assert(facade("clone_ren2") == Seq("1|a", "2|b"))
+  }
+
   test("addFiles opens each adopted file on the driver and starts no Spark job") {
     import spark.implicits._
     lake.createTableAs(Seq((1L, "a")).toDF("id", "tag").coalesce(1), "main.adopt_jobs")
