@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Deterministic companion to the 100x probe's dedup_minhash timing: the
   * candidate-pair count at each scale, proving whether super-linear time

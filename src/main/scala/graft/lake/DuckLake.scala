@@ -7,11 +7,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, UpdateTable}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, Union, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** DuckLake-on-Spark session façade: a lakehouse whose metadata lives in
   * an embedded SQL catalog ([[MetadataStore]], Derby) and whose data lives
@@ -1141,16 +1144,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * (files we wrote) resolve there; adopted files keep their absolute
     * path.
     */
-  private def under(dir: String, path: String, relative: Boolean): String =
+  private def under(dir: => String, path: String, relative: Boolean): String =
     if (relative) s"$dir/$path" else path
 
-  /** The positions of a MOR delete file of the table in `dir` as
-    * `(__fid = fid, pos)`, read with its schema (no inference job).
+  /** The rows of a MOR delete file of the table in `dir`, read with its
+    * schema (no inference job).
     */
-  private def positionsOf(dir: String, d: DeleteFileRec, fid: Long): DataFrame =
-    deleteRows(dir, d).select(lit(fid).as("__fid"), col("pos"))
-
-  private def deleteRows(dir: String, d: DeleteFileRec): DataFrame =
+  private def deleteRows(dir: => String, d: DeleteFileRec): DataFrame =
     reader(Seq(d.path -> d.encryptionKey)).schema(DeletePositions.Schema)
       .parquet(under(dir, d.path, d.pathIsRelative))
 
@@ -1159,13 +1159,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   /** The context of one read of table `tr` (pinned columns `cols`) at
     * `snap`; its directory resolves through the table's row and its
-    * schema's row of that snapshot, once per read.
+    * schema's row of that snapshot, once per read and only when a
+    * relative path needs it.
     */
   private[lake] def scanCtx(tr: TableRec, cols: Seq[ColumnDef], snap: Long): ScanCtx = {
     val partCols = store.getPartitionColumns(tr.tableId, snap)
-    val schema = store.getSchemaById(tr.schemaId, snap)
-      .getOrElse(throw new SchemaNotFoundException(s"schema id ${tr.schemaId}"))
-    ScanCtx(DuckLake.tableDir(dataPath, schema.path, tr),
+    ScanCtx(() => DuckLake.tableDir(dataPath, store.getSchemaById(tr.schemaId, snap)
+        .getOrElse(throw new SchemaNotFoundException(s"schema id ${tr.schemaId}")).path, tr),
       cols, store.getColumnHistory(tr.tableId), partCols,
       if (partCols.isEmpty) Map.empty else store.getFilePartitionValues(tr.tableId),
       store.getNameMappings(tr.tableId),
@@ -1211,10 +1211,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       case None => epochOf(ctx.cols, ctx.history, f)
     }
 
-  /** Literal values injected as columns for one file: catalog identity
-    * partition values plus, for adopted files, hive `key=value` segments
-    * parsed from the file's own registered path (the name-mapping hive
-    * model — the path IS the per-file value store).
+  /** Raw identity partition values of one file, by column id: catalog
+    * identity partition values plus, for adopted files, hive `key=value`
+    * segments parsed from the file's own registered path (the
+    * name-mapping hive model — the path IS the per-file value store).
     */
   private def injectedValues(ctx: ScanCtx, f: DataFileRec): Map[Long, Option[String]] = {
     val hive = f.mappingId.flatMap(ctx.mappings.get) match {
@@ -1246,20 +1246,20 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   /** The one relation constructor of every facade read: read group `g`
     * as a `HadoopFsRelation` over a [[LakeFileIndex]] of its catalog
-    * files, read by [[DuckLakeParquetFormat]] and projected onto the
-    * pinned catalog columns, then `extra` columns over the group's first
-    * file and its per-file values (`field(name)`: a [[LakeFile.Fields]]
-    * field or [[LakeFile.RowIndex]], from the scan's `_metadata`). With
-    * `skipping`, the index skips files by the data filters Spark's planner
-    * hands it.
+    * files, partitioned by the group's identity partition columns, read
+    * by [[DuckLakeParquetFormat]] and projected onto the pinned catalog
+    * columns, then `extra` columns over the group's first file and its
+    * per-file values (`field(name)`: a [[LakeFile.Fields]] field or
+    * [[LakeFile.RowIndex]], from the scan's `_metadata`). With `skipping`,
+    * the index skips files by the data filters Spark's planner hands it.
     */
   private def readGroup(g: LakeReadGroup,
       extra: (DataFileRec, String => Column) => Seq[Column] = (_, _) => Nil,
       skipping: Option[FileSkipping] = None): DataFrame = {
-    val index = LakeFileIndex(g.files.map(_._2))(
-      skipping.fold(LakeFileIndex.KeepAll)(_.skipper(g.files.map(_.swap).toMap, g.names)))
+    val index = LakeFileIndex(g.files.map(_._2), g.partitionSchema)(
+      skipping.fold(LakeFileIndex.KeepAll)(_.skipper(g)))
     val base = spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, new StructType(),
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, g.partitionSchema,
         g.physSchema, None, new DuckLakeParquetFormat(index.files.exists(_.hidesRows)),
         decryptOptions(g.files.map { case (f, _) => f.path -> f.encryptionKey }))(spark))
     base.select(g.projection.map(_._2) ++
@@ -1267,32 +1267,42 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   /** [[readGroup]] over every read group of `files` ([[readGroups]]),
-    * unioned.
+    * in one n-ary union.
     */
   private def readAll(ctx: ScanCtx, files: Seq[DataFileRec], liveAt: Option[Long],
       provenance: Boolean = false,
       extra: (DataFileRec, String => Column) => Seq[Column] = (_, _) => Nil,
       skipping: Option[FileSkipping] = None): DataFrame =
-    readGroups(ctx, files, liveAt, provenance).map(readGroup(_, extra, skipping))
-      .reduce(_ unionByName _)
+    unionAll(readGroups(ctx, files, liveAt, provenance).map(readGroup(_, extra, skipping)))
+
+  /** `frames`, which project the same columns in the same order, as one
+    * n-ary `Union`: the analyzer sees one node, not a chain of pairs.
+    */
+  private def unionAll(frames: Seq[DataFrame]): DataFrame = {
+    val names = frames.head.columns.toSeq
+    require(frames.forall(_.columns.toSeq == names),
+      s"a union of lake frames with other columns: ${frames.map(_.columns.mkString(", "))}")
+    if (frames.size == 1) frames.head
+    else ColumnBridge.ofRows(spark, Union(frames.map(_.queryExecution.analyzed)))
+  }
 
   /** The column mapping of one read group: the physical columns its
     * files are read with, and the projection from them onto the pinned
     * catalog columns (`projection(i)` is `epoch(i)`'s column, under its
-    * current name) — rename-safe and promotion-cast; partition columns
-    * are literals from the catalog (they live in the directory layout,
-    * not the parquet), and columns added after the files' epoch read
-    * their initial default. `withRowIdCol` also reads the explicit row-id
+    * current name) — rename-safe and promotion-cast; the `partitioned`
+    * columns read their partition field ([[DuckLake.partitionField]]),
+    * not the parquet, and columns added after the files' epoch read their
+    * initial default. `withRowIdCol` also reads the explicit row-id
     * column of UPDATE-written files (absent in legacy files: null).
     */
   private def groupMapping(epoch: Seq[(ColumnDef, Option[ColumnDef])],
-      partVals: Map[Long, Option[String]], withRowIdCol: Boolean,
+      partitioned: Set[Long], withRowIdCol: Boolean,
       history: Seq[(ColumnDef, Long, Option[Long])],
       nestedDefaults: Map[Long, Map[String, String]]): (StructType, Seq[Column]) = {
     // a column NOT NULL both in the catalog and at the files' epoch reads
     // non-nullable, so filters on it translate for the parquet reader
     val physSchema0 = StructType(epoch.collect {
-      case (cur, Some(phys)) if !partVals.contains(cur.columnId) =>
+      case (cur, Some(phys)) if !partitioned(cur.columnId) =>
         StructField(phys.name, DuckLake.physReadType(phys.dtype),
           nullable = cur.nullsAllowed || phys.nullsAllowed)
     })
@@ -1300,8 +1310,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       physSchema0.add(DuckLake.RowIdPhysCol, LongType, nullable = true)
     else physSchema0
     val projection = epoch.map {
-      case (cur, _) if partVals.contains(cur.columnId) =>
-        partitionValue(partVals(cur.columnId), TypeBridge.toSpark(cur.dtype)).as(cur.name)
+      case (cur, _) if partitioned(cur.columnId) =>
+        col(DuckLake.partitionField(cur.columnId)).as(cur.name)
       case (cur, Some(phys)) =>
         // raw-INT64 temporals (adopted TIME / NANOS files, read as
         // BIGINT — see physOf) rescale FIRST, then conform as their
@@ -1358,52 +1368,59 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     (physSchema, projection)
   }
 
-  /** A partition column's value in one file: the raw catalog (or hive
-    * path) string cast to the column's type, null for the null partition.
-    */
-  private[lake] def partitionValue(raw: Option[String], dt: DataType): Column =
-    raw.fold(lit(null))(lit(_)).cast(dt)
-
   /** The read groups of `files` (catalog rows of the table `ctx` pins),
     * for every lake reader — the facade's scans, CDC and rewrites, the
     * connector's Batch (UPDATE, MERGE, row-level DELETE, SPJ) and its
-    * micro-batch stream: files of one physical epoch and partition share
-    * one [[groupMapping]], so every reader of the lake maps columns the
-    * same way, and each file's [[LakeFile]] carries its per-file values
-    * (its index is its position in `files`). A read that asks for row
-    * provenance (`rowid`, `snapshot_id`) splits off the UPDATE-written
-    * files, which also read the explicit row-id column, and gives each
-    * merged file a group of its own: its segment map is a per-file
-    * expression. `liveAt = Some(snap)` hides the rows not live at `snap`
+    * micro-batch stream: files of one physical epoch share one
+    * [[groupMapping]], so every reader of the lake maps columns the same
+    * way, and each file's [[LakeFile]] carries its per-file values (its
+    * index is its position in `files`). Identity partition columns are
+    * the group's partition schema, and each file's values its typed
+    * partition row: the raw catalog (or hive path) string cast once, as
+    * SQL casts a string literal in the session time zone (null for the
+    * null partition). Files that store a partition column (written before
+    * the table was partitioned) form groups of their own. A read that
+    * asks for row provenance (`rowid`, `snapshot_id`) splits off the
+    * UPDATE-written files, which also read the explicit row-id column,
+    * and gives each merged file a group of its own: its segment map is a
+    * per-file expression. `liveAt = Some(snap)` hides the rows not live at `snap`
     * (MOR deletes, the merged-file visible-row limit) inside the scan;
     * None keeps every physical row (CDC, merge_adjacent).
     */
   private[lake] def readGroups(ctx: ScanCtx, files: Seq[DataFileRec], liveAt: Option[Long],
       provenance: Boolean): Seq[LakeReadGroup] = {
     val index = files.iterator.map(_.dataFileId).zipWithIndex.toMap
-    files.groupBy(f => (physOf(ctx, f), injectedValues(ctx, f),
-        provenance && f.rowIdStart.isEmpty && f.segments.isEmpty,
-        Option.when(provenance && f.segments.nonEmpty)(f.dataFileId)))
-      .toSeq.map { case ((phys, pv, explicitIds, _), fs) =>
+    val tz = Some(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    files.map(f => f -> injectedValues(ctx, f)).groupBy { case (f, pv) => (physOf(ctx, f),
+        pv.keySet, provenance && f.rowIdStart.isEmpty && f.segments.isEmpty,
+        Option.when(provenance && f.segments.nonEmpty)(f.dataFileId)) }
+      .toSeq.map { case ((phys, partitioned, explicitIds, _), fs) =>
+        val parts = ctx.cols.filter(c => partitioned(c.columnId))
+        val partitionSchema = StructType(parts.map(c =>
+          StructField(DuckLake.partitionField(c.columnId), TypeBridge.toSpark(c.dtype))))
+        val casts = partitionSchema.map(p =>
+          Cast(BoundReference(0, StringType, nullable = true), p.dataType, tz))
         val (physSchema, projection) =
-          groupMapping(phys, pv, explicitIds, ctx.history, ctx.nestedDefaults)
-        LakeReadGroup(physSchema, ctx.cols.map(_.name).zip(projection),
-          phys.collect { case (cur, Some(p)) if !pv.contains(cur.columnId) => p.name -> cur.name }
+          groupMapping(phys, partitioned, explicitIds, ctx.history, ctx.nestedDefaults)
+        LakeReadGroup(physSchema, partitionSchema, ctx.cols.map(_.name).zip(projection),
+          phys.collect { case (cur, Some(p)) if !partitioned(cur.columnId) => p.name -> cur.name }
             .toMap,
-          fs.map(f => f -> lakeFile(ctx.dir, f, liveAt, index(f.dataFileId))))
-      }
+          fs.map { case (f, pv) => f -> lakeFile(ctx.dir, f, liveAt, index(f.dataFileId),
+            InternalRow.fromSeq(parts.zip(casts).map { case (c, cast) =>
+              cast.eval(InternalRow(pv(c.columnId).map(UTF8String.fromString).orNull)) })) })
+      }.sortBy(_.files.head._2.fileIndex)
   }
 
   /** `f` as a [[LakeFileIndex]] entry, its paths under the table directory
-    * `dir`: qualified path, catalog size and per-file values; with
+    * `dir` (no filesystem call: the scan resolves them as it opens them):
+    * path, catalog size, per-file values and typed `partition` row; with
     * `liveAt`, its delete file and its visible-row limit there.
     */
-  private def lakeFile(dir: String, f: DataFileRec, liveAt: Option[Long], index: Long): LakeFile = {
-    val path = under(dir, f.path, f.pathIsRelative)
-    val p = new Path(path)
+  private def lakeFile(dir: => String, f: DataFileRec, liveAt: Option[Long], index: Long,
+      partition: InternalRow = InternalRow.empty): LakeFile = {
     val del = liveAt.flatMap(_ => f.deleteFile)
-    LakeFile(p.getFileSystem(hconf).makeQualified(p).toString, f.fileSizeBytes, f.dataFileId,
-      index, path, f.rowIdStart, f.beginSnapshot,
+    LakeFile(under(dir, f.path, f.pathIsRelative), f.fileSizeBytes, f.dataFileId,
+      index, f.rowIdStart, f.beginSnapshot, partition,
       del.map(d => under(dir, d.path, d.pathIsRelative)), del.flatMap(_.encryptionKey),
       liveAt.map(f.visibleRowsAt).filter(_ < f.recordCount))
   }
@@ -1413,7 +1430,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * `cols` — the inline counterpart of the per-file epoch projection.
     */
   private def inlinedDF(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      withRowId: Boolean = false, virtual: Set[String] = Set.empty,
+      withRowId: Boolean = false, virtual: Seq[String] = Nil,
       txnSnap: Option[Long] = None, txnBase: Long = 0L): Option[DataFrame] = {
     val rows = store.getInlinedRows(tr.tableId, snap)
     if (rows.isEmpty) return None
@@ -1442,7 +1459,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
             .cast(TypeBridge.toSpark(c.dtype)).as(c.name)
           case None => defaultColumn(c).as(c.name)
         }
-      } ++ virtual.toSeq.sorted.map { v =>
+      } ++ virtual.map { v =>
         // inlined rows live in the catalog: commit snapshot and stable
         // row id are real; txn-local rows show provisional ids and the
         // reference's inlined pseudo-filenames
@@ -1466,7 +1483,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       if (withRowId) parsed.select(projection :+ col("__row_id"): _*)
       else parsed.select(projection: _*)
     }
-    Some(dfs.reduce(_ unionByName _))
+    Some(unionAll(dfs))
   }
 
   /** Whether table `name` holds inlined rows visible at `snap`. */
@@ -1481,7 +1498,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       required: StructType): Array[InternalRow] = {
     val virtual = required.fieldNames.toSet.intersect(DuckLake.VirtualNames.toSet) --
       Seq(DuckLake.VirtualFileId, DuckLake.VirtualPos)
-    inlinedDF(tr, cols, snap, withRowId = true, virtual = virtual)
+    inlinedDF(tr, cols, snap, withRowId = true, virtual = virtual.toSeq)
       .fold(Array.empty[InternalRow]) { df =>
         df.select(required.fieldNames.toSeq.map {
           case DuckLake.VirtualFileId => lit(DuckLake.InlinedFileId)
@@ -1492,10 +1509,12 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   /** Snapshot-pinned scan: one multi-file parquet read per read group
-    * ([[readGroups]]; plan shape parity with reference
-    * src/table.rs:611-649), whether or not its files carry deletes: MOR
-    * delete files and merged-file visible-row limits apply inside that
-    * scan ([[DuckLakeParquetFormat]], the counterpart of the reference's
+    * ([[readGroups]]: a physical epoch, its identity partition columns
+    * Spark partitions; plan shape parity with reference
+    * src/table.rs:611-649), whether or not its files carry deletes, and
+    * the inlined rows, in one n-ary union. MOR delete files and
+    * merged-file visible-row limits apply inside the scan
+    * ([[DuckLakeParquetFormat]], the counterpart of the reference's
     * DeleteFilterExec, src/delete_filter.rs), so the plan holds no join.
     * Virtual columns (reference: tests/sqllogictests/sql/virtualcolumns/)
     * are expressions over each file's `_metadata` values and the row
@@ -1506,8 +1525,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
       virtualCols: Seq[String] = Nil): DataFrame = {
     val (snap, tr, cols) = pinnedColumns(name, snapshot)
-    val vset = virtualCols.toSet
-    val outSchema = vset.foldLeft(sparkSchemaOf(cols)) { (s, v) =>
+    val virtual = virtualCols.distinct
+    val outSchema = virtual.foldLeft(sparkSchemaOf(cols)) { (s, v) =>
       s.add(v, DuckLake.virtualType(v), nullable = true)
     }
     val ctx = scanCtx(tr, cols, snap)
@@ -1528,17 +1547,17 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       (fileMin ++ inlMin).minOption.getOrElse(0L)
     }.getOrElse(0L)
     // inlined catalog rows are always included (never stats-pruned)
-    val inlined = inlinedDF(tr, cols, snap, withRowId = false, virtual = vset,
+    val inlined = inlinedDF(tr, cols, snap, withRowId = false, virtual = virtual,
       txnSnap = txnSnap, txnBase = txnBase)
     if (files.isEmpty)
       return inlined.getOrElse(
         spark.createDataFrame(new java.util.ArrayList[Row](), outSchema))
 
     val txn = txnSnap.map(_ -> (DuckLake.TxnLocalRowIdBase - txnBase))
-    val scan = readAll(ctx, files, Some(snap), DuckLake.asksProvenance(vset),
-      (head, field) => vset.toSeq.map(v => DuckLake.virtualColumn(v, head, field, txn).as(v)),
-      Some(skipping))
-    inlined.fold(scan)(scan.unionByName)
+    unionAll(readGroups(ctx, files, Some(snap), DuckLake.asksProvenance(virtual.toSet))
+      .map(readGroup(_, (head, field) =>
+        virtual.map(v => DuckLake.virtualColumn(v, head, field, txn).as(v)), Some(skipping))) ++
+      inlined)
   }
 
   /** The snapshot, table and columns a scan of `name` at `snapshot` pins. */
@@ -1589,21 +1608,22 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
       if (filters.isEmpty) files else files.filter(mightMatch(_, filters))
 
-    /** The [[LakeFileIndex]] skip of one read group: Spark's data filters
+    /** The [[LakeFileIndex]] skip of read group `g`: Spark's data filters
       * over the group's physical columns, mapped back to catalog columns
-      * through `names` (physical → catalog name; a filter on any other
+      * through `g.names` (physical → catalog name; a filter on any other
       * column, or one Spark cannot translate, skips nothing).
       */
-    def skipper(recs: Map[LakeFile, DataFileRec], names: Map[String, String])
+    def skipper(g: LakeReadGroup)
         : Seq[org.apache.spark.sql.catalyst.expressions.Expression] => LakeFile => Boolean = {
+      lazy val recs = g.files.map { case (f, lf) => lf.fileIndex -> f }.toMap
       dataFilters =>
         import org.apache.spark.sql.catalyst.expressions.{AttributeReference, KnownNotNull}
-        val filters = dataFilters.filter(_.references.forall(a => names.contains(a.name)))
+        val filters = dataFilters.filter(_.references.forall(a => g.names.contains(a.name)))
           .flatMap(e => ColumnBridge.sourceFilter(e.transformUp {
             case KnownNotNull(c) => c // the catalog's NOT NULL tag on a read column
-            case a: AttributeReference => a.withName(names(a.name))
+            case a: AttributeReference => a.withName(g.names(a.name))
           }))
-        if (filters.isEmpty) _ => true else lf => mightMatch(recs(lf), filters)
+        if (filters.isEmpty) _ => true else lf => mightMatch(recs(lf.fileIndex), filters)
     }
 
     private def mightMatch(f: DataFileRec,
@@ -1712,7 +1732,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       case a: UnresolvedAttribute => DuckLake.VirtualNames.contains(a.nameParts.last)
       case _ => false
     })
-    ColumnBridge.execute(spark,
+    ColumnBridge.ofRows(spark,
       if (virtual) plan.withNewChildren(Seq(relation.withMetadataColumns())) else plan)
     store.currentSnapshot
   }
@@ -1775,11 +1795,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         .select(col("_fid").as("__fid"), col("pos"))
       val touched = touchedFids.toSeq.sorted.flatMap(filesById.get)
       val dir = tableDirOf(name)
-      val previous = touched.flatMap(f => f.deleteFile.map(positionsOf(dir, _, f.dataFileId)))
-        .reduceOption(_ union _)
+      val previous = touched.flatMap(f => f.deleteFile.map(
+        deleteRows(dir, _).select(lit(f.dataFileId).as("__fid"), col("pos"))))
       import spark.implicits._
       val fidFilter = broadcast(touched.map(_.dataFileId).toDF("__fid"))
-      writeDeleteFiles(name, previous.fold(partial)(partial.union).join(fidFilter, "__fid"),
+      writeDeleteFiles(name, unionAll(partial +: previous).join(fidFilter, "__fid"),
         touched.map(f => f.dataFileId -> under(dir, f.path, f.pathIsRelative)).toMap)
     }
     val hiveNames = hiveNamesFor(name, partitionFieldsOf(name))
@@ -2377,7 +2397,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
           Seq(field(LakeFile.FileIndex).as("__mf"), field(LakeFile.RowIndex).as("__pos"))
         val rows =
           if (hasAdopted) readAll(ctx, run, None, extra = order)
-          else readGroup(LakeReadGroup(physSchema, physCols.map(c => c.name -> col(c.name)),
+          else readGroup(LakeReadGroup(physSchema, new StructType(),
+            physCols.map(c => c.name -> col(c.name)),
             Map.empty, run.zipWithIndex.map { case (f, i) => f -> lakeFile(ctx.dir, f, None, i) }),
             order)
         val ordered = rows.repartition(1)
@@ -2710,12 +2731,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** Drop a tag; true if it existed. The snapshot itself is untouched. */
   def dropTag(tag: String): Boolean = store.dropTag(tag)
 
-  /** All tags as (tag_name, snapshot_id, created_at). */
-  def tagsDF: DataFrame = {
-    import spark.implicits._
-    store.tags.toDF("tag_name", "snapshot_id", "created_at")
-  }
-
   /** Expire time travel below `before` (newest snapshot always kept).
     * Expired snapshots stop resolving; [[vacuum]] may then delete files
     * only those snapshots could see.
@@ -3024,10 +3039,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * `(__fid, __pos, __dsnap)` over the table in `dir`; `__dsnap` is the
     * delete file's snapshot, or `replacedAt` of a fully deleted file.
     */
-  private def deletedPositions(dir: String,
+  private def deletedPositions(dir: => String,
       entries: Seq[(Option[DeleteFileRec], Option[DeleteFileRec], DataFileRec)],
       replacedAt: DataFileRec => Long): DataFrame =
-    entries.map { case (delOpt, prevOpt, dataFile) =>
+    unionAll(entries.map { case (delOpt, prevOpt, dataFile) =>
       val current: DataFrame = delOpt match {
         case Some(d) => deleteRows(dir, d).select("pos")
         case None => spark.range(dataFile.recordCount).select(col("id").as("pos"))
@@ -3035,7 +3050,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       prevOpt.fold(current)(p => current.except(deleteRows(dir, p).select("pos")))
         .select(lit(dataFile.dataFileId).as("__fid"), col("pos").as("__pos"),
           lit(delOpt.fold(replacedAt(dataFile))(_.beginSnapshot)).as("__dsnap"))
-    }.reduce(_ union _)
+    })
 
   /** Every physical row of `files` (distinct by id) in the pinned catalog
     * columns, addressed by `(__fid, __pos)`, plus virtual columns `v`.
@@ -3439,12 +3454,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 }
 
 /** One read group of a lake scan, as [[DuckLake.readGroups]] hands it to
-  * every reader: the physical columns its files are read with, the
-  * facade's projection from them onto each pinned catalog column (by
-  * name), the catalog name of each physical data column (for file
-  * skipping), and every file with its [[LakeFile]] entry.
+  * every reader: the physical columns its files are read with, its
+  * identity partition columns (each file's [[LakeFile.partition]] holds
+  * their values), the facade's projection from both onto each pinned
+  * catalog column (by name), the catalog name of each physical data
+  * column (for file skipping), and every file with its [[LakeFile]] entry.
   */
 private[lake] final case class LakeReadGroup(physSchema: StructType,
+    partitionSchema: StructType,
     projection: Seq[(String, Column)], names: Map[String, String],
     files: Seq[(DataFileRec, LakeFile)])
 
@@ -3453,15 +3470,20 @@ private[lake] final case class LakeReadGroup(physSchema: StructType,
   * fetched once per scan, so planning does O(1) metadata queries
   * regardless of file count.
   */
-private[lake] final case class ScanCtx(dir: String, cols: Seq[ColumnDef],
+private[lake] final case class ScanCtx(tableDir: () => String, cols: Seq[ColumnDef],
     history: Seq[(ColumnDef, Long, Option[Long])],
     partCols: Seq[(Int, Long, Option[String])],
     partValsByFile: Map[Long, Map[Int, Option[String]]],
     mappings: Map[Long, Seq[NameMapEntry]] = Map.empty,
     nestedDefaults: Map[Long, Map[String, String]] = Map.empty) {
+  /** The table directory, resolved on first use: a read whose data and
+    * delete files are all adopted with absolute paths never needs it.
+    */
+  lazy val dir: String = tableDir()
+
   /** column_id → raw hive value of IDENTITY partition keys for one file —
-    * the values injected as literal columns on read (transform keys'
-    * sources live in the parquet itself, nothing to inject).
+    * the values read as partition columns (transform keys' sources live
+    * in the parquet itself, nothing to read).
     */
   def partValues(f: DataFileRec): Map[Long, Option[String]] = {
     val byIdx = partValsByFile.getOrElse(f.dataFileId, Map.empty)
@@ -3732,6 +3754,12 @@ object DuckLake {
     * by row-level UPDATE (catalog row_id_start NULL).
     */
   final val RowIdPhysCol = "_ducklake_row_id"
+
+  /** A partition column's field in a read group's partition schema,
+    * named by column id: no physical field can shadow it (after a rename,
+    * an older epoch may still hold the column's name for another column).
+    */
+  def partitionField(columnId: Long): String = s"__ducklake_partition_$columnId"
 
   /** The `_metadata` column of a file relation. */
   private val MetadataColumn = org.apache.spark.sql.execution.datasources.FileFormat.METADATA_NAME

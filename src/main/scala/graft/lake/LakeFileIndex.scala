@@ -2,22 +2,24 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** One data file of a lake read, as the catalog records it: qualified
-  * path and size; the file's own values that reads expose as virtual
-  * columns — data file id, index in the read's file list, the path the
-  * catalog resolves (`filename`), row-id range start (none for an
-  * UPDATE-written file) and birth snapshot; and what the scan must hide —
-  * the MOR delete file (resolved path and encryption key) and, for a
-  * merged file read at a snapshot before the merge, the number of leading
-  * rows visible there.
+/** One data file of a lake read, as the catalog records it: the path the
+  * catalog resolves (read as is, and exposed as the `filename` virtual
+  * column) and size; the file's own values that reads expose as virtual
+  * columns — data file id, index in the read's file list, row-id range
+  * start (none for an UPDATE-written file) and birth snapshot; its
+  * identity partition values, typed as its read group's partition
+  * schema; and what the scan must hide — the MOR delete file (resolved
+  * path and encryption key) and, for a merged file read at a snapshot
+  * before the merge, the number of leading rows visible there.
   */
 final case class LakeFile(path: String, size: Long, fileId: Long, fileIndex: Long,
-    filename: String, rowIdStart: Option[Long], beginSnapshot: Long,
+    rowIdStart: Option[Long], beginSnapshot: Long,
+    partition: InternalRow = InternalRow.empty,
     deletePath: Option[String] = None, deleteKey: Option[String] = None,
     visibleRows: Option[Long] = None) {
 
@@ -31,7 +33,7 @@ final case class LakeFile(path: String, size: Long, fileId: Long, fileIndex: Lon
     */
   def metadata: Map[String, Any] =
     Map(LakeFile.FileId -> fileId, LakeFile.FileIndex -> fileIndex,
-      LakeFile.Filename -> filename, LakeFile.BeginSnapshot -> beginSnapshot) ++
+      LakeFile.Filename -> path, LakeFile.BeginSnapshot -> beginSnapshot) ++
       rowIdStart.map(LakeFile.RowIdStart -> _) ++
       deletePath.map(LakeFile.DeletePath -> _) ++
       deleteKey.map(LakeFile.DeleteKey -> _) ++
@@ -72,9 +74,14 @@ object LakeFile {
   * file on an object store). Each file's status carries its
   * [[LakeFile.metadata]], which Spark hands to the reader per split.
   *
-  * `listFiles` keeps the files `skip` keeps for the data filters Spark's
-  * planner hands it (the catalog's min/max, partition-transform and
-  * bucket skipping, see `DuckLake.table`).
+  * Identity partitions are Spark partitions: `partitionSchema` holds the
+  * group's partition columns and each file's [[LakeFile.partition]] row
+  * its values, so `listFiles` returns one `PartitionDirectory` per value
+  * tuple, without the tuples the static `partitionFilters` reject. Spark
+  * applies dynamic partition pruning itself, from the directories'
+  * values. Of the files left, `listFiles` keeps those `skip` keeps for
+  * the data filters Spark's planner hands it (the catalog's min/max,
+  * partition-transform and bucket skipping, see `DuckLake.table`).
   *
   * Equality covers every file and its metadata: two scans of one table
   * with different delete sets (time travel, a self-join across
@@ -82,20 +89,26 @@ object LakeFile {
   * one scan's rows for the other. `skip` stays out of it: it derives
   * from the same catalog rows.
   */
-final case class LakeFileIndex(files: Seq[LakeFile])(
+final case class LakeFileIndex(files: Seq[LakeFile], partitionSchema: StructType)(
     skip: Seq[Expression] => LakeFile => Boolean) extends FileIndex {
 
-  private lazy val statuses = files.map { f =>
-    f -> FileStatusWithMetadata(
-      new FileStatus(f.size, false, 1, f.size, 0L, new Path(f.path)), f.metadata)
+  private lazy val partitions = files.groupBy(_.partition).toSeq.map { case (row, fs) =>
+    row -> fs.map(f => f -> FileStatusWithMetadata(
+      new FileStatus(f.size, false, 1, f.size, 0L, new Path(f.path)), f.metadata))
   }
 
   override def rootPaths: Seq[Path] = files.map(f => new Path(f.path))
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val matches = partitionFilters.reduceOption(And).map(p => Predicate.createInterpreted(
+      p.transform { case a: AttributeReference =>
+        BoundReference(partitionSchema.fieldIndex(a.name), a.dataType, nullable = true)
+      }))
     val keep = skip(dataFilters)
-    Seq(PartitionDirectory(InternalRow.empty, statuses.collect { case (f, s) if keep(f) => s }))
+    partitions.collect { case (row, fs) if matches.forall(_.eval(row)) =>
+      PartitionDirectory(row, fs.collect { case (f, s) if keep(f) => s })
+    }
   }
 
   override def inputFiles: Array[String] = files.map(_.path).toArray
@@ -103,8 +116,6 @@ final case class LakeFileIndex(files: Seq[LakeFile])(
   override def refresh(): Unit = ()
 
   override def sizeInBytes: Long = files.map(_.size).sum
-
-  override def partitionSchema: StructType = new StructType()
 }
 
 object LakeFileIndex {

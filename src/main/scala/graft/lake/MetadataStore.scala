@@ -849,10 +849,6 @@ final class MetadataStore(backend: MetadataBackend,
   def dropTag(name: String): Boolean =
     update("DELETE FROM ducklake_tag WHERE tag_name = ?", Seq(name)) > 0
 
-  def tags: Seq[(String, Long, java.sql.Timestamp)] =
-    query("SELECT tag_name, snapshot_id, created_at FROM ducklake_tag ORDER BY tag_name")(
-      rs => (rs.getString(1), rs.getLong(2), rs.getTimestamp(3)))
-
   def listSchemas(snap: Long): Seq[SchemaRec] =
     query(s"SELECT schema_id, schema_name, path, path_is_relative FROM ducklake_schema WHERE $Vis ORDER BY schema_id",
       Seq(snap, snap))(rs => SchemaRec(rs.getLong(1), rs.getString(2), rs.getString(3), rs.getBoolean(4)))

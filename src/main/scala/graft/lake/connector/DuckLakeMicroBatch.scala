@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, AttributeSet, BindReferences, Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, AttributeSet, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.read.{HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, SupportsReportPartitioning}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -31,16 +31,17 @@ final case class SnapshotOffset(snapshot: Long) extends Offset {
 }
 
 /** One data file of a row-level scan, SPJ scan or micro-batch: the file
-  * (path, size, its per-file values, and the delete file and visible-row
-  * limit its scan hides), the reader of its read group
+  * (path, size, its per-file values and partition row, and the delete
+  * file and visible-row limit its scan hides), its read group's partition
+  * schema, the reader of its read group
   * ([[graft.lake.DuckLakeParquetFormat]] in row mode), and the group's
   * projection onto the scan's columns, bound to the reader's rows: the
   * group's physical columns and row index, then the file's
-  * [[graft.lake.LakeFile.Fields]] values, which the reader appends as
-  * partition values. Column mapping is the facade's: no column is
-  * resolved here.
+  * [[graft.lake.LakeFile.Fields]] values and its partition row, which the
+  * reader appends as partition values. Column mapping is the facade's: no
+  * column is resolved here.
   */
-final case class DuckLakeFilePartition(file: LakeFile,
+final case class DuckLakeFilePartition(file: LakeFile, partitionSchema: StructType,
     read: PartitionedFile => Iterator[InternalRow],
     projection: Seq[Expression]) extends InputPartition
 
@@ -54,7 +55,6 @@ final case class DuckLakeFilePartition(file: LakeFile,
 final class DuckLakeKeyedPartition(val inner: DuckLakeFilePartition,
     keyVals: Array[Any]) extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals)
-  def keyVector: Vector[Any] = keyVals.toVector
 }
 
 /** The inlined catalog rows of a row-level scan, already in the scan's
@@ -64,10 +64,11 @@ final case class DuckLakeInlinedPartition(rows: Array[InternalRow]) extends Inpu
 
 /** Shared driver-side planning for the row-level, SPJ and streaming
   * readers. The facade's [[DuckLake.readGroups]] gives each read group's
-  * physical columns, projection and files; per group the projection is
-  * analyzed, optimized and bound here ONCE, over the group's physical
-  * columns, the parquet row index and the per-file values, so the
-  * files of a group share one generated projection. Virtual columns are
+  * physical columns, partition schema, projection and files; per group
+  * the projection is analyzed, optimized and bound here ONCE, over the
+  * group's physical columns, the parquet row index, the per-file values
+  * and the partition columns, so the files of a group share one
+  * generated projection. Virtual columns are
   * the facade's ([[DuckLake.virtualColumn]]) over the same per-file
   * values the facade's scans read as `_metadata` fields.
   */
@@ -75,7 +76,6 @@ private[connector] object DuckLakePartitionPlanner {
   import graft.lake.{DataFileRec, ScanCtx}
 
   private val Pos = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
-  private val FileFields = StructType(LakeFile.Fields)
 
   /** Partitions of `files` (catalog rows of the table `ctx` pins) in the
     * order of `files`.
@@ -85,7 +85,7 @@ private[connector] object DuckLakePartitionPlanner {
     val keys = lake.decryptOptions(files.map(f => new Path(f.path).getName -> f.encryptionKey))
     // one reader per read schema, each with its OWN conf: the reader
     // writes its requested schema into the conf it broadcasts
-    val readers = mutable.Map.empty[(StructType, Boolean), PartitionedFile => Iterator[InternalRow]]
+    val readers = mutable.Map.empty[(StructType, StructType, Boolean), PartitionedFile => Iterator[InternalRow]]
     def field(name: String): Column = col(if (name == LakeFile.RowIndex) Pos else name)
     lake.readGroups(ctx, files, liveAt, DuckLake.asksProvenance(required.fieldNames.toSet))
       .flatMap { g =>
@@ -95,25 +95,26 @@ private[connector] object DuckLakePartitionPlanner {
             DuckLake.virtualColumn(f.name, g.files.head._1, field)
           else byName.getOrElse(f.name, lit(null).cast(f.dataType))
         }
+        val values = StructType(LakeFile.Fields ++ g.partitionSchema)
         val (readSchema, projection) = bind(lake,
-          g.physSchema.add(Pos, LongType, nullable = true), columns)
+          g.physSchema.add(Pos, LongType, nullable = true), values, columns)
         val hides = g.files.exists(_._2.hidesRows)
-        val read = readers.getOrElseUpdate((readSchema, hides),
+        val read = readers.getOrElseUpdate((readSchema, values, hides),
           new DuckLakeParquetFormat(hides).buildReaderWithPartitionValues(lake.spark,
-            StructType(readSchema.filterNot(_.name == Pos)), FileFields, readSchema, Nil,
+            StructType(readSchema.filterNot(_.name == Pos)), values, readSchema, Nil,
             Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), lake.hadoopConfWith(keys)))
-        g.files.map { case (_, file) => DuckLakeFilePartition(file, read, projection) }
+        g.files.map(f => DuckLakeFilePartition(f._2, g.partitionSchema, read, projection))
       }.sortBy(_.file.fileIndex)
   }
 
-  /** `columns` over rows of `input` followed by the per-file values,
+  /** `columns` over rows of `input` followed by the `values` columns,
     * analyzed and optimized by Spark, then bound: the columns of `input`
     * the projection reads (the reader's schema) and the bound projection
-    * over the reader's rows (those columns, then the per-file values).
+    * over the reader's rows (those columns, then the values).
     */
-  private def bind(lake: DuckLake, input: StructType,
+  private def bind(lake: DuckLake, input: StructType, values: StructType,
       columns: Seq[Column]): (StructType, Seq[Expression]) = {
-    val frame = ColumnBridge.internalFrame(lake.spark, StructType(input ++ FileFields),
+    val frame = ColumnBridge.internalFrame(lake.spark, StructType(input ++ values),
       lake.spark.sparkContext.emptyRDD[InternalRow])
     val attrs = frame.queryExecution.analyzed.output
     val exprs = frame.select(columns: _*).queryExecution.optimizedPlan match {
@@ -125,10 +126,6 @@ private[connector] object DuckLakePartitionPlanner {
     (StructType(kept.map(input(_))), BindReferences.bindReferences(exprs,
       AttributeSeq(kept.map(attrs) ++ attrs.drop(input.length))))
   }
-
-  /** `column` evaluated on the driver (a constant, such as a partition value). */
-  def evaluate(lake: DuckLake, column: Column): Any =
-    bind(lake, new StructType(), Seq(column))._2.head.eval(InternalRow.empty)
 }
 
 /** Streaming source over a DuckLake table: appends-only (CDC-insert
@@ -306,17 +303,16 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     else {
       // key values in catalog partition-column order, typed as Catalyst
       // values — HasPartitionKey rows with equal keys must compare equal.
-      // identity keys carry the column value, bucket keys the bucket id
-      // (the directory value), each cast as the facade casts it
-      val pvs = lake.store.getFilePartitionValues(tr.tableId)
-      val values = mutable.Map.empty[(DataType, Option[String]), Any]
+      // identity keys carry the file's typed partition value, bucket keys
+      // the bucket id (the directory value)
       parts.map { p =>
-        val byIdx = pvs.getOrElse(p.file.fileId, Map.empty)
-        val key = spjFields.zipWithIndex.map { case (pf, idx) =>
-          val dt = if (pf.transform.isEmpty) schema(pf.source).dataType else IntegerType
-          val raw = byIdx.getOrElse(idx, None)
-          values.getOrElseUpdate(dt -> raw,
-            DuckLakePartitionPlanner.evaluate(lake, lake.partitionValue(raw, dt)))
+        val byIdx = ctx.partValsByFile.getOrElse(p.file.fileId, Map.empty)
+        val key = spjFields.zipWithIndex.map[Any] { case (pf, idx) =>
+          if (pf.transform.isEmpty) {
+            val i = p.partitionSchema.fieldNames.indexOf(DuckLake.partitionField(
+              ctx.cols.find(_.name == pf.source).get.columnId))
+            if (i < 0) null else p.file.partition.get(i, schema(pf.source).dataType)
+          } else byIdx.getOrElse(idx, None).fold(null: Any)(_.toInt)
         }.toArray
         new DuckLakeKeyedPartition(p, key): InputPartition
       }.toArray
@@ -334,7 +330,7 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     if (spj && planned.nonEmpty) {
       import org.apache.spark.sql.connector.expressions.Expressions
       val nKeys = planned.collect {
-        case k: DuckLakeKeyedPartition => k.keyVector
+        case k: DuckLakeKeyedPartition => k.partitionKey()
       }.distinct.length
       val keys = spjFields.map { f =>
         f.transform match {
@@ -391,7 +387,8 @@ object DuckLakeFileReaderFactory extends PartitionReaderFactory {
 
   private def fileRows(p: DuckLakeFilePartition)
       : (Iterator[InternalRow], InternalRow => InternalRow) =
-    (p.read(PartitionedFile(p.file.fieldValues, SparkPath.fromPath(new Path(p.file.path)),
+    (p.read(PartitionedFile(new JoinedRow(p.file.fieldValues, p.file.partition),
+      SparkPath.fromPath(new Path(p.file.path)),
       0L, p.file.size, Array.empty[String], 0L, p.file.size, p.file.metadata)),
       UnsafeProjection.create(p.projection))
 }

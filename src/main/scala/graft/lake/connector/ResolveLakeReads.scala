@@ -11,9 +11,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * each plain lake read — a `DataSourceV2Relation` over a
   * [[DuckLakeV2Table]] — with the ANALYZED plan of the facade's read of
   * that snapshot and those metadata columns ([[graft.lake.DuckLake.table]]:
-  * parquet relations over self-pruning `LakeFileIndex`es, plus inlined
-  * rows). The query's one optimizer then pushes filters and prunes
-  * columns, nested fields too, into them — as the reference plans a
+  * one parquet relation per physical epoch over a self-pruning
+  * `LakeFileIndex` partitioned by the identity partition columns, and
+  * the inlined rows, in one union). The query's one optimizer then
+  * pushes filters, prunes partitions (dynamic partition pruning
+  * included) and prunes columns, nested fields too — as the reference plans a
   * DuckLake scan as parquet exec nodes in the one DataFusion plan and
   * receives the filters while building it (src/table.rs:369-527,
   * :584-598).

@@ -61,16 +61,6 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** The i-th minhash hash function, derived from ONE base xxhash64 of the
-    * shingle by re-hashing the 64-bit value with seed i. The string is
-    * scanned once per shingle; each of the numHashes derivations hashes 8
-    * fixed bytes — ~10× less per-shingle work than numHashes full string
-    * hashes, all inside whole-stage codegen (and overflow-free under ANSI
-    * mode, unlike an affine `a*h+b` scheme).
-    */
-  private def derivedHash(baseHash: Column, i: Int): Column =
-    xxhash64(lit(i), baseHash)
-
   /** w-gram hashes from a token-HASH array: each gram hash combines w
     * consecutive token hashes via `xxhash64(acc, next)`. Equivalent
     * blocking quality to hashing the string shingles, but each token is
@@ -94,26 +84,6 @@ object Dedup {
       array(aggregate(tokenHashes, lit(42L), (a, h) => xxhash64(a, h))))
       .otherwise(grams)
   }
-
-  /** MinHash signature: for each of `numHashes` hash functions i, the
-    * minimum of hash_i(shingle) over the document's shingle set.
-    * Pure array expressions — evaluated rowwise inside whole-stage
-    * codegen. The base hash is computed once per shingle, then the i
-    * functions are affine derivations (see [[derivedHash]]).
-    */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column = {
-    val hashes = transform(shingleCol, s => xxhash64(s))
-    array((0 until numHashes).map(i =>
-      array_min(transform(hashes, h => derivedHash(h, i)))): _*)
-  }
-
-  /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
-    * and hash each band to a bucket key.
-    */
-  def lshBands(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map(b =>
-      hash(lit(b), concat_ws(",",
-        slice(sigCol, b * rowsPerBand + 1, rowsPerBand)))): _*)
 
   /** Default hot-bucket threshold for [[cappedBucketPairs]]: buckets at
     * or below this size get FULL pair expansion (exact candidate

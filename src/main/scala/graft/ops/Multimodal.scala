@@ -380,7 +380,6 @@ object Multimodal {
     * `everyNth`; non-videos pass through with frame_idx 0.
     */
   def sampleFrames(media: Dataset[MediaRow], everyNth: Int): DataFrame = {
-    import media.sparkSession.implicits._
     val meta = decodeMeta(media)
     meta.toDF().select(col("media_id"), col("media_type"), col("n_frames"),
       explode(sequence(lit(0L),

@@ -67,9 +67,6 @@ object TextOps {
     graft.functions.TextStats.textStats(lower(text)).getField("digit")
       .cast("double") / greatest(length(text), lit(1))
 
-  def whitespaceRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "\\s", ""))) / greatest(length(text), lit(1))
-
   /** Total occurrences of any of `words` as whole words: ONE alternation
     * regex scan (`\b(w1|w2|…)\b`) — markers are single words so the
     * per-position match sets are disjoint and the alternation count equals

@@ -23,18 +23,19 @@ object ColumnBridge {
       .translateFilter(e, supportNestedPredicatePushdown = true)
 
   /** `c` converted now by `spark`'s converter — a plan built by hand
-    * (see [[execute]]) gets no lazy column-node wrapper for the analyzer.
+    * (see [[ofRows]]) gets no lazy column-node wrapper for the analyzer.
     */
   def expression(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
 
-  /** Analyze and run a command plan, as `spark.sql` runs a parsed one
-    * (the facade's DELETE / UPDATE over a lake table's relation).
+  /** `plan` analyzed as a DataFrame; a command runs, as `spark.sql` runs
+    * a parsed one (the facade's DELETE / UPDATE over a lake table's
+    * relation).
     */
-  def execute(spark: org.apache.spark.sql.SparkSession,
-      command: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], command)
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Re-lift an InternalRow RDD as a DataFrame with a FRESH logical
     * plan (no lineage, default stats, no constraints). The unboxed twin

@@ -309,6 +309,58 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((5L, 10L)))
   }
 
+  test("a 64-partition lake table analyzes to one relation") {
+    spark.sql("CREATE TABLE dlplan.main.part64 (id BIGINT, v BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO dlplan.main.part64 SELECT id, id * 2, id % 64 FROM range(6400)")
+    val df = spark.sql("SELECT sum(v) FROM dlplan.main.part64")
+    val relations = df.queryExecution.analyzed.collect { case l: LogicalRelation => l }
+    assert(relations.size == 1, df.queryExecution.analyzed.toString)
+    assert(df.head.getLong(0) == (0L until 6400L).map(_ * 2).sum)
+  }
+
+  /** `fact` (8 partitions of `p`, 100 rows each) joined to a lake
+    * dimension filtered to `p = 3`: the executed plan, the fact scan and
+    * the fact ids returned, from one execution.
+    */
+  private def dppJoin(fact: String): (String, FileSourceScanExec, Seq[Long]) = {
+    spark.sql("CREATE TABLE IF NOT EXISTS dlplan.main.dppdim (p BIGINT, name STRING)")
+    if (spark.table("dlplan.main.dppdim").isEmpty)
+      spark.sql("INSERT INTO dlplan.main.dppdim SELECT id, concat('x', id) FROM range(8)")
+    val df = spark.sql(s"SELECT f.id FROM dlplan.main.$fact f " +
+      "JOIN dlplan.main.dppdim d ON f.p = d.p WHERE d.name = 'x3'")
+    val ids = df.collect().map(_.getLong(0)).sorted.toSeq
+    val plan = df.queryExecution.executedPlan
+    val factScans = collectWithSubqueries(plan) {
+      case s: FileSourceScanExec if s.relation.location.inputFiles.exists(_.contains(s"/$fact/")) => s
+    }
+    assert(factScans.size == 1, plan.toString)
+    (plan.toString, factScans.head, ids)
+  }
+
+  test("a partitioned lake fact scan joined to a filtered dimension plans dynamic pruning") {
+    spark.sql("CREATE TABLE dlplan.main.dppfact (id BIGINT, v BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO dlplan.main.dppfact SELECT id, id * 2, id % 8 FROM range(800)")
+    val (plan, scan, ids) = dppJoin("dppfact")
+    assert(plan.contains("dynamicpruning"), plan)
+    val files = scan.metrics("numFiles").value
+    val pointFiles = graft.ScanMetrics.filesRead(
+      spark.sql("SELECT id FROM dlplan.main.dppfact WHERE p = 3"))
+    val allFiles = graft.ScanMetrics.filesRead(spark.sql("SELECT id FROM dlplan.main.dppfact"))
+    assert(pointFiles >= 1 && pointFiles < allFiles && files == pointFiles,
+      s"fact scan read $files files, p = 3 has $pointFiles of $allFiles")
+    assert(ids == (0L until 800L).filter(_ % 8 == 3))
+  }
+
+  test("dynamic pruning of a partitioned MOR lake scan returns the live rows, columnar") {
+    spark.sql("CREATE TABLE dlplan.main.dppmor (id BIGINT, v BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO dlplan.main.dppmor SELECT id, id * 2, id % 8 FROM range(800)")
+    spark.sql("DELETE FROM dlplan.main.dppmor WHERE id % 5 = 0")
+    val (plan, scan, ids) = dppJoin("dppmor")
+    assert(plan.contains("dynamicpruning"), plan)
+    assert(scan.supportsColumnar, s"the MOR fact scan is not Batched:\n$plan")
+    assert(ids == (0L until 800L).filter(i => i % 8 == 3 && i % 5 != 0))
+  }
+
   test("the guard flips when broadcast planning is disabled (not vacuous)") {
     // Option(…) inside: adaptive.autoBroadcastJoinThreshold defaults to a
     // NULL value — it must round-trip as unset, not as set(null)

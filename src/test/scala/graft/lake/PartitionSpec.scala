@@ -374,6 +374,59 @@ class PartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally enc.close()
   }
 
+  /** `select` over catalog `mixlake` (this suite's lake): the ids it
+    * returns and the files its scans read.
+    */
+  private def mixedSql(select: String): (Seq[Long], Long) = {
+    spark.conf.set("spark.sql.catalog.mixlake",
+      classOf[graft.lake.connector.DuckLakeSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.mixlake.metaDb", s"$root/meta")
+    spark.conf.set("spark.sql.catalog.mixlake.dataPath", s"$root/data")
+    val df = spark.sql(select)
+    (df.collect().map(_.getLong(0)).sorted.toSeq, graft.ScanMetrics.filesRead(df))
+  }
+
+  test("one table mixing stored, catalog and hive-path partition values: exact SQL rows and files") {
+    import spark.implicits._
+    // written before the table is partitioned: p stored in the one file
+    lake.createTableAs(Seq((1L, Option(1L)), (2L, Option(2L)), (3L, None: Option[Long]))
+      .toDF("id", "p").coalesce(1), "main.mixed")
+    lake.setPartitionedBy("main.mixed", Seq("p"))
+    // after it: one file per value, values in the catalog
+    lake.insertInto(Seq((4L, Option(1L)), (5L, Option(2L)), (6L, None: Option[Long]))
+      .toDF("id", "p").coalesce(1), "main.mixed")
+    // adopted hive files: p only in the path, the null value as the
+    // hive default partition
+    Seq((7L, Option(1L)), (8L, Option(2L)), (9L, None: Option[Long])).toDF("id", "p")
+      .coalesce(1).write.partitionBy("p").parquet(s"$root/mixed-hive")
+    assert(new java.io.File(s"$root/mixed-hive/p=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    lake.addFiles("main.mixed", Seq(s"$root/mixed-hive"))
+    val t = "mixlake.main.mixed"
+    assert(mixedSql(s"SELECT id FROM $t")._1 == (1L to 9L))
+    // the stored file's stats cover both values and a null: it is read
+    // by every query below, with one file of each other kind
+    assert(mixedSql(s"SELECT id FROM $t WHERE p = 1") == (Seq(1L, 4L, 7L), 3L))
+    assert(mixedSql(s"SELECT id FROM $t WHERE p = 2") == (Seq(2L, 5L, 8L), 3L))
+    assert(mixedSql(s"SELECT id FROM $t WHERE p IS NULL") == (Seq(3L, 6L, 9L), 3L))
+    assert(mixedSql(s"SELECT id FROM $t WHERE p = 7") == (Nil, 0L))
+  }
+
+  test("a partition column renamed to a name an older epoch holds for another column") {
+    import spark.implicits._
+    lake.createTableAs(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "b", 30L))
+      .toDF("id", "k", "x").coalesce(1), "main.shadowed", partitionBy = Seq("k"))
+    // the files keep physical columns k (the partition column) and x,
+    // which now belongs to y; the partition column takes the name x
+    lake.renameColumn("main.shadowed", "x", "y")
+    lake.renameColumn("main.shadowed", "k", "x")
+    val t = "mixlake.main.shadowed"
+    assert(mixedSql(s"SELECT y FROM $t WHERE x = 'b'") == (Seq(20L, 30L), 1L))
+    assert(mixedSql(s"SELECT id FROM $t WHERE y = 10")._1 == Seq(1L))
+    assert(spark.sql(s"SELECT id, x, y FROM $t ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
+      Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "b", 30L)))
+  }
+
   test("SQL surface: CREATE TABLE PARTITIONED BY + INSERT + pruned SELECT + readStream") {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.partlake",
