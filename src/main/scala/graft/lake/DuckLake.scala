@@ -3,11 +3,14 @@ package graft.lake
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, Union, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
@@ -15,6 +18,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** DuckLake-on-Spark session façade: a lakehouse whose metadata lives in
   * an embedded SQL catalog ([[MetadataStore]], Derby) and whose data lives
@@ -633,12 +637,15 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * [[writeOptions]], the catalog column ids as top-level field ids and
     * the lake's session confs. Returns the factory and the job conf its
     * writers open files with — one conf per schema, because the write
-    * support reads its schema from the conf.
+    * support reads its schema from the conf — broadcast, so tasks read
+    * one copy instead of each deserializing its own (a session conf is
+    * over a thousand entries).
     */
-  private[lake] def parquetOutput(name: String, schema: StructType, keyOpt: Option[String])
+  private[lake] def parquetOutput(name: String, schema: StructType, keyOpt: Option[String],
+      fieldIds: Boolean = true)
       : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-         org.apache.spark.util.SerializableConfiguration) = {
-    val ids = fieldIdsOf(name)
+         Broadcast[org.apache.spark.util.SerializableConfiguration]) = {
+    val ids = if (fieldIds) fieldIdsOf(name) else Map.empty[String, Long]
     // parquet field ids are 32-bit — never stamp a wrapped value
     val stamped = StructType(schema.map(f =>
       ids.get(f.name).filter(_ <= Int.MaxValue).fold(f)(id => f.copy(metadata =
@@ -648,7 +655,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val factory = withWriterSessionConf(
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
         .prepareWrite(spark, job, opts, stamped))
-    (factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+    (factory, spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)))
   }
 
   /** Catalog (tableId, current columns) of `name`, None when absent. */
@@ -1160,14 +1168,17 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** The context of one read of table `tr` (pinned columns `cols`) at
     * `snap`; its directory resolves through the table's row and its
     * schema's row of that snapshot, once per read and only when a
-    * relative path needs it.
+    * relative path needs it. A read of files live before `snap` (change
+    * feeds, stream batches) passes the first snapshot it reads, `from`.
     */
-  private[lake] def scanCtx(tr: TableRec, cols: Seq[ColumnDef], snap: Long): ScanCtx = {
+  private[lake] def scanCtx(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
+      from: Option[Long] = None): ScanCtx = {
     val partCols = store.getPartitionColumns(tr.tableId, snap)
     ScanCtx(() => DuckLake.tableDir(dataPath, store.getSchemaById(tr.schemaId, snap)
         .getOrElse(throw new SchemaNotFoundException(s"schema id ${tr.schemaId}")).path, tr),
       cols, store.getColumnHistory(tr.tableId), partCols,
-      if (partCols.isEmpty) Map.empty else store.getFilePartitionValues(tr.tableId),
+      if (partCols.isEmpty) Map.empty
+      else store.getFilePartitionValues(tr.tableId, snap, from.getOrElse(snap)),
       store.getNameMappings(tr.tableId),
       store.getNestedDefaults(tr.tableId, snap))
   }
@@ -1737,28 +1748,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     store.currentSnapshot
   }
 
-  /** Write the merged `(__fid, pos)` delete set as one cumulative
-    * positional delete parquet per data file — IN EXECUTOR TASKS
-    * ([[DeleteFileWriter]]), staged and renamed into the table directory
-    * (renames are O(files) metadata operations).
-    */
-  private def writeDeleteFiles(name: String, merged: DataFrame,
-      pathByFid: Map[Long, String]): Seq[(Long, FileToRegister)] = {
-    val staging = s"$dataPath/.staging-del-${UUID.randomUUID()}"
-    val fs = FileSystem.get(new java.net.URI(dataPath), hconf)
-    try {
-      fs.mkdirs(new Path(staging))
-      val regs = DeleteFileWriter.writeDistributed(spark, merged, pathByFid,
-        staging, hconf, encryptionEnabled)
-      val tableDir = tableDirOf(name)
-      regs.foreach { case (_, r) =>
-        if (!fs.rename(new Path(s"$staging/${r.path}"), new Path(s"$tableDir/${r.path}")))
-          throw new InternalException(s"rename failed for delete file ${r.path}")
-      }
-      regs
-    } finally fs.delete(new Path(staging), true)
-  }
-
   /** Catalog-stats file skipping for an external (native Batch) scan:
     * same conservative machinery as [[table]] — at 100 TB, an UPDATE or
     * MERGE whose condition touches one partition must not read the lake.
@@ -1771,37 +1760,23 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   /** Commit a row-level DELTA staged by the native delta writers
     * (DELETE / UPDATE / MERGE, merge-on-read): appended-row files plus the
-    * tasks' PARTIAL delete-position parquets (`(_fid, pos)`, written
-    * executor-side — commit messages carry file names and the ids of the
-    * data files they touch, never positions) — merged with existing
-    * delete files into per-data-file cumulative delete parquets,
-    * registered with the new data files in ONE snapshot that also ends
-    * the deleted inlined rows `endInlined`. Cost is O(changed rows) of
-    * cluster work and O(files) of driver state; never a table rewrite.
+    * tasks' PARTIAL delete-position parquets (`deletePartials`: data file
+    * id → one partial of its positions, written executor-side; commit
+    * messages carry file names, never positions). [[mergeDeleteFiles]]
+    * folds each touched data file's partials and live delete file into
+    * one cumulative delete parquet in one narrow Spark job, and ONE
+    * snapshot registers them with the new data files and ends the deleted
+    * inlined rows `endInlined`; the store refuses the commit if a merged
+    * data file ended, or its delete file changed, in the meantime. Cost
+    * is O(changed rows) of cluster work and O(files) of driver state;
+    * never a table rewrite.
     */
   private[lake] def commitDeltaStaged(schemaName: String, tableName: String,
       cols: Seq[ColumnDef], stagedNew: Seq[(Path, Seq[Option[String]])],
-      dataSchema: StructType, keyOpt: Option[String],
-      deletePartials: Seq[Path], touchedFids: Set[Long],
+      dataSchema: StructType, keyOpt: Option[String], deletePartials: Seq[(Long, Path)],
       stagedRowId: Seq[(Path, Seq[Option[String]])], endInlined: Set[Long]): Long = {
     val name = s"$schemaName.$tableName"
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val filesById = store.getDataFiles(tr.tableId, snap).map(f => f.dataFileId -> f).toMap
-    val delRegs = if (deletePartials.isEmpty) Nil else {
-      val partial = reader(deletePartials.map(p => p.getName -> keyOpt))
-        .schema(connector.DuckLakeDeltaWriterFactory.DeletePartialSchema)
-        .parquet(deletePartials.map(_.toString): _*)
-        .select(col("_fid").as("__fid"), col("pos"))
-      val touched = touchedFids.toSeq.sorted.flatMap(filesById.get)
-      val dir = tableDirOf(name)
-      val previous = touched.flatMap(f => f.deleteFile.map(
-        deleteRows(dir, _).select(lit(f.dataFileId).as("__fid"), col("pos"))))
-      import spark.implicits._
-      val fidFilter = broadcast(touched.map(_.dataFileId).toDF("__fid"))
-      writeDeleteFiles(name, unionAll(partial +: previous).join(fidFilter, "__fid"),
-        touched.map(f => f.dataFileId -> under(dir, f.path, f.pathIsRelative)).toMap)
-    }
+    val delRegs = if (deletePartials.isEmpty) Nil else mergeDeleteFiles(name, keyOpt, deletePartials)
     val hiveNames = hiveNamesFor(name, partitionFieldsOf(name))
     val (newFiles, renamed) = stageIntoTableDir(schemaName, tableName, stagedNew,
       dataSchema, keyOpt, hiveNames)
@@ -1815,9 +1790,63 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     catch { case e: Throwable =>
       cleanupRenamed(renamed)
       cleanupRenamed(renamed2)
-      cleanupRenamed(delRegs.map(d => new Path(s"${tableDirOf(name)}/${d._2.path}")))
+      cleanupRenamed(delRegs.map(d => new Path(s"${tableDirOf(name)}/${d._3.path}")))
       throw e
     }
+  }
+
+  /** One cumulative `(file_path, pos)` delete parquet per data file of
+    * `partials` (data file id → one partial of its positions): the union
+    * of the file's partials and its live delete file, written ascending
+    * into the table directory by Spark's parquet writer with the write's
+    * key `keyOpt` and writer options. One narrow Spark job — a task per
+    * slice of files, no query plan, no shuffle — and each task holds one
+    * file's positions at a time. Returns, per data file, its id, the id
+    * of the delete file merged from and the new file's registration.
+    */
+  private def mergeDeleteFiles(name: String, keyOpt: Option[String],
+      partials: Seq[(Long, Path)]): Seq[(Long, Option[Long], FileToRegister)] = {
+    val snap = store.currentSnapshot
+    val filesById = store.getDataFiles(resolveTable(name, snap).tableId, snap)
+      .map(f => f.dataFileId -> f).toMap
+    val dir = tableDirOf(name)
+    val work = partials.groupMap(_._1)(_._2.toString).toSeq.sortBy(_._1).map { case (fid, ps) =>
+      val f = filesById.getOrElse(fid, throw new TransactionConflictException(
+        s"data file $fid of $name ended while rows of it were being deleted"))
+      (fid, under(dir, f.path, f.pathIsRelative),
+        f.deleteFile.map(d => (under(dir, d.path, d.pathIsRelative), d.encryptionKey)), ps)
+    }
+    val (output, jobConf) = parquetOutput(name, DeletePositions.Schema, keyOpt, fieldIds = false)
+    spark.sparkContext
+      .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism))
+      .map { case (fid, dataFile, previous, ps) =>
+        val conf = jobConf.value.value
+        val positions = previous.fold(new Roaring64Bitmap) { case (p, k) =>
+          DeletePositions.load(p, k, conf)
+        }
+        ps.foreach(p => positions.or(DeletePositions.load(p, keyOpt, conf)))
+        // reference delete-file naming: ducklake-<uuid>-delete.parquet
+        val file = s"ducklake-${UUID.randomUUID()}-delete.parquet"
+        val dest = new Path(s"$dir/$file")
+        val fs = dest.getFileSystem(conf)
+        val w = output.newInstance(dest.toString, DeletePositions.Schema,
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        try {
+          val row = new GenericInternalRow(Array[Any](UTF8String.fromString(dataFile), 0L))
+          val it = positions.getLongIterator
+          while (it.hasNext) { row.setLong(1, it.next()); w.write(row) }
+          w.close()
+        } catch { case e: Throwable =>
+          try { w.close(); fs.delete(dest, false) } catch { case _: Throwable => () }
+          throw e
+        }
+        (fid, file, positions.getLongCardinality, fs.getFileStatus(dest).getLen)
+      }
+      .collect().toSeq
+      .map { case (fid, file, count, size) =>
+        (fid, filesById(fid).deleteFile.map(_.deleteFileId),
+          FileToRegister(file, count, size, 0L, Nil, keyOpt))
+      }
   }
 
   /** Adopt pre-existing parquet files into a table WITHOUT rewriting a
@@ -3004,7 +3033,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val files = store.getDataFilesAddedBetween(tr.tableId, from, to)
     if (files.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    readAll(scanCtx(tr, cols, to), files, None, extra = (_, field) =>
+    readAll(scanCtx(tr, cols, to, Some(from)), files, None, extra = (_, field) =>
       Seq(field(LakeFile.BeginSnapshot).as("snapshot_id"), lit("insert").as("change_type")))
   }
 
@@ -3024,7 +3053,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val entries = store.getDeleteFilesAddedBetween(tr.tableId, from, to)
     if (entries.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val ctx = scanCtx(tr, cols, to)
+    val ctx = scanCtx(tr, cols, to, Some(from))
     // a replaced file's end snapshot is by construction in range
     val deleted = deletedPositions(ctx.dir, entries, _ => to)
     addressedRows(ctx, entries.map(_._3), Nil)
@@ -3072,7 +3101,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     if (from > to) throw new InvalidSnapshotException(s"start $from > end $to")
     val tr = resolveTable(name, to)
     val cols = store.getTableColumns(tr.tableId, to)
-    val ctx = scanCtx(tr, cols, to)
+    // a file deleted whole at `from` was last live just before it
+    val ctx = scanCtx(tr, cols, to, Some(from - 1))
     val colExprs = cols.map(c => col(c.name))
     val head = Seq(col("snapshot_id"), col("rowid"), col("change_type"))
     val outSchema = StructType(

@@ -2385,12 +2385,15 @@ final class MetadataStore(backend: MetadataBackend,
     query(s"SELECT partition_key_index, column_id, transform FROM ducklake_partition_column WHERE table_id = ? AND $Vis ORDER BY partition_key_index",
       Seq(tableId, snap, snap))(rs => (rs.getInt(1), rs.getLong(2), Option(rs.getString(3))))
 
-  /** Per-file partition values for the table: data_file_id →
-    * (key_index → raw hive value, None = null/default partition).
+  /** Partition values of the table's files live at some snapshot in
+    * [`from`, `snap`] (`from` = `snap`: the files of one snapshot):
+    * data_file_id → (key_index → raw hive value, None = null/default
+    * partition).
     */
-  def getFilePartitionValues(tableId: Long): Map[Long, Map[Int, Option[String]]] =
-    query("SELECT data_file_id, partition_key_index, partition_value FROM ducklake_file_partition_value WHERE table_id = ?",
-      Seq(tableId))(rs => (rs.getLong(1), rs.getInt(2), Option(rs.getString(3))))
+  def getFilePartitionValues(tableId: Long, snap: Long,
+      from: Long): Map[Long, Map[Int, Option[String]]] =
+    query("SELECT v.data_file_id, v.partition_key_index, v.partition_value FROM ducklake_file_partition_value v JOIN ducklake_data_file f ON f.data_file_id = v.data_file_id WHERE v.table_id = ? AND f.begin_snapshot <= ? AND (f.end_snapshot IS NULL OR f.end_snapshot > ?)",
+      Seq(tableId, snap, from))(rs => (rs.getLong(1), rs.getInt(2), Option(rs.getString(3))))
       .groupBy(_._1).view.mapValues(_.map(t => t._2 -> t._3).toMap).toMap
 
   /** Per-file per-column stats for the given table, keyed by
@@ -2472,13 +2475,17 @@ final class MetadataStore(backend: MetadataBackend,
   }
 
   /** One-snapshot commit of a row-level DELTA: new data files (appended
-    * rows), refreshed positional delete files (any previous delete file
-    * of the same data file ends) and ended inlined rows together — the
-    * atomic unit under merge-on-read DELETE / UPDATE / MERGE (changed
-    * rows become visible exactly when the old versions disappear).
+    * rows), refreshed positional delete files and ended inlined rows
+    * together — the atomic unit under merge-on-read DELETE / UPDATE /
+    * MERGE (changed rows become visible exactly when the old versions
+    * disappear). Each of `deletes` is (data file id, the delete file its
+    * positions were merged from, the new delete file), and the merged-from
+    * file ends; a data file that has ended, or whose live delete file is
+    * not the merged-from one, fails the commit with a
+    * [[TransactionConflictException]], so no deleted position is lost.
     */
   def commitRowDelta(schemaName: String, tableName: String, cols: Seq[ColumnDef],
-      newFiles: Seq[FileToRegister], deletes: Seq[(Long, FileToRegister)],
+      newFiles: Seq[FileToRegister], deletes: Seq[(Long, Option[Long], FileToRegister)],
       endInlinedRowIds: Seq[Long]): Long =
     inSnapshotTxn { snap =>
       if (newFiles.nonEmpty)
@@ -2488,9 +2495,20 @@ final class MetadataStore(backend: MetadataBackend,
         val schema = getOrCreateSchema(schemaName, snap)
         val table = getTableByName(schema.schemaId, tableName, snap)
           .getOrElse(throw new TableNotFoundException(s"$schemaName.$tableName"))
-        deletes.foreach { case (dataFileId, f) =>
-          update("UPDATE ducklake_delete_file SET end_snapshot = ? WHERE data_file_id = ? AND end_snapshot IS NULL",
-            Seq(snap, dataFileId))
+        def conflict(dataFileId: Long, what: String) = new TransactionConflictException(
+          s"$what data file $dataFileId of $schemaName.$tableName while its deletes merged")
+        deletes.foreach { case (dataFileId, mergedFrom, f) =>
+          if (query("SELECT 1 FROM ducklake_data_file WHERE data_file_id = ? AND end_snapshot IS NULL",
+              Seq(dataFileId))(_ => ()).isEmpty)
+            throw conflict(dataFileId, "another commit ended")
+          val ended = mergedFrom match {
+            case Some(d) => update("UPDATE ducklake_delete_file SET end_snapshot = ? WHERE delete_file_id = ? AND end_snapshot IS NULL",
+              Seq(snap, d))
+            case None => update("UPDATE ducklake_delete_file SET end_snapshot = ? WHERE data_file_id = ? AND end_snapshot IS NULL",
+              Seq(snap, dataFileId))
+          }
+          if (ended != mergedFrom.size)
+            throw conflict(dataFileId, "another commit changed the delete file of")
           val id = nextFileId()
           update("INSERT INTO ducklake_delete_file VALUES (?, ?, ?, ?, ?, ?, ?, NULL, ?, ?)",
             Seq(id, dataFileId, table.tableId, f.path, true, f.recordCount, snap,

@@ -7,12 +7,14 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.lake.{ColumnDef, DuckLake, TypeBridge, UnsupportedTypeException, WriteMode}
 import graft.lake.crypto.GraftCryptoFactory
@@ -23,25 +25,27 @@ import graft.lake.crypto.GraftCryptoFactory
 final case class StagedFiles(files: Seq[(String, Seq[Option[String]])])
   extends WriterCommitMessage
 
-/** One executor's delta output: staged insert files, the names of the
-  * PARTIAL delete-positions parquets it streamed (empty = no deletes),
-  * the ids of the data files it wrote positions for and the row ids of
-  * the inlined rows it deleted. Positions live in staging files, never
+/** One executor's delta output: staged insert files, its PARTIAL
+  * delete-positions parquets — one per data file it deleted rows of,
+  * each with that file's id as its one partition value — and the row ids
+  * of the inlined rows it deleted. Positions live in staging files, never
   * in commit messages — the driver never materializes a delete set.
   */
 final case class DeltaStaged(files: Seq[(String, Seq[Option[String]])],
-    deleteFiles: Seq[String], deleteFids: Set[Long],
+    deleteFiles: Seq[(String, Seq[Option[String]])],
     rowIdFiles: Seq[(String, Seq[Option[String]])], inlinedIds: Set[Long])
   extends WriterCommitMessage
 
 /** Distributed DELTA write — the merge-on-read half of every predicate
   * DELETE, UPDATE and MERGE (Spark's `SupportsDelta` row-level path):
   * executors write inserted rows through Spark's parquet writer and
-  * stream deleted row addresses (`_file_id`, `_pos`) into partial
-  * parquets, or report an inlined row's id; the driver merges the
-  * positions into cumulative positional delete files and commits them,
-  * the new data files and the ended inlined rows in ONE snapshot (none
-  * if nothing changed). A DELETE's write schema is empty, so it has no
+  * write each touched data file's deleted positions into one sorted
+  * partial parquet, or report an inlined row's id. The commit merges
+  * each data file's partials with its live delete file in one narrow
+  * Spark job ([[DuckLake.commitDeltaStaged]]) and registers the
+  * cumulative delete files, the new data files and the ended inlined
+  * rows in ONE snapshot (none if nothing changed). The write requests
+  * no data distribution. A DELETE's write schema is empty, so it has no
   * partition keys. Cost scales with changed rows, never with table size.
   */
 final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
@@ -79,7 +83,7 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
     // virtual; catalog rows register with NULL row_id_start)
     new DuckLakeDeltaWriterFactory(files(rowSchema, partKeys),
       files(rowSchema.add(DuckLake.RowIdPhysCol, LongType, nullable = true), partKeys),
-      files(DuckLakeDeltaWriterFactory.DeletePartialSchema, Array.empty),
+      files(DuckLakeDeltaWriterFactory.DeletePartialSchema, Array((0, null))),
       rowSchema.map(_.dataType).toArray)
   }
 
@@ -92,14 +96,15 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
         .map { case (name, pvs) => (new Path(s"$staging/$name"), pvs) }
       val stagedRowId = deltas.flatMap(_.rowIdFiles)
         .map { case (name, pvs) => (new Path(s"$staging/$name"), pvs) }
-      val partials = deltas.flatMap(_.deleteFiles).map(n => new Path(s"$staging/$n"))
+      val partials = deltas.flatMap(_.deleteFiles)
+        .map { case (name, Seq(fid)) => fid.get.toLong -> new Path(s"$staging/$name") }
       val inlined = deltas.flatMap(_.inlinedIds).toSet
       val cols = rowSchema.fields.zipWithIndex.map { case (f, i) =>
         ColumnDef(i.toLong, i.toLong, f.name, TypeBridge.fromSpark(f.dataType), f.nullable)
       }.toSeq
       if (staged.nonEmpty || stagedRowId.nonEmpty || partials.nonEmpty || inlined.nonEmpty)
         lake.commitDeltaStaged(schemaName, tableName, cols, staged, dataSchema, keyOpt,
-          partials, deltas.flatMap(_.deleteFids).toSet, stagedRowId, inlined)
+          partials, stagedRowId, inlined)
     } finally fs.delete(new Path(staging), true)
   }
 
@@ -111,9 +116,11 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
 }
 
 /** Executor-side delta writer: inserts and updates go to the data file
-  * writers (hive-partition splitting included); file-row deletes STREAM
-  * into a partial `(_fid, pos)` parquet in the staging dir — constant
-  * task memory, no position list in the commit message; inlined-row
+  * writers (hive-partition splitting included); file-row deletes collect
+  * in one position bitmap per data file — one file's positions per
+  * bitmap, the bound the delete-aware scan holds — and at task commit
+  * each bitmap is written, ascending, as that file's partial
+  * `(_fid, pos)` parquet, the file id its partition value; inlined-row
   * deletes keep their row ids. The row id layout is fixed by
   * `SupportsDelta.rowId`: (_file_id, _pos, rowid).
   */
@@ -128,7 +135,7 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
       private val rowIdWriter = rowIdData.createWriter(partitionId, taskId)
       private val delWriter = deletes.createWriter(partitionId, taskId)
       private val writers = Seq(insertWriter, rowIdWriter, delWriter)
-      private val touched = mutable.Set.empty[Long]
+      private val deleted = mutable.LongMap.empty[Roaring64Bitmap]
       private val inlined = mutable.Set.empty[Long]
 
       /** The data columns of `row` — rows may carry TRAILING metadata
@@ -151,10 +158,7 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
 
       override def delete(meta: InternalRow, id: InternalRow): Unit =
         if (id.getLong(0) == DuckLake.InlinedFileId) inlined += id.getLong(1)
-        else {
-          touched += id.getLong(0)
-          delWriter.write(new GenericInternalRow(Array[Any](id.getLong(0), id.getLong(1))))
-        }
+        else deleted.getOrElseUpdate(id.getLong(0), new Roaring64Bitmap).addLong(id.getLong(1))
 
       override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
         delete(meta, id)
@@ -165,9 +169,14 @@ final class DuckLakeDeltaWriterFactory(data: DuckLakeFileWriterFactory,
       }
 
       override def commit(): WriterCommitMessage = {
+        val row = new GenericInternalRow(2)
+        deleted.foreach { case (fid, positions) =>
+          row.setLong(0, fid)
+          val it = positions.getLongIterator
+          while (it.hasNext) { row.setLong(1, it.next()); delWriter.write(row) }
+        }
         def staged(w: DataWriter[InternalRow]) = w.commit() match { case StagedFiles(fs) => fs }
-        DeltaStaged(staged(insertWriter), staged(delWriter).map(_._1), touched.toSet,
-          staged(rowIdWriter), inlined.toSet)
+        DeltaStaged(staged(insertWriter), staged(delWriter), staged(rowIdWriter), inlined.toSet)
       }
 
       override def abort(): Unit = writers.foreach(_.abort())
@@ -250,7 +259,8 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
   * included.
   */
 final class DuckLakeFileWriterFactory(staging: String, output: OutputWriterFactory,
-    conf: SerializableConfiguration, schema: StructType, partKeys: Array[(Int, String)])
+    conf: Broadcast[SerializableConfiguration], schema: StructType,
+    partKeys: Array[(Int, String)])
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -269,7 +279,7 @@ final class DuckLakeFileWriterFactory(staging: String, output: OutputWriterFacto
         val (w, _) = writers.getOrElseUpdate(pv, {
           val name = s"part-$partitionId-$taskId-${writers.size}-${UUID.randomUUID()}.parquet"
           (output.newInstance(s"$staging/$name", schema,
-            new TaskAttemptContextImpl(conf.value, new TaskAttemptID())), name)
+            new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID())), name)
         })
         w.write(row)
       }

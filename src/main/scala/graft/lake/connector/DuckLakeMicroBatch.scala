@@ -237,7 +237,7 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     val tr = tableRec
     // appends-only semantics: delete files are NOT applied to streamed rows
     DuckLakePartitionPlanner.plan(lake,
-      lake.scanCtx(tr, lake.store.getTableColumns(tr.tableId, b), b),
+      lake.scanCtx(tr, lake.store.getTableColumns(tr.tableId, b), b, Some(a)),
       lake.store.getDataFilesAddedBetween(tr.tableId, a, b), required, liveAt = None).toArray
   }
 

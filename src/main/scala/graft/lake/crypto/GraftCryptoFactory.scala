@@ -75,11 +75,4 @@ object GraftCryptoFactory {
       .withFooterKey(Base64.getDecoder.decode(b64))
       .withPlaintextFilesAllowed()
       .build()
-
-  /** Encryption properties for direct parquet-mr writers
-    * ([[graft.lake.DeleteFileWriter]], which bypasses Spark's
-    * conf-driven factory).
-    */
-  def encryptionProps(b64: String): FileEncryptionProperties =
-    FileEncryptionProperties.builder(Base64.getDecoder.decode(b64)).build()
 }

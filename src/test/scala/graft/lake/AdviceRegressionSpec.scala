@@ -151,7 +151,8 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // 200k rows across 8 files; delete half of every file in one call —
     // the delete-position set (100k) is written by executor tasks
-    // (DeleteFileWriter); the driver only commits O(files) registrations
+    // (the writers' partials, merged by DuckLake.mergeDeleteFiles); the
+    // driver only commits O(files) registrations
     lake.createTableAs(
       spark.range(200000L).select(col("id"), (col("id") % 1000).as("bucket"))
         .repartition(8), "main.wide_del")

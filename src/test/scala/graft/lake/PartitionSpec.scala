@@ -427,6 +427,31 @@ class PartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "b", 30L)))
   }
 
+  test("a read's file partition values are those of its snapshot's files, before and after compact") {
+    import spark.implicits._
+    def rows(ks: Range) = ks.map(k => (k.toLong, (k % 3).toLong)).toDF("id", "p")
+    lake.createTableAs(rows(1 to 60).repartition(2), "main.pv_compact", partitionBy = Seq("p"))
+    lake.insertInto(rows(61 to 90).repartition(2), "main.pv_compact")
+    val before = lake.currentSnapshot
+    val sch = lake.store.getSchemaByName("main", before).get
+    val tid = lake.store.getTableByName(sch.schemaId, "pv_compact", before).get.tableId
+    def fileIds(snap: Long) = lake.store.getDataFiles(tid, snap).map(_.dataFileId).toSet
+    val old = fileIds(before)
+    assert(lake.store.getFilePartitionValues(tid, before, before).keySet == old)
+    lake.compact("main.pv_compact")
+    val after = lake.currentSnapshot
+    assert(fileIds(after).intersect(old).isEmpty)
+    assert(lake.store.getFilePartitionValues(tid, after, after).keySet == fileIds(after))
+    // a range read still sees the values of the files it spans
+    assert(lake.store.getFilePartitionValues(tid, after, before).keySet == old ++ fileIds(after))
+    def counts(snap: Long) = lake.table("main.pv_compact", Some(snap)).groupBy("p").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(counts(before) == Map(0L -> 30L, 1L -> 30L, 2L -> 30L))
+    assert(counts(after) == counts(before))
+    assert(lake.table("main.pv_compact", Some(before), Seq(EqualTo("p", 1L)))
+      .select("id").collect().map(_.getLong(0)).sorted.toSeq == (1L to 90L).filter(_ % 3 == 1))
+  }
+
   test("SQL surface: CREATE TABLE PARTITIONED BY + INSERT + pruned SELECT + readStream") {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.partlake",

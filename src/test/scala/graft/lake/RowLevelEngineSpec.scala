@@ -1,11 +1,14 @@
 package graft.lake
 
 import java.nio.file.Files
+import java.sql.DriverManager
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestListeners
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -166,6 +169,121 @@ class RowLevelEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lake.update("main.noop", col("k") === -1L, Map("v" -> lit(0))) == s0)
     assert(lake.currentSnapshot == s0)
     assert(keys("noop") == (1L to 31L))
+  }
+
+  /** The stage count of each Spark job `body` runs, in start order. */
+  private def jobsOf(body: => Unit): Seq[Int] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = stages.add(e.stageInfos.size)
+    }
+    TestListeners.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestListeners.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    stages.asScala.toSeq
+  }
+
+  /** Number of live delete files of data file `fid`, read from the catalog. */
+  private def liveDeleteFiles(fid: Long): Int = {
+    val conn = DriverManager.getConnection(s"jdbc:derby:$root/meta")
+    try {
+      val ps = conn.prepareStatement(
+        "SELECT COUNT(*) FROM ducklake_delete_file WHERE data_file_id = ? AND end_snapshot IS NULL")
+      ps.setLong(1, fid)
+      val rs = ps.executeQuery()
+      rs.next()
+      rs.getInt(1)
+    } finally conn.close()
+  }
+
+  private def tableId(table: String): Long = {
+    val snap = lake.currentSnapshot
+    val sch = lake.store.getSchemaByName("main", snap).get
+    lake.store.getTableByName(sch.schemaId, table, snap).get.tableId
+  }
+
+  test("a SQL DELETE over delete-carrying files merges them in one Spark job after its write job") {
+    import spark.implicits._
+    (0 until 3).foreach { f =>
+      val df = ((f * 100L + 1) to (f * 100L + 100)).map(k => (k, (k % 3).toInt, k * 1.0))
+        .toDF("k", "m", "v").coalesce(1)
+      if (f == 0) lake.createTableAs(df, "main.del_jobs") else lake.insertInto(df, "main.del_jobs")
+    }
+    lake.deleteWhere("main.del_jobs", col("k") % 10 === 0)
+    val files = lake.store.getDataFiles(tableId("del_jobs"), lake.currentSnapshot)
+    assert(files.size == 3 && files.forall(_.deleteFile.isDefined))
+    val jobs = jobsOf(spark.sql("DELETE FROM dlrl.main.del_jobs WHERE k % 10 = 5"))
+    // the write job, then the merge: one job of one stage, no shuffle
+    assert(jobs.size == 2, s"jobs (stages each): $jobs")
+    assert(jobs.last == 1, s"jobs (stages each): $jobs")
+    assert(keys("del_jobs") == (1L to 300L).filter(k => k % 10 != 0 && k % 10 != 5))
+  }
+
+  test("a MERGE over several writer tasks leaves one ascending cumulative delete file per data file") {
+    import spark.implicits._
+    mkTable("mrg_del", 400)
+    lake.deleteWhere("main.mrg_del", col("k") % 10 === 0)
+    val file = lake.store.getDataFiles(tableId("mrg_del"), lake.currentSnapshot).head
+    val dir = s"$root/data/main/mrg_del"
+    val dataPath = s"$dir/${file.path}"
+    def positions(path: String): Seq[(String, Long)] =
+      spark.read.schema(DeletePositions.Schema).parquet(path).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val previous = positions(s"$dir/${file.deleteFile.get.path}").map(_._2)
+    val posOf = spark.read.parquet(dataPath).select(col("k"), col("_metadata.row_index"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (Seq((3L, 0, -3.0), (13L, 1, -13.0)) ++ (2 to 39).map(i => (i * 10L + 3, 0, -1.0)) ++
+      Seq((1001L, 2, -1001.0))).toDF("k", "m", "v").createOrReplaceTempView("mrg_src")
+    // a shuffled join with every shuffle partition kept: the matched rows
+    // of the one data file reach all four writer tasks
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try spark.sql("""MERGE INTO dlrl.main.mrg_del t USING mrg_src s ON t.k = s.k
+                    |WHEN MATCHED THEN UPDATE SET v = s.v
+                    |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
+    val after = lake.store.getDataFiles(tableId("mrg_del"), lake.currentSnapshot)
+      .find(_.dataFileId == file.dataFileId).get
+    assert(liveDeleteFiles(file.dataFileId) == 1)
+    val merged = positions(s"$dir/${after.deleteFile.get.path}")
+    val added = (0 until 40).map(i => posOf(i * 10L + 3))
+    assert(merged.map(_._2).sorted == (previous ++ added).sorted)
+    assert(merged.map(_._2).sliding(2).forall { case Seq(a, b) => a < b })
+    assert(merged.forall(_._1 == dataPath))
+    val v = lake.table("main.mrg_del").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(v.size == 361 && v(3L) == -3.0 && v(13L) == -13.0 && v(393L) == -1.0 &&
+      v(1001L) == -1001.0 && v(5L) == 5.0)
+  }
+
+  test("a row-level commit conflicts when a merged data file ended or its delete file changed") {
+    import spark.implicits._
+    mkTable("cfl", 30)
+    lake.insertInto((31L to 60L).map(k => (k, (k % 3).toInt, k * 1.0)).toDF("k", "m", "v")
+      .coalesce(1), "main.cfl")
+    lake.deleteWhere("main.cfl", col("k") === 1L)
+    val tid = tableId("cfl")
+    val cols = lake.store.getTableColumns(tid, lake.currentSnapshot)
+    val Seq(first, second) = lake.store.getDataFiles(tid, lake.currentSnapshot)
+    val reg = FileToRegister("ducklake-conflict-delete.parquet", 1L, 1L, 0L)
+    def commit(fid: Long, mergedFrom: Option[Long]): Unit = {
+      val s0 = lake.currentSnapshot
+      intercept[TransactionConflictException](
+        lake.store.commitRowDelta("main", "cfl", cols, Nil, Seq((fid, mergedFrom, reg)), Nil))
+      assert(lake.currentSnapshot == s0)
+    }
+    // a delete committed after the merge read the first file's delete file
+    lake.deleteWhere("main.cfl", col("k") === 2L || col("k") === 31L)
+    commit(first.dataFileId, first.deleteFile.map(_.deleteFileId))
+    commit(second.dataFileId, None)
+    // a compaction ended both files after the merge read them
+    val now = lake.store.getDataFiles(tid, lake.currentSnapshot)
+    lake.compact("main.cfl")
+    now.foreach(f => commit(f.dataFileId, f.deleteFile.map(_.deleteFileId)))
+    assert(keys("cfl") == (3L to 60L).filter(_ != 31L))
   }
 
   test("readStream under Trigger.AvailableNow paces the backlog and stops at its start") {
