@@ -246,41 +246,22 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * which ALTER … SET/DROP DEFAULT versions independently of the
     * initial default pre-existing rows read.
     */
-  def columnDefaultsOf(name: String, snapshot: Option[Long] = None): Map[String, String] = {
-    val snap = snapshot.getOrElse(store.currentSnapshot)
-    val (schemaName, tableName) = parse(name)
-    (for {
-      sch <- store.getSchemaByName(schemaName, snap)
-      tbl <- store.getTableByName(sch.schemaId, tableName, snap)
-    } yield store.getTableColumns(tbl.tableId, snap)
-      .flatMap(c => ColumnDefaults.render(c.defaultValue, c.defaultType, c.dtype)
-        .map(c.name -> _)).toMap).getOrElse(Map.empty)
-  }
+  def columnDefaultsOf(name: String, snapshot: Option[Long] = None): Map[String, String] =
+    pinned(name, snapshot).fold(Map.empty[String, String])(_.defaults)
 
   /** ALTER TABLE … ALTER <col> SET DEFAULT <sql> (None = DROP DEFAULT):
     * future inserts resolve the new default; existing rows are untouched.
     */
   def setColumnDefault(name: String, column: String, sql: Option[String]): Long = {
     val (dv, dt) = sql.map(ColumnDefaults.classify).getOrElse((None, "literal"))
-    store.setColumnDefault(resolveTable(name, store.currentSnapshot).tableId,
-      column, dv, dt)
+    store.setColumnDefault(pin(name).tableId, column, dv, dt)
   }
 
   /** The table's partition keys at `snap` as (source column, transform)
     * fields in key order (empty = unpartitioned or table absent).
     */
-  def partitionFieldsOf(name: String, snapshot: Option[Long] = None): Seq[PartField] = {
-    val snap = snapshot.getOrElse(store.currentSnapshot)
-    val (schemaName, tableName) = parse(name)
-    (for {
-      sch <- store.getSchemaByName(schemaName, snap)
-      tbl <- store.getTableByName(sch.schemaId, tableName, snap)
-    } yield {
-      val defs = store.getTableColumns(tbl.tableId, snap)
-      store.getPartitionColumns(tbl.tableId, snap)
-        .flatMap { case (_, cid, t) => defs.find(_.columnId == cid).map(c => PartField(c.name, t)) }
-    }).getOrElse(Nil)
-  }
+  def partitionFieldsOf(name: String, snapshot: Option[Long] = None): Seq[PartField] =
+    pinned(name, snapshot).fold(Seq.empty[PartField])(_.partFields)
 
   /** The table's partition key SPECS at `snap` — identity keys render as
     * the bare column name, transforms as `month(col)` etc.
@@ -294,23 +275,20 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * partitioning/basic_partitioning.test). Empty `partitionBy` = RESET.
     */
   def setPartitionedBy(name: String, partitionBy: Seq[String]): Long = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val defs = store.getTableColumns(tr.tableId, snap)
+    val t = pin(name)
     val keys = partitionBy.map(PartTransform.parse).map { pf =>
-      val cdef = defs.find(_.name.equalsIgnoreCase(pf.source)).getOrElse(
+      val cdef = t.cols.find(_.name.equalsIgnoreCase(pf.source)).getOrElse(
         throw new InvalidConfigException(s"partition column not found: ${pf.source}"))
-      pf.transform.foreach(t =>
-        PartTransform.validate(t, TypeBridge.toSpark(cdef.dtype), pf.source))
+      pf.transform.foreach(tf =>
+        PartTransform.validate(tf, TypeBridge.toSpark(cdef.dtype), pf.source))
       (cdef.columnId, pf.transform)
     }
     // SET PARTITIONED BY with the scheme already in force — or RESET on
     // an already-unpartitioned table — is a no-op: no new scheme id, no
     // snapshot (corpus: partitioning/partition_nop.test)
-    val live = store.getPartitionColumns(tr.tableId, snap)
-      .sortBy(_._1).map { case (_, cid, t) => (cid, t) }
-    if (keys == live) snap
-    else store.setPartitionedBy(tr.tableId, keys)
+    val live = t.partCols.sortBy(_._1).map { case (_, cid, tf) => (cid, tf) }
+    if (keys == live) t.snap
+    else store.setPartitionedBy(t.tableId, keys)
   }
 
   /** CTAS with Z-ORDER clustering on two numeric columns: each value is
@@ -507,15 +485,15 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     // keep working on geometry tables under an inline limit.
     if (inlineLimit > 0 && mode == WriteMode.Append && !flushInlined &&
         !tableIsNew &&
-        tableShape(name).exists(_._2.exists(c => TypeBridge.isGeometry(c.dtype))))
+        pinned(name).exists(_.cols.exists(c => TypeBridge.isGeometry(c.dtype))))
       throw new UnsupportedTypeException(
         "DuckLake does not yet support data-inlining of 'GEOMETRY' columns")
     if (inlineLimit > 0 && mode == WriteMode.Append && !tableIsNew &&
         !flushInlined && schemaMatchesCurrent(name, df)) {
       val sample = inlineJson(df).limit(inlineLimit + 1).collect()
       if (sample.length <= inlineLimit) {
-        val tr = resolveTable(name, store.currentSnapshot)
-        val curCols = store.getTableColumns(tr.tableId, store.currentSnapshot)
+        val t = pin(name)
+        val curCols = t.cols
         // NOT NULL also holds for inlined rows (toJSON omits null fields,
         // so a missing key IS a null)
         curCols.filterNot(_.nullsAllowed).foreach { c =>
@@ -524,7 +502,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
               s"NOT NULL constraint failed: column ${c.name} of $name")
         }
         return store.withSnapshotCas(casBase)(
-          store.commitInlined(tr.tableId, sample.toSeq,
+          store.commitInlined(t.tableId, sample.toSeq,
             inlineStats(df, curCols)))
       }
     }
@@ -579,26 +557,29 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** Scoped parquet tuning options (the DuckLake settings surface —
     * corpus: tests/sqllogictests/sql/settings/) rendered as Spark/
     * parquet-mr writer options. Resolution is most-specific-first:
-    * table > schema > global (store.getOption).
+    * table > schema > global, over one read of the option rows
+    * (store.optionsOf).
     */
   private def writerTuning(name: String): Map[String, String] = {
+    val (schemaName, tableName) = parse(name)
+    val option = store.optionsOf(schemaName, tableName)
     val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    getOption("parquet_compression", name).foreach { c =>
+    option("parquet_compression").foreach { c =>
       m += "compression" -> (c.toLowerCase match {
         case "lz4" => "lz4_raw" // duck lz4 ≙ parquet LZ4_RAW
         case other => other
       })
     }
-    getOption("parquet_compression_level", name).foreach { l =>
+    option("parquet_compression_level").foreach { l =>
       m += "parquet.compression.codec.zstd.level" -> l
     }
-    getOption("parquet_version", name).foreach { v =>
+    option("parquet_version").foreach { v =>
       m += "parquet.writer.version" ->
         (if (v.trim == "2") "PARQUET_2_0" else "PARQUET_1_0")
     }
-    getOption("parquet_row_group_size", name).foreach(n =>
+    option("parquet_row_group_size").foreach(n =>
       m += "parquet.block.row.count.limit" -> n.trim)
-    getOption("parquet_row_group_size_bytes", name).flatMap(parseByteSize)
+    option("parquet_row_group_size_bytes").flatMap(parseByteSize)
       .foreach { b =>
         m += "parquet.block.size" -> b.toString
         // small row groups need matching page granularity to take effect
@@ -611,8 +592,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     // key (user id, doc id) gets no min/max pruning; a per-row-group
     // bloom skips those row groups at the reader. CSV of column names;
     // optional shared false-positive rate.
-    getOption("parquet_bloom_filter_columns", name).foreach { cols =>
-      val fpp = getOption("parquet_bloom_filter_fpp", name)
+    option("parquet_bloom_filter_columns").foreach { cols =>
+      val fpp = option("parquet_bloom_filter_fpp")
       cols.split(",").map(_.trim).filter(_.nonEmpty).foreach { c =>
         m += s"parquet.bloom.filter.enabled#$c" -> "true"
         fpp.foreach(f => m += s"parquet.bloom.filter.fpp#$c" -> f)
@@ -634,18 +615,17 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   /** Spark's parquet writer for executor-side files of table `name`
     * (delta and streaming writes), prepared like a staged append: the
-    * [[writeOptions]], the catalog column ids as top-level field ids and
-    * the lake's session confs. Returns the factory and the job conf its
-    * writers open files with — one conf per schema, because the write
-    * support reads its schema from the conf — broadcast, so tasks read
-    * one copy instead of each deserializing its own (a session conf is
-    * over a thousand entries).
+    * [[writeOptions]], the catalog column ids `ids` (name → id) as
+    * top-level field ids and the lake's session confs. Returns the
+    * factory and the job conf its writers open files with — one conf per
+    * schema, because the write support reads its schema from the conf —
+    * broadcast, so tasks read one copy instead of each deserializing its
+    * own (a session conf is over a thousand entries).
     */
   private[lake] def parquetOutput(name: String, schema: StructType, keyOpt: Option[String],
-      fieldIds: Boolean = true)
+      ids: Map[String, Long])
       : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
          Broadcast[org.apache.spark.util.SerializableConfiguration]) = {
-    val ids = if (fieldIds) fieldIdsOf(name) else Map.empty[String, Long]
     // parquet field ids are 32-bit — never stamp a wrapped value
     val stamped = StructType(schema.map(f =>
       ids.get(f.name).filter(_ <= Int.MaxValue).fold(f)(id => f.copy(metadata =
@@ -659,19 +639,9 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)))
   }
 
-  /** Catalog (tableId, current columns) of `name`, None when absent. */
-  private def tableShape(name: String): Option[(Long, Seq[ColumnDef])] = {
-    val snap = store.currentSnapshot
-    for {
-      sch <- store.getSchemaByName(parse(name)._1, snap)
-      tbl <- store.getTableByName(sch.schemaId, parse(name)._2, snap)
-    } yield tbl.tableId -> store.getTableColumns(tbl.tableId, snap)
-  }
-
   /** Catalog column ids of the CURRENT shape (empty when absent). */
-  private def fieldIdsOf(name: String): Map[String, Long] =
-    tableShape(name)
-      .map(_._2.map(c => c.name -> c.columnId).toMap).getOrElse(Map.empty)
+  private[lake] def fieldIdsOf(name: String): Map[String, Long] =
+    pinned(name).fold(Map.empty[String, Long])(_.fieldIds)
 
   /** Annotate the outgoing schema with parquet FIELD IDS (DuckLake spec:
     * column_id ≙ parquet field_id, so field-id-based readers resolve
@@ -683,7 +653,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   private def annotateFieldIds(df: DataFrame, name: String,
       redefine: Boolean = false): DataFrame = {
-    val existing: Option[(Long, Seq[ColumnDef])] = tableShape(name)
+    val existing = pinned(name)
     // ids run DEPTH-FIRST through nested nodes (spec numbering, mirrors
     // registerWrite): the stamped top-level field id is the root node id
     def depthFirst(base: Long): Map[String, Long] = {
@@ -696,11 +666,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       }.toMap
     }
     val ids: Map[String, Long] = existing match {
-      case Some((tid, _)) if redefine =>
+      case Some(t) if redefine =>
         // CREATE OR REPLACE assigns FRESH ids past every NODE id the
         // table ever occupied — the files must carry those
-        depthFirst(store.maxColumnId(tid))
-      case Some((_, cols)) => cols.map(c => c.name -> c.columnId).toMap
+        depthFirst(store.maxColumnId(t.tableId))
+      case Some(t) => t.fieldIds
       case None =>
         // first write of a CTAS: mirror the 1-based numbering the
         // catalog rows land with at commit
@@ -796,16 +766,16 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   private def stageIntoTableDir(schemaName: String, tableName: String,
       staged: Seq[(Path, Seq[Option[String]])], dataSchema: StructType,
       keyOpt: Option[String],
-      hiveNames: Seq[String] = Nil): (Seq[FileToRegister], Seq[Path]) = {
+      hiveNames: => Seq[String] = Nil): (Seq[FileToRegister], Seq[Path]) = {
+    if (staged.isEmpty) return (Nil, Nil)
     val fs = FileSystem.get(new java.net.URI(dataPath), hconf)
     val tableDir = tableDirOf(s"$schemaName.$tableName")
     fs.mkdirs(new Path(tableDir))
     // GEOMETRY-typed catalog columns get a bbox/type `extra_stats`
     // summary per file (corpus: geo/ducklake_geometry.test) — computed
     // by one distributed pass over the staged file's WKB column
-    val geoCols: Seq[String] = tableShape(s"$schemaName.$tableName")
-      .map(_._2.filter(c => TypeBridge.isGeometry(c.dtype)).map(_.name))
-      .getOrElse(Nil)
+    val geoCols: Seq[String] = pinned(s"$schemaName.$tableName")
+      .fold(Seq.empty[String])(_.cols.filter(c => TypeBridge.isGeometry(c.dtype)).map(_.name))
       .filter(n => dataSchema.fieldNames.contains(n))
     val renamed = scala.collection.mutable.ArrayBuffer.empty[Path]
     val placed = staged.map { case (part, partValues) =>
@@ -1044,9 +1014,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   private def schemaMatchesCurrent(name: String, df: DataFrame): Boolean = {
-    val snap = store.currentSnapshot
-    val cur = store.getTableColumns(resolveTable(name, snap).tableId, snap)
-    cur.map(c => (c.name, c.dtype)) ==
+    pin(name).cols.map(c => (c.name, c.dtype)) ==
       df.schema.fields.toSeq.map(f => (f.name, TypeBridge.normalize(TypeBridge.fromSpark(f.dataType))))
   }
 
@@ -1116,12 +1084,38 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   // Read path (reference: A4 table scan planner, src/table.rs:369-653)
   // ------------------------------------------------------------------
 
-  private[lake] def resolveTable(name: String, snap: Long): TableRec = {
+  /** Table `name` at snapshot `snap` (default: the current one) as a
+    * [[PinnedTable]]: its schema and table rows, resolved by name at
+    * `snap`, and its columns there. A read of files live before `snap`
+    * (change feeds) passes the first snapshot it reads, `from`.
+    */
+  private[lake] def pin(name: String, snap: Long = store.currentSnapshot,
+      from: Option[Long] = None): PinnedTable = {
     val (schemaName, tableName) = parse(name)
     val schema = store.getSchemaByName(schemaName, snap)
       .getOrElse(throw new SchemaNotFoundException(schemaName))
-    store.getTableByName(schema.schemaId, tableName, snap)
+    val table = store.getTableByName(schema.schemaId, tableName, snap)
       .getOrElse(throw new TableNotFoundException(name))
+    val t = new PinnedTable(store, dataPath, name, schema, table, snap, from.getOrElse(snap))
+    if (t.cols.isEmpty) throw new TableNotFoundException(s"$name (no columns at snapshot $snap)")
+    t
+  }
+
+  /** [[pin]] at `snapshot` (default: the current one), None when the
+    * table does not exist there.
+    */
+  private def pinned(name: String, snapshot: Option[Long] = None): Option[PinnedTable] =
+    try Some(pin(name, snapshot.getOrElse(store.currentSnapshot)))
+    catch { case _: SchemaNotFoundException | _: TableNotFoundException => None }
+
+  /** The snapshot a read at `snapshot` pins: the current one, or an
+    * explicit one, which must still exist (not expired).
+    */
+  private[lake] def snapshotOf(snapshot: Option[Long]): Long = snapshot match {
+    case Some(s) if !store.snapshotExists(s) =>
+      throw new InvalidSnapshotException(s"snapshot $s does not exist (expired?)")
+    case Some(s) => s
+    case None => store.currentSnapshot
   }
 
   /** Physical directory of a table, resolved through the catalog's table
@@ -1162,27 +1156,6 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     reader(Seq(d.path -> d.encryptionKey)).schema(DeletePositions.Schema)
       .parquet(under(dir, d.path, d.pathIsRelative))
 
-  private def sparkSchemaOf(cols: Seq[ColumnDef]): StructType =
-    StructType(cols.map(c => StructField(c.name, TypeBridge.toSpark(c.dtype), c.nullsAllowed)))
-
-  /** The context of one read of table `tr` (pinned columns `cols`) at
-    * `snap`; its directory resolves through the table's row and its
-    * schema's row of that snapshot, once per read and only when a
-    * relative path needs it. A read of files live before `snap` (change
-    * feeds, stream batches) passes the first snapshot it reads, `from`.
-    */
-  private[lake] def scanCtx(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      from: Option[Long] = None): ScanCtx = {
-    val partCols = store.getPartitionColumns(tr.tableId, snap)
-    ScanCtx(() => DuckLake.tableDir(dataPath, store.getSchemaById(tr.schemaId, snap)
-        .getOrElse(throw new SchemaNotFoundException(s"schema id ${tr.schemaId}")).path, tr),
-      cols, store.getColumnHistory(tr.tableId), partCols,
-      if (partCols.isEmpty) Map.empty
-      else store.getFilePartitionValues(tr.tableId, snap, from.getOrElse(snap)),
-      store.getNameMappings(tr.tableId),
-      store.getNestedDefaults(tr.tableId, snap))
-  }
-
   /** Physical column defs for one file's epoch: what each pinned catalog
     * column was named/typed when the file was written (column_id ≙
     * parquet field_id, reference src/types.rs:440-498).
@@ -1201,7 +1174,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * resolve through the rename-epoch history. Both shapes feed the same
     * [[readGroup]] projection.
     */
-  private def physOf(ctx: ScanCtx, f: DataFileRec): Seq[(ColumnDef, Option[ColumnDef])] =
+  private def physOf(ctx: PinnedTable, f: DataFileRec): Seq[(ColumnDef, Option[ColumnDef])] =
     f.mappingId.flatMap(ctx.mappings.get) match {
       case Some(entries) =>
         val byId = entries.filterNot(_.isPartition).map(e => e.columnId -> e).toMap
@@ -1227,7 +1200,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * segments parsed from the file's own registered path (the
     * name-mapping hive model — the path IS the per-file value store).
     */
-  private def injectedValues(ctx: ScanCtx, f: DataFileRec): Map[Long, Option[String]] = {
+  private def injectedValues(ctx: PinnedTable, f: DataFileRec): Map[Long, Option[String]] = {
     val hive = f.mappingId.flatMap(ctx.mappings.get) match {
       case Some(entries) => entries.filter(_.isPartition)
         .map(e => e.columnId -> hivePathValue(f.path, e.sourceName)).toMap
@@ -1280,7 +1253,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** [[readGroup]] over every read group of `files` ([[readGroups]]),
     * in one n-ary union.
     */
-  private def readAll(ctx: ScanCtx, files: Seq[DataFileRec], liveAt: Option[Long],
+  private def readAll(ctx: PinnedTable, files: Seq[DataFileRec], liveAt: Option[Long],
       provenance: Boolean = false,
       extra: (DataFileRec, String => Column) => Seq[Column] = (_, _) => Nil,
       skipping: Option[FileSkipping] = None): DataFrame =
@@ -1379,7 +1352,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     (physSchema, projection)
   }
 
-  /** The read groups of `files` (catalog rows of the table `ctx` pins),
+  /** The read groups of `files` (catalog rows of the table `ctx`),
     * for every lake reader — the facade's scans, CDC and rewrites, the
     * connector's Batch (UPDATE, MERGE, row-level DELETE, SPJ) and its
     * micro-batch stream: files of one physical epoch share one
@@ -1398,7 +1371,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * (MOR deletes, the merged-file visible-row limit) inside the scan;
     * None keeps every physical row (CDC, merge_adjacent).
     */
-  private[lake] def readGroups(ctx: ScanCtx, files: Seq[DataFileRec], liveAt: Option[Long],
+  private[lake] def readGroups(ctx: PinnedTable, files: Seq[DataFileRec], liveAt: Option[Long],
       provenance: Boolean): Seq[LakeReadGroup] = {
     val index = files.iterator.map(_.dataFileId).zipWithIndex.toMap
     val tz = Some(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
@@ -1436,14 +1409,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       liveAt.map(f.visibleRowsAt).filter(_ < f.recordCount))
   }
 
-  /** Inlined catalog rows visible at `snap`, parsed with the column names
-    * of each row's write epoch and projected (by column_id) to the pinned
-    * `cols` — the inline counterpart of the per-file epoch projection.
+  /** The inlined catalog rows `t` pins, parsed with the column names of
+    * each row's write epoch and projected (by column_id) to the pinned
+    * columns — the inline counterpart of the per-file epoch projection.
     */
-  private def inlinedDF(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      withRowId: Boolean = false, virtual: Seq[String] = Nil,
+  private def inlinedDF(t: PinnedTable, withRowId: Boolean = false, virtual: Seq[String] = Nil,
       txnSnap: Option[Long] = None, txnBase: Long = 0L): Option[DataFrame] = {
-    val rows = store.getInlinedRows(tr.tableId, snap)
+    val rows = t.inlinedRows
     if (rows.isEmpty) return None
     import spark.implicits._
     // rows REPLACED inside the open txn (same row_id ended at the txn
@@ -1451,11 +1423,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     // rowid virtual, never the provisional 1e18 form (reference:
     // data_inlining/data_inlining_update.test)
     val updatedIds: Set[Long] = txnSnap
-      .map(s => store.inlinedRowIdsEndedAt(tr.tableId, s).toSet)
+      .map(s => store.inlinedRowIdsEndedAt(t.tableId, s).toSet)
       .getOrElse(Set.empty)
     val dfs = rows.groupBy(_._2).toSeq.sortBy(_._1).map { case (beginSnap, group) =>
       val txnLocal = txnSnap.contains(beginSnap)
-      val epochCols = store.getTableColumns(tr.tableId, beginSnap)
+      val epochCols = t.history.collect {
+        case (c, begin, end) if begin <= beginSnap && end.forall(_ > beginSnap) => c
+      }.sortBy(_.order)
       val epochSchema = StructType(epochCols.map(c =>
         StructField(c.name, inlineReadType(TypeBridge.toSpark(c.dtype)),
           nullable = true)))
@@ -1464,7 +1438,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         .map { case (g, i) => (g._1, g._3, i.toLong) }
         .toDF("__row_id", "__json", "__frn")
         .withColumn("__p", from_json(col("__json"), epochSchema, inlineJsonOpts))
-      val projection = cols.map { c =>
+      val projection = t.cols.map { c =>
         byId.get(c.columnId) match {
           case Some(e) => col("__p").getField(e.name)
             .cast(TypeBridge.toSpark(c.dtype)).as(c.name)
@@ -1485,7 +1459,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
           else col("__row_id")).as(v)
         else if (v == DuckLake.VirtualFilename)
           lit(if (txnLocal) "__ducklake_inlined_transaction_local_data"
-              else s"ducklake_inlined_data_${tr.tableId}_1").as(v)
+              else s"ducklake_inlined_data_${t.tableId}_1").as(v)
         else if (v == DuckLake.VirtualRowNumber) col("__frn").as(v)
         else if (v == DuckLake.VirtualFileIndex)
           lit(if (txnLocal) 1L else 0L).as(v)
@@ -1497,19 +1471,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     Some(unionAll(dfs))
   }
 
-  /** Whether table `name` holds inlined rows visible at `snap`. */
-  private[lake] def hasInlinedRows(name: String, snap: Long): Boolean =
-    store.getInlinedRows(resolveTable(name, snap).tableId, snap).nonEmpty
-
-  /** `tr`'s inlined rows at `snap` in a row-level scan's `required`
-    * columns, collected on the driver (the inline limit bounds them);
-    * `_file_id` is [[DuckLake.InlinedFileId]], `_pos` the row id.
+  /** The inlined rows `t` pins in a row-level scan's `required` columns,
+    * collected on the driver (the inline limit bounds them); `_file_id`
+    * is [[DuckLake.InlinedFileId]], `_pos` the row id.
     */
-  private[lake] def inlinedScanRows(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      required: StructType): Array[InternalRow] = {
+  private[lake] def inlinedScanRows(t: PinnedTable, required: StructType): Array[InternalRow] = {
     val virtual = required.fieldNames.toSet.intersect(DuckLake.VirtualNames.toSet) --
       Seq(DuckLake.VirtualFileId, DuckLake.VirtualPos)
-    inlinedDF(tr, cols, snap, withRowId = true, virtual = virtual.toSeq)
+    inlinedDF(t, withRowId = true, virtual = virtual.toSeq)
       .fold(Array.empty[InternalRow]) { df =>
         df.select(required.fieldNames.toSeq.map {
           case DuckLake.VirtualFileId => lit(DuckLake.InlinedFileId)
@@ -1534,15 +1503,19 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   def table(name: String, snapshot: Option[Long] = None,
       pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-      virtualCols: Seq[String] = Nil): DataFrame = {
-    val (snap, tr, cols) = pinnedColumns(name, snapshot)
+      virtualCols: Seq[String] = Nil): DataFrame =
+    read(pin(name, snapshotOf(snapshot)), virtualCols, pushedFilters)
+
+  /** [[table]]'s read of the table `t` pins. */
+  private[lake] def read(t: PinnedTable, virtualCols: Seq[String],
+      pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil): DataFrame = {
+    val snap = t.snap
     val virtual = virtualCols.distinct
-    val outSchema = virtual.foldLeft(sparkSchemaOf(cols)) { (s, v) =>
+    val outSchema = virtual.foldLeft(t.sparkSchema) { (s, v) =>
       s.add(v, DuckLake.virtualType(v), nullable = true)
     }
-    val ctx = scanCtx(tr, cols, snap)
-    val skipping = new FileSkipping(tr, ctx)
-    val files = skipping.keep(store.getDataFiles(tr.tableId, snap), pushedFilters)
+    val skipping = new FileSkipping(t)
+    val files = skipping.keep(t.files, pushedFilters)
     scanned = files
     // rows born inside the OPEN transaction present provisional
     // transaction-local row ids (1e18-based) and a null snapshot until
@@ -1552,45 +1525,29 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       val fileMin = files.filter(_.beginSnapshot == s).flatMap(_.rowIdStart)
       // updated VERSIONS of pre-existing rows keep stable ids — they
       // neither get nor anchor the provisional txn-local id range
-      val replaced = store.inlinedRowIdsEndedAt(tr.tableId, s).toSet
-      val inlMin = store.getInlinedRows(tr.tableId, snap)
-        .filter(r => r._2 == s && !replaced(r._1)).map(_._1)
+      val replaced = store.inlinedRowIdsEndedAt(t.tableId, s).toSet
+      val inlMin = t.inlinedRows.filter(r => r._2 == s && !replaced(r._1)).map(_._1)
       (fileMin ++ inlMin).minOption.getOrElse(0L)
     }.getOrElse(0L)
     // inlined catalog rows are always included (never stats-pruned)
-    val inlined = inlinedDF(tr, cols, snap, withRowId = false, virtual = virtual,
+    val inlined = inlinedDF(t, withRowId = false, virtual = virtual,
       txnSnap = txnSnap, txnBase = txnBase)
     if (files.isEmpty)
       return inlined.getOrElse(
         spark.createDataFrame(new java.util.ArrayList[Row](), outSchema))
 
     val txn = txnSnap.map(_ -> (DuckLake.TxnLocalRowIdBase - txnBase))
-    unionAll(readGroups(ctx, files, Some(snap), DuckLake.asksProvenance(virtual.toSet))
+    unionAll(readGroups(t, files, Some(snap), DuckLake.asksProvenance(virtual.toSet))
       .map(readGroup(_, (head, field) =>
         virtual.map(v => DuckLake.virtualColumn(v, head, field, txn).as(v)), Some(skipping))) ++
       inlined)
-  }
-
-  /** The snapshot, table and columns a scan of `name` at `snapshot` pins. */
-  private def pinnedColumns(name: String, snapshot: Option[Long])
-      : (Long, TableRec, Seq[ColumnDef]) = {
-    val snap = snapshot.getOrElse(store.currentSnapshot)
-    // an explicitly requested snapshot must still exist (not expired)
-    snapshot.foreach { s =>
-      if (!store.snapshotExists(s))
-        throw new InvalidSnapshotException(s"snapshot $s does not exist (expired?)")
-    }
-    val tr = resolveTable(name, snap)
-    val cols = store.getTableColumns(tr.tableId, snap)
-    if (cols.isEmpty) throw new TableNotFoundException(s"$name (no columns at snapshot $snap)")
-    (snap, tr, cols)
   }
 
   /** [[table]]'s schema from the pinned catalog columns alone (catalog
     * nullability), for callers that need no scan.
     */
   def tableSchema(name: String, snapshot: Option[Long] = None): StructType =
-    sparkSchemaOf(pinnedColumns(name, snapshot)._3)
+    pin(name, snapshotOf(snapshot)).sparkSchema
 
   /** Files kept by the last `table()` call (after stats pruning) — test/
     * introspection hook for the file-skipping path.
@@ -1607,9 +1564,9 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * src/table.rs:584-598). The table's file stats load once, on the
     * first filtered call, for every group of the read.
     */
-  private final class FileSkipping(tr: TableRec, ctx: ScanCtx) {
-    private val schema = sparkSchemaOf(ctx.cols)
-    private lazy val allStats = store.getFileStats(tr.tableId)
+  private final class FileSkipping(ctx: PinnedTable) {
+    private val schema = ctx.sparkSchema
+    private lazy val allStats = ctx.stats
     // name → column_id from the PINNED snapshot's defs (ctx.cols), not
     // currentSnapshot: renames between the pinned snapshot and now must
     // not attach another column's stats to a time-travel filter
@@ -1703,10 +1660,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * delete parquet is written. At 100 TB this is the difference between
     * an O(1) catalog update and writing positional deletes for every row.
     */
-  def truncateTable(name: String): Long = {
-    val tr = resolveTable(name, store.currentSnapshot)
-    store.truncateTable(tr.tableId)
-  }
+  def truncateTable(name: String): Long = store.truncateTable(pin(name).tableId)
 
   /** DELETE … WHERE `cond` (virtual columns allowed) in one snapshot, by
     * SQL DELETE's row-level plan; the snapshot after the call.
@@ -1736,8 +1690,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   private def rowLevel(name: String)(command: DataSourceV2Relation => LogicalPlan): Long = {
     val (schemaName, tableName) = parse(name)
     val relation = DataSourceV2Relation.create(
-      connector.DuckLakeV2Table.at(this, s"$schemaName.$tableName", store.currentSnapshot),
-      None, None)
+      connector.DuckLakeV2Table.at(this, s"$schemaName.$tableName", None), None, None)
     val plan = command(relation)
     val virtual = plan.expressions.exists(_.exists {
       case a: UnresolvedAttribute => DuckLake.VirtualNames.contains(a.nameParts.last)
@@ -1748,15 +1701,21 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     store.currentSnapshot
   }
 
-  /** Catalog-stats file skipping for an external (native Batch) scan:
-    * same conservative machinery as [[table]] — at 100 TB, an UPDATE or
-    * MERGE whose condition touches one partition must not read the lake.
+  /** Catalog-stats file skipping for an external (native Batch) scan of
+    * the table `t` pins: same conservative machinery as [[table]] — at
+    * 100 TB, an UPDATE or MERGE whose condition touches one partition
+    * must not read the lake.
     */
+  private[lake] def pruneDataFiles(t: PinnedTable, files: Seq[DataFileRec],
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
+    new FileSkipping(t).keep(files, filters)
+
+  /** [[pruneDataFiles]] of table row `tr` at `snap`. */
   private[lake] def pruneDataFiles(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
       files: Seq[DataFileRec],
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
-    if (filters.isEmpty) files
-    else new FileSkipping(tr, scanCtx(tr, cols, snap)).keep(files, filters)
+    pruneDataFiles(new PinnedTable(store, dataPath, tr.name,
+      store.getSchemaById(tr.schemaId, snap).get, tr, snap, snap), files, filters)
 
   /** Commit a row-level DELTA staged by the native delta writers
     * (DELETE / UPDATE / MERGE, merge-on-read): appended-row files plus the
@@ -1775,9 +1734,9 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       cols: Seq[ColumnDef], stagedNew: Seq[(Path, Seq[Option[String]])],
       dataSchema: StructType, keyOpt: Option[String], deletePartials: Seq[(Long, Path)],
       stagedRowId: Seq[(Path, Seq[Option[String]])], endInlined: Set[Long]): Long = {
-    val name = s"$schemaName.$tableName"
-    val delRegs = if (deletePartials.isEmpty) Nil else mergeDeleteFiles(name, keyOpt, deletePartials)
-    val hiveNames = hiveNamesFor(name, partitionFieldsOf(name))
+    val t = pin(s"$schemaName.$tableName")
+    val delRegs = if (deletePartials.isEmpty) Nil else mergeDeleteFiles(t, keyOpt, deletePartials)
+    lazy val hiveNames = hiveNamesFor(t.name, t.partFields)
     val (newFiles, renamed) = stageIntoTableDir(schemaName, tableName, stagedNew,
       dataSchema, keyOpt, hiveNames)
     // UPDATE-written files carry each row's stable id as an explicit
@@ -1790,33 +1749,33 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     catch { case e: Throwable =>
       cleanupRenamed(renamed)
       cleanupRenamed(renamed2)
-      cleanupRenamed(delRegs.map(d => new Path(s"${tableDirOf(name)}/${d._3.path}")))
+      cleanupRenamed(delRegs.map(d => new Path(s"${t.dir}/${d._3.path}")))
       throw e
     }
   }
 
   /** One cumulative `(file_path, pos)` delete parquet per data file of
-    * `partials` (data file id → one partial of its positions): the union
-    * of the file's partials and its live delete file, written ascending
-    * into the table directory by Spark's parquet writer with the write's
-    * key `keyOpt` and writer options. One narrow Spark job — a task per
+    * `partials` (data file id → one partial of its positions) of table
+    * `t`, pinned at the current snapshot: the union of the file's
+    * partials and its live delete file, written ascending into the table
+    * directory by Spark's parquet writer with the write's key `keyOpt`
+    * and writer options. One narrow Spark job — a task per
     * slice of files, no query plan, no shuffle — and each task holds one
     * file's positions at a time. Returns, per data file, its id, the id
     * of the delete file merged from and the new file's registration.
     */
-  private def mergeDeleteFiles(name: String, keyOpt: Option[String],
+  private def mergeDeleteFiles(t: PinnedTable, keyOpt: Option[String],
       partials: Seq[(Long, Path)]): Seq[(Long, Option[Long], FileToRegister)] = {
-    val snap = store.currentSnapshot
-    val filesById = store.getDataFiles(resolveTable(name, snap).tableId, snap)
-      .map(f => f.dataFileId -> f).toMap
-    val dir = tableDirOf(name)
+    val name = t.name
+    val filesById = t.files.map(f => f.dataFileId -> f).toMap
+    val dir = t.dir
     val work = partials.groupMap(_._1)(_._2.toString).toSeq.sortBy(_._1).map { case (fid, ps) =>
       val f = filesById.getOrElse(fid, throw new TransactionConflictException(
         s"data file $fid of $name ended while rows of it were being deleted"))
       (fid, under(dir, f.path, f.pathIsRelative),
         f.deleteFile.map(d => (under(dir, d.path, d.pathIsRelative), d.encryptionKey)), ps)
     }
-    val (output, jobConf) = parquetOutput(name, DeletePositions.Schema, keyOpt, fieldIds = false)
+    val (output, jobConf) = parquetOutput(name, DeletePositions.Schema, keyOpt, Map.empty)
     spark.sparkContext
       .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism))
       .map { case (fid, dataFile, previous, ps) =>
@@ -1867,10 +1826,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   def addFiles(name: String, paths: Seq[String], allowMissing: Boolean = false,
       ignoreExtraColumns: Boolean = false,
       hivePartitioning: Option[Boolean] = None): Long = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
+    val cols = pin(name).cols
     val (schemaName, tableName) = parse(name)
-    val cols = store.getTableColumns(tr.tableId, snap)
     val fs = FileSystem.get(new java.net.URI(dataPath), hconf)
     val hiveOn = hivePartitioning.getOrElse(true)
 
@@ -2134,11 +2091,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   def updateInlinedRows(name: String, assignments: Seq[(String, String)],
       cond: Option[String]): Option[Long] = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    if (store.getDataFiles(tr.tableId, snap).nonEmpty) return None
-    val cols = store.getTableColumns(tr.tableId, snap)
-    val base = inlinedDF(tr, cols, snap, withRowId = true).getOrElse(return Some(snap))
+    val t = pin(name)
+    if (t.files.nonEmpty) return None
+    val cols = t.cols
+    val base = inlinedDF(t, withRowId = true).getOrElse(return Some(t.snap))
     val matched = cond.fold(base)(base.filter(_))
     val applied = assignments.foldLeft(matched) { case (d, (c, e)) =>
       d.withColumn(c, expr(e).cast(
@@ -2148,7 +2104,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val pairs = applied.select(col("__row_id"),
         to_json(struct(cols.map(c => col(c.name)): _*), inlineJsonOpts))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    Some(store.commitInlinedUpdate(tr.tableId, pairs,
+    Some(store.commitInlinedUpdate(t.tableId, pairs,
       inlineStats(applied.select(cols.map(c => col(c.name)): _*), cols)))
   }
 
@@ -2158,25 +2114,20 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * inlined rows.
     */
   def flushInlined(name: String): Long = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val cols = store.getTableColumns(tr.tableId, snap)
-    val rows = store.getInlinedRows(tr.tableId, snap)
-    if (rows.isEmpty) return snap
+    val t = pin(name)
+    val (cols, rows) = (t.cols, t.inlinedRows)
+    if (rows.isEmpty) return t.snap
     // partitioned tables flush through the hive write path (rows fan out
     // across partition files, so contiguous segment maps don't apply —
     // fresh row ids, file begins at the flush snapshot)
-    if (partitionColumnsOf(name).nonEmpty)
-      return inlinedDF(tr, cols, snap) match {
-        case None     => snap
-        case Some(df) => write(df.coalesce(1), name, WriteMode.Append, flushInlined = true)
-      }
+    if (t.partCols.nonEmpty)
+      return write(inlinedDF(t).get.coalesce(1), name, WriteMode.Append, flushInlined = true)
     // unpartitioned: ONE file in row-id order, registered at the earliest
     // inlined snapshot with a segment map that preserves every row's
     // stable id and commit snapshot — post-flush reads, time travel and
     // CDC are indistinguishable from pre-flush (reference semantics:
     // tests/sqllogictests/sql/data_inlining/data_inlining_flush.test)
-    val df = inlinedDF(tr, cols, snap, withRowId = true).get
+    val df = inlinedDF(t, withRowId = true).get
     val (schemaName, tableName) = parse(name)
     val keyOpt = if (encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
     val staging = s"$dataPath/.staging-fl-${UUID.randomUUID()}"
@@ -2189,7 +2140,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       val part = fs.listStatus(new Path(staging))
         .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
       val (files, renamed) = stageIntoTableDir(schemaName, tableName,
-        Seq(part -> Seq.empty), sparkSchemaOf(cols), keyOpt)
+        Seq(part -> Seq.empty), t.sparkSchema, keyOpt)
       // compress ordered (row id, snapshot) pairs into contiguous runs
       val segs = scala.collection.mutable.ArrayBuffer.empty[FileSegment]
       rows.sortBy(_._1).zipWithIndex.foreach { case ((rid, bs, _), pos) =>
@@ -2265,7 +2216,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   def renameColumn(name: String, oldName: String, newName: String): Long =
-    store.renameColumn(resolveTable(name, store.currentSnapshot).tableId, oldName, newName)
+    store.renameColumn(pin(name).tableId, oldName, newName)
 
   /** ALTER TABLE … RENAME TO …: catalog-only; the table keeps its id and
     * directory, so files and time travel are untouched.
@@ -2275,11 +2226,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val (newSchema, newTable) = parse(newName)
     if (newSchema != schemaName)
       throw new UnsupportedException("cross-schema rename is not supported")
-    store.renameTable(resolveTable(name, store.currentSnapshot).tableId, newTable)
+    store.renameTable(pin(name).tableId, newTable)
   }
 
   def dropTable(name: String): Long =
-    store.dropTable(resolveTable(name, store.currentSnapshot).tableId)
+    store.dropTable(pin(name).tableId)
 
   /** Compaction: rewrite the table's current visible rows (deletes
     * applied) into `numFiles` fresh files and commit as a Replace
@@ -2358,11 +2309,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * returns the number of merge commits.
     */
   private def mergeAdjacentOne(name: String, maxRuns: Int): Int = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val cols = store.getTableColumns(tr.tableId, snap)
-    val ctx = scanCtx(tr, cols, snap)
-    val history = ctx.history
+    val ctx = pin(name)
+    val (snap, cols, history) = (ctx.snap, ctx.cols, ctx.history)
     val maxBytes = getOption("target_file_size", name)
       .flatMap(parseByteSize).getOrElse(Long.MaxValue)
     val identityIds = ctx.partCols.collect { case (_, cid, None) => cid }.toSet
@@ -2380,7 +2328,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     // compression factor); with a target set, files at or above it never
     // merge
     def logical(f: DataFileRec): Long = math.max(f.fileSizeBytes / 4, 1L)
-    val candidates = store.getDataFiles(tr.tableId, snap).filter(f =>
+    val candidates = ctx.files.filter(f =>
       f.deleteFile.isEmpty && logical(f) < maxBytes &&
         (f.rowIdStart.isDefined || f.segments.exists(_.rowIdStart.isDefined)))
     def firstRowId(f: DataFileRec): Long =
@@ -2438,8 +2386,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         val part = fs.listStatus(new Path(s"$staging/g$gi"))
           .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
         val (files, renamed) = stageIntoTableDir(schemaName, tableName,
-          Seq(part -> pv), physSchema, keyOpt,
-          hiveNamesFor(name, partitionFieldsOf(name)))
+          Seq(part -> pv), physSchema, keyOpt, hiveNamesFor(name, ctx.partFields))
         // segment map: inherit the sources' own segments (re-based), one
         // segment per plain source file
         var off = 0L
@@ -2678,12 +2625,9 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     if (minDeleteRatio < 0 || minDeleteRatio > 1)
       throw new InvalidConfigException(
         "The delete_threshold option must be between 0 and 1")
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val cols = store.getTableColumns(tr.tableId, snap)
-    val files = store.getDataFiles(tr.tableId, snap)
-    val ctx = scanCtx(tr, cols, snap)
-    val candidates = files.filter { f =>
+    val ctx = pin(name)
+    val (snap, cols) = (ctx.snap, ctx.cols)
+    val candidates = ctx.files.filter { f =>
       val delRatio = f.deleteFile
         .map(_.recordCount.toDouble / math.max(f.recordCount, 1L)).getOrElse(0.0)
       (f.deleteFile.isDefined && delRatio >= minDeleteRatio) ||
@@ -2693,7 +2637,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     if (candidates.isEmpty ||
       (candidates.size == 1 && candidates.head.deleteFile.isEmpty)) return snap
     val (schemaName, tableName) = parse(name)
-    val dataSchema = sparkSchemaOf(cols)
+    val dataSchema = ctx.sparkSchema
     val dataColNames = dataSchema.fieldNames.toSeq
     val keyOpt = if (encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
     val staging = s"$dataPath/.staging-rw-${UUID.randomUUID()}"
@@ -2712,7 +2656,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         (part, pv)
       }
       val (newFiles, renamed) = stageIntoTableDir(schemaName, tableName, staged,
-        dataSchema, keyOpt, hiveNamesFor(name, partitionFieldsOf(name)))
+        dataSchema, keyOpt, hiveNamesFor(name, ctx.partFields))
       try store.commitFileRewrites(schemaName, tableName, cols,
         candidates.map(_.dataFileId), newFiles)
       catch { case e: Throwable => cleanupRenamed(renamed); throw e }
@@ -2726,7 +2670,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * rename projection keeps resolving. Returns the rollback snapshot id.
     */
   def rollbackTo(name: String, snapshot: Long): Long =
-    store.rollbackTable(resolveTable(name, store.currentSnapshot).tableId, snapshot)
+    store.rollbackTable(pin(name).tableId, snapshot)
 
   /** Zero-copy clone `src` → `dst` ("shallow clone"): the new table's
     * initial snapshot references the source's current data/delete files
@@ -2736,7 +2680,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   def cloneTable(src: String, dst: String): Long = {
     val (dstSchema, dstTable) = parse(dst)
-    store.cloneTable(dstSchema, resolveTable(src, store.currentSnapshot).tableId, dstTable)
+    store.cloneTable(dstSchema, pin(src).tableId, dstTable)
   }
 
   /** Tag a snapshot with a stable name, resolvable in SQL time travel as
@@ -2812,14 +2756,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     }
   }
 
-  def tableExists(name: String): Boolean = {
-    val (schemaName, tableName) = parse(name)
-    store.getSchemaByName(schemaName, store.currentSnapshot)
-      .exists(s => store.getTableByName(s.schemaId, tableName, store.currentSnapshot).isDefined)
-  }
+  def tableExists(name: String): Boolean = pinned(name).nonEmpty
 
   def dropColumn(name: String, colName: String): Long =
-    store.dropColumn(resolveTable(name, store.currentSnapshot).tableId, colName)
+    store.dropColumn(pin(name).tableId, colName)
 
   /** ALTER TABLE … ADD COLUMN (nullable; earlier files read as the
     * initial default when one is declared, else null). `default` is a
@@ -2842,7 +2782,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
             "\"ALTER ... SET DEFAULT\"" + s" (got: $sql)")
       }
     default.foreach(sql => DuckLake.evalDefault(sql, TypeBridge.toSpark(dtype)))
-    store.addColumn(resolveTable(name, store.currentSnapshot).tableId, colName, dtype,
+    store.addColumn(pin(name).tableId, colName, dtype,
       default.map(_.trim), nullable)
   }
 
@@ -2892,13 +2832,11 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       nestedEnd: Seq[String] = Nil,
       nestedRename: Seq[(String, String)] = Nil)(
       leaf: (org.apache.spark.sql.types.StructType, String) => org.apache.spark.sql.types.StructType): Long = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val root = store.getTableColumns(tr.tableId, snap)
-      .find(_.name.equalsIgnoreCase(path.head))
+    val t = pin(name)
+    val root = t.cols.find(_.name.equalsIgnoreCase(path.head))
       .getOrElse(throw new InvalidConfigException(s"column ${path.head} does not exist"))
     val edited = editNested(TypeBridge.toSpark(root.dtype), path.tail)(leaf)
-    store.alterColumnType(tr.tableId, root.name, TypeBridge.fromSpark(edited),
+    store.alterColumnType(t.tableId, root.name, TypeBridge.fromSpark(edited),
       nestedAdd, nestedEnd, nestedRename)
   }
 
@@ -2943,8 +2881,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     }
 
   def alterColumnType(name: String, colName: String, dtype: String): Long =
-    store.alterColumnType(resolveTable(name, store.currentSnapshot).tableId,
-      colName, dtype)
+    store.alterColumnType(pin(name).tableId, colName, dtype)
 
   /** Refine a column's LOGICAL duck type in place, no snapshot: for
     * duck types richer than their Spark mapping (json ≙ string,
@@ -2952,15 +2889,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * type must stay identical, so every scan/write keeps working.
     */
   def refineColumnType(name: String, colName: String, dtype: String): Unit = {
-    val snap = store.currentSnapshot
-    val tid = resolveTable(name, snap).tableId
-    val cur = store.getTableColumns(tid, snap)
-      .find(_.name.equalsIgnoreCase(colName)).getOrElse(
-        throw new InvalidConfigException(s"no such column: $colName"))
+    val t = pin(name)
+    val cur = t.cols.find(_.name.equalsIgnoreCase(colName)).getOrElse(
+      throw new InvalidConfigException(s"no such column: $colName"))
     if (TypeBridge.toSpark(cur.dtype) != TypeBridge.toSpark(dtype))
       throw new UnsupportedTypeException(
         s"refinement must keep the physical type: ${cur.dtype} -> $dtype")
-    store.refineColumnType(tid, cur.name, TypeBridge.normalize(dtype))
+    store.refineColumnType(t.tableId, cur.name, TypeBridge.normalize(dtype))
   }
 
   /** ALTER … SET NOT NULL: validated against the CURRENT data first — a
@@ -2970,9 +2905,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * NULL values").
     */
   def setNotNull(name: String, colName: String): Long = {
-    val tid = resolveTable(name, store.currentSnapshot).tableId
-    val cols = store.getTableColumns(tid, store.currentSnapshot)
-    val cdef = cols.find(_.name == colName).getOrElse(
+    val t = pin(name)
+    val cdef = t.cols.find(_.name == colName).getOrElse(
       throw new InvalidConfigException(s"column not found: $colName"))
     if (!cdef.nullsAllowed)
       throw new InvalidConfigException(
@@ -2983,19 +2917,18 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     if (hasNull)
       throw new ConstraintViolationException(
         s"NOT NULL constraint failed: column $colName of $name contains null values")
-    store.alterColumnNullability(tid, colName, nullsAllowed = false)
+    store.alterColumnNullability(t.tableId, colName, nullsAllowed = false)
   }
 
   /** ALTER … DROP NOT NULL (always safe). */
   def dropNotNull(name: String, colName: String): Long = {
-    val tid = resolveTable(name, store.currentSnapshot).tableId
-    val cdef = store.getTableColumns(tid, store.currentSnapshot)
-      .find(_.name == colName).getOrElse(
+    val t = pin(name)
+    val cdef = t.cols.find(_.name == colName).getOrElse(
         throw new InvalidConfigException(s"column not found: $colName"))
     if (cdef.nullsAllowed)
       throw new InvalidConfigException(
         s"column $colName has no NOT NULL constraint")
-    store.alterColumnNullability(tid, colName, nullsAllowed = true)
+    store.alterColumnNullability(t.tableId, colName, nullsAllowed = true)
   }
 
   // ------------------------------------------------------------------
@@ -3025,15 +2958,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   def tableChanges(name: String, from: Long, to: Long): DataFrame = {
     if (from > to) throw new InvalidSnapshotException(s"start $from > end $to")
-    val tr = resolveTable(name, to)
-    val cols = store.getTableColumns(tr.tableId, to)
-    val outSchema = sparkSchemaOf(cols)
+    val t = pin(name, to, Some(from))
+    val outSchema = t.sparkSchema
       .add("snapshot_id", LongType, nullable = false)
       .add("change_type", StringType, nullable = false)
-    val files = store.getDataFilesAddedBetween(tr.tableId, from, to)
+    val files = store.getDataFilesAddedBetween(t.tableId, from, to)
     if (files.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    readAll(scanCtx(tr, cols, to, Some(from)), files, None, extra = (_, field) =>
+    readAll(t, files, None, extra = (_, field) =>
       Seq(field(LakeFile.BeginSnapshot).as("snapshot_id"), lit("insert").as("change_type")))
   }
 
@@ -3045,15 +2977,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   def tableDeletions(name: String, from: Long, to: Long): DataFrame = {
     if (from > to) throw new InvalidSnapshotException(s"start $from > end $to")
-    val tr = resolveTable(name, to)
-    val cols = store.getTableColumns(tr.tableId, to)
-    val outSchema = sparkSchemaOf(cols)
+    val ctx = pin(name, to, Some(from))
+    val cols = ctx.cols
+    val outSchema = ctx.sparkSchema
       .add("snapshot_id", LongType, nullable = false)
       .add("change_type", StringType, nullable = false)
-    val entries = store.getDeleteFilesAddedBetween(tr.tableId, from, to)
+    val entries = store.getDeleteFilesAddedBetween(ctx.tableId, from, to)
     if (entries.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val ctx = scanCtx(tr, cols, to, Some(from))
     // a replaced file's end snapshot is by construction in range
     val deleted = deletedPositions(ctx.dir, entries, _ => to)
     addressedRows(ctx, entries.map(_._3), Nil)
@@ -3084,7 +3015,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   /** Every physical row of `files` (distinct by id) in the pinned catalog
     * columns, addressed by `(__fid, __pos)`, plus virtual columns `v`.
     */
-  private def addressedRows(ctx: ScanCtx, files: Seq[DataFileRec], v: Seq[String]): DataFrame =
+  private def addressedRows(ctx: PinnedTable, files: Seq[DataFileRec], v: Seq[String]): DataFrame =
     readAll(ctx, files.distinctBy(_.dataFileId), None, DuckLake.asksProvenance(v.toSet),
       (head, field) => v.map(n => DuckLake.virtualColumn(n, head, field).as(n)) ++
         Seq(field(LakeFile.FileId).as("__fid"), field(LakeFile.RowIndex).as("__pos")))
@@ -3099,15 +3030,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   def tableChangesFull(name: String, from: Long, to: Long): DataFrame = {
     if (from > to) throw new InvalidSnapshotException(s"start $from > end $to")
-    val tr = resolveTable(name, to)
-    val cols = store.getTableColumns(tr.tableId, to)
     // a file deleted whole at `from` was last live just before it
-    val ctx = scanCtx(tr, cols, to, Some(from - 1))
+    val ctx = pin(name, to, Some(from - 1))
+    val (tr, cols) = (ctx.table, ctx.cols)
     val colExprs = cols.map(c => col(c.name))
     val head = Seq(col("snapshot_id"), col("rowid"), col("change_type"))
     val outSchema = StructType(
       Seq(StructField("snapshot_id", LongType), StructField("rowid", LongType),
-        StructField("change_type", StringType)) ++ sparkSchemaOf(cols).fields)
+        StructField("change_type", StringType)) ++ ctx.sparkSchema.fields)
     val flushSnaps = store.snapshotsWithChanges.collect {
       case (id, _, _, changes, _, _, _)
         if changes.exists(e => e._1 == "flushed_inlined" && e._2 == tr.tableId.toString) => id
@@ -3122,7 +3052,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     def inlineRows(rows: Seq[(Long, Long, String)]): Option[DataFrame] = {
       if (rows.isEmpty) return None
       import spark.implicits._
-      val schema = inlineReadType(sparkSchemaOf(cols))
+      val schema = inlineReadType(ctx.sparkSchema)
         .asInstanceOf[StructType]
       Some(rows.toSeq.toDF("rowid", "snapshot_id", "__json")
         .withColumn("__p", from_json(col("__json"), schema, inlineJsonOpts))
@@ -3194,11 +3124,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     val to = snaps.reverse.collectFirst { case (id, t) if !t.after(tsTo) => id }
       .getOrElse(-1L)
     if (from > to) {
-      val tr = resolveTable(name, store.currentSnapshot)
-      val cols = store.getTableColumns(tr.tableId, store.currentSnapshot)
       val outSchema = StructType(
         Seq(StructField("snapshot_id", LongType), StructField("rowid", LongType),
-          StructField("change_type", StringType)) ++ sparkSchemaOf(cols).fields)
+          StructField("change_type", StringType)) ++
+          pin(name).sparkSchema.fields)
       spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
     } else tableChangesFull(name, from, to)
   }
@@ -3214,9 +3143,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   def history(name: String): DataFrame = {
     import spark.implicits._
-    val tr = resolveTable(name, store.currentSnapshot)
     val times = store.snapshots.toMap
-    store.tableHistory(tr.tableId)
+    store.tableHistory(pin(name).tableId)
       .map(s => (s, times.get(s).map(_.toLocalDateTime).orNull, times.contains(s)))
       .toDF("snapshot_id", "snapshot_time", "retained")
   }
@@ -3278,11 +3206,9 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * to an exact scan.
     */
   def columnStatsText(name: String, colName: String): Option[String] = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val cdef = store.getTableColumns(tr.tableId, snap)
-      .find(_.name.equalsIgnoreCase(colName)).getOrElse(return None)
-    store.globalColumnStats(tr.tableId, cdef.columnId).map {
+    val t = pin(name)
+    val cdef = t.cols.find(_.name.equalsIgnoreCase(colName)).getOrElse(return None)
+    store.globalColumnStats(t.tableId, cdef.columnId).map {
       case (mn, mx, hasNull, hasNotNull) =>
         val dt = TypeBridge.toSpark(cdef.dtype)
         def disp(v: Option[String]): String =
@@ -3323,7 +3249,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       .getOrElse(throw new SchemaNotFoundException(schemaName))
     if (store.getViewId(sch.schemaId, tableName, snap).isDefined)
       throw new UnsupportedException(s"$name is not a table (COMMENT ON VIEW?)")
-    store.setComment("table", resolveTable(name, snap).tableId, None, comment)
+    store.setComment("table", pin(name, snap).tableId, None, comment)
   }
 
   /** COMMENT ON VIEW … IS '<comment>' | NULL. Rejects tables. */
@@ -3342,16 +3268,16 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
 
   /** COMMENT ON COLUMN t.c — keyed by column_id, so it survives renames. */
   def commentOnColumn(name: String, colName: String, comment: Option[String]): Long = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val c = store.getTableColumns(tr.tableId, snap).find(_.name == colName)
+    val t = pin(name)
+    val c = t.cols.find(_.name == colName)
       .getOrElse(throw new InvalidConfigException(s"column not found: $colName"))
-    store.setComment("column", tr.tableId, Some(c.columnId), comment)
+    store.setComment("column", t.tableId, Some(c.columnId), comment)
   }
 
-  def tableComment(name: String): Option[String] =
-    store.getComment("table",
-      resolveTable(name, store.currentSnapshot).tableId, None, store.currentSnapshot)
+  def tableComment(name: String): Option[String] = {
+    val t = pin(name)
+    store.getComment("table", t.tableId, None, t.snap)
+  }
 
   def viewComment(name: String): Option[String] = {
     val (schemaName, viewName) = parse(name)
@@ -3362,13 +3288,8 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
   }
 
   /** column name → comment at the current snapshot. */
-  def columnComments(name: String): Map[String, String] = {
-    val snap = store.currentSnapshot
-    val tr = resolveTable(name, snap)
-    val byId = store.getColumnComments(tr.tableId, snap)
-    store.getTableColumns(tr.tableId, snap)
-      .flatMap(c => byId.get(c.columnId).map(c.name -> _)).toMap
-  }
+  def columnComments(name: String): Map[String, String] =
+    pin(name).comments
 
   def informationSchema(which: String): DataFrame = {
     import spark.implicits._
@@ -3495,21 +3416,61 @@ private[lake] final case class LakeReadGroup(physSchema: StructType,
     projection: Seq[(String, Column)], names: Map[String, String],
     files: Seq[(DataFileRec, LakeFile)])
 
-/** Per-scan resolution context: the table directory, pinned column
-  * defs, rename/promotion history, and partitioning metadata — all
-  * fetched once per scan, so planning does O(1) metadata queries
-  * regardless of file count.
+/** Table `name` pinned at snapshot `snap`, the one value every reader of
+  * one table read takes (the catalog's table, the analysis rule, the
+  * facade's scan, the connector's Batch and stream, metadata answers):
+  * the schema and table rows of that snapshot, which also give the table
+  * directory, and the columns there ([[DuckLake.pin]] loads them); the
+  * rest loads on first use, once: partition keys, column history and
+  * comments, name mappings, nested defaults, file partition values,
+  * data files, inlined rows and file stats. A read of files live before
+  * `snap` (change feeds, stream batches) starts at `from`. File lists
+  * and stats come through the store's cache, which checks the current
+  * snapshot: a backdated rewrite changes the files an older snapshot
+  * reads.
   */
-private[lake] final case class ScanCtx(tableDir: () => String, cols: Seq[ColumnDef],
-    history: Seq[(ColumnDef, Long, Option[Long])],
-    partCols: Seq[(Int, Long, Option[String])],
-    partValsByFile: Map[Long, Map[Int, Option[String]]],
-    mappings: Map[Long, Seq[NameMapEntry]] = Map.empty,
-    nestedDefaults: Map[Long, Map[String, String]] = Map.empty) {
-  /** The table directory, resolved on first use: a read whose data and
-    * delete files are all adopted with absolute paths never needs it.
-    */
-  lazy val dir: String = tableDir()
+private[lake] final class PinnedTable(store: MetadataStore, dataPath: String,
+    val name: String, val schema: SchemaRec, val table: TableRec, val snap: Long,
+    val from: Long) {
+  def tableId: Long = table.tableId
+  val cols: Seq[ColumnDef] = store.getTableColumns(tableId, snap)
+  lazy val partCols: Seq[(Int, Long, Option[String])] = store.getPartitionColumns(tableId, snap)
+  lazy val history: Seq[(ColumnDef, Long, Option[Long])] = store.getColumnHistory(tableId)
+  lazy val mappings: Map[Long, Seq[NameMapEntry]] = store.getNameMappings(tableId)
+  lazy val nestedDefaults: Map[Long, Map[String, String]] = store.getNestedDefaults(tableId, snap)
+  lazy val partValsByFile: Map[Long, Map[Int, Option[String]]] =
+    if (partCols.isEmpty) Map.empty else store.getFilePartitionValues(tableId, snap, from)
+  lazy val files: Seq[DataFileRec] = store.getDataFiles(tableId, snap)
+  lazy val inlinedRows: Seq[(Long, Long, String)] = store.getInlinedRows(tableId, snap)
+  lazy val stats: Map[(Long, Long), (Option[Long], Option[String], Option[String])] =
+    store.getFileStats(tableId)
+  lazy val dir: String = DuckLake.tableDir(dataPath, schema.path, table)
+
+  /** Column name → comment. */
+  lazy val comments: Map[String, String] = {
+    val byId = store.getColumnComments(tableId, snap)
+    cols.flatMap(c => byId.get(c.columnId).map(c.name -> _)).toMap
+  }
+
+  /** Column name → current default SQL (none when the column has none). */
+  def defaults: Map[String, String] =
+    cols.flatMap(c => ColumnDefaults.render(c.defaultValue, c.defaultType, c.dtype)
+      .map(c.name -> _)).toMap
+
+  /** The partition keys as (source column, transform) fields in key order. */
+  def partFields: Seq[PartField] = partCols.flatMap { case (_, cid, t) =>
+    cols.find(_.columnId == cid).map(c => PartField(c.name, t)) }
+
+  /** Column name → catalog column id (the parquet field id). */
+  def fieldIds: Map[String, Long] = cols.map(c => c.name -> c.columnId).toMap
+
+  /** The columns as a Spark schema (catalog nullability). */
+  def sparkSchema: StructType =
+    StructType(cols.map(c => StructField(c.name, TypeBridge.toSpark(c.dtype), c.nullsAllowed)))
+
+  /** The same table rows at snapshot `at`, reading files live from `start`. */
+  def at(at: Long, start: Long): PinnedTable =
+    new PinnedTable(store, dataPath, name, schema, table, at, start)
 
   /** column_id → raw hive value of IDENTITY partition keys for one file —
     * the values read as partition columns (transform keys' sources live

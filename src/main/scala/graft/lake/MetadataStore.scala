@@ -930,10 +930,6 @@ final class MetadataStore(backend: MetadataBackend,
         rs.getLong(6), endOpt)
     }
 
-  /** Data files visible at `snap`, each with its newest visible delete file
-    * (reference: SQL_GET_DATA_FILES src/metadata_provider.rs:26-49).
-    * Derby lacks LATERAL → window-function rewrite (SURVEY.md §7.4).
-    */
   // ---------- scan-planning cache ----------
   // The reference roadmaps metadata caching for exactly this hot path
   // (src/metadata_provider.rs:569): repeated queries against an
@@ -958,6 +954,10 @@ final class MetadataStore(backend: MetadataBackend,
     fileListCache.clear(); fileStatsCache.clear()
   }
 
+  /** Data files visible at `snap`, each with its newest visible delete file
+    * (reference: SQL_GET_DATA_FILES src/metadata_provider.rs:26-49).
+    * Derby lacks LATERAL → window-function rewrite (SURVEY.md §7.4).
+    */
   def getDataFiles(tableId: Long, snap: Long): Seq[DataFileRec] = synchronized {
     if (txnOpen) return loadDataFiles(tableId, snap)
     val cur = currentSnapshot
@@ -2762,9 +2762,18 @@ final class MetadataStore(backend: MetadataBackend,
 
   /** Most-specific value of an option for a table scope. */
   def getOption(key: String, schema: String, table: String): Option[String] =
-    getMetadata(s"opt:$key:table:$schema.$table")
-      .orElse(getMetadata(s"opt:$key:schema:$schema"))
-      .orElse(getMetadata(s"opt:$key"))
+    optionsOf(schema, table)(key)
+
+  /** [[getOption]] of table scope `schema.table` for any key, over one
+    * read of every option row.
+    */
+  def optionsOf(schema: String, table: String): String => Option[String] = {
+    val opts = query("SELECT meta_key, meta_value FROM ducklake_metadata WHERE meta_key LIKE 'opt:%'")(
+      rs => rs.getString(1) -> rs.getString(2)).toMap
+    key => opts.get(s"opt:$key:table:$schema.$table")
+      .orElse(opts.get(s"opt:$key:schema:$schema"))
+      .orElse(opts.get(s"opt:$key"))
+  }
 
   /** Remove catalog rows for files visible at NO retained snapshot
     * (`end_snapshot <= min(retained)`) and return their resolved

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
-import graft.lake.{ColumnDef, DuckLake, TypeBridge, UnsupportedTypeException, WriteMode}
+import graft.lake.{ColumnDef, DuckLake, PinnedTable, TypeBridge, UnsupportedTypeException, WriteMode}
 import graft.lake.crypto.GraftCryptoFactory
 
 /** One executor's staged output: (staging file name, partition values —
@@ -46,11 +46,14 @@ final case class DeltaStaged(files: Seq[(String, Seq[Option[String]])],
   * cumulative delete files, the new data files and the ended inlined
   * rows in ONE snapshot (none if nothing changed). The write requests
   * no data distribution. A DELETE's write schema is empty, so it has no
-  * partition keys. Cost scales with changed rows, never with table size.
+  * partition keys. Partition keys and the files' field ids are those of
+  * `table`, the table the statement pinned. Cost scales with changed
+  * rows, never with table size.
   */
-final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
+final class DuckLakeDeltaWrite private[lake] (lake: DuckLake, table: PinnedTable,
     rawSchema: StructType) extends DeltaWrite with DeltaBatchWrite {
 
+  private val fullName = table.name
   private val (schemaName, tableName) = fullName.split('.') match {
     case Array(s, t) => (s, t)
     case _           => ("main", fullName)
@@ -60,10 +63,10 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
   // strip them (values arrive but are not table data)
   private val rowSchema =
     StructType(rawSchema.fields.filterNot(f => DuckLake.VirtualNames.contains(f.name)))
-  private val partFields = lake.partitionFieldsOf(fullName)
   private val partKeys =
     if (rowSchema.isEmpty) Array.empty[(Int, String)]
-    else partFields.map(pf => (rowSchema.fieldIndex(pf.source), pf.transform.orNull)).toArray
+    else table.partFields.map(pf =>
+      (rowSchema.fieldIndex(pf.source), pf.transform.orNull)).toArray
   // full rows land in the files — identity partition keys included
   // (reference behavior; the directory layout is naming only)
   private val dataSchema = rowSchema
@@ -75,7 +78,7 @@ final class DuckLakeDeltaWrite(lake: DuckLake, fullName: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     def files(schema: StructType, keys: Array[(Int, String)]) = {
-      val (output, conf) = lake.parquetOutput(fullName, schema, keyOpt)
+      val (output, conf) = lake.parquetOutput(fullName, schema, keyOpt, table.fieldIds)
       new DuckLakeFileWriterFactory(staging, output, conf, schema, keys)
     }
     // updated rows keep their stable id: a second writer family appends
@@ -217,7 +220,8 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val keyOpt = if (lake.encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
-    val (output, conf) = lake.parquetOutput(fullName, rowSchema, keyOpt)
+    val (output, conf) = lake.parquetOutput(fullName, rowSchema, keyOpt,
+      lake.fieldIdsOf(fullName))
     val batch = new DuckLakeFileWriterFactory(staging, output, conf, rowSchema, partKeys)
     lastKey = keyOpt
     (partitionId: Int, taskId: Long, _: Long) => batch.createWriter(partitionId, taskId)

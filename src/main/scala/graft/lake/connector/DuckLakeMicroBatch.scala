@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-import graft.lake.{DuckLake, DuckLakeParquetFormat, LakeFile}
+import graft.lake.{DuckLake, DuckLakeParquetFormat, LakeFile, PinnedTable}
 
 /** Snapshot offset for the DuckLake incremental stream: micro-batch (a, b]
   * = rows in data files whose `begin_snapshot` lies in that interval —
@@ -73,14 +73,14 @@ final case class DuckLakeInlinedPartition(rows: Array[InternalRow]) extends Inpu
   * values the facade's scans read as `_metadata` fields.
   */
 private[connector] object DuckLakePartitionPlanner {
-  import graft.lake.{DataFileRec, ScanCtx}
+  import graft.lake.DataFileRec
 
   private val Pos = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
 
-  /** Partitions of `files` (catalog rows of the table `ctx` pins) in the
-    * order of `files`.
+  /** Partitions of `files` (catalog rows of table `ctx`) in the order of
+    * `files`.
     */
-  def plan(lake: DuckLake, ctx: ScanCtx, files: Seq[DataFileRec], required: StructType,
+  def plan(lake: DuckLake, ctx: PinnedTable, files: Seq[DataFileRec], required: StructType,
       liveAt: Option[Long]): Seq[DuckLakeFilePartition] = {
     val keys = lake.decryptOptions(files.map(f => new Path(f.path).getName -> f.encryptionKey))
     // one reader per read schema, each with its OWN conf: the reader
@@ -134,6 +134,8 @@ private[connector] object DuckLakePartitionPlanner {
   * last-committed snapshot id; at 100 TB the per-batch work is O(new
   * files), planned from the catalog with no data listing. Under
   * `Trigger.AvailableNow` the head at the query's start ends the stream.
+  * The table is the one named `fullName` at the head, so a stream whose
+  * table was dropped fails.
   */
 final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     required: StructType, maxFilesPerTrigger: Option[Int] = None,
@@ -141,8 +143,6 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit, ReadMaxFiles, ReadMaxRows}
-
-  private def tableRec = lake.resolveTable(fullName, lake.store.currentSnapshot)
 
   override def initialOffset(): Offset = SnapshotOffset(0L)
 
@@ -174,6 +174,7 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val a = start.asInstanceOf[SnapshotOffset].snapshot
     val cur = head
+    lazy val tableId = lake.pin(fullName, cur).tableId
     // `rowCap`: how many catalog rows the walk actually needs. For a
     // file-count budget, budget+1 rows decide the batch end — fetching
     // the WHOLE remaining backlog per advance makes a 100 TB backfill's
@@ -186,7 +187,7 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
     // the uncapped listing: record counts don't bound the rows needed.
     def walk(cost: Seq[graft.lake.DataFileRec] => Long, budget0: Long,
         rowCap: Option[Int]): Offset = {
-      val rows = lake.store.getDataFilesAddedBetween(tableRec.tableId, a, cur, rowCap)
+      val rows = lake.store.getDataFilesAddedBetween(tableId, a, cur, rowCap)
       val truncated = rowCap.exists(rows.size >= _)
       val bySnap0 = rows.groupBy(_.beginSnapshot).toSeq.sortBy(_._1)
       val bySnap = if (truncated && bySnap0.size > 1) bySnap0.init else bySnap0
@@ -234,11 +235,10 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
         s"stream offset $a refers to an expired snapshot of $fullName; " +
           "the checkpoint is no longer replayable — restart the stream " +
           "with a fresh checkpoint location")
-    val tr = tableRec
+    val table = lake.pin(fullName).at(b, a)
     // appends-only semantics: delete files are NOT applied to streamed rows
-    DuckLakePartitionPlanner.plan(lake,
-      lake.scanCtx(tr, lake.store.getTableColumns(tr.tableId, b), b, Some(a)),
-      lake.store.getDataFilesAddedBetween(tr.tableId, a, b), required, liveAt = None).toArray
+    DuckLakePartitionPlanner.plan(lake, table,
+      lake.store.getDataFilesAddedBetween(table.tableId, a, b), required, liveAt = None).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = DuckLakeFileReaderFactory
@@ -258,35 +258,33 @@ final class DuckLakeMicroBatchStream(lake: DuckLake, fullName: String,
   * takes its micro-batch stream. Plain reads never get here:
   * [[ResolveLakeReads]] plans them as the facade's parquet scans.
   */
-final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
+final class DuckLakeBatchScan private[lake] (lake: DuckLake, table: PinnedTable,
     schema: StructType,
-    pushedFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-    spj: Boolean = false,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxRowsPerTrigger: Option[Long] = None)
+    pushedFilters: Seq[org.apache.spark.sql.sources.Filter],
+    spj: Boolean,
+    maxFilesPerTrigger: Option[Int],
+    maxRowsPerTrigger: Option[Long])
     extends org.apache.spark.sql.connector.read.Scan
     with org.apache.spark.sql.connector.read.Batch
     with SupportsReportPartitioning {
 
+  /** A scan of the `schema` columns of table `fullName` at `snapshot`. */
+  def this(lake: DuckLake, fullName: String, snapshot: Long, schema: StructType) =
+    this(lake, lake.pin(fullName, snapshot), schema, Nil, false, None, None)
+
   override def readSchema(): StructType = schema
   override def toBatch: org.apache.spark.sql.connector.read.Batch = this
   override def description(): String =
-    s"DuckLakeBatchScan $fullName@$snapshot" +
+    s"DuckLakeBatchScan ${table.name}@${table.snap}" +
       (if (pushedFilters.nonEmpty) s" PushedFilters: ${pushedFilters.mkString(", ")}" else "")
 
   /** The SPJ keys when `spj`: identity keys and hash buckets only (see
     * [[DuckLakeV2Table.storagePartitioned]]; bucket resolves through the
     * catalog's [[DuckLakeBucketFunction]]).
     */
-  private lazy val spjFields: Seq[graft.lake.PartField] =
-    lake.partitionFieldsOf(fullName, Some(snapshot))
+  private def spjFields: Seq[graft.lake.PartField] = table.partFields
 
-  private lazy val tr = lake.resolveTable(fullName, snapshot)
-  private lazy val ctx = lake.scanCtx(tr, lake.store.getTableColumns(tr.tableId, snapshot),
-    snapshot)
-
-  private lazy val inlined: Array[InternalRow] =
-    lake.inlinedScanRows(tr, ctx.cols, snapshot, schema)
+  private lazy val inlined: Array[InternalRow] = lake.inlinedScanRows(table, schema)
 
   /** Plan once, reuse from both `planInputPartitions` and
     * `outputPartitioning` (the latter needs the distinct-key count).
@@ -295,9 +293,8 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     // conservative min/max + partition-value file skipping from catalog
     // stats: pushed filters stay residual (re-applied above the scan),
     // but non-matching files never produce input partitions
-    val files = lake.pruneDataFiles(tr, ctx.cols, snapshot,
-      lake.store.getDataFiles(tr.tableId, snapshot), pushedFilters)
-    val parts = DuckLakePartitionPlanner.plan(lake, ctx, files, schema, Some(snapshot))
+    val files = lake.pruneDataFiles(table, table.files, pushedFilters)
+    val parts = DuckLakePartitionPlanner.plan(lake, table, files, schema, Some(table.snap))
     if (!spj)
       (parts ++ Option.when(inlined.nonEmpty)(DuckLakeInlinedPartition(inlined))).toArray
     else {
@@ -306,11 +303,11 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
       // identity keys carry the file's typed partition value, bucket keys
       // the bucket id (the directory value)
       parts.map { p =>
-        val byIdx = ctx.partValsByFile.getOrElse(p.file.fileId, Map.empty)
+        val byIdx = table.partValsByFile.getOrElse(p.file.fileId, Map.empty)
         val key = spjFields.zipWithIndex.map[Any] { case (pf, idx) =>
           if (pf.transform.isEmpty) {
             val i = p.partitionSchema.fieldNames.indexOf(DuckLake.partitionField(
-              ctx.cols.find(_.name == pf.source).get.columnId))
+              table.cols.find(_.name == pf.source).get.columnId))
             if (i < 0) null else p.file.partition.get(i, schema(pf.source).dataType)
           } else byIdx.getOrElse(idx, None).fold(null: Any)(_.toInt)
         }.toArray
@@ -350,7 +347,7 @@ final class DuckLakeBatchScan(lake: DuckLake, fullName: String, snapshot: Long,
     * incremental micro-batches (appends-only CDC semantics).
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new DuckLakeMicroBatchStream(lake, fullName, schema, maxFilesPerTrigger,
+    new DuckLakeMicroBatchStream(lake, table.name, schema, maxFilesPerTrigger,
       maxRowsPerTrigger)
 }
 

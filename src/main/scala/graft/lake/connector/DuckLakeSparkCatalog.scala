@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{ColumnDef, DuckLake, TypeBridge, WriteMode}
+import graft.lake.{ColumnDef, DuckLake, PinnedTable, TypeBridge, WriteMode}
 
 /** Spark `CatalogPlugin`/`TableCatalog` for DuckLake — the full connector
   * form of the reference's `DuckLakeCatalog: CatalogProvider`
@@ -160,8 +160,7 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
   override def tableExists(ident: Identifier): Boolean =
     lake.tableExists(fullName(ident))
 
-  override def loadTable(ident: Identifier): Table =
-    loadAt(ident, lake.currentSnapshot)
+  override def loadTable(ident: Identifier): Table = loadAt(ident, None)
 
   /** SQL time travel `… VERSION AS OF <snapshot_id | 'tag'>` — the
     * read-side time travel the reference lists as a roadmap gap
@@ -175,7 +174,7 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
         lake.snapshotForTag(version).getOrElse(throw new IllegalArgumentException(
           s"DuckLake version must be a snapshot id or a known tag, got: $version"))
     }
-    loadAt(ident, snap)
+    loadAt(ident, Some(snap))
   }
 
   /** SQL `… TIMESTAMP AS OF <ts>`: newest snapshot committed at or before
@@ -185,11 +184,11 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
     val ts = new java.sql.Timestamp(timestamp / 1000L)
     val snap = lake.store.snapshots.filter(!_._2.after(ts)).map(_._1)
       .maxOption.getOrElse(throw new NoSuchTableException(ident))
-    loadAt(ident, snap)
+    loadAt(ident, Some(snap))
   }
 
-  private def loadAt(ident: Identifier, snap: Long): Table =
-    try DuckLakeV2Table.at(lake, fullName(ident), snap)
+  private def loadAt(ident: Identifier, snapshot: Option[Long]): Table =
+    try DuckLakeV2Table.at(lake, fullName(ident), snapshot)
     catch {
       case _: graft.lake.DuckLakeException => throw new NoSuchTableException(ident)
     }
@@ -242,7 +241,7 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
       case _ => ("main", ident.name())
     }
     lake.store.commitWrite(sch, tbl, cols, WriteMode.Append, Nil, partNames)
-    new DuckLakeV2Table(lake, fullName(ident), lake.currentSnapshot, schema)
+    DuckLakeV2Table.at(lake, fullName(ident), None)
   }
 
   // ----- StagingTableCatalog: atomic CTAS / RTAS ---------------------
@@ -476,33 +475,12 @@ class DuckLakeSparkCatalog extends CatalogPlugin with TableCatalog
 }
 
 object DuckLakeV2Table {
-  /** Table `fullName` at snapshot `snap`, for the catalog and the
-    * facade's row-level verbs. The schema comes from the pinned catalog
-    * columns (catalog nullability, so DESCRIBE shows NOT NULL and the
-    * analyzer knows the constraint), with column comments, and column
-    * defaults as the analyzer's metadata keys so INSERTs with a column
-    * subset (or DEFAULT keyword) resolve them.
+  /** Table `fullName` at `snapshot` (default: the current one; an
+    * explicit one must still exist), for the catalog and the facade's
+    * row-level verbs: one load of the table at that snapshot.
     */
-  def at(lake: DuckLake, fullName: String, snap: Long): DuckLakeV2Table = {
-    val tableSchema = lake.tableSchema(fullName, Some(snap))
-    val defaults = lake.columnDefaultsOf(fullName, Some(snap))
-    val comments = try lake.columnComments(fullName)
-      catch { case _: graft.lake.DuckLakeException => Map.empty[String, String] }
-    val schema = StructType(tableSchema.fields.map { f1 =>
-      val f = comments.get(f1.name).fold(f1) { c =>
-        f1.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f1.metadata).putString("comment", c).build())
-      }
-      defaults.get(f.name).fold(f) { sql =>
-        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putString("CURRENT_DEFAULT", sql)
-          .putString("EXISTS_DEFAULT", sql)
-          .build())
-      }
-    })
-    new DuckLakeV2Table(lake, fullName, snap, schema)
-  }
+  def at(lake: DuckLake, fullName: String, snapshot: Option[Long]): DuckLakeV2Table =
+    new DuckLakeV2Table(lake, lake.pin(fullName, lake.snapshotOf(snapshot)))
 }
 
 object DuckLakeSparkCatalog {
@@ -535,10 +513,29 @@ object DuckLakeSparkCatalog {
   * the row-level delta plan (merge-on-read positional delete files);
   * `SupportsDelete` takes only the unconditional `DELETE FROM t`.
   */
-final class DuckLakeV2Table(private[connector] val lake: DuckLake, fullName: String,
-    private[connector] val snapshot: Long, tableSchema: StructType) extends Table with SupportsRead with SupportsWrite
+final class DuckLakeV2Table private[lake] (private[connector] val lake: DuckLake,
+    private[connector] val pinned: PinnedTable) extends Table with SupportsRead with SupportsWrite
     with SupportsDelete with SupportsRowLevelOperations
     with SupportsMetadataColumns {
+
+  private val fullName = pinned.name
+
+  /** The pinned catalog columns (catalog nullability, so DESCRIBE shows
+    * NOT NULL and the analyzer knows the constraint), with their
+    * comments, and their defaults as the analyzer's metadata keys so
+    * INSERTs with a column subset (or DEFAULT keyword) resolve them.
+    */
+  private val tableSchema: StructType = {
+    val (comments, defaults) = (pinned.comments, pinned.defaults)
+    StructType(pinned.sparkSchema.fields.map { f =>
+      val m = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
+      comments.get(f.name).foreach(m.putString("comment", _))
+      defaults.get(f.name).foreach { sql =>
+        m.putString("CURRENT_DEFAULT", sql).putString("EXISTS_DEFAULT", sql)
+      }
+      f.copy(metadata = m.build())
+    })
+  }
 
   /** Row-address metadata columns (`_file_id`, `_pos`): the stable row id
     * that delta row-level operations join deletes back to; also
@@ -633,7 +630,7 @@ final class DuckLakeV2Table(private[connector] val lake: DuckLake, fullName: Str
           : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
         new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
           override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-            new DuckLakeDeltaWrite(lake, fullName, writeInfo.schema())
+            new DuckLakeDeltaWrite(lake, pinned, writeInfo.schema())
         }
     }
 
@@ -643,22 +640,21 @@ final class DuckLakeV2Table(private[connector] val lake: DuckLake, fullName: Str
   /** Catalog-derived stats surfaced to `DESCRIBE EXTENDED`. */
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
-    val tbl = lake.resolveTable(fullName, snapshot)
-    val files = lake.store.getDataFiles(tbl.tableId, snapshot)
-    m.put("ducklake.snapshot", snapshot.toString)
+    val files = pinned.files
+    m.put("ducklake.snapshot", pinned.snap.toString)
     m.put("ducklake.file_count", files.size.toString)
     m.put("ducklake.record_count",
       (files.map(_.recordCount).sum -
         files.flatMap(_.deleteFile).map(_.recordCount).sum).toString)
     m.put("ducklake.size_bytes", files.map(_.fileSizeBytes).sum.toString)
-    lake.store.getComment("table", tbl.tableId, None, snapshot)
+    lake.store.getComment("table", pinned.tableId, None, pinned.snap)
       .foreach(m.put("comment", _))
     m
   }
 
   override def partitioning(): Array[Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
-    lake.partitionFieldsOf(fullName, Some(snapshot)).map { pf =>
+    pinned.partFields.map { pf =>
       pf.transform match {
         case None          => Expressions.identity(pf.source)
         case Some("year")  => Expressions.years(pf.source)
@@ -704,7 +700,7 @@ final class DuckLakeV2Table(private[connector] val lake: DuckLake, fullName: Str
         required = StructType(requiredSchema.map(f =>
           tableSchema.find(_.name == f.name).getOrElse(f)))
       override def build(): Scan =
-        new DuckLakeBatchScan(lake, fullName, snapshot, required, filters.toSeq,
+        new DuckLakeBatchScan(lake, pinned, required, filters.toSeq,
           spj && storagePartitioned(required.fieldNames.toSet),
           // streaming admission control read options
           Option(options.get("maxFilesPerTrigger")).map(_.toInt),
@@ -721,10 +717,10 @@ final class DuckLakeV2Table(private[connector] val lake: DuckLake, fullName: Str
     * joins SPJ targets.
     */
   private[connector] def storagePartitioned(columns: Set[String]): Boolean = {
-    val pfs = lake.partitionFieldsOf(fullName, Some(snapshot))
+    val pfs = pinned.partFields
     pfs.nonEmpty && pfs.forall(f => (f.transform.isEmpty ||
       f.transform.exists(graft.lake.PartTransform.BucketRe.matches)) && columns(f.source)) &&
-      !lake.hasInlinedRows(fullName, snapshot)
+      pinned.inlinedRows.isEmpty
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -769,24 +765,19 @@ private[connector] object MetaAgg {
   import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Count, Max, Min}
   import org.apache.spark.sql.types._
 
-  def answer(lake: DuckLake, fullName: String, snapshot: Long,
-      aggs: Seq[NamedExpression]): Option[Seq[Literal]] = {
+  def answer(t: PinnedTable, aggs: Seq[NamedExpression]): Option[Seq[Literal]] = {
     val fns: Seq[AggregateFunction] = aggs.map {
       case Alias(AggregateExpression(fn @ (_: Count | _: Min | _: Max), _, false, None, _), _) => fn
       case _ => return None // before any catalog read
     }
-    val tbl = lake.resolveTable(fullName, snapshot)
-    val cols = lake.store.getTableColumns(tbl.tableId, snapshot)
-    val files = lake.store.getDataFiles(tbl.tableId, snapshot)
-    val inlinedCount = lake.store.getInlinedRows(tbl.tableId, snapshot).size
+    val (cols, files) = (t.cols, t.files)
+    val inlinedCount = t.inlinedRows.size
     val liveCount = files.map(_.recordCount).sum -
       files.flatMap(_.deleteFile).map(_.recordCount).sum + inlinedCount
     // column answers need every row in the footers: no deletes, no inlined rows
     val exact = inlinedCount == 0 && files.forall(_.deleteFile.isEmpty)
-    lazy val stats = lake.store.getFileStats(tbl.tableId)
-
     def statRow(f: graft.lake.DataFileRec, columnId: Long) =
-      stats.get((f.dataFileId, columnId))
+      t.stats.get((f.dataFileId, columnId))
 
     val answers: Seq[Option[Literal]] = fns.map {
       case Count(Seq(one: Literal)) if !one.nullable => Some(Literal(liveCount))

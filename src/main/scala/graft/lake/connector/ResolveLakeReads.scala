@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 /** One Catalyst plan for lake SQL: a post-hoc resolution rule replacing
   * each plain lake read — a `DataSourceV2Relation` over a
   * [[DuckLakeV2Table]] — with the ANALYZED plan of the facade's read of
-  * that snapshot and those metadata columns ([[graft.lake.DuckLake.table]]:
+  * the table it pins and those metadata columns ([[graft.lake.DuckLake.table]]:
   * one parquet relation per physical epoch over a self-pruning
   * `LakeFileIndex` partitioned by the identity partition columns, and
   * the inlined rows, in one union). The query's one optimizer then
@@ -39,8 +39,7 @@ object ResolveLakeReads extends Rule[LogicalPlan] {
           conf.getConfString("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean &&
           t.storagePartitioned(r.output.filter(a => referenced(a.exprId)).map(_.name).toSet)) r
       else {
-        val facade = t.lake.table(t.name(), Some(t.snapshot), Nil, virtual)
-          .queryExecution.analyzed
+        val facade = t.lake.read(t.pinned, virtual).queryExecution.analyzed
         val byName = facade.output.map(a => a.name -> a).toMap
         aliased(r.output.map(o => byName(o.name)), r.output, facade)
       }
@@ -52,7 +51,7 @@ object ResolveLakeReads extends Rule[LogicalPlan] {
       case a: Aggregate if a.groupingExpressions.isEmpty =>
         (EliminateSubqueryAliases(a.child) match {
           case DataSourceV2Relation(t: DuckLakeV2Table, _, _, _, _, _) =>
-            MetaAgg.answer(t.lake, t.name(), t.snapshot, a.aggregateExpressions)
+            MetaAgg.answer(t.pinned, a.aggregateExpressions)
               .map(values => aliased(values, a.output, OneRowRelation()))
           case _ => None
         }).getOrElse(a.mapChildren(resolve))

@@ -92,4 +92,36 @@ class CommentSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("COMMENT ON TABLE dlcmt.main.sqlc IS NULL")
     assert(lake.tableComment("main.sqlc").isEmpty)
   }
+
+  private def commentsAt(table: String, snap: Long): Map[String, Option[String]] =
+    spark.sql(s"SELECT * FROM dlcmt.main.$table VERSION AS OF $snap").schema.fields
+      .map(f => f.name -> f.getComment()).toMap
+
+  test("time travel reads the column comments of its snapshot across a rename") {
+    spark.conf.set("spark.sql.catalog.dlcmt",
+      classOf[graft.lake.connector.DuckLakeSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.dlcmt.metaDb", lake.metaDbPath)
+    spark.conf.set("spark.sql.catalog.dlcmt.dataPath", lake.dataPath)
+    lake.createTableAs(Seq((1, "x")).toDF("a", "b").coalesce(1), "main.ttc")
+    spark.sql("ALTER TABLE dlcmt.main.ttc ALTER COLUMN a COMMENT 'the a'")
+    val s1 = lake.currentSnapshot
+    spark.sql("ALTER TABLE dlcmt.main.ttc RENAME COLUMN a TO a2")
+    assert(commentsAt("ttc", s1) == Map("a" -> Some("the a"), "b" -> None))
+    assert(commentsAt("ttc", lake.currentSnapshot) == Map("a2" -> Some("the a"), "b" -> None))
+  }
+
+  test("time travel to a dropped table reads its own comments, not its successor's") {
+    spark.conf.set("spark.sql.catalog.dlcmt",
+      classOf[graft.lake.connector.DuckLakeSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.dlcmt.metaDb", lake.metaDbPath)
+    spark.conf.set("spark.sql.catalog.dlcmt.dataPath", lake.dataPath)
+    lake.createTableAs(Seq((1, "x")).toDF("a", "b").coalesce(1), "main.ttd")
+    spark.sql("ALTER TABLE dlcmt.main.ttd ALTER COLUMN a COMMENT 'old a'")
+    val s1 = lake.currentSnapshot
+    spark.sql("DROP TABLE dlcmt.main.ttd")
+    lake.createTableAs(Seq((2, "y")).toDF("a", "b").coalesce(1), "main.ttd")
+    spark.sql("ALTER TABLE dlcmt.main.ttd ALTER COLUMN b COMMENT 'new b'")
+    assert(commentsAt("ttd", s1) == Map("a" -> Some("old a"), "b" -> None))
+    assert(commentsAt("ttd", lake.currentSnapshot) == Map("a" -> None, "b" -> Some("new b")))
+  }
 }
