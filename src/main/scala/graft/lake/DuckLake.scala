@@ -3,10 +3,7 @@ package graft.lake
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -613,29 +610,19 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       GraftCryptoFactory.FactoryClass -> classOf[GraftCryptoFactory].getName,
       GraftCryptoFactory.EncryptKey -> k))
 
-  /** Spark's parquet writer for executor-side files of table `name`
-    * (delta and streaming writes), prepared like a staged append: the
-    * [[writeOptions]], the catalog column ids `ids` (name → id) as
-    * top-level field ids and the lake's session confs. Returns the
-    * factory and the job conf its writers open files with — one conf per
-    * schema, because the write support reads its schema from the conf —
-    * broadcast, so tasks read one copy instead of each deserializing its
-    * own (a session conf is over a thousand entries).
+  /** Spark's parquet writer for the executor-side files of one write to
+    * table `name` (delta and streaming writes), prepared like a staged
+    * append: the [[writeOptions]], read once, and the lake's session
+    * confs. One preparation and one broadcast conf serve every file of
+    * the write, whatever its schema ([[ParquetOutput.newWriter]]).
     */
-  private[lake] def parquetOutput(name: String, schema: StructType, keyOpt: Option[String],
-      ids: Map[String, Long])
-      : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-         Broadcast[org.apache.spark.util.SerializableConfiguration]) = {
-    // parquet field ids are 32-bit — never stamp a wrapped value
-    val stamped = StructType(schema.map(f =>
-      ids.get(f.name).filter(_ <= Int.MaxValue).fold(f)(id => f.copy(metadata =
-        new MetadataBuilder().withMetadata(f.metadata).putLong("parquet.field.id", id).build()))))
+  private[lake] def parquetOutput(name: String, keyOpt: Option[String]): ParquetOutput = {
     val opts = writeOptions(name, keyOpt)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(hadoopConfWith(opts))
     val factory = withWriterSessionConf(
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .prepareWrite(spark, job, opts, stamped))
-    (factory, spark.sparkContext.broadcast(
+        .prepareWrite(spark, job, opts, new StructType()))
+    ParquetOutput(factory, spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)))
   }
 
@@ -1710,20 +1697,14 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
     new FileSkipping(t).keep(files, filters)
 
-  /** [[pruneDataFiles]] of table row `tr` at `snap`. */
-  private[lake] def pruneDataFiles(tr: TableRec, cols: Seq[ColumnDef], snap: Long,
-      files: Seq[DataFileRec],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFileRec] =
-    pruneDataFiles(new PinnedTable(store, dataPath, tr.name,
-      store.getSchemaById(tr.schemaId, snap).get, tr, snap, snap), files, filters)
-
   /** Commit a row-level DELTA staged by the native delta writers
     * (DELETE / UPDATE / MERGE, merge-on-read): appended-row files plus the
     * tasks' PARTIAL delete-position parquets (`deletePartials`: data file
     * id → one partial of its positions, written executor-side; commit
     * messages carry file names, never positions). [[mergeDeleteFiles]]
     * folds each touched data file's partials and live delete file into
-    * one cumulative delete parquet in one narrow Spark job, and ONE
+    * one cumulative delete parquet in one narrow Spark job, written with
+    * the write's prepared parquet writer `output`, and ONE
     * snapshot registers them with the new data files and ends the deleted
     * inlined rows `endInlined`; the store refuses the commit if a merged
     * data file ended, or its delete file changed, in the meantime. Cost
@@ -1732,10 +1713,12 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     */
   private[lake] def commitDeltaStaged(schemaName: String, tableName: String,
       cols: Seq[ColumnDef], stagedNew: Seq[(Path, Seq[Option[String]])],
-      dataSchema: StructType, keyOpt: Option[String], deletePartials: Seq[(Long, Path)],
-      stagedRowId: Seq[(Path, Seq[Option[String]])], endInlined: Set[Long]): Long = {
+      dataSchema: StructType, keyOpt: Option[String], output: ParquetOutput,
+      deletePartials: Seq[(Long, Path)], stagedRowId: Seq[(Path, Seq[Option[String]])],
+      endInlined: Set[Long]): Long = {
     val t = pin(s"$schemaName.$tableName")
-    val delRegs = if (deletePartials.isEmpty) Nil else mergeDeleteFiles(t, keyOpt, deletePartials)
+    val delRegs =
+      if (deletePartials.isEmpty) Nil else mergeDeleteFiles(t, keyOpt, output, deletePartials)
     lazy val hiveNames = hiveNamesFor(t.name, t.partFields)
     val (newFiles, renamed) = stageIntoTableDir(schemaName, tableName, stagedNew,
       dataSchema, keyOpt, hiveNames)
@@ -1758,13 +1741,13 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
     * `partials` (data file id → one partial of its positions) of table
     * `t`, pinned at the current snapshot: the union of the file's
     * partials and its live delete file, written ascending into the table
-    * directory by Spark's parquet writer with the write's key `keyOpt`
-    * and writer options. One narrow Spark job — a task per
+    * directory by the write's prepared parquet writer `output` with its
+    * key `keyOpt`. One narrow Spark job — a task per
     * slice of files, no query plan, no shuffle — and each task holds one
     * file's positions at a time. Returns, per data file, its id, the id
     * of the delete file merged from and the new file's registration.
     */
-  private def mergeDeleteFiles(t: PinnedTable, keyOpt: Option[String],
+  private def mergeDeleteFiles(t: PinnedTable, keyOpt: Option[String], output: ParquetOutput,
       partials: Seq[(Long, Path)]): Seq[(Long, Option[Long], FileToRegister)] = {
     val name = t.name
     val filesById = t.files.map(f => f.dataFileId -> f).toMap
@@ -1775,11 +1758,10 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
       (fid, under(dir, f.path, f.pathIsRelative),
         f.deleteFile.map(d => (under(dir, d.path, d.pathIsRelative), d.encryptionKey)), ps)
     }
-    val (output, jobConf) = parquetOutput(name, DeletePositions.Schema, keyOpt, Map.empty)
     spark.sparkContext
       .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism))
       .map { case (fid, dataFile, previous, ps) =>
-        val conf = jobConf.value.value
+        val conf = output.conf.value.value
         val positions = previous.fold(new Roaring64Bitmap) { case (p, k) =>
           DeletePositions.load(p, k, conf)
         }
@@ -1788,8 +1770,7 @@ final class DuckLake(val spark: SparkSession, val metaDbPath: String, val dataPa
         val file = s"ducklake-${UUID.randomUUID()}-delete.parquet"
         val dest = new Path(s"$dir/$file")
         val fs = dest.getFileSystem(conf)
-        val w = output.newInstance(dest.toString, DeletePositions.Schema,
-          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        val w = output.newWriter(dest.toString, DeletePositions.Schema)
         try {
           val row = new GenericInternalRow(Array[Any](UTF8String.fromString(dataFile), 0L))
           val it = positions.getLongIterator
@@ -3524,6 +3505,15 @@ object DuckLake {
     override def numPartitions: Int = n
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
+
+  /** `schema` with the catalog column ids `ids` (name → id) as its
+    * top-level parquet field ids, for [[ParquetOutput.newWriter]].
+    * Parquet field ids are 32-bit, so a larger id is never stamped.
+    */
+  private[lake] def withFieldIds(schema: StructType, ids: Map[String, Long]): StructType =
+    StructType(schema.map(f =>
+      ids.get(f.name).filter(_ <= Int.MaxValue).fold(f)(id => f.copy(metadata =
+        new MetadataBuilder().withMetadata(f.metadata).putLong("parquet.field.id", id).build()))))
 
   /** Serializes [[DuckLake.withWriterSessionConf]] save/set/restore
     * across every lake in the JVM (the pinned confs are session-global).

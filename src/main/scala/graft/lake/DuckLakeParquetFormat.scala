@@ -2,6 +2,9 @@ package graft.lake
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -9,11 +12,12 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, FileSourceConstantMetadataStructField, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -220,6 +224,24 @@ object DuckLakeParquetFormat {
     override def getInterval(rowId: Int): CalendarInterval = inner.getInterval(sel(rowId))
     override def getChild(ordinal: Int): ColumnVector =
       children.getOrElseUpdate(ordinal, new SelectedColumnVector(inner.getChild(ordinal), sel))
+  }
+}
+
+/** Spark's parquet writer prepared once for the files of one write
+  * ([[DuckLake.parquetOutput]]): its factory and its job conf, broadcast
+  * so tasks read one copy instead of each deserializing their own (a
+  * session conf is over a thousand entries). The write support reads a
+  * file's schema from the conf, so each file's writer takes its own copy
+  * of it with that schema set.
+  */
+final case class ParquetOutput(factory: OutputWriterFactory,
+    conf: Broadcast[SerializableConfiguration]) {
+
+  /** A writer of `schema` rows (field ids in its metadata) into `path`. */
+  def newWriter(path: String, schema: StructType): OutputWriter = {
+    val fileConf = new JobConf(conf.value.value)
+    ParquetWriteSupport.setSchema(schema, fileConf)
+    factory.newInstance(path, schema, new TaskAttemptContextImpl(fileConf, new TaskAttemptID()))
   }
 }
 

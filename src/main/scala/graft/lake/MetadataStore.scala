@@ -857,10 +857,6 @@ final class MetadataStore(backend: MetadataBackend,
     query(s"SELECT schema_id, schema_name, path, path_is_relative FROM ducklake_schema WHERE schema_name = ? AND $Vis",
       Seq(name, snap, snap))(rs => SchemaRec(rs.getLong(1), rs.getString(2), rs.getString(3), rs.getBoolean(4))).headOption
 
-  def getSchemaById(id: Long, snap: Long): Option[SchemaRec] =
-    query(s"SELECT schema_id, schema_name, path, path_is_relative FROM ducklake_schema WHERE schema_id = ? AND $Vis",
-      Seq(id, snap, snap))(rs => SchemaRec(rs.getLong(1), rs.getString(2), rs.getString(3), rs.getBoolean(4))).headOption
-
   def listTables(schemaId: Long, snap: Long): Seq[TableRec] =
     query(s"SELECT table_id, schema_id, table_name, path, path_is_relative FROM ducklake_table WHERE schema_id = ? AND $Vis ORDER BY table_id",
       Seq(schemaId, snap, snap))(rs =>

@@ -5,18 +5,14 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
-import graft.lake.{ColumnDef, DuckLake, PinnedTable, TypeBridge, UnsupportedTypeException, WriteMode}
+import graft.lake.{ColumnDef, DuckLake, ParquetOutput, PinnedTable, TypeBridge, UnsupportedTypeException, WriteMode}
 import graft.lake.crypto.GraftCryptoFactory
 
 /** One executor's staged output: (staging file name, partition values —
@@ -74,19 +70,21 @@ final class DuckLakeDeltaWrite private[lake] (lake: DuckLake, table: PinnedTable
   private val keyOpt =
     if (lake.encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
 
+  // one writer preparation for the write's files and its commit's merge
+  private lazy val output = lake.parquetOutput(fullName, keyOpt)
+
   override def toBatch: DeltaBatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    def files(schema: StructType, keys: Array[(Int, String)]) = {
-      val (output, conf) = lake.parquetOutput(fullName, schema, keyOpt, table.fieldIds)
-      new DuckLakeFileWriterFactory(staging, output, conf, schema, keys)
-    }
+    def data(schema: StructType) = new DuckLakeFileWriterFactory(staging, output,
+      DuckLake.withFieldIds(schema, table.fieldIds), partKeys)
     // updated rows keep their stable id: a second writer family appends
     // the explicit _ducklake_row_id column (read back by the rowid
     // virtual; catalog rows register with NULL row_id_start)
-    new DuckLakeDeltaWriterFactory(files(rowSchema, partKeys),
-      files(rowSchema.add(DuckLake.RowIdPhysCol, LongType, nullable = true), partKeys),
-      files(DuckLakeDeltaWriterFactory.DeletePartialSchema, Array((0, null))),
+    new DuckLakeDeltaWriterFactory(data(rowSchema),
+      data(rowSchema.add(DuckLake.RowIdPhysCol, LongType, nullable = true)),
+      new DuckLakeFileWriterFactory(staging, output,
+        DuckLakeDeltaWriterFactory.DeletePartialSchema, Array((0, null))),
       rowSchema.map(_.dataType).toArray)
   }
 
@@ -107,7 +105,7 @@ final class DuckLakeDeltaWrite private[lake] (lake: DuckLake, table: PinnedTable
       }.toSeq
       if (staged.nonEmpty || stagedRowId.nonEmpty || partials.nonEmpty || inlined.nonEmpty)
         lake.commitDeltaStaged(schemaName, tableName, cols, staged, dataSchema, keyOpt,
-          partials, stagedRowId, inlined)
+          output, partials, stagedRowId, inlined)
     } finally fs.delete(new Path(staging), true)
   }
 
@@ -220,9 +218,8 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val keyOpt = if (lake.encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
-    val (output, conf) = lake.parquetOutput(fullName, rowSchema, keyOpt,
-      lake.fieldIdsOf(fullName))
-    val batch = new DuckLakeFileWriterFactory(staging, output, conf, rowSchema, partKeys)
+    val batch = new DuckLakeFileWriterFactory(staging, lake.parquetOutput(fullName, keyOpt),
+      DuckLake.withFieldIds(rowSchema, lake.fieldIdsOf(fullName)), partKeys)
     lastKey = keyOpt
     (partitionId: Int, taskId: Long, _: Long) => batch.createWriter(partitionId, taskId)
   }
@@ -256,15 +253,14 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
   }
 }
 
-/** Executor-side lake file writer: Spark's parquet writer, prepared on
-  * the driver by [[DuckLake.parquetOutput]]. Rows are split by the
-  * table's hive partition values on the fly (one open writer per value
-  * combo per task); every column stays in the file, partition keys
-  * included.
+/** Executor-side lake file writer of `schema` rows (field ids in its
+  * metadata): Spark's parquet writer, prepared on the driver by
+  * [[DuckLake.parquetOutput]]. Rows are split by the table's hive
+  * partition values on the fly (one open writer per value combo per
+  * task); every column stays in the file, partition keys included.
   */
-final class DuckLakeFileWriterFactory(staging: String, output: OutputWriterFactory,
-    conf: Broadcast[SerializableConfiguration], schema: StructType,
-    partKeys: Array[(Int, String)])
+final class DuckLakeFileWriterFactory(staging: String, output: ParquetOutput,
+    schema: StructType, partKeys: Array[(Int, String)])
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -282,8 +278,7 @@ final class DuckLakeFileWriterFactory(staging: String, output: OutputWriterFacto
         }
         val (w, _) = writers.getOrElseUpdate(pv, {
           val name = s"part-$partitionId-$taskId-${writers.size}-${UUID.randomUUID()}.parquet"
-          (output.newInstance(s"$staging/$name", schema,
-            new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID())), name)
+          (output.newWriter(s"$staging/$name", schema), name)
         })
         w.write(row)
       }

@@ -23,6 +23,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * requires this one — as Delta's and Iceberg's reads require theirs —
   * and [[DuckLakeSparkCatalog]]'s `initialize` fails without it.
   *
+  * MERGE: the pre-CBO rule `PrefilterMergeTarget` semi-joins a lake
+  * MERGE's target on its source before the target's exchange.
+  *
   * Views: vanilla Spark 4.1 ships the `ViewCatalog` connector interface but no
   * analyzer/execution support for it: `ResolveSessionCatalog` hard-throws
   * `MISSING_CATALOG_ABILITY.VIEWS` the moment a `CreateView`/`DropView`
@@ -47,6 +50,7 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(ResolveLakeViews.apply)
     ext.injectPostHocResolutionRule(_ => ResolveLakeReads)
+    ext.injectPreCBORule(_ => org.apache.spark.sql.graftbridge.PrefilterMergeTarget)
     ext.injectParser((session, delegate) => new LakeViewSqlParser(session, delegate))
     // geometry scalar surface over the WKB carrier (geo corpus)
     ext.injectFunction((FunctionIdentifier("st_point"),

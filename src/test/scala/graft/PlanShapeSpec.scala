@@ -3,12 +3,13 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -359,6 +360,51 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(plan.contains("dynamicpruning"), plan)
     assert(scan.supportsColumnar, s"the MOR fact scan is not Batched:\n$plan")
     assert(ids == (0L until 800L).filter(i => i % 8 == 3 && i % 5 != 0))
+  }
+
+  /** The physical plan a SQL MERGE of `source` into `dlplan.main.mrgplan`
+    * ran, with its metrics.
+    */
+  private def mergePlan(source: String): SparkPlan =
+    spark.sql(s"MERGE INTO dlplan.main.mrgplan t USING ($source) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+      .queryExecution.executedPlan match { case c: CommandResultExec => c.commandPhysicalPlan }
+
+  private def semiJoins(p: SparkPlan): Seq[BaseJoinExec] =
+    collectWithSubqueries(p) { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+
+  test("a lake MERGE semi-joins its target on a small deterministic source before the exchange") {
+    spark.sql("CREATE TABLE dlplan.main.mrgplan (id BIGINT, v BIGINT)")
+    (0 until 16).foreach { f =>
+      spark.sql(s"INSERT INTO dlplan.main.mrgplan " +
+        s"SELECT id, id * 2 FROM range(${f * 100}, ${f * 100 + 100}, 1, 1)")
+    }
+    // 10 source rows: ids 0, 200, …, 1400 match, 1600 and 1800 are new
+    val p = mergePlan("SELECT id * 200 AS id, -id AS v FROM range(10)")
+    val targetSide = collectWithSubqueries(p) {
+      case e: ShuffleExchangeExec if e.exists {
+        case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+        case _                        => false
+      } => e
+    }
+    assert(targetSide.size == 1, s"no semi-join below the target's exchange:\n$p")
+    val written = targetSide.head.metrics("shuffleRecordsWritten").value
+    assert(written <= 10, s"the target side shuffled $written rows:\n$p")
+    val Array(n, sum) = spark.sql("SELECT count(*), sum(v) FROM dlplan.main.mrgplan")
+      .head.toSeq.map(_.asInstanceOf[Long]).toArray
+    assert(n == 1602 && sum == (0L until 1600L).map(_ * 2).sum -
+      (0L until 8L).map(_ * 400).sum - (0L until 10L).sum)
+
+    // not vacuous: no semi-join without a broadcast threshold, over a
+    // nondeterministic source (the optimizer folds `rand() < 1` away), or
+    // over a source two reads of which may differ (LIMIT without ORDER BY)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(semiJoins(mergePlan("SELECT id * 200 AS id, -id AS v FROM range(10)")).isEmpty)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(semiJoins(mergePlan(
+      "SELECT id * 200 AS id, -id AS v FROM range(10) WHERE rand(7) < 0.9999")).isEmpty)
+    assert(semiJoins(mergePlan("SELECT id * 200 AS id, -id AS v FROM range(100) LIMIT 10"))
+      .isEmpty)
   }
 
   test("the guard flips when broadcast planning is disabled (not vacuous)") {

@@ -118,7 +118,7 @@ class MetaScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // whose stats cover id=1 only) — measured uncached
     lake.store.clearPlanCache()
     val (kept, pruneMs) = timeMs(
-      lake.pruneDataFiles(tr, cols, snapBase, files,
+      lake.pruneDataFiles(lake.pin("main.big", snapBase), files,
         Seq(EqualTo("id", 50000500L))))
     info(f"stats pruning: $pruneMs%.0f ms, kept ${kept.size} of ${files.size}")
     assert(kept.size == 1, s"expected 1 surviving file, got ${kept.size}")
@@ -128,7 +128,7 @@ class MetaScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the whole planning round trip (list + prune) also fits the budget
     val (_, planMs) = timeMs {
       val fs = lake.store.getDataFiles(tr.tableId, snapBase)
-      lake.pruneDataFiles(tr, cols, snapBase, fs, Seq(EqualTo("id", 99999999L)))
+      lake.pruneDataFiles(lake.pin("main.big", snapBase), fs, Seq(EqualTo("id", 99999999L)))
     }
     info(f"full planning round trip: $planMs%.0f ms")
     assert(planMs < budgetMs(1000),

@@ -286,6 +286,90 @@ class RowLevelEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(keys("cfl") == (3L to 60L).filter(_ != 31L))
   }
 
+  // MERGE semantics with the target semi-joined on its source (the
+  // PrefilterMergeTarget rule fires on these small temp-view sources)
+
+  /** Each row's `(k, v)` of `main.<table>`, sorted. */
+  private def kv(table: String): Seq[(Long, Double)] =
+    lake.table(s"main.$table").select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted
+
+  test("a MERGE matching one target row with two source rows fails its cardinality check") {
+    import spark.implicits._
+    mkTable("mrg_card", 20)
+    Seq((5L, 0, -5.0), (5L, 0, -6.0), (7L, 1, -7.0)).toDF("k", "m", "v")
+      .createOrReplaceTempView("card_src")
+    val s0 = lake.currentSnapshot
+    val e = intercept[Exception](spark.sql(
+      "MERGE INTO dlrl.main.mrg_card t USING card_src s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("MERGE_CARDINALITY_VIOLATION")), e)
+    assert(lake.currentSnapshot == s0, "no snapshot")
+    assert(kv("mrg_card") == (1L to 20L).map(k => k -> k.toDouble))
+  }
+
+  test("a MERGE with WHEN NOT MATCHED BY SOURCE keeps its result") {
+    import spark.implicits._
+    mkTable("mrg_nmbs", 10)
+    Seq((2L, 0, -2.0), (4L, 0, -4.0), (11L, 2, -11.0)).toDF("k", "m", "v")
+      .createOrReplaceTempView("nmbs_src")
+    spark.sql("""MERGE INTO dlrl.main.mrg_nmbs t USING nmbs_src s ON t.k = s.k
+                |WHEN MATCHED THEN UPDATE SET v = s.v
+                |WHEN NOT MATCHED THEN INSERT *
+                |WHEN NOT MATCHED BY SOURCE AND t.k > 7 THEN DELETE
+                |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 0""".stripMargin)
+    assert(kv("mrg_nmbs") == Seq(1L -> 0.0, 2L -> -2.0, 3L -> 0.0, 4L -> -4.0, 5L -> 0.0,
+      6L -> 0.0, 7L -> 0.0, 11L -> -11.0))
+  }
+
+  test("a MERGE keeps a null-keyed target row and inserts a null-keyed source row") {
+    import spark.implicits._
+    lake.createTableAs(Seq((Option(1L), 1.0), (None, 2.0), (Option(3L), 3.0)).toDF("k", "v")
+      .coalesce(1), "main.mrg_null")
+    Seq((Option(1L), -1.0), (None, -2.0), (Option(4L), -4.0)).toDF("k", "v")
+      .createOrReplaceTempView("null_src")
+    spark.sql("MERGE INTO dlrl.main.mrg_null t USING null_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+    val rows = lake.table("main.mrg_null").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getDouble(1))).toSeq.sorted
+    assert(rows == Seq((None, -2.0), (None, 2.0), (Some(1L), -1.0), (Some(3L), 3.0),
+      (Some(4L), -4.0)))
+  }
+
+  test("a MERGE with a non-equi extra condition updates only the rows it matches") {
+    import spark.implicits._
+    mkTable("mrg_neq", 10)
+    Seq((2L, 0, 5.0), (3L, 0, 1.0), (4L, 1, 4.0), (20L, 2, 20.0)).toDF("k", "m", "v")
+      .createOrReplaceTempView("neq_src")
+    spark.sql("MERGE INTO dlrl.main.mrg_neq t USING neq_src s ON t.k = s.k AND s.v > t.v " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+    // 2 matches; 3 and 4 fail `s.v > t.v`, so their source rows are inserted
+    val want = (1L to 10L).map(k => k -> (if (k == 2L) 5.0 else k.toDouble)) ++
+      Seq(3L -> 1.0, 4L -> 4.0, 20L -> 20.0)
+    assert(kv("mrg_neq") == want.sorted)
+  }
+
+  test("a MERGE over inlined rows and MOR files updates matched rows and keeps their row ids") {
+    import spark.implicits._
+    mkTable("mrg_inl", 20, inlined = Seq(21L, 22L, 23L))
+    lake.deleteWhere("main.mrg_inl", col("k") % 5 === 0)
+    val ids = rowIds("mrg_inl")
+    Seq((3L, 0, -3.0), (10L, 1, -10.0), (22L, 1, -22.0), (30L, 0, -30.0)).toDF("k", "m", "v")
+      .createOrReplaceTempView("inl_src")
+    val s0 = lake.currentSnapshot
+    spark.sql("MERGE INTO dlrl.main.mrg_inl t USING inl_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+    assert(lake.currentSnapshot == s0 + 1)
+    // 10 was deleted, so its source row is inserted
+    val want = ((1L to 23L).filter(_ % 5 != 0).map(k => k -> k.toDouble).toMap ++
+      Map(3L -> -3.0, 22L -> -22.0, 10L -> -10.0, 30L -> -30.0)).toSeq.sorted
+    assert(kv("mrg_inl") == want)
+    val after = rowIds("mrg_inl")
+    assert(ids.forall { case (k, id) => after(k) == id }, s"$ids vs $after")
+    assert(inlinedCount("mrg_inl") == 2)
+  }
+
   test("readStream under Trigger.AvailableNow paces the backlog and stops at its start") {
     import spark.implicits._
     def rows(from: Int) = (from until from + 10).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
