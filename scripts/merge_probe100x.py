@@ -49,7 +49,7 @@ if os.path.exists(duck_path):
 
 out["minhash_pair_context"] = (
     "dedup_minhash linear_100x tracks candidate-pair growth, not a plan "
-    "defect: PairCountProbe measures 5.0 pairs/doc at 10x vs 54.0 at 100x "
+    "defect: `graft.Diag paircount` measures 5.0 pairs/doc at 10x vs 54.0 at 100x "
     "(deterministic counts) — the replica corpus multiplies every text's "
     "duplicate multiplicity 10x, and all-pairs inside <=256-member "
     "duplicate groups is the designed regime (successor chains re-"

@@ -3,15 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Interleaved A/B harness for plan-rewrite experiments: times two named
-  * frames alternately (A,B,A,B,…) in ONE session so host drift hits both
-  * arms equally — the protocol behind every kept/rejected rewrite note
-  * in Tpch.scala. Names resolve from [[SparkEntry.queries]] first, then
-  * from the experimental [[variants]] registry below (rewrites under
-  * evaluation live here until a measured win moves them into the query
-  * file; a measured loss keeps them here as the recorded evidence).
-  *
-  * Usage: SPARK_GRAFT_DIR=<corpus> sbt "runMain graft.AbBench <A> <B>"
+/** The registry of plan-rewrite variants: rewrites under evaluation live
+  * here until a measured win moves them into the query file; a measured
+  * loss keeps them here as the recorded evidence, the "before" arm of
+  * every kept/rejected rewrite note in Tpch.scala. [[Diag]] resolves a
+  * name from [[SparkEntry.queries]] first, then from [[variants]], and
+  * its `ab` subcommand times named frames interleaved in one session.
   */
 object AbBench {
 
@@ -198,66 +195,18 @@ object AbBench {
       .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_size"))
   }
 
-  /** dedup_minhash decomposition probes (r16 stage attribution): the
+  /** dedup_minhash decomposition probe (r16 stage attribution): the
     * gate's 74 s aggregate task CPU on the 10× corpus was ~5× the sum
-    * of its parts, so these time each sub-pipeline in isolation to find
-    * which operator owns the constant before touching any code.
+    * of its parts, so `mh_found` times the candidate and verify stages in
+    * isolation; the verifyJaccard tail variants below compare against it.
     */
   private def mhCorpus(s: SparkSession, dir: String): DataFrame =
     graft.queries.OpsQueries.plantedDocs(s, dir)
-
-  def mhSketchOnly(s: SparkSession, dir: String): DataFrame =
-    mhCorpus(s, dir).select(col("doc_id").as("__id"),
-      graft.functions.MinHashBands.minhashBands(
-        array_distinct(
-          graft.functions.TokenGramHashes.tokenGramHashes(col("text"))),
-        32, 8).as("__bands"))
-
-  def mhCandidates(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.minhashCandidates(mhCorpus(s, dir), "text", "doc_id")
 
   def mhFound(s: SparkSession, dir: String): DataFrame = {
     val corpus = mhCorpus(s, dir)
     val cands = graft.ops.Dedup.minhashCandidates(corpus, "text", "doc_id")
     graft.ops.Dedup.verifyJaccard(cands, corpus, "text", "doc_id", threshold = 0.5)
-  }
-
-  def mhEligible(s: SparkSession, dir: String): DataFrame = {
-    val corpus = mhCorpus(s, dir)
-    val planted = graft.queries.Tables.t(s, dir, "documents")
-      .filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id").as("id_a"), (col("doc_id") + 100000L).as("id_b"))
-    graft.ops.Dedup.verifyJaccard(planted, corpus, "text", "doc_id", threshold = 0.5)
-  }
-
-  /** The REPLACED pipe_curation scoring shape (r16): quality as a plain
-    * projected alias with the threshold filter on it — PushDownPredicates
-    * substitutes the full scoring expression into the filter, so every
-    * text is scored twice per row (once in the pushed Filter, once in
-    * the Project). The adopted gate pins one scoring pass per row behind
-    * an explode(array(struct(...))) generator boundary. Kept as the
-    * measured "before" arm.
-    */
-  def pipeCurationAliasFilter(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.{Pipeline, TextOps}
-    val docs = graft.queries.Tables.t(s, dir, "documents")
-    val duped = docs.unionByName(docs.filter(col("doc_id") % 5 === 0)
-      .withColumn("doc_id", col("doc_id") + 200000L))
-    val scored = duped
-      .select(col("doc_id"),
-        TextOps.qualityScore(col("text")).as("quality"),
-        TextOps.bpeishTokenCount(col("text")).cast("long").as("n_tok"),
-        TextOps.fingerprint(col("text")).as("__fp"))
-      .filter(col("quality") >= 0.91)
-    val dedup = scored
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__fp").orderBy("doc_id")))
-      .filter(col("__rn") === 1)
-    val budgeted = Pipeline.prefixSum(dedup,
-      Seq(col("quality").desc, col("doc_id")), col("n_tok"), "cum_tok")
-    budgeted.filter(col("cum_tok") <= 8000L)
-      .select("doc_id", "quality", "n_tok", "cum_tok")
-      .orderBy("cum_tok")
   }
 
   /** The REPLACED verifyJaccard tail (r17): __i/__n as plain aliases
@@ -400,20 +349,16 @@ object AbBench {
   }
 
   val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe_curation_aliasfilter" -> (pipeCurationAliasFilter _),
     "mh_found_dupfilter" -> (mhFoundDupFilter _),
     "mh_found_nothresh" -> (mhFoundNoThresh _),
     "mh_found_genonly" -> (mhFoundGenOnly _),
     "dedup_incremental_twopass" -> (dedupIncrementalTwoPass _),
     // the 100× probe's production-path semantic near-dup frame, named
-    // here so PlanDump/AbBench can address the operator directly
+    // here so Diag can address the operator directly
     "cosine_neardup" -> ((s: SparkSession, dir: String) =>
       ScaleBench.semanticNearDup(s, dir)),
     "q11_twopass" -> (q11TwoPass _),
-    "mh_sketch_only" -> (mhSketchOnly _),
-    "mh_candidates" -> (mhCandidates _),
     "mh_found" -> (mhFound _),
-    "mh_eligible" -> (mhEligible _),
     "q16_predistinct" -> (q16Predistinct _),
     "q05_fact_first" -> (q05FactFirst _),
     "q04_unbounded" -> (q04Unbounded _),
@@ -421,114 +366,4 @@ object AbBench {
     "q22_eager_scalar" -> (q22EagerScalar _),
     "q08_fact_first" -> (q08FactFirst _),
     "q18_partial_agg" -> (q18PartialAgg _))
-
-  def main(args: Array[String]): Unit = {
-    // conf-flip mode: `AbBench --conf k=v [--conf k2=v2] q1 q2 ...`
-    // times each named query interleaved base-vs-conf within ONE session
-    // (runtime SQL confs re-read at planning, so set/unset around each
-    // run flips the plan); host drift hits both arms equally, same as
-    // the two-query mode.
-    val (confArgs, queryArgs) = {
-      var rest = args.toList
-      val confs = scala.collection.mutable.ListBuffer.empty[(String, String)]
-      while (rest.headOption.contains("--conf")) {
-        // malformed input fails with the usage message, not a raw
-        // IndexOutOfBounds/MatchError (r15 advice)
-        require(rest.size >= 2 && rest(1).contains("="),
-          "usage: AbBench [--conf k=v ...] <nameA> <nameB> [more...]")
-        val Array(k, v) = rest(1).split("=", 2)
-        confs += (k -> v)
-        rest = rest.drop(2)
-      }
-      (confs.toList, rest)
-    }
-    require(queryArgs.size >= (if (confArgs.nonEmpty) 1 else 2),
-      "usage: AbBench [--conf k=v ...] <nameA> <nameB> [more...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shmDir = new java.io.File("/dev/shm")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.lake.connector.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "4m")
-      // runtime SMJ->SHJ conversion, A/B-kept r15 (see Bench.scala note)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // runtime bloom-filter join pruning, thresholds corpus-scaled —
-      // adopted r16, rationale + A/B evidence in Bench.scala
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "256m")
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-    if (shmDir.isDirectory && shmDir.canWrite)
-      builder.config("spark.local.dir", "/dev/shm/graft_bench_local")
-    sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val dir = sys.env.getOrElse("SPARK_GRAFT_DIR",
-      ScaleBench.buildCorpus(spark, "/root/testdata/sf0.1"))
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
-
-    def frame(name: String): () => DataFrame =
-      SparkEntry.queries.get(name).orElse(variants.get(name)) match {
-        case Some(f) => () => f(spark, dir)
-        case None => sys.error(s"unknown query/variant '$name'")
-      }
-    def once(mk: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      mk().write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // base-arm restores the session defaults, conf-arm applies the
-    // flipped confs; each arm's builder runs BEFORE its timing window,
-    // so plan+execute both see the arm's session state as the arms
-    // alternate
-    val savedConfs = confArgs.map { case (k, _) =>
-      k -> scala.util.Try(Option(spark.conf.get(k))).toOption.flatten }
-    def applyBase(): Unit = savedConfs.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    def applyFlip(): Unit = confArgs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val arms: Seq[(String, () => DataFrame)] =
-      if (confArgs.isEmpty) queryArgs.map(n => n -> frame(n))
-      else queryArgs.flatMap { n =>
-        val base = frame(n)
-        Seq(n -> (() => { applyBase(); base() }),
-          s"$n+conf" -> (() => { applyFlip(); base() }))
-      }
-    // row-count sanity between arms of a rewrite A/B
-    val counts = arms.map { case (n, mk) => n -> mk().count() }
-    println(s"rows: ${counts.map { case (n, c) => s"$n=$c" }.mkString(", ")}")
-    arms.foreach { case (_, mk) => once(mk); once(mk) } // 2 warmups each
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
-    // ALTERNATE the within-pair order per iteration (r15 finding): in
-    // conf-flip mode the flip arm otherwise always runs immediately
-    // after the SAME query's base arm and inherits its query-specific
-    // warmth (operator JIT, page/TLB locality) — a measured 5-30%
-    // second-runner advantage that grows with host depletion and fully
-    // explained two contradictory SHJ A/Bs. Odd iterations run each
-    // pair reversed, so the warmth advantage hits both arms equally.
-    (1 to iters).foreach { it =>
-      val ordered =
-        if (confArgs.isEmpty || it % 2 == 1) arms
-        else arms.grouped(2).flatMap(_.reverse).toSeq
-      ordered.foreach { case (n, mk) => samples(n) :+= once(mk) }
-    }
-    arms.foreach { case (n, _) =>
-      val s = samples(n)
-      println(f"$n%-28s min=${s.min}%.3f avg=${s.sum / s.size}%.3f " +
-        s.map(x => f"$x%.3f").mkString("[", ",", "]"))
-    }
-    spark.stop()
-  }
 }

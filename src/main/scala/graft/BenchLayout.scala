@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   * load phase precedes the timed runs); this is the Spark analog: a
   * one-time, fingerprinted, declared re-write of each table into
   * size-proportional multi-file parquet under /tmp. Verify (the
-  * correctness gate) keeps reading the raw fixtures — only Bench and
-  * BenchOne stage data (Bench since round 10; SPARK_GRAFT_RAW=1 opts
-  * back into the raw fixtures), and the staging time is reported in
+  * correctness gate) keeps reading the raw fixtures — only Bench stages
+  * data (since round 10; SPARK_GRAFT_RAW=1 opts back into the raw
+  * fixtures), and the staging time is reported in
   * the bench artifact (`relayout_sec`), never folded into query
   * timings. The DuckDB cross-engine recording must be taken on the
   * SAME staged layout (scripts/time_oracle.py handles directory

@@ -90,42 +90,8 @@ object Probe100x {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPLICAS", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // identical engine confs to graft.Bench so the two artifacts'
-    // numbers are comparable
-    val shmDir = new java.io.File("/dev/shm")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.lake.connector.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-      .config("spark.sql.autoBroadcastJoinThreshold", "4m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "4m")
-      // runtime SMJ->SHJ conversion, A/B-kept r15 (see Bench.scala note)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // runtime bloom-filter join pruning, thresholds corpus-scaled —
-      // adopted r16, rationale + A/B evidence in Bench.scala
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "256m")
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "64m")
-      // corpus (re)builds run the 100-replica lineitem sort as ONE
-      // 60M-row task; under GC pressure it exceeded the default 120 s
-      // heartbeat timeout and killed the local executor mid-build
-      // (observed r16; see BuildCorpus). Harmless for timing: local
-      // mode, liveness only.
-      .config("spark.network.timeout", "600s")
-      .config("spark.ui.enabled", "false")
-    if (shmDir.isDirectory && shmDir.canWrite)
-      builder.config("spark.local.dir", "/dev/shm/graft_bench_local")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // the bench session, so the two artifacts' numbers are comparable
+    val spark = BenchSession(BenchSession.CorpusBuild)
 
     val t0 = System.nanoTime()
     val dir10 = ScaleBench.buildCorpus(spark, sfDir)
@@ -133,13 +99,9 @@ object Probe100x {
     val buildSec = (System.nanoTime() - t0) / 1e9
     System.err.println(f"[probe100x] corpora ready in $buildSec%.1f s")
 
-    def run(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
     def time(mk: () => DataFrame, warm: Int, iters: Int): Double = {
-      (1 to warm).foreach(_ => run(mk()))
-      (1 to iters).map { _ =>
-        val s = System.nanoTime(); run(mk()); (System.nanoTime() - s) / 1e9
-      }.min
+      (1 to warm).foreach(_ => Diag.noopSec(mk()))
+      (1 to iters).map(_ => Diag.noopSec(mk())).min
     }
 
     def q(name: String, dir: String): () => DataFrame =

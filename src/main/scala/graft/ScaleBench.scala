@@ -201,10 +201,7 @@ object ScaleBench {
       bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
   }
 
-  /** The scoped confs under which the AQE skew-split evidence runs —
-    * shared with [[SkewProbe]] so the diagnostic can never silently
-    * diverge from the gate it predicts.
-    */
+  /** The scoped confs under which the AQE skew-split evidence runs. */
   val skewConfs: Map[String, String] = Map(
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -245,7 +242,7 @@ object ScaleBench {
     // same warmup discipline as the headline Bench: one warmup leaves
     // JIT compilation inside min-of-N (measured: q20 published 58.7×
     // under 1 warmup vs 8.6× warm in a clean session — a 6.8×
-    // measurement error; BenchOne decay shows minima still falling at
+    // measurement error; per-query decay shows minima still falling at
     // iteration 5). Every timed path below warms ≥2 passes.
     val warmups = math.max(2, sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUPS", "2").toInt)
     try {
@@ -257,7 +254,7 @@ object ScaleBench {
       // timeOnly's old 1-warmup + min-of-2 left JIT compilation inside
       // the published minima (q20 58.7× published vs 8.6× warm). Protocol
       // now exceeds the headline Bench's: ≥2 warmups then min of ≥5
-      // timed iterations — BenchOne decay curves show multi-join minima
+      // timed iterations — per-query decay curves show multi-join minima
       // still falling through run ~7 (q09 1.65→1.03 over 8), and these
       // ratios are the round's headline, so the extra ~20 s buys a
       // fully-warm measurement, matching DuckDB's best-of-3 over its own

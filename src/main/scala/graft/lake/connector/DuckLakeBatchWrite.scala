@@ -205,12 +205,15 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
     case Array(s, t) => (s, t)
     case _           => ("main", fullName)
   }
-  private val partFields = lake.partitionFieldsOf(fullName)
-  private val partKeys = partFields.map(pf =>
+  // the table's shape, loaded once on first use: Spark builds a sink per
+  // micro-batch plan, and only the one that writes the epoch needs it
+  private lazy val table = lake.pin(fullName)
+  private lazy val partKeys = table.partFields.map(pf =>
     (rowSchema.fieldIndex(pf.source), pf.transform.orNull)).toArray
   // full rows land in the files — identity partition keys included
   // (reference behavior; the directory layout is naming only)
   private val dataSchema = rowSchema
+  private lazy val fileSchema = DuckLake.withFieldIds(rowSchema, table.fieldIds)
   private val staging = s"${lake.dataPath}/.staging-stream-${UUID.randomUUID()}"
   private val epochKey = s"stream_epoch::$queryId::$fullName"
 
@@ -218,8 +221,9 @@ final class DuckLakeStreamingWrite(lake: DuckLake, fullName: String,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val keyOpt = if (lake.encryptionEnabled) Some(GraftCryptoFactory.newKeyB64()) else None
+    // a fresh writer per epoch: an encrypted lake takes a new key per commit
     val batch = new DuckLakeFileWriterFactory(staging, lake.parquetOutput(fullName, keyOpt),
-      DuckLake.withFieldIds(rowSchema, lake.fieldIdsOf(fullName)), partKeys)
+      fileSchema, partKeys)
     lastKey = keyOpt
     (partitionId: Int, taskId: Long, _: Long) => batch.createWriter(partitionId, taskId)
   }

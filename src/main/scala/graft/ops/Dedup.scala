@@ -919,7 +919,7 @@ object Dedup {
     // previously re-shuffling ALL |E| edges every round — do
     // |E| + |E|/2 + |E|/4 + … ≈ 2|E| total join work across the whole
     // run instead of rounds×|E|. Measured on the 1M-vertex path
-    // (graft.CCBench): 19.7 s → 15.1 s warm. Vertex labels are
+    // (ScaleBench's cc_path_1m shape): 19.7 s → 15.1 s warm. Vertex labels are
     // untouched: contraction only changes which edges vote, not who
     // gets re-labeled, and contracted endpoints are parent ids — always
     // vertex ids present in the label table.
@@ -963,7 +963,7 @@ object Dedup {
       // measured dead end, round 10: freshening ps instead of hooked —
       // so shortcut's two references each rebuild `labels ⟕ psF` and the
       // V-row hook boundary disappears — is 19.7 s → 22.0 s on the
-      // 1M-path (graft.CCBench): the doubled hook-join evaluation costs
+      // 1M-path (cc_path_1m): the doubled hook-join evaluation costs
       // more than the one saved V-row copy+localCheckpoint, even with
       // the vote side broadcast. The hooked boundary stays.)
       val next = freshen(shortcut(freshen(hooked)))

@@ -7,11 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Catalog cost of warm lake SQL: the Derby statements
-  * ([[MetadataStore.queryTally]]) one read, one join and one row-level
-  * DELETE commit run, with the file lists and stats already in the
-  * store's cache. A table read loads the table at its snapshot once
-  * (schema and table rows, columns), and every reader of that read takes
-  * the same value; a commit reads its writer options in one statement.
+  * ([[MetadataStore.queryTally]]) one read, one join, one row-level
+  * DELETE commit and one streaming-sink epoch run, with the file lists
+  * and stats already in the store's cache. A table read loads the table
+  * at its snapshot once (schema and table rows, columns), and every
+  * reader of that read takes the same value; a commit reads its writer
+  * options in one statement.
   */
 class CatalogCostSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -92,5 +93,30 @@ class CatalogCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(s"$n statements")
     assert(lake.table("main.cost_del").count() == 398)
     assert(n <= 90, s"$n catalog statements for a one-row DELETE")
+  }
+
+  test("a 3-trigger stream into a lake table lands each row once; epochs 2 and 3 run at most 41 catalog statements each") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    mkTable("cost_stream")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, Int, Double)]
+    val q = mem.toDF().toDF("k", "p", "v").writeStream
+      .option("checkpointLocation", s"$root/ckpt-stream")
+      .toTable("dlcost.main.cost_stream")
+    try {
+      val perEpoch = (1 to 3).map { e =>
+        val q0 = lake.store.queryTally.get()
+        mem.addData((1000L + e, e, e * 2.0), (2000L + e, e, e * 4.0))
+        q.processAllAvailable()
+        lake.store.queryTally.get() - q0
+      }
+      info(s"statements per epoch: ${perEpoch.mkString(", ")}")
+      val keys = lake.table("main.cost_stream").select("k").as[Long].collect().toSeq
+      assert(keys.size == 406 && keys.distinct.size == 406)
+      assert((1 to 3).flatMap(e => Seq(1000L + e, 2000L + e)).forall(keys.contains))
+      assert(perEpoch.drop(1).forall(_ <= 41),
+        s"catalog statements per epoch: ${perEpoch.mkString(", ")}")
+    } finally q.stop()
   }
 }
